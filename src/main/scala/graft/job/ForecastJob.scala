@@ -3,10 +3,12 @@ package graft.job
 import scala.collection.mutable.ArrayBuffer
 import scala.util.control.NonFatal
 
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DataType
 
 import graft.catalog.{ParquetCatalog, TableNames}
-import graft.forecast.{ForecastEngine, ForecastOutput}
+import graft.forecast.{Backtest, ForecastEngine, ForecastOutput}
 import graft.series.SeriesOps
 
 /** Run bookkeeping, mirroring the reference's counters
@@ -32,10 +34,11 @@ final case class JobSummary(
   *  - per-table work is a lazy Spark plan end to end (scan -> melt ->
   *    grouped fit -> pivot -> write); nothing is collected to the driver
   *    (the reference pulls each full table into pandas, fs:157-158).
-  *  - tables still run sequentially driver-side, but each table's
-  *    (metric-count) series fit in parallel across executors; at high
-  *    table counts the melt could union all tables into one job — kept
-  *    per-table to preserve the reference's per-table overwrite semantics.
+  *  - tables run sequentially driver-side, each table's (metric-count)
+  *    series fit in parallel across executors. Tables are never fused into
+  *    one Spark job: each table's plan runs and fails on its own, so one
+  *    unreadable table is recorded as failed and cannot take down the
+  *    rest of the catalog.
   */
 final class ForecastJob(
     catalog: ParquetCatalog,
@@ -51,13 +54,48 @@ final class ForecastJob(
     * int-typed metric yields truncated int forecasts exactly like the
     * reference's type re-use. Default stays DoubleType (SURVEY §7.6).
     */
-  private def sourceTypes(df: org.apache.spark.sql.DataFrame, metrics: Seq[String])
-      : Map[String, org.apache.spark.sql.types.DataType] =
+  private def sourceTypes(df: DataFrame, metrics: Seq[String]): Map[String, DataType] =
     if (!parityTypes) Map.empty
     else metrics.map(m => m -> df.schema(m).dataType).toMap
 
-  /** Cache hygiene on the job paths (run/runUnioned/backtest) is
-    * try/finally `unpersist()` per forecast frame, NOT
+  /** Forecast every eligible table into `bucket_forecast_<t>`: history plus
+    * `interval` future days (only the future with `onlyFuture`), one
+    * `{m, m_min, m_max}` column triple per numeric metric.
+    */
+  def run(): JobSummary =
+    eachTable("forecast", TableNames.forecastName, sortCol = "date", emptyReason = None)(
+      long => ForecastEngine.forecast(long, interval, onlyFuture))(
+      (fc, df, metrics) => ForecastOutput.toWide(fc, metrics, sourceTypes(df, metrics)))
+
+  /** Rolling-origin evaluation across the whole catalog — the job-level
+    * face of [[graft.forecast.Backtest]]: for every eligible table,
+    * cross-validate each numeric metric and (re)write
+    * `bucket_backtest_<t>` with one row per (metric, cutoff) carrying
+    * MAE/RMSE/80%-band coverage and the seasonal-naive baseline MAE.
+    * Same eligibility, name-collision, and fault-isolation rules as
+    * [[run]]; a table whose history is too short for any cutoff is
+    * SKIPPED (with a reason), not failed.
+    */
+  def backtest(horizon: Int, period: Int, initial: Int): JobSummary =
+    eachTable("backtest", TableNames.backtestName, sortCol = "cutoff",
+      emptyReason = Some(s"history shorter than initial=$initial + horizon=$horizon"))(
+      long => Backtest.crossValidate(long, horizon, period, initial).toDF()
+        .select(col("metric"), col("cutoff"), col("n"),
+          round(col("mae"), 6).as("mae"),
+          round(col("rmse"), 6).as("rmse"),
+          round(col("coverage"), 6).as("coverage"),
+          round(col("mae_naive"), 6).as("mae_naive")))(
+      (bt, _, _) => bt)
+
+  /** The one per-table loop behind [[run]] and [[backtest]]. For each
+    * eligible table: load, normalize, melt, `compute` the per-series frame
+    * (one row set per metric that succeeded), `shape` it into the output
+    * table and (re)write `outName(t)` sorted by `sortCol`. A table whose
+    * frame has no metric at all is skipped with `emptyReason` when one is
+    * given, else written as it is. Any failure of a table's plan is
+    * recorded as `(t, "*")` and the loop moves on.
+    *
+    * Cache hygiene is try/finally `unpersist()` per computed frame, NOT
     * [[graft.operators.CacheScope]]: the job is a batch CLI whose
     * frames have exact lexical lifetimes (cache before the two
     * consumers, release on the same code path even on per-metric fit
@@ -66,7 +104,13 @@ final class ForecastJob(
     * surface where lifetimes cross query boundaries. ForecastJobSpec
     * asserts no graft cache survives a completed run.
     */
-  def run(): JobSummary = {
+  private def eachTable[T](
+      mode: String,
+      outName: String => String,
+      sortCol: String,
+      emptyReason: Option[String])(
+      compute: DataFrame => Dataset[T])(
+      shape: (Dataset[T], DataFrame, Seq[String]) => DataFrame): JobSummary = {
     val t0 = System.nanoTime()
     val successful = ArrayBuffer[String]()
     val created = ArrayBuffer[String]()
@@ -78,13 +122,13 @@ final class ForecastJob(
       .listTables()
       .filterNot(TableNames.isJobOutput) // skip our own outputs (fs:234)
       .filter(t => specificTables.forall(_.contains(t)))
-    // `bucket_x` and `x` both map to bucket_forecast_x (the prefix-strip
+    // `bucket_x` and `x` both map to one output name (the prefix-strip
     // rewrite, fs:121-124); run only the first and skip the rest instead
-    // of silently overwriting one forecast with the other
-    val byOutput = eligible.groupBy(TableNames.forecastName)
-    val candidates = eligible.filter(t => byOutput(TableNames.forecastName(t)).head == t)
+    // of silently overwriting one output with the other
+    val byOutput = eligible.groupBy(outName)
+    val candidates = eligible.filter(t => byOutput(outName(t)).head == t)
     eligible.filterNot(candidates.contains).foreach { t =>
-      skipped += t -> s"output name collides with ${byOutput(TableNames.forecastName(t)).head}"
+      skipped += t -> s"output name collides with ${byOutput(outName(t)).head}"
     }
 
     candidates.foreach { t =>
@@ -102,298 +146,38 @@ final class ForecastJob(
             skipped += t -> "empty table"
           } else {
             val long = SeriesOps.melt(df, metrics).withColumn("table", lit(t))
-            val fc = ForecastEngine.forecast(long, interval, onlyFuture).cache()
+            val frame = compute(long).cache()
             try {
               // bounded collect: one row per metric, to report failed fits
-              val fitted =
-                fc.select("metric").distinct().collect().map(_.getString(0)).toSet
-              metrics.filterNot(fitted).foreach(m => failedSeries += t -> m)
-              val wide = ForecastOutput.toWide(fc, metrics, sourceTypes(df, metrics))
-              val outName = TableNames.forecastName(t)
-              val existed = catalog.tableExists(outName)
-              catalog.writeTable(outName, wide, sortCol = "date")
-              if (existed) updated += outName else created += outName
-              if (metrics.forall(fitted)) successful += t
-              log.info(s"forecast $t -> $outName (${metrics.size} metrics, " +
-                s"${metrics.count(fitted)} fitted)")
-            } finally fc.unpersist()
-          }
-        }
-      } catch {
-        case NonFatal(e) =>
-          log.error(s"table $t failed: ${e.getMessage}")
-          failedSeries += t -> "*"
-      }
-    }
-
-    summarize(successful, created, updated, skipped, failedSeries, t0)
-  }
-
-  /** Whole-database variant: melts every eligible table into ONE long
-    * frame and runs a single grouped-fit shuffle, so thousands of small
-    * tables don't pay one Spark job each (the reference's per-table loop
-    * is its scaling wall, SURVEY.md §3). Writes still happen per table to
-    * preserve the per-output overwrite contract. Semantics identical to
-    * run() — ForecastJobSpec asserts output equality.
-    */
-  def runUnioned(): JobSummary = {
-    import org.apache.spark.sql.DataFrame
-    val t0 = System.nanoTime()
-    val successful = ArrayBuffer[String]()
-    val created = ArrayBuffer[String]()
-    val updated = ArrayBuffer[String]()
-    val skipped = ArrayBuffer[(String, String)]()
-    val failedSeries = ArrayBuffer[(String, String)]()
-
-    val eligible = catalog
-      .listTables()
-      .filterNot(TableNames.isJobOutput)
-      .filter(t => specificTables.forall(_.contains(t)))
-    val byOutput = eligible.groupBy(TableNames.forecastName)
-    val candidates = eligible.filter(t => byOutput(TableNames.forecastName(t)).head == t)
-    eligible.filterNot(candidates.contains).foreach { t =>
-      skipped += t -> s"output name collides with ${byOutput(TableNames.forecastName(t)).head}"
-    }
-
-    val prepared: Seq[(String, Seq[String], Map[String, org.apache.spark.sql.types.DataType], DataFrame)] =
-      candidates.flatMap { t =>
-      try {
-        val raw = catalog.load(t)
-        if (!raw.columns.contains("date")) { skipped += t -> "no date column"; None }
-        else {
-          val df = SeriesOps.normalizeDate(raw)
-          val metrics = SeriesOps.numericMetricColumns(df.schema)
-          if (metrics.isEmpty) { skipped += t -> "no numeric metric columns"; None }
-          else if (SeriesOps.isEmpty(df)) { skipped += t -> "empty table"; None }
-          else Some((t, metrics, sourceTypes(df, metrics),
-            SeriesOps.melt(df, metrics).withColumn("table", lit(t))))
-        }
-      } catch {
-        case NonFatal(e) =>
-          log.error(s"table $t failed during prepare: ${e.getMessage}")
-          failedSeries += t -> "*"
-          None
-      }
-    }
-
-    if (prepared.nonEmpty) {
-      val all = prepared.map(_._4).reduce(_.unionByName(_))
-      val fc = ForecastEngine.forecast(all, interval, onlyFuture).cache()
-      try {
-        // the one action that is NOT per-table isolated: a corrupt file in
-        // any input surfaces here; record every prepared table as failed
-        // instead of aborting with no summary
-        val fittedPairsOpt =
-          try Some(fc.select("table", "metric").distinct().collect()
-            .map(r => (r.getString(0), r.getString(1))).toSet)
-          catch {
-            case NonFatal(e) =>
-              log.error(s"unioned fit failed: ${e.getMessage}")
-              prepared.foreach { case (t, _, _, _) => failedSeries += t -> "*" }
-              None
-          }
-        for (fittedPairs <- fittedPairsOpt) prepared.foreach { case (t, metrics, types, _) =>
-          try {
-            metrics.filterNot(m => fittedPairs((t, m)))
-              .foreach(m => failedSeries += t -> m)
-            val wide = ForecastOutput.toWide(
-              fc.filter(col("table") === t), metrics, types)
-            val outName = TableNames.forecastName(t)
-            val existed = catalog.tableExists(outName)
-            catalog.writeTable(outName, wide, sortCol = "date")
-            if (existed) updated += outName else created += outName
-            if (metrics.forall(m => fittedPairs((t, m)))) successful += t
-          } catch {
-            case NonFatal(e) =>
-              log.error(s"table $t failed during write: ${e.getMessage}")
-              failedSeries += t -> "*"
-          }
-        }
-      } finally fc.unpersist()
-    }
-    summarize(successful, created, updated, skipped, failedSeries, t0)
-  }
-
-  /** Rolling-origin evaluation across the whole catalog — the job-level
-    * face of [[graft.forecast.Backtest]]: for every eligible table,
-    * cross-validate each numeric metric and (re)write
-    * `bucket_backtest_<t>` with one row per (metric, cutoff) carrying
-    * MAE/RMSE/80%-band coverage and the seasonal-naive baseline MAE.
-    * Same eligibility, name-collision, and fault-isolation rules as
-    * [[run]]; a table whose history is too short for any cutoff is
-    * SKIPPED (with a reason), not failed.
-    */
-  def backtest(horizon: Int, period: Int, initial: Int): JobSummary = {
-    val t0 = System.nanoTime()
-    val successful = ArrayBuffer[String]()
-    val created = ArrayBuffer[String]()
-    val updated = ArrayBuffer[String]()
-    val skipped = ArrayBuffer[(String, String)]()
-    val failedSeries = ArrayBuffer[(String, String)]()
-
-    val eligible = catalog
-      .listTables()
-      .filterNot(TableNames.isJobOutput)
-      .filter(t => specificTables.forall(_.contains(t)))
-    val byOutput = eligible.groupBy(TableNames.backtestName)
-    val candidates = eligible.filter(t => byOutput(TableNames.backtestName(t)).head == t)
-    eligible.filterNot(candidates.contains).foreach { t =>
-      skipped += t -> s"output name collides with ${byOutput(TableNames.backtestName(t)).head}"
-    }
-
-    candidates.foreach { t =>
-      try {
-        val raw = catalog.load(t)
-        if (!raw.columns.contains("date")) {
-          skipped += t -> "no date column"
-        } else {
-          val df = SeriesOps.normalizeDate(raw)
-          val metrics = SeriesOps.numericMetricColumns(df.schema)
-          if (metrics.isEmpty) {
-            skipped += t -> "no numeric metric columns"
-          } else if (SeriesOps.isEmpty(df)) {
-            skipped += t -> "empty table"
-          } else {
-            val long = SeriesOps.melt(df, metrics).withColumn("table", lit(t))
-            val bt = graft.forecast.Backtest
-              .crossValidate(long, horizon, period, initial)
-              .toDF()
-              .select(col("metric"), col("cutoff"), col("n"),
-                round(col("mae"), 6).as("mae"),
-                round(col("rmse"), 6).as("rmse"),
-                round(col("coverage"), 6).as("coverage"),
-                round(col("mae_naive"), 6).as("mae_naive"))
-              .cache()
-            try {
-              val evaluated =
-                bt.select("metric").distinct().collect().map(_.getString(0)).toSet
-              if (evaluated.isEmpty) {
-                skipped += t -> s"history shorter than initial=$initial + horizon=$horizon"
+              val done =
+                frame.select("metric").distinct().collect().map(_.getString(0)).toSet
+              if (done.isEmpty && emptyReason.isDefined) {
+                skipped += t -> emptyReason.get
               } else {
-                metrics.filterNot(evaluated).foreach(m => failedSeries += t -> m)
-                val outName = TableNames.backtestName(t)
-                val existed = catalog.tableExists(outName)
-                catalog.writeTable(outName, bt, sortCol = "cutoff")
-                if (existed) updated += outName else created += outName
-                if (metrics.forall(evaluated)) successful += t
-                log.info(s"backtest $t -> $outName (${metrics.size} metrics, " +
-                  s"${evaluated.size} evaluated)")
+                metrics.filterNot(done).foreach(m => failedSeries += t -> m)
+                val out = shape(frame, df, metrics)
+                val name = outName(t)
+                val existed = catalog.tableExists(name)
+                catalog.writeTable(name, out, sortCol = sortCol)
+                if (existed) updated += name else created += name
+                if (metrics.forall(done)) successful += t
+                log.info(s"$mode $t -> $name (${metrics.size} metrics, " +
+                  s"${done.size} done)")
               }
-            } finally bt.unpersist()
+            } finally frame.unpersist()
           }
         }
       } catch {
         case NonFatal(e) =>
-          log.error(s"table $t backtest failed: ${e.getMessage}")
+          log.error(s"$mode of table $t failed: ${e.getMessage}")
           failedSeries += t -> "*"
       }
     }
-    summarize(successful, created, updated, skipped, failedSeries, t0)
-  }
 
-  /** Whole-database unioned backtest — every (table, metric) series of
-    * every eligible table cross-validates in ONE grouped-fit shuffle
-    * (the same single-job shape [[runUnioned]] uses to dodge the
-    * reference's per-table scaling wall, SURVEY §3); writes still happen
-    * per table. Output-identical to [[backtest]] — ForecastJobSpec
-    * asserts the equality.
-    */
-  def backtestUnioned(horizon: Int, period: Int, initial: Int): JobSummary = {
-    import org.apache.spark.sql.DataFrame
-    val t0 = System.nanoTime()
-    val successful = ArrayBuffer[String]()
-    val created = ArrayBuffer[String]()
-    val updated = ArrayBuffer[String]()
-    val skipped = ArrayBuffer[(String, String)]()
-    val failedSeries = ArrayBuffer[(String, String)]()
-
-    val eligible = catalog
-      .listTables()
-      .filterNot(TableNames.isJobOutput)
-      .filter(t => specificTables.forall(_.contains(t)))
-    val byOutput = eligible.groupBy(TableNames.backtestName)
-    val candidates = eligible.filter(t => byOutput(TableNames.backtestName(t)).head == t)
-    eligible.filterNot(candidates.contains).foreach { t =>
-      skipped += t -> s"output name collides with ${byOutput(TableNames.backtestName(t)).head}"
-    }
-
-    val prepared: Seq[(String, Seq[String], DataFrame)] = candidates.flatMap { t =>
-      try {
-        val raw = catalog.load(t)
-        if (!raw.columns.contains("date")) { skipped += t -> "no date column"; None }
-        else {
-          val df = SeriesOps.normalizeDate(raw)
-          val metrics = SeriesOps.numericMetricColumns(df.schema)
-          if (metrics.isEmpty) { skipped += t -> "no numeric metric columns"; None }
-          else if (SeriesOps.isEmpty(df)) { skipped += t -> "empty table"; None }
-          else Some((t, metrics,
-            SeriesOps.melt(df, metrics).withColumn("table", lit(t))))
-        }
-      } catch {
-        case NonFatal(e) =>
-          log.error(s"table $t failed during prepare: ${e.getMessage}")
-          failedSeries += t -> "*"
-          None
-      }
-    }
-
-    if (prepared.nonEmpty) {
-      val all = prepared.map(_._3).reduce(_.unionByName(_))
-      val bt = graft.forecast.Backtest
-        .crossValidate(all, horizon, period, initial)
-        .toDF()
-        .select(col("table"), col("metric"), col("cutoff"), col("n"),
-          round(col("mae"), 6).as("mae"),
-          round(col("rmse"), 6).as("rmse"),
-          round(col("coverage"), 6).as("coverage"),
-          round(col("mae_naive"), 6).as("mae_naive"))
-        .cache()
-      try {
-        val evaluatedOpt =
-          try Some(bt.select("table", "metric").distinct().collect()
-            .map(r => (r.getString(0), r.getString(1))).toSet)
-          catch {
-            case NonFatal(e) =>
-              log.error(s"unioned backtest failed: ${e.getMessage}")
-              prepared.foreach { case (t, _, _) => failedSeries += t -> "*" }
-              None
-          }
-        for (evaluated <- evaluatedOpt) prepared.foreach { case (t, metrics, _) =>
-          try {
-            if (!metrics.exists(m => evaluated((t, m)))) {
-              skipped += t -> s"history shorter than initial=$initial + horizon=$horizon"
-            } else {
-              metrics.filterNot(m => evaluated((t, m)))
-                .foreach(m => failedSeries += t -> m)
-              val outName = TableNames.backtestName(t)
-              val existed = catalog.tableExists(outName)
-              catalog.writeTable(outName,
-                bt.filter(col("table") === t).drop("table"), sortCol = "cutoff")
-              if (existed) updated += outName else created += outName
-              if (metrics.forall(m => evaluated((t, m)))) successful += t
-            }
-          } catch {
-            case NonFatal(e) =>
-              log.error(s"table $t failed during backtest write: ${e.getMessage}")
-              failedSeries += t -> "*"
-          }
-        }
-      } finally bt.unpersist()
-    }
-    summarize(successful, created, updated, skipped, failedSeries, t0)
-  }
-
-  private def summarize(
-      successful: ArrayBuffer[String],
-      created: ArrayBuffer[String],
-      updated: ArrayBuffer[String],
-      skipped: ArrayBuffer[(String, String)],
-      failedSeries: ArrayBuffer[(String, String)],
-      t0: Long): JobSummary = {
     val summary = JobSummary(successful.toSeq, created.toSeq, updated.toSeq,
       skipped.toSeq, failedSeries.toSeq, (System.nanoTime() - t0) / 1e9)
     log.info(
-      f"forecast run: ${summary.successful.size} successful, " +
+      f"$mode run: ${summary.successful.size} successful, " +
         f"${summary.created.size} created, ${summary.updated.size} updated, " +
         f"${summary.skipped.size} skipped, ${summary.failedSeries.size} failed " +
         f"series in ${summary.wallSeconds}%.1f s")

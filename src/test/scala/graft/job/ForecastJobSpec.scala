@@ -83,21 +83,6 @@ class ForecastJobSpec extends SparkSpec {
       t.startsWith("bucket_backtest_") || t.startsWith("bucket_forecast_")))
   }
 
-  test("backtestUnioned: one grouped shuffle, outputs identical to the per-table form") {
-    val cat1 = seedCatalog()
-    val s1 = new ForecastJob(cat1, 7).backtest(7, 3, 14)
-    val cat2 = seedCatalog()
-    val s2 = new ForecastJob(cat2, 7).backtestUnioned(7, 3, 14)
-    assert(s2.created.toSet == s1.created.toSet)
-    assert(s2.successful.toSet == s1.successful.toSet)
-    assert(s2.failedSeries == s1.failedSeries)
-    for (t <- Seq("bucket_backtest_events", "bucket_backtest_plain_sales")) {
-      val a = cat1.load(t).orderBy("metric", "cutoff").collect().toSeq
-      val b = cat2.load(t).orderBy("metric", "cutoff").collect().toSeq
-      assert(a == b, s"$t diverges between per-table and unioned backtest")
-    }
-  }
-
   test("rerun overwrites: outputs land in updated, row counts stable") {
     val cat = seedCatalog()
     new ForecastJob(cat, 7).run()
@@ -125,21 +110,6 @@ class ForecastJobSpec extends SparkSpec {
     // no bucket_forecast_forecast_* tables appear
     assert(cat.listTables().forall(!_.startsWith("bucket_forecast_forecast")))
     assert(!s2.successful.exists(_.startsWith("bucket_forecast_")))
-  }
-
-  test("runUnioned produces identical outputs and bookkeeping to run()") {
-    val catA = seedCatalog()
-    val catB = seedCatalog()
-    val sA = new ForecastJob(catA, 7).run()
-    val sB = new ForecastJob(catB, 7).runUnioned()
-    assert(sA.created.toSet == sB.created.toSet)
-    assert(sA.successful.toSet == sB.successful.toSet)
-    assert(sA.failedSeries.toSet == sB.failedSeries.toSet)
-    Seq("bucket_forecast_events", "bucket_forecast_plain_sales").foreach { t =>
-      val a = catA.load(t).orderBy("date").collect().map(_.toString).toSeq
-      val b = catB.load(t).orderBy("date").collect().map(_.toString).toSeq
-      assert(a == b, s"output $t differs between run() and runUnioned()")
-    }
   }
 
   test("bucket_x vs x output-name collision: first runs, second is skipped") {
@@ -170,10 +140,36 @@ class ForecastJobSpec extends SparkSpec {
     val cat2 = seedCatalog()
     new ForecastJob(cat2, 7).run()
     assert(cat2.load("bucket_forecast_events").schema("event_count").dataType == DoubleType)
-    // unioned path applies the same per-table source typing
-    val cat3 = seedCatalog()
-    new ForecastJob(cat3, 7, parityTypes = true).runUnioned()
-    assert(cat3.load("bucket_forecast_events").schema("active_users").dataType == LongType)
+  }
+
+  test("per-table fault isolation: a table that fails at execution is recorded, the rest are written") {
+    // part files that disagree on each metric's type (double in one file,
+    // string in the other): the table loads with the schema of whichever
+    // footer Spark reads first, keeps one numeric metric either way, and
+    // fails only when a plan reads that metric from the other file
+    def seedWithBrokenTable(): ParquetCatalog = {
+      val cat = seedCatalog()
+      val path = cat.tablePath("broken")
+      val days = spark.range(30).select(
+        date_add(lit("2024-01-01").cast("date"), col("id").cast("int")).as("date"),
+        col("id").cast("double").as("x"))
+      days.select(col("date"), col("x").as("a"), col("x").cast("string").as("b"))
+        .coalesce(1).write.parquet(path)
+      days.select(col("date"), col("x").cast("string").as("a"), col("x").as("b"))
+        .coalesce(1).write.mode("append").parquet(path)
+      cat
+    }
+    val cat = seedWithBrokenTable()
+    val s = new ForecastJob(cat, 7).run()
+    assert(s.created.toSet == Set("bucket_forecast_events", "bucket_forecast_plain_sales"))
+    assert(s.failedSeries == Seq("broken" -> "*"))
+    assert(!cat.tableExists("bucket_forecast_broken"))
+
+    val cat2 = seedWithBrokenTable()
+    val b = new ForecastJob(cat2, 7).backtest(horizon = 7, period = 3, initial = 14)
+    assert(b.created.toSet == Set("bucket_backtest_events", "bucket_backtest_plain_sales"))
+    assert(b.failedSeries == Seq("broken" -> "*"))
+    assert(!cat2.tableExists("bucket_backtest_broken"))
   }
 
   test("only-future output has exactly interval rows per table") {
