@@ -5,7 +5,6 @@ import java.time.LocalDate
 import scala.util.Try
 
 import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.functions._
 
 /** Model-independent backtest columns for one (table, metric, cutoff). */
 final case class NaiveRow(
@@ -43,12 +42,19 @@ final case class BacktestRow(
   *    (y(d-7), falling back to the last training value) so callers can
   *    judge skill, not just error magnitude.
   *
-  * Distribution shape: one `flatMapGroups` over (table, metric) — the SAME
-  * key the forecast fit shuffles on, so a backtest sweep costs one
-  * shuffle; each group fits |cutoffs| models sequentially over a bounded
-  * daily series (years of history is still only thousands of points).
-  * Cutoff count scales the per-task CPU, series count scales across the
-  * cluster, nothing is collected to the driver.
+  * Distribution shape: one `flatMapGroups` over (table, metric), built
+  * by the same grouping as the forecast fit
+  * ([[ForecastEngine.seriesGroups]]), so a backtest sweep costs one
+  * shuffle and the model and naive-baseline paths (whose (n, mae_naive)
+  * columns must project identically) share one input-sanitizing rule.
+  * That shuffle is `defaultParallelism` wide and hashed on `metric`, not
+  * `spark.sql.shuffle.partitions` wide: the job caches the result, a
+  * cached frame keeps its partition count, and every consumer of the
+  * cache would pay one task per (mostly empty) partition. Each group fits
+  * |cutoffs| models sequentially over a bounded daily series (years of
+  * history is still only thousands of points). Cutoff count scales the
+  * per-task CPU, series count scales across the cluster, nothing is
+  * collected to the driver.
   */
 object Backtest {
 
@@ -82,34 +88,12 @@ object Backtest {
     require(period >= 1, s"period must be >= 1, got $period")
     require(initial >= 1, s"initial must be >= 1, got $initial")
 
-    groupedPoints(long)
+    ForecastEngine.seriesGroups[LongPoint](long, "ds", "date")
       .flatMapGroups { (key: (String, String), it: Iterator[LongPoint]) =>
         val pts = it.map(p => (p.ds.toLocalDate.toEpochDay, p.y)).toArray
         backtestSeries(key._1, key._2, pts, horizon, period, initial, band,
           holidays, growth)
       }
-  }
-
-  /** Shared input sanitization + series keying for [[crossValidate]] and
-    * [[naiveMetrics]] — ONE definition, so the y-finiteness rule and the
-    * (table, metric) grouping can never drift between the model and
-    * naive-baseline paths (whose (n, mae_naive) columns must project
-    * identically).
-    */
-  private def groupedPoints(long: DataFrame)
-      : org.apache.spark.sql.KeyValueGroupedDataset[(String, String), LongPoint] = {
-    val spark = long.sparkSession
-    import spark.implicits._
-    long
-      .select(
-        col("table").cast("string"),
-        col("metric").cast("string"),
-        col("ds").cast("date"),
-        col("y").cast("double"))
-      .filter(col("ds").isNotNull && col("y").isNotNull && !isnan(col("y")) &&
-        col("y").between(Double.MinValue, Double.MaxValue))
-      .as[LongPoint]
-      .groupByKey(p => (p.table, p.metric))
   }
 
   /** Model-independent slice of [[crossValidate]]: the cutoff calendar,
@@ -127,7 +111,7 @@ object Backtest {
     require(horizon >= 1, s"horizon must be >= 1, got $horizon")
     require(period >= 1, s"period must be >= 1, got $period")
     require(initial >= 1, s"initial must be >= 1, got $initial")
-    groupedPoints(long)
+    ForecastEngine.seriesGroups[LongPoint](long, "ds", "date")
       .flatMapGroups { (key: (String, String), it: Iterator[LongPoint]) =>
         val pts = it.map(p => (p.ds.toLocalDate.toEpochDay, p.y)).toArray
         naiveSeries(key._1, key._2, pts, horizon, period, initial)

@@ -4,7 +4,7 @@ import java.time.LocalDate
 
 import scala.util.Try
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, KeyValueGroupedDataset}
 import org.apache.spark.sql.functions._
 
 /** One forecast output point for a (table, metric) series. */
@@ -41,11 +41,23 @@ private[forecast] final case class TimePoint(
   *
   * The reference runs one cmdstan subprocess per metric, sequentially, on a
   * single host (forecast_script.py:169-198). Here every (table, metric)
-  * series is one shuffle group: `groupByKey.flatMapGroups` fans all fits
-  * across executors, so wall-clock scales with cluster width instead of
-  * `tables x columns`. Per-group state is bounded — daily series, so even
-  * 20 years is ~7.3k points — which makes the in-group collect safe at any
-  * table count.
+  * series is one group of a single shuffle, so wall-clock scales with
+  * cluster width instead of `tables x columns`. Per-group state is bounded
+  * — daily series, so even 20 years is ~7.3k points — which makes the
+  * in-group collect safe at any table count.
+  *
+  * The shuffle is hashed on `metric` into `defaultParallelism` partitions
+  * (one per task slot) and grouped on `(table, metric)` columns, so the
+  * grouping reuses that partitioning and the plan has exactly one
+  * Exchange. Its width is deliberately not `spark.sql.shuffle.partitions`:
+  * the job caches the fitted frame, a cached frame keeps its partition
+  * count (AQE does not coalesce it), and every consumer of the cache pays
+  * one task per partition: at Spark's default of 200, a forecast-job
+  * table on a 4-slot host ran 606 tasks, 98 % of them reading nothing;
+  * at the slot count it runs 18. The hash leaves `table` out because a
+  * job frame's `table` is a literal that Catalyst folds out of a
+  * repartition expression; hashing on it would stop matching the
+  * grouping and add a second exchange.
   */
 object ForecastEngine {
 
@@ -77,18 +89,7 @@ object ForecastEngine {
     import spark.implicits._
     require(interval >= 0, s"interval must be >= 0, got $interval")
 
-    long
-      .select(
-        col("table").cast("string"),
-        col("metric").cast("string"),
-        col("ds").cast("date"),
-        col("y").cast("double"))
-      .filter(col("ds").isNotNull && col("y").isNotNull && !isnan(col("y")) &&
-        // +/-Infinity would not throw in the fit but silently poison the
-        // solve into NaNs; treat non-finite like Prophet treats NaN: drop
-        col("y").between(Double.MinValue, Double.MaxValue))
-      .as[LongPoint]
-      .groupByKey(p => (p.table, p.metric))
+    seriesGroups[LongPoint](long, "ds", "date")
       .flatMapGroups { (key: (String, String), it: Iterator[LongPoint]) =>
         val pts = it.map(p => (p.ds.toLocalDate.toEpochDay, p.y)).toArray
         forecastSeries(key._1, key._2, pts, interval, onlyFuture, band, holidays, growth)
@@ -102,7 +103,7 @@ object ForecastEngine {
     * (table, metric, ts timestamp, y); each series fits on fractional
     * epoch-days (unix micros / 86.4e9) and predicts `horizonSteps`
     * future points spaced `stepDays` apart (1/24 = hourly) after the
-    * last observation. Same one-shuffle `flatMapGroups` shape and
+    * last observation. Same one-shuffle grouping ([[seriesGroups]]) and
     * per-metric fault isolation as [[forecast]].
     */
   def forecastSubDaily(
@@ -114,16 +115,7 @@ object ForecastEngine {
     import spark.implicits._
     require(horizonSteps >= 0, s"horizonSteps must be >= 0, got $horizonSteps")
     require(stepDays > 0, s"stepDays must be > 0, got $stepDays")
-    long
-      .select(
-        col("table").cast("string"),
-        col("metric").cast("string"),
-        col("ts").cast("timestamp"),
-        col("y").cast("double"))
-      .filter(col("ts").isNotNull && col("y").isNotNull && !isnan(col("y")) &&
-        col("y").between(Double.MinValue, Double.MaxValue))
-      .as[TimePoint]
-      .groupByKey(p => (p.table, p.metric))
+    seriesGroups[TimePoint](long, "ts", "timestamp")
       .flatMapGroups { (key: (String, String), it: Iterator[TimePoint]) =>
         val micros = it.map(p => (p.ts.getTime * 1000L, p.y)).toArray
         Try {
@@ -139,6 +131,33 @@ object ForecastEngine {
           }
         }.getOrElse(Iterator.empty)
       }
+  }
+
+  /** The one grouped-fit input behind [[forecast]], [[forecastSubDaily]]
+    * and [[Backtest]]: `long`'s (table, metric, `time`, y) columns, cast
+    * and sanitized, as one group per (table, metric) series. Rows with a
+    * null time or a null, NaN or infinite `y` are dropped: +/-Infinity
+    * would not throw in the fit but silently poison the solve into NaNs,
+    * so it is treated like Prophet treats NaN. The single shuffle is
+    * `defaultParallelism` wide and hashed on `metric` (see the object doc
+    * for why it is neither the session's shuffle width nor keyed on
+    * `table`); grouping is still exact per (table, metric).
+    */
+  private[forecast] def seriesGroups[P: Encoder](
+      long: DataFrame, time: String, timeType: String): KeyValueGroupedDataset[(String, String), P] = {
+    val spark = long.sparkSession
+    import spark.implicits._
+    long
+      .select(
+        col("table").cast("string"),
+        col("metric").cast("string"),
+        col(time).cast(timeType),
+        col("y").cast("double"))
+      .filter(col(time).isNotNull && col("y").isNotNull && !isnan(col("y")) &&
+        col("y").between(Double.MinValue, Double.MaxValue))
+      .repartition(spark.sparkContext.defaultParallelism, col("metric"))
+      .groupBy(col("table"), col("metric"))
+      .as[(String, String), P]
   }
 
   /** Pure per-series pipeline (fit -> future frame -> predict), testable

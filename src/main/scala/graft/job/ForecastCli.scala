@@ -95,23 +95,25 @@ object ForecastCli {
         (if (sys.props.contains("spark.master")) builder
          else builder.master(sys.env.getOrElse("GRAFT_MASTER", "local[*]")))
           .getOrCreate()
-      val job = new ForecastJob(new ParquetCatalog(spark, o.dbDir), o.interval,
-        o.specificTables, o.onlyFuture, o.parityTypes)
-      val summary =
-        if (o.backtest)
-          job.backtest(horizon = o.interval,
-            period = math.max(1, o.interval / 2), initial = 3 * o.interval)
-        else job.run()
-      println(
-        f"${if (o.backtest) "backtest" else "forecast"} run finished in ${summary.wallSeconds}%.1f s: " +
-          s"successful=${summary.successful.size} created=${summary.created.size} " +
-          s"updated=${summary.updated.size} skipped=${summary.skipped.size} " +
-          s"failedSeries=${summary.failedSeries.size}")
-      spark.stop()
+      try {
+        val job = new ForecastJob(new ParquetCatalog(spark, o.dbDir), o.interval,
+          o.specificTables, o.onlyFuture, o.parityTypes)
+        val summary =
+          if (o.backtest)
+            job.backtest(horizon = o.interval,
+              period = math.max(1, o.interval / 2), initial = 3 * o.interval)
+          else job.run()
+        println(
+          f"${if (o.backtest) "backtest" else "forecast"} run finished in ${summary.wallSeconds}%.1f s: " +
+            s"successful=${summary.successful.size} created=${summary.created.size} " +
+            s"updated=${summary.updated.size} skipped=${summary.skipped.size} " +
+            s"failedSeries=${summary.failedSeries.size}")
+      } finally spark.stop()
     } catch {
       case e: Throwable =>
-        // global excepthook parity (fs:76-79): log, nonzero exit
-        System.err.println(s"fatal: ${e.getMessage}")
+        // global excepthook parity (fs:76-79): log, nonzero exit; the
+        // exception's class is printed too, since some carry no message
+        System.err.println(s"fatal: $e")
         sys.exit(1)
     }
   }

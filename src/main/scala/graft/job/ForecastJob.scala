@@ -169,7 +169,7 @@ final class ForecastJob(
         }
       } catch {
         case NonFatal(e) =>
-          log.error(s"$mode of table $t failed: ${e.getMessage}")
+          log.error(s"$mode of table $t failed: $e") // class and message
           failedSeries += t -> "*"
       }
     }

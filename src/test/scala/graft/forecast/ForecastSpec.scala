@@ -546,4 +546,41 @@ class ForecastEngineSpec extends SparkSpec {
       s"fixture too tame: the linear face should overshoot $cap " +
         s"(max ${linear.max}) for the saturation contrast to mean anything")
   }
+
+  test("grouped fits run one metric-hashed shuffle as wide as the task " +
+    "slots, whatever spark.sql.shuffle.partitions says") {
+    import org.apache.spark.sql.Dataset
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val plans = new AdaptiveSparkPlanHelper {}
+    val slots = spark.sparkContext.defaultParallelism
+    val key = "spark.sql.shuffle.partitions"
+    val saved = spark.conf.get(key)
+    spark.conf.set(key, "200")
+    try {
+      // the job's frame shape: `table` is a literal over a scanned (not
+      // local) relation, so Catalyst folds it into any repartition
+      // expression that names it
+      import spark.implicits._
+      val long = spark.sparkContext
+        .parallelize(hist ++ hist.map { case (t, _, d, y) => (t, "m2", d, y) }, 2)
+        .toDF("table", "metric", "ds", "y")
+        .withColumn("table", lit("t"))
+      val timed = long.select(col("table"), col("metric"),
+        col("ds").cast("timestamp").as("ts"), col("y"))
+      val faces = Seq[(String, Dataset[_])](
+        "forecast" -> ForecastEngine.forecast(long, 7, onlyFuture = false),
+        "forecastSubDaily" -> ForecastEngine.forecastSubDaily(timed, 24, 1.0 / 24),
+        "crossValidate" -> Backtest.crossValidate(long, 7, 3, 14),
+        "naiveMetrics" -> Backtest.naiveMetrics(long, 7, 3, 14))
+      faces.foreach { case (name, ds) =>
+        assert(ds.collect().nonEmpty, name)
+        val widths = plans.collect(ds.queryExecution.executedPlan) {
+          case e: ShuffleExchangeExec => e.numPartitions
+        }
+        assert(widths == Seq(slots), s"$name: shuffle widths $widths, want one of $slots")
+        assert(ds.rdd.getNumPartitions == slots, name)
+      }
+    } finally spark.conf.set(key, saved)
+  }
 }

@@ -177,4 +177,46 @@ class ForecastJobSpec extends SparkSpec {
     new ForecastJob(cat, 7, onlyFuture = true).run()
     assert(cat.load("bucket_forecast_events").count() == 7)
   }
+
+  test("task budget: the fit follows the task slots, not the session's " +
+    "shuffle width, with the same jobs and the same output") {
+    import java.util.concurrent.atomic.AtomicInteger
+    import org.apache.spark.graft.ListenerBridge
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+    val sc = spark.sparkContext
+    val key = "spark.sql.shuffle.partitions"
+    // (jobs per table, tasks per table, sorted rows of every output);
+    // the skipped table's jobs are charged to the written ones
+    def runAt(width: Int): (Double, Double, Map[String, Seq[String]]) = {
+      val cat = seedCatalog()
+      val jobs = new AtomicInteger
+      val tasks = new AtomicInteger
+      val counter = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+        override def onTaskEnd(e: SparkListenerTaskEnd): Unit = tasks.incrementAndGet()
+      }
+      val saved = spark.conf.get(key)
+      spark.conf.set(key, width.toString)
+      ListenerBridge.waitUntilListenerBusEmpty(sc) // seeding's events are not counted
+      sc.addSparkListener(counter)
+      val summary =
+        try new ForecastJob(cat, interval = 7).run()
+        finally {
+          ListenerBridge.waitUntilListenerBusEmpty(sc)
+          sc.removeSparkListener(counter)
+          spark.conf.set(key, saved)
+        }
+      val written = summary.created
+      assert(written.size == 2)
+      (jobs.get.toDouble / written.size, tasks.get.toDouble / written.size,
+        written.map(n => n -> cat.load(n).collect().map(_.toString).sorted.toSeq).toMap)
+    }
+    val (jobsWide, tasksWide, outWide) = runAt(200)
+    val (jobsNarrow, tasksNarrow, outNarrow) = runAt(4)
+    assert(jobsWide == jobsNarrow, s"jobs per table: $jobsWide at 200, $jobsNarrow at 4")
+    val budget = 5 * sc.defaultParallelism + 10
+    assert(tasksWide <= budget && tasksNarrow <= budget,
+      s"tasks per table: $tasksWide at 200, $tasksNarrow at 4, budget $budget")
+    assert(outWide == outNarrow)
+  }
 }
