@@ -1,7 +1,5 @@
 package graft.forecast
 
-import breeze.linalg.{diag, DenseMatrix, DenseVector}
-
 /** Fitted per-series model parameters — the JVM stand-in for the reference's
   * ephemeral `Prophet()` model object (forecast_script.py:171). All fields
   * are plain data so the whole object serializes cheaply between executors.
@@ -11,8 +9,9 @@ import breeze.linalg.{diag, DenseMatrix, DenseVector}
   * `y(t) = g(t) + s(t) + eps` with a piecewise-linear trend `g` over
   * changepoints and Fourier seasonal terms `s`. Divergences from the
   * reference's Stan MAP fit (documented in SURVEY.md §7.4): we solve a
-  * ridge-regularized least-squares system in closed form (breeze) instead
-  * of L-BFGS with a Laplace changepoint prior, and the uncertainty band is
+  * ridge-regularized least-squares system in closed form (normal
+  * equations, LU with partial pivoting over plain arrays) instead of
+  * L-BFGS with a Laplace changepoint prior, and the uncertainty band is
   * analytic (residual sigma + changepoint-magnitude growth) instead of
   * 1000-sample trend simulation.
   */
@@ -149,6 +148,77 @@ object ProphetLike {
     row.result()
   }
 
+  private def dot(a: Array[Double], b: Array[Double]): Double = {
+    var s = 0.0
+    var j = 0
+    while (j < a.length) { s += a(j) * b(j); j += 1 }
+    s
+  }
+
+  /** Ridge least squares: solves (XᵀX + diag(lam)) beta = Xᵀy for the
+    * design `rows` (n x p) by Gaussian elimination with partial pivoting
+    * — the LU factor-and-solve LAPACK's `dgesv` runs. p is at most ~60,
+    * so forming the normal equations costs n·p² and the solve p³, both
+    * tiny next to a Spark task. An exactly zero pivot means a singular
+    * system; it throws, so the caller's per-series `Try` drops that
+    * series.
+    */
+  private[forecast] def ridgeSolve(
+      rows: Array[Array[Double]], y: Array[Double], lam: Array[Double]): Array[Double] = {
+    val p = lam.length
+    // upper triangle of XᵀX + diag(lam), and Xᵀy; zero entries (hinges
+    // before their changepoint, holiday indicators) add nothing
+    val a = Array.tabulate(p)(j => { val r = new Array[Double](p); r(j) = lam(j); r })
+    val b = new Array[Double](p)
+    var i = 0
+    while (i < rows.length) {
+      val x = rows(i)
+      var j = 0
+      while (j < p) {
+        val xj = x(j)
+        if (xj != 0.0) {
+          val aj = a(j)
+          var k = j
+          while (k < p) { aj(k) += xj * x(k); k += 1 }
+          b(j) += xj * y(i)
+        }
+        j += 1
+      }
+      i += 1
+    }
+    var j = 1
+    while (j < p) { var k = 0; while (k < j) { a(j)(k) = a(k)(j); k += 1 }; j += 1 }
+
+    var c = 0
+    while (c < p) {
+      var piv = c
+      var r = c + 1
+      while (r < p) { if (math.abs(a(r)(c)) > math.abs(a(piv)(c))) piv = r; r += 1 }
+      if (a(piv)(c) == 0.0)
+        throw new ArithmeticException(s"ridge system is singular at column $c of $p")
+      val ar = a(piv); a(piv) = a(c); a(c) = ar
+      val br = b(piv); b(piv) = b(c); b(c) = br
+      r = c + 1
+      while (r < p) {
+        val f = a(r)(c) / a(c)(c)
+        var k = c + 1
+        while (k < p) { a(r)(k) -= f * a(c)(k); k += 1 }
+        b(r) -= f * b(c)
+        r += 1
+      }
+      c += 1
+    }
+    // back substitution through the upper triangle
+    c = p - 1
+    while (c >= 0) {
+      var k = c + 1
+      while (k < p) { b(c) -= a(c)(k) * b(k); k += 1 }
+      b(c) /= a(c)(c)
+      c -= 1
+    }
+    b
+  }
+
   /** Fit on an epoch-day-sorted series. Bounded work: series are daily, so
     * even 20 years is ~7.3k points x <60 features — safe to run inside a
     * single `mapGroups` task (the per-group collect the reference does on
@@ -215,39 +285,34 @@ object ProphetLike {
     val p = 2 + cps.length + (if (weekly) 2 * WeeklyOrder else 0) +
       (if (yearly) 2 * YearlyOrder else 0) +
       (if (daily) 2 * DailyOrder else 0) + holidays.length
-    val x = DenseMatrix.zeros[Double](n, p)
-    var i = 0
-    while (i < n) {
-      val row = featureRow(days(i), tStart, span, cps, weekly, yearly, holidays, daily)
-      var j = 0
-      while (j < p) { x(i, j) = row(j); j += 1 }
-      i += 1
-    }
-    val yv = DenseVector(ys.map(_ / yScale))
+    val x = Array.tabulate(n)(i =>
+      featureRow(days(i), tStart, span, cps, weekly, yearly, holidays, daily))
+    val yv = ys.map(_ / yScale)
 
     // Ridge penalties approximating Prophet's priors: near-flat prior for
     // base intercept/slope, a strong Laplace(0.05)-like shrinkage on
     // changepoint deltas (scaled with n so smoothing strength tracks the
     // likelihood term), and a mild Normal(0,10)-like prior on seasonality.
-    val lam = DenseVector.zeros[Double](p)
+    val lam = new Array[Double](p)
     lam(0) = 1e-6; lam(1) = 1e-6
     val lamCp = 1.0 + 0.05 * n
     var j = 2
     while (j < 2 + cps.length) { lam(j) = lamCp; j += 1 }
     while (j < p) { lam(j) = 1.0; j += 1 }
 
-    val xtx = x.t * x + diag(lam)
-    val beta = xtx \ (x.t * yv)
+    val beta = ridgeSolve(x, yv, lam)
 
-    val resid = yv - x * beta
+    var sse = 0.0
+    var i = 0
+    while (i < n) { val e = yv(i) - dot(x(i), beta); sse += e * e; i += 1 }
     val dof = math.max(1, n - p)
-    val sigma = math.sqrt((resid dot resid) / dof)
-    val deltas = beta.toArray.slice(2, 2 + cps.length)
+    val sigma = math.sqrt(sse / dof)
+    val deltas = beta.slice(2, 2 + cps.length)
     val deltaScale =
       if (deltas.isEmpty) 0.0
       else math.sqrt(deltas.map(d => d * d).sum / deltas.length)
 
-    ProphetParams(tStart, tEnd, span, yScale, beta.toArray, cps, weekly, yearly,
+    ProphetParams(tStart, tEnd, span, yScale, beta, cps, weekly, yearly,
       sigma, deltaScale, holidays, dailyEnabled = daily)
   }
 
@@ -344,67 +409,49 @@ object ProphetLike {
     val pSeas = (if (weekly) 2 * WeeklyOrder else 0) +
       (if (yearly) 2 * YearlyOrder else 0) + holidays.length
 
+    // one design row per day, [trend | seasonal | holiday]; stage 1 reads
+    // the trend columns, stage 2 the rest
+    val full = Array.tabulate(n)(i =>
+      featureRow(days(i), tStart, span, cps, weekly, yearly, holidays))
+    val seas = full.map(_.drop(pTrend))
+
     // stage 1: trend-only ridge on standardized y
-    val xt = DenseMatrix.zeros[Double](n, pTrend)
-    var i = 0
-    while (i < n) {
-      val row = featureRow(days(i), tStart, span, cps, weekly = false,
-        yearly = false, Array.empty)
-      var j = 0
-      while (j < pTrend) { xt(i, j) = row(j); j += 1 }
-      i += 1
-    }
-    val yv = DenseVector(ys.map(_ / yScale))
-    val lamT = DenseVector.zeros[Double](pTrend)
+    val xt = full.map(_.take(pTrend))
+    val yv = ys.map(_ / yScale)
+    val lamT = new Array[Double](pTrend)
     lamT(0) = 1e-6; lamT(1) = 1e-6
     val lamCp = 1.0 + 0.05 * n
     var j = 2
     while (j < pTrend) { lamT(j) = lamCp; j += 1 }
-    val betaT = (xt.t * xt + diag(lamT)) \ (xt.t * yv)
-    val g = xt * betaT
+    val betaT = ridgeSolve(xt, yv, lamT)
+    val g = xt.map(dot(_, betaT))
 
     // stage 2: seasonal/holiday ridge on the detrended ratio y/g - 1,
     // weighted implicitly by dropping near-zero-trend rows
     val betaS =
-      if (pSeas == 0) DenseVector.zeros[Double](0)
+      if (pSeas == 0) Array.emptyDoubleArray
       else {
-        val keep = (0 until n).filter(i => math.abs(g(i)) > 1e-8)
-        val xs = DenseMatrix.zeros[Double](keep.length, pSeas)
-        val rs = DenseVector.zeros[Double](keep.length)
-        var r = 0
-        while (r < keep.length) {
-          val i = keep(r)
-          val full = featureRow(days(i), tStart, span, cps, weekly, yearly, holidays)
-          var j = 0
-          while (j < pSeas) { xs(r, j) = full(pTrend + j); j += 1 }
-          rs(r) = yv(i) / g(i) - 1.0
-          r += 1
-        }
-        val lamS = DenseVector.fill(pSeas)(1.0)
-        (xs.t * xs + diag(lamS)) \ (xs.t * rs)
+        val keep = (0 until n).filter(i => math.abs(g(i)) > 1e-8).toArray
+        ridgeSolve(keep.map(seas), keep.map(i => yv(i) / g(i) - 1.0),
+          Array.fill(pSeas)(1.0))
       }
 
-    val beta = DenseVector.vertcat(betaT, betaS)
+    val beta = betaT ++ betaS
     // final residuals in standardized-y space, against the COMBINED model
     var sse = 0.0
-    i = 0
+    var i = 0
     while (i < n) {
-      val full = featureRow(days(i), tStart, span, cps, weekly, yearly, holidays)
-      var s = 0.0
-      var j = 0
-      while (j < pSeas) { s += full(pTrend + j) * betaS(j); j += 1 }
-      val yhat = g(i) * (1.0 + s)
-      val e = yv(i) - yhat
+      val e = yv(i) - g(i) * (1.0 + dot(seas(i), betaS))
       sse += e * e
       i += 1
     }
     val p = pTrend + pSeas
     val sigma = math.sqrt(sse / math.max(1, n - p))
-    val deltas = betaT.toArray.slice(2, pTrend)
+    val deltas = betaT.slice(2, pTrend)
     val deltaScale =
       if (deltas.isEmpty) 0.0
       else math.sqrt(deltas.map(d => d * d).sum / deltas.length)
-    ProphetParams(tStart, tEnd, span, yScale, beta.toArray, cps, weekly, yearly,
+    ProphetParams(tStart, tEnd, span, yScale, beta, cps, weekly, yearly,
       sigma, deltaScale, holidays, multiplicative = true)
   }
 
@@ -499,15 +546,13 @@ object ProphetLike {
   /** [[predict]] at FRACTIONAL epoch-day times (sub-daily horizons). */
   def predictTimes(params: ProphetParams,
       times: Array[Double]): Array[(Double, Double, Double, Double)] = {
-    val beta = DenseVector(params.beta)
     val pTrend = 2 + params.changepoints.length
     times.map { d =>
       val rowArr = featureRow(d, params.tStartDay, params.spanDays,
         params.changepoints, params.weeklyEnabled, params.yearlyEnabled,
         params.holidays, params.dailyEnabled)
-      val row = DenseVector(rowArr)
       val std =
-        if (!params.multiplicative) row dot beta
+        if (!params.multiplicative) dot(rowArr, params.beta)
         else {
           var g = 0.0
           var j = 0

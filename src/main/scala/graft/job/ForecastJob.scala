@@ -1,9 +1,11 @@
 package graft.job
 
-import scala.collection.mutable.ArrayBuffer
+import java.util.concurrent.{Callable, ExecutionException, Executors}
+
+import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DataType
 
@@ -34,11 +36,13 @@ final case class JobSummary(
   *  - per-table work is a lazy Spark plan end to end (scan -> melt ->
   *    grouped fit -> pivot -> write); nothing is collected to the driver
   *    (the reference pulls each full table into pandas, fs:157-158).
-  *  - tables run sequentially driver-side, each table's (metric-count)
-  *    series fit in parallel across executors. Tables are never fused into
-  *    one Spark job: each table's plan runs and fails on its own, so one
-  *    unreadable table is recorded as failed and cannot take down the
-  *    rest of the catalog.
+  *  - tables run concurrently driver-side (one thread per table, at most
+  *    as many as the cluster's task slots), each table's (metric-count)
+  *    series fit in parallel across executors. A table's jobs are small,
+  *    so the driver sets the pace; while one table is being planned,
+  *    another's jobs run. Tables are never fused into one Spark job: each
+  *    table's plan runs and fails on its own, so one unreadable table is
+  *    recorded as failed and cannot take down the rest of the catalog.
   */
 final class ForecastJob(
     catalog: ParquetCatalog,
@@ -46,6 +50,8 @@ final class ForecastJob(
     specificTables: Option[Set[String]] = None,
     onlyFuture: Boolean = false,
     parityTypes: Boolean = false) {
+
+  import ForecastJob.Outcome
 
   private val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
@@ -93,7 +99,13 @@ final class ForecastJob(
     * table and (re)write `outName(t)` sorted by `sortCol`. A table whose
     * frame has no metric at all is skipped with `emptyReason` when one is
     * given, else written as it is. Any failure of a table's plan is
-    * recorded as `(t, "*")` and the loop moves on.
+    * recorded as `(t, "*")` and the other tables carry on.
+    *
+    * Tables run on a driver pool of `min(tables, defaultParallelism)`
+    * threads; each one's jobs carry the description `"<mode> <t>"` (log,
+    * UI, listeners). Outcomes are merged in table order, so the summary
+    * does not depend on which table finishes first. A fatal error in a
+    * table thread is rethrown here once the other tables are done.
     *
     * Cache hygiene is try/finally `unpersist()` per computed frame, NOT
     * [[graft.operators.CacheScope]]: the job is a batch CLI whose
@@ -112,12 +124,6 @@ final class ForecastJob(
       compute: DataFrame => Dataset[T])(
       shape: (Dataset[T], DataFrame, Seq[String]) => DataFrame): JobSummary = {
     val t0 = System.nanoTime()
-    val successful = ArrayBuffer[String]()
-    val created = ArrayBuffer[String]()
-    val updated = ArrayBuffer[String]()
-    val skipped = ArrayBuffer[(String, String)]()
-    val failedSeries = ArrayBuffer[(String, String)]()
-
     val eligible = catalog
       .listTables()
       .filterNot(TableNames.isJobOutput) // skip our own outputs (fs:234)
@@ -127,23 +133,21 @@ final class ForecastJob(
     // of silently overwriting one output with the other
     val byOutput = eligible.groupBy(outName)
     val candidates = eligible.filter(t => byOutput(outName(t)).head == t)
-    eligible.filterNot(candidates.contains).foreach { t =>
-      skipped += t -> s"output name collides with ${byOutput(outName(t)).head}"
-    }
+    val collisions = Outcome(skipped = eligible.filterNot(candidates.contains).map { t =>
+      t -> s"output name collides with ${byOutput(outName(t)).head}"
+    })
 
-    candidates.foreach { t =>
+    def table(t: String): Outcome =
       try {
         val raw = catalog.load(t)
-        if (!raw.columns.contains("date")) {
-          skipped += t -> "no date column"
-        } else {
+        if (!raw.columns.contains("date")) Outcome(skipped = Seq(t -> "no date column"))
+        else {
           val df = SeriesOps.normalizeDate(raw)
           val metrics = SeriesOps.numericMetricColumns(df.schema)
-          if (metrics.isEmpty) {
-            skipped += t -> "no numeric metric columns"
-          } else if (SeriesOps.isEmpty(df)) {
+          if (metrics.isEmpty) Outcome(skipped = Seq(t -> "no numeric metric columns"))
+          else if (SeriesOps.isEmpty(df)) {
             // empty-input guard (fs:160-163)
-            skipped += t -> "empty table"
+            Outcome(skipped = Seq(t -> "empty table"))
           } else {
             val long = SeriesOps.melt(df, metrics).withColumn("table", lit(t))
             val frame = compute(long).cache()
@@ -152,17 +156,19 @@ final class ForecastJob(
               val done =
                 frame.select("metric").distinct().collect().map(_.getString(0)).toSet
               if (done.isEmpty && emptyReason.isDefined) {
-                skipped += t -> emptyReason.get
+                Outcome(skipped = Seq(t -> emptyReason.get))
               } else {
-                metrics.filterNot(done).foreach(m => failedSeries += t -> m)
                 val out = shape(frame, df, metrics)
                 val name = outName(t)
                 val existed = catalog.tableExists(name)
                 catalog.writeTable(name, out, sortCol = sortCol)
-                if (existed) updated += name else created += name
-                if (metrics.forall(done)) successful += t
                 log.info(s"$mode $t -> $name (${metrics.size} metrics, " +
                   s"${done.size} done)")
+                Outcome(
+                  successful = if (metrics.forall(done)) Seq(t) else Nil,
+                  created = if (existed) Nil else Seq(name),
+                  updated = if (existed) Seq(name) else Nil,
+                  failedSeries = metrics.filterNot(done).map(t -> _))
               }
             } finally frame.unpersist()
           }
@@ -170,12 +176,33 @@ final class ForecastJob(
       } catch {
         case NonFatal(e) =>
           log.error(s"$mode of table $t failed: $e") // class and message
-          failedSeries += t -> "*"
+          Outcome(failedSeries = Seq(t -> "*"))
       }
-    }
 
-    val summary = JobSummary(successful.toSeq, created.toSeq, updated.toSeq,
-      skipped.toSeq, failedSeries.toSeq, (System.nanoTime() - t0) / 1e9)
+    val spark = catalog.spark
+    val sc = spark.sparkContext
+    val pool =
+      Executors.newFixedThreadPool(math.max(1, math.min(candidates.size, sc.defaultParallelism)))
+    val outcomes =
+      try {
+        val tasks = candidates.map { t =>
+          new Callable[Outcome] {
+            def call(): Outcome = {
+              SparkSession.setActiveSession(spark)
+              sc.setJobDescription(s"$mode $t")
+              try table(t) finally sc.setJobDescription(null)
+            }
+          }
+        }
+        pool.invokeAll(tasks.asJava).asScala.toSeq.map { f =>
+          try f.get() catch { case e: ExecutionException => throw e.getCause }
+        }
+      } finally pool.shutdownNow()
+
+    val all = collisions +: outcomes
+    val summary = JobSummary(all.flatMap(_.successful), all.flatMap(_.created),
+      all.flatMap(_.updated), all.flatMap(_.skipped), all.flatMap(_.failedSeries),
+      (System.nanoTime() - t0) / 1e9)
     log.info(
       f"$mode run: ${summary.successful.size} successful, " +
         f"${summary.created.size} created, ${summary.updated.size} updated, " +
@@ -183,4 +210,15 @@ final class ForecastJob(
         f"series in ${summary.wallSeconds}%.1f s")
     summary
   }
+}
+
+object ForecastJob {
+
+  /** What one table adds to the run's [[JobSummary]]. */
+  private final case class Outcome(
+      successful: Seq[String] = Nil,
+      created: Seq[String] = Nil,
+      updated: Seq[String] = Nil,
+      skipped: Seq[(String, String)] = Nil,
+      failedSeries: Seq[(String, String)] = Nil)
 }

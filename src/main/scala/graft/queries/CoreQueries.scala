@@ -781,7 +781,8 @@ object CoreQueries {
     * changepoints at observation quantiles 3/7 and 5/7 — so the design
     * matrix is [1, t, (t−3/7)₊, (t−5/7)₊] with ridge λ =
     * [1e-6, 1e-6, 1.4, 1.4] (λ_cp = 1 + 0.05·8), and the normal-equation
-    * solve breeze performs by LU is DuckDB-expressible as explicit
+    * solve the fit performs by LU (`ProphetLike.ridgeSolve`) is
+    * DuckDB-expressible as explicit
     * Cramer cofactor arithmetic over per-metric Gram sums (the λ and
     * changepoint values as plan-time literals, the
     * `dedup_embedding_admit_wide` discipline; the config itself is

@@ -158,6 +158,75 @@ class ProphetLikeSpec extends SparkSpec {
     assert(futWidths.sum / futWidths.length >= noiseWidth * 0.8)
   }
 
+  test("ridgeSolve matches breeze's (XᵀX + diag(λ)) \\ Xᵀy within 1e-9 relative on the kernel's shapes") {
+    import breeze.linalg.{diag, DenseMatrix, DenseVector}
+    val rng = new scala.util.Random(20181)
+    // (n, hinges, weekly, yearly, daily, holidays): the column blocks the
+    // fit builds for n points, up to p = 2 + 25 + 6 + 20 + 8 = 61
+    val shapes = Seq((1, 0, false, false, false, 0), (3, 0, false, false, false, 1),
+      (8, 2, false, false, false, 0), (30, 13, true, false, false, 1),
+      (400, 25, true, false, false, 2), (2500, 25, true, true, true, 0))
+    for ((n, hinges, weekly, yearly, daily, hols) <- shapes) {
+      val cps = Array.tabulate(hinges)(j => 0.8 * (j + 1) / hinges)
+      def fourier(d: Double, period: Double, order: Int) =
+        (1 to order).flatMap(k => Seq(math.sin(2 * math.Pi * k * d / period),
+          math.cos(2 * math.Pi * k * d / period)))
+      val rows = Array.tabulate(n) { i =>
+        val d = 19000.0 + i * (if (daily) 0.75 else 1.0)
+        val t = i.toDouble / math.max(1, n - 1)
+        (Seq(1.0, t) ++ cps.map(c => math.max(0.0, t - c)) ++
+          (if (weekly) fourier(d, 7.0, 3) else Nil) ++
+          (if (yearly) fourier(d, 365.25, 10) else Nil) ++
+          (if (daily) fourier(d, 1.0, 4) else Nil) ++
+          Seq.fill(hols)(if (rng.nextInt(10) == 0) 1.0 else 0.0)).toArray
+      }
+      val p = rows.head.length
+      val y = Array.tabulate(n)(i => 0.5 + 0.3 * rows(i)(1) + 0.1 * rng.nextGaussian())
+      val lam = Array.tabulate(p)(j =>
+        if (j < 2) 1e-6 else if (j < 2 + hinges) 1.0 + 0.05 * n else 1.0)
+      val got = ProphetLike.ridgeSolve(rows, y, lam)
+      val x = DenseMatrix(rows.toIndexedSeq: _*)
+      val want = ((x.t * x + diag(DenseVector(lam))) \ (x.t * DenseVector(y))).toArray
+      val scale = want.map(math.abs).max
+      val err = got.zip(want).map { case (a, b) => math.abs(a - b) }.max
+      assert(got.length == p && err <= 1e-9 * scale, s"n=$n p=$p: max error $err, scale $scale")
+    }
+    // an exactly singular system (two equal columns, no penalty) throws
+    assertThrows[ArithmeticException](ProphetLike.ridgeSolve(
+      Array(Array(1.0, 1.0), Array(2.0, 2.0), Array(3.0, 3.0)), Array(1.0, 2.0, 3.0),
+      Array(0.0, 0.0)))
+  }
+
+  test("multiplicative and holiday forecastSeries rows match the breeze-solved values within 1e-9") {
+    val start = java.time.LocalDate.parse("2023-01-01").toEpochDay
+    def pts(n: Int) = Array.tabulate(n) { i =>
+      (start + i, 100.0 + 0.8 * i + 10.0 * math.sin(2 * math.Pi * i / 7.0) + 3.0 * math.cos(i * 1.3))
+    }
+    val mult = ForecastEngine.forecastSeries("t", "m", pts(60), 7, onlyFuture = false,
+      growth = ProphetLike.GrowthConfig(multiplicativeSeasonality = true)).toArray
+    val hol = ForecastEngine.forecastSeries("t", "m", pts(800), 7, onlyFuture = false,
+      holidays = Map("promo" -> Array.tabulate(30)(k => start + 10 + 27L * k))).toArray
+    // (day offset, yhat, lower, upper), computed by the breeze/LAPACK solve
+    val want = Seq(
+      mult -> Seq(
+        (0, 101.10940026231367, 96.83711826329585, 105.38168226133149),
+        (33, 116.99003886129532, 112.7177568622775, 121.26232086031314),
+        (59, 153.34347672356515, 149.07119472454733, 157.61575872258297),
+        (66, 159.60633244040991, 155.3337382556103, 163.87892662520952)),
+      hol -> Seq(
+        (0, 100.06179113090471, 97.24651171723988, 102.87707054456953),
+        (403, 418.05619497632784, 415.240915562663, 420.87147438999267),
+        (799, 747.0224613562997, 744.2071819426349, 749.8377407699645),
+        (806, 752.6185947136798, 749.8033152998323, 755.4338741275274)))
+    assert(mult.length == 67 && hol.length == 807)
+    for ((rows, expected) <- want; (off, yhat, lo, hi) <- expected) {
+      val r = rows.find(_.date.toLocalDate.toEpochDay == start + off).get
+      Seq(r.yhat -> yhat, r.yhat_lower -> lo, r.yhat_upper -> hi).foreach { case (g, w) =>
+        assert(math.abs(g - w) <= 1e-9 * math.abs(w), s"day $off: $g vs $w")
+      }
+    }
+  }
+
   test("tiny and constant series do not blow up") {
     val one = ProphetLike.fit(Array((19000L, 42.0)))
     val pred = ProphetLike.predict(one, Array(19001L))

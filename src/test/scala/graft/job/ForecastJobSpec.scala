@@ -24,6 +24,20 @@ class ForecastJobSpec extends SparkSpec {
     cat
   }
 
+  /** A table whose two part files disagree on each metric's type: it
+    * loads, then fails when a plan reads the other file.
+    */
+  private def addBrokenTable(cat: ParquetCatalog): Unit = {
+    val path = cat.tablePath("broken")
+    val days = spark.range(30).select(
+      date_add(lit("2024-01-01").cast("date"), col("id").cast("int")).as("date"),
+      col("id").cast("double").as("x"))
+    days.select(col("date"), col("x").as("a"), col("x").cast("string").as("b"))
+      .coalesce(1).write.parquet(path)
+    days.select(col("date"), col("x").cast("string").as("a"), col("x").as("b"))
+      .coalesce(1).write.mode("append").parquet(path)
+  }
+
   test("full run: creates outputs, correct schema/rows, exact bookkeeping") {
     val cat = seedCatalog()
     val persistedBefore = spark.sparkContext.getPersistentRDDs.keySet
@@ -218,5 +232,53 @@ class ForecastJobSpec extends SparkSpec {
     assert(tasksWide <= budget && tasksNarrow <= budget,
       s"tasks per table: $tasksWide at 200, $tasksNarrow at 4, budget $budget")
     assert(outWide == outNarrow)
+  }
+
+  test("tables run concurrently: each job carries its table's description, " +
+    "tables overlap, the summary keeps table order and isolation") {
+    import scala.collection.concurrent.TrieMap
+    import org.apache.spark.graft.ListenerBridge
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+    val Description = "spark.job.description"
+    val sc = spark.sparkContext
+    val cat = seedCatalog()
+    addBrokenTable(cat)
+    val started = TrieMap[Int, (String, Long)]()
+    val ended = TrieMap[Int, Long]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        started(e.jobId) = (e.properties.getProperty(Description), e.time)
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = ended(e.jobId) = e.time
+    }
+    ListenerBridge.waitUntilListenerBusEmpty(sc) // seeding's jobs are not counted
+    sc.addSparkListener(listener)
+    val s =
+      try new ForecastJob(cat, interval = 7).run()
+      finally {
+        ListenerBridge.waitUntilListenerBusEmpty(sc)
+        sc.removeSparkListener(listener)
+      }
+
+    val tables = Seq("broken", "bucket_events", "bucket_names_only", "plain_sales")
+    assert(started.nonEmpty && started.values.forall { case (d, _) =>
+      tables.map("forecast " + _).contains(d)
+    }, s"job descriptions: ${started.values.map(_._1).toSet}")
+    assert(sc.getLocalProperty(Description) == null,
+      "the caller's thread keeps no table description")
+    val spans = started.toSeq.groupBy(_._2._1).map { case (d, jobs) =>
+      d -> (jobs.map(_._2._2).min, jobs.map(j => ended(j._1)).max)
+    }
+    assert(spans.contains("forecast bucket_events") && spans.contains("forecast plain_sales"))
+    if (sc.defaultParallelism >= 2) {
+      val overlapping = spans.toSeq.combinations(2).exists { case Seq((_, (s1, e1)), (_, (s2, e2))) =>
+        s1 < e2 && s2 < e1
+      }
+      assert(overlapping, s"no two tables ran at once: $spans")
+    }
+    assert(s.created == Seq("bucket_forecast_events", "bucket_forecast_plain_sales"))
+    assert(s.successful == Seq("bucket_events", "plain_sales"))
+    assert(s.skipped == Seq("bucket_names_only" -> "no numeric metric columns"))
+    assert(s.failedSeries == Seq("broken" -> "*"))
+    assert(!cat.tableExists("bucket_forecast_broken"))
   }
 }
