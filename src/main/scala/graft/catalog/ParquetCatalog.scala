@@ -1,5 +1,7 @@
 package graft.catalog
 
+import scala.util.control.NonFatal
+
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
@@ -80,9 +82,15 @@ final class ParquetCatalog(val spark: SparkSession, val root: String) {
   /** EXISTS TABLE (fs:128-129). */
   def tableExists(name: String): Boolean = fs.exists(new Path(tablePath(name)))
 
-  def load(name: String): DataFrame = spark.read.parquet(tablePath(name))
+  /** The table as a DataFrame, its schema read from a parquet footer in
+    * this process ([[ParquetFooters.read]]): opening a table starts no
+    * Spark job.
+    */
+  def load(name: String): DataFrame = ParquetFooters.read(spark, tablePath(name))
 
-  /** DESCRIBE TABLE (fs:106-111) — Spark-native: the parquet footer schema. */
+  /** DESCRIBE TABLE (fs:106-111): the schema from the table's parquet
+    * footer, the same metadata read as the reference's, no Spark job.
+    */
   def schemaOf(name: String): StructType = load(name).schema
 
   /** DROP TABLE (fs:131-132). */
@@ -239,7 +247,8 @@ final class ParquetCatalog(val spark: SparkSession, val root: String) {
     * with this same read-merge-swap operator shape.
     *
     * Durability: the live table is never deleted before its replacement
-    * is in place. The swap renames current -> `<name>.old`, staging ->
+    * is in place, and a write that fails removes its staging directory
+    * and leaves the table as it was. The swap renames current -> `<name>.old`, staging ->
     * target, then deletes the aside copy; if the second rename fails the
     * original is renamed back, and if the process dies mid-swap both the
     * staging and aside copies survive on disk for manual recovery (a
@@ -252,7 +261,12 @@ final class ParquetCatalog(val spark: SparkSession, val root: String) {
     val staging = new Path(s"$root/$name.staging")
     val out = shapeForWrite(df, sortCol, partitionCol, filesPerPartition)
     val writer = out.write.mode("overwrite")
-    partitionCol.fold(writer)(p => writer.partitionBy(p)).parquet(staging.toString)
+    try partitionCol.fold(writer)(p => writer.partitionBy(p)).parquet(staging.toString)
+    catch {
+      case NonFatal(e) =>
+        fs.delete(staging, true) // a failed write leaves nothing to recover
+        throw e
+    }
     val target = new Path(tablePath(name))
     val aside = new Path(s"$root/$name.old")
     if (fs.exists(aside)) fs.delete(aside, true) // leftover from a prior crash

@@ -5,6 +5,7 @@ import java.time.LocalDate
 import scala.util.Try
 
 import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.types.DateType
 
 /** Model-independent backtest columns for one (table, metric, cutoff). */
 final case class NaiveRow(
@@ -88,7 +89,7 @@ object Backtest {
     require(period >= 1, s"period must be >= 1, got $period")
     require(initial >= 1, s"initial must be >= 1, got $initial")
 
-    ForecastEngine.seriesGroups[LongPoint](long, "ds", "date")
+    ForecastEngine.seriesGroups[LongPoint](long, "ds", DateType)
       .flatMapGroups { (key: (String, String), it: Iterator[LongPoint]) =>
         val pts = it.map(p => (p.ds.toLocalDate.toEpochDay, p.y)).toArray
         backtestSeries(key._1, key._2, pts, horizon, period, initial, band,
@@ -111,7 +112,7 @@ object Backtest {
     require(horizon >= 1, s"horizon must be >= 1, got $horizon")
     require(period >= 1, s"period must be >= 1, got $period")
     require(initial >= 1, s"initial must be >= 1, got $initial")
-    ForecastEngine.seriesGroups[LongPoint](long, "ds", "date")
+    ForecastEngine.seriesGroups[LongPoint](long, "ds", DateType)
       .flatMapGroups { (key: (String, String), it: Iterator[LongPoint]) =>
         val pts = it.map(p => (p.ds.toLocalDate.toEpochDay, p.y)).toArray
         naiveSeries(key._1, key._2, pts, horizon, period, initial)

@@ -6,6 +6,7 @@ import scala.util.Try
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, KeyValueGroupedDataset}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, DateType, DoubleType, StringType, TimestampType}
 
 /** One forecast output point for a (table, metric) series. */
 final case class ForecastRow(
@@ -89,7 +90,7 @@ object ForecastEngine {
     import spark.implicits._
     require(interval >= 0, s"interval must be >= 0, got $interval")
 
-    seriesGroups[LongPoint](long, "ds", "date")
+    seriesGroups[LongPoint](long, "ds", DateType)
       .flatMapGroups { (key: (String, String), it: Iterator[LongPoint]) =>
         val pts = it.map(p => (p.ds.toLocalDate.toEpochDay, p.y)).toArray
         forecastSeries(key._1, key._2, pts, interval, onlyFuture, band, holidays, growth)
@@ -115,7 +116,7 @@ object ForecastEngine {
     import spark.implicits._
     require(horizonSteps >= 0, s"horizonSteps must be >= 0, got $horizonSteps")
     require(stepDays > 0, s"stepDays must be > 0, got $stepDays")
-    seriesGroups[TimePoint](long, "ts", "timestamp")
+    seriesGroups[TimePoint](long, "ts", TimestampType)
       .flatMapGroups { (key: (String, String), it: Iterator[TimePoint]) =>
         val micros = it.map(p => (p.ts.getTime * 1000L, p.y)).toArray
         Try {
@@ -144,15 +145,15 @@ object ForecastEngine {
     * `table`); grouping is still exact per (table, metric).
     */
   private[forecast] def seriesGroups[P: Encoder](
-      long: DataFrame, time: String, timeType: String): KeyValueGroupedDataset[(String, String), P] = {
+      long: DataFrame, time: String, timeType: DataType): KeyValueGroupedDataset[(String, String), P] = {
     val spark = long.sparkSession
     import spark.implicits._
     long
       .select(
-        col("table").cast("string"),
-        col("metric").cast("string"),
+        col("table").cast(StringType),
+        col("metric").cast(StringType),
         col(time).cast(timeType),
-        col("y").cast("double"))
+        col("y").cast(DoubleType))
       .filter(col(time).isNotNull && col("y").isNotNull && !isnan(col("y")) &&
         col("y").between(Double.MinValue, Double.MaxValue))
       .repartition(spark.sparkContext.defaultParallelism, col("metric"))

@@ -10,10 +10,18 @@ import org.apache.spark.sql.types.DataType
   */
 object ForecastOutput {
 
-  /** `metrics` is the full source metric list, passed explicitly so the
-    * pivot (a) skips the extra distinct-scan job Spark otherwise runs and
-    * (b) still emits (all-NULL) columns for metrics whose fit failed —
-    * the reference's literal-NULL insert semantics (fs:208-210).
+  /** `metrics` is the full source metric list: every metric gets its
+    * three columns, all-NULL for a metric whose fit failed — the
+    * reference's literal-NULL insert semantics (fs:208-210).
+    *
+    * One aggregation over one exchange: per (table, date), each output
+    * column is the first non-NULL of its value on that metric's rows.
+    * `pivot("metric", metrics)` gave the same rows but planned two
+    * aggregations and two exchanges. Each input row is tested against
+    * every metric (3 x metrics conditional aggregates): cheap at the
+    * widths of forecast tables (a 60-metric table is in the parity test),
+    * but the cost per row grows with the metric count, where the pivot's
+    * second phase placed each row by one lookup.
     *
     * Output typing defaults to DoubleType (SURVEY.md §7.6 decision). For
     * strict parity with the reference — which re-uses each source column's
@@ -26,26 +34,23 @@ object ForecastOutput {
       fc: Dataset[ForecastRow],
       metrics: Seq[String],
       sourceTypes: Map[String, DataType] = Map.empty): DataFrame = {
-    // group by (table, date), not date alone: a multi-table frame must
-    // never merge same-named metrics across tables via first(); per-table
-    // callers see identical output (table is dropped after the pivot),
-    // misuse surfaces as visibly duplicated dates instead of silently
-    // mixed values
-    val wide = fc
-      .groupBy(col("table"), col("date"))
-      .pivot("metric", metrics)
-      .agg(
-        first(col("yhat")).as("v"),
-        first(col("yhat_lower")).as("vmin"),
-        first(col("yhat_upper")).as("vmax"))
+    require(metrics.nonEmpty, "toWide needs at least one metric")
     def typed(c: Column, m: String): Column =
       sourceTypes.get(m).map(c.cast).getOrElse(c)
-    val ordered = col("date") +: metrics.flatMap { m =>
-      Seq(
-        typed(col(s"`${m}_v`"), m).as(m),
-        typed(col(s"`${m}_vmin`"), m).as(s"${m}_min"),
-        typed(col(s"`${m}_vmax`"), m).as(s"${m}_max"))
+    val columns = metrics.flatMap { m =>
+      Seq("yhat" -> m, "yhat_lower" -> s"${m}_min", "yhat_upper" -> s"${m}_max").map {
+        case (value, name) =>
+          typed(first(when(col("metric") === m, col(value)), ignoreNulls = true), m).as(name)
+      }
     }
-    wide.drop("table").select(ordered: _*)
+    // group by (table, date), not date alone: a multi-table frame must
+    // never merge same-named metrics across tables via first(); per-table
+    // callers see identical output (table is dropped after the
+    // aggregation, by reference, so a metric named `table` survives),
+    // misuse surfaces as visibly duplicated dates instead of silently
+    // mixed values
+    fc.groupBy(col("table"), col("date"))
+      .agg(columns.head, columns.tail: _*)
+      .drop(fc("table"))
   }
 }

@@ -96,7 +96,10 @@ final class ForecastJob(
   /** The one per-table loop behind [[run]] and [[backtest]]. For each
     * eligible table: load, normalize, melt, `compute` the per-series frame
     * (one row set per metric that succeeded), `shape` it into the output
-    * table and (re)write `outName(t)` sorted by `sortCol`. A table whose
+    * table and (re)write `outName(t)` sorted by `sortCol`. The write goes
+    * to a staging directory that replaces the old output only once it is
+    * complete ([[ParquetCatalog.replaceTable]]), so a table whose refresh
+    * fails keeps its previous output. A table whose
     * frame has no metric at all is skipped with `emptyReason` when one is
     * given, else written as it is. Any failure of a table's plan is
     * recorded as `(t, "*")` and the other tables carry on.
@@ -161,7 +164,7 @@ final class ForecastJob(
                 val out = shape(frame, df, metrics)
                 val name = outName(t)
                 val existed = catalog.tableExists(name)
-                catalog.writeTable(name, out, sortCol = sortCol)
+                catalog.replaceTable(name, out, sortCol = sortCol)
                 log.info(s"$mode $t -> $name (${metrics.size} metrics, " +
                   s"${done.size} done)")
                 Outcome(

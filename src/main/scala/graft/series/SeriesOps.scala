@@ -1,8 +1,15 @@
 package graft.series
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+import org.apache.spark.sql.catalyst.planning.PhysicalOperation
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DateType, NumericType, StructType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.graft.ColumnBridge
+import org.apache.spark.sql.types.{DateType, DoubleType, NumericType, StructType, TimestampNTZType, TimestampType}
+
+import graft.catalog.ParquetFooters
 
 /** Series-shaping operators over reference-shaped tables
   * (`date` + N numeric metric columns — reference README.md:33).
@@ -46,8 +53,20 @@ object SeriesOps {
   /** `last_known_date = data['date'].max()` (fs:166). */
   def maxDate(df: DataFrame, dateCol: String = "date"): Column = max(col(dateCol))
 
-  /** Empty-input guard (fs:160-163) without a full count. */
-  def isEmpty(df: DataFrame): Boolean = df.isEmpty
+  /** Empty-input guard (fs:160-163) without a full count. A frame that
+    * only projects an unpartitioned parquet table (what
+    * [[graft.catalog.ParquetCatalog.load]] plus [[normalizeDate]] gives)
+    * has exactly the table's rows, so the answer comes from the row
+    * counts in the files' footers, with no Spark job. Any filter, other
+    * operator or other source keeps `df.isEmpty`.
+    */
+  def isEmpty(df: DataFrame): Boolean = df.queryExecution.analyzed match {
+    case PhysicalOperation(_, Nil, LogicalRelation(r: HadoopFsRelation, _, _, _, _))
+        if r.fileFormat.isInstanceOf[ParquetFileFormat] && r.partitionSchema.isEmpty =>
+      !ParquetFooters.hasRows(df.sparkSession,
+        r.location.listFiles(Nil, Nil).flatMap(_.files).map(_.fileStatus))
+    case _ => df.isEmpty
+  }
 
   /** Daily gap filling for keyed series: build each key's min..max date
     * spine distributed (`sequence` + `explode` — no driver collect),
@@ -78,17 +97,15 @@ object SeriesOps {
     */
   def melt(df: DataFrame, metrics: Seq[String], dateCol: String = "date"): DataFrame = {
     require(metrics.nonEmpty, "melt needs at least one metric column")
-    // column names are runtime-discovered from arbitrary warehouses:
-    // escape string-literal quotes and identifier backticks so a name
-    // like it's_count can't break (or inject into) the stack() SQL
-    def lit(m: String) = "'" + m.replace("'", "''") + "'"
-    def ident(m: String) = "`" + m.replace("`", "``") + "`"
-    val pairs = metrics
-      .map(m => s"${lit(m)}, CAST(${ident(m)} AS DOUBLE)")
-      .mkString(", ")
+    // column names are runtime-discovered from arbitrary warehouses: each
+    // is a literal value and a one-part column name, never parsed, so
+    // quotes, backticks, dots and spaces are plain characters
+    val pairs = metrics.flatMap { m =>
+      Seq(lit(m), ColumnBridge.column(UnresolvedAttribute(Seq(m))).cast(DoubleType))
+    }
     df.select(
       col(dateCol).cast(DateType).as("ds"),
-      expr(s"stack(${metrics.size}, $pairs) AS (metric, y)"))
+      stack(lit(metrics.size) +: pairs: _*).as(Seq("metric", "y")))
       .select(col("metric"), col("ds"), col("y"))
   }
 }

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 
+import graft.catalog.ParquetFooters
+
 /** Fixture-table reader (TESTDATA.md).
   *
   * Timestamp-layout normalization: the fixture generator has shipped
@@ -37,11 +39,12 @@ object Fixtures {
   private val nanoColumns: Map[String, Seq[String]] = Map("events" -> Seq("ts"))
 
   def table(spark: SparkSession, dir: String, name: String): DataFrame = {
-    // Dynamic confs: set defensively so driver-owned sessions (Verify/smoke)
-    // work without special builder flags.
+    // Dynamic confs: set defensively so sessions created elsewhere
+    // (Verify/smoke) need no start-up flags, and set before the footer
+    // read, whose schema conversion applies them.
     spark.conf.set(NanosConf, "true")
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    val df = spark.read.parquet(s"$dir/$name.parquet")
+    val df = ParquetFooters.read(spark, s"$dir/$name.parquet")
     val nanoDecoded = nanoColumns.getOrElse(name, Seq.empty).foldLeft(df) { (d, c) =>
       if (d.schema.fieldNames.contains(c) && d.schema(c).dataType == LongType)
         d.withColumn(c, timestamp_micros(expr(s"$c DIV 1000")))
@@ -87,7 +90,9 @@ object Fixtures {
     * the same nanos-decoding reader), so users can drive the engine with
     * `spark.sql("SELECT ... FROM lineitem JOIN orders ...")` — the
     * interaction model the reference's ClickHouse users already have.
-    * Temp views are lazy: registration reads only parquet footers.
+    * Temp views are lazy and each schema comes from a parquet footer read
+    * in this process ([[graft.catalog.ParquetFooters]]), so registration
+    * starts no Spark job.
     */
   def registerAll(spark: SparkSession, dir: String): Unit =
     TableNames.foreach(n => table(spark, dir, n).createOrReplaceTempView(n))

@@ -1,5 +1,9 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.graft.ListenerBridge
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -16,4 +20,20 @@ trait SparkSpec extends AnyFunSuite {
 
   val sf0001 = "/root/testdata/sf0.001"
   val sf001 = "/root/testdata/sf0.01"
+
+  /** `f`'s result and the number of Spark jobs it started. */
+  def withJobCount[A](f: => A): (A, Int) = {
+    val sc = spark.sparkContext
+    val jobs = new AtomicInteger
+    val counter = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    ListenerBridge.waitUntilListenerBusEmpty(sc) // earlier jobs are not counted
+    sc.addSparkListener(counter)
+    try {
+      val a = f
+      ListenerBridge.waitUntilListenerBusEmpty(sc)
+      (a, jobs.get)
+    } finally sc.removeSparkListener(counter)
+  }
 }

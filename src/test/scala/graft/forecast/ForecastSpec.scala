@@ -239,6 +239,7 @@ class ProphetLikeSpec extends SparkSpec {
 
 class ForecastEngineSpec extends SparkSpec {
   import org.apache.spark.sql.functions._
+  import org.apache.spark.sql.types.DataType
 
   private def longDf(rows: Seq[(String, String, String, java.lang.Double)]) = {
     import spark.implicits._
@@ -322,6 +323,69 @@ class ForecastEngineSpec extends SparkSpec {
     val wide = ForecastOutput.toWide(fc, Seq("m"))
     assert(wide.filter(col("m_min") > col("m") || col("m") > col("m_max")).count() == 0)
     assert(wide.count() == 37)
+  }
+
+  /** The two-aggregation pivot [[ForecastOutput.toWide]] replaced, kept
+    * as the reference its output must equal.
+    */
+  private def pivotWide(
+      fc: org.apache.spark.sql.Dataset[ForecastRow],
+      metrics: Seq[String],
+      sourceTypes: Map[String, DataType]) = {
+    val wide = fc
+      .groupBy(col("table"), col("date"))
+      .pivot("metric", metrics)
+      .agg(
+        first(col("yhat")).as("v"),
+        first(col("yhat_lower")).as("vmin"),
+        first(col("yhat_upper")).as("vmax"))
+    def typed(c: org.apache.spark.sql.Column, m: String) =
+      sourceTypes.get(m).map(c.cast).getOrElse(c)
+    val ordered = col("date") +: metrics.flatMap { m =>
+      Seq(
+        typed(col(s"`${m}_v`"), m).as(m),
+        typed(col(s"`${m}_vmin`"), m).as(s"${m}_min"),
+        typed(col(s"`${m}_vmax`"), m).as(s"${m}_max"))
+    }
+    wide.drop("table").select(ordered: _*)
+  }
+
+  test("toWide: one aggregation over one Exchange, the same rows and schema " +
+    "as the pivot it replaced") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.types.{IntegerType, LongType}
+    import spark.implicits._
+    val untyped = Map.empty[String, DataType]
+    val plans = new AdaptiveSparkPlanHelper {}
+    def rows(table: String, metrics: Seq[String], days: Int) =
+      for (m <- metrics; d <- 0 until days) yield {
+        val y = 1e6 * (metrics.indexOf(m) + 1) + 10.0 * d + table.length
+        ForecastRow(table, m, java.sql.Date.valueOf(java.time.LocalDate.of(2024, 1, 1).plusDays(d)),
+          y, y - 2.5, y + 2.5)
+      }
+    val sixty = (1 to 60).map(i => s"m$i")
+    val cases = Seq(
+      // a failed metric has no rows: its columns are all NULL
+      "failed metric" -> (rows("t", Seq("a", "b"), 5), Seq("a", "failed", "b"), untyped),
+      "source-type casts" -> (rows("t", Seq("a", "b", "c"), 5), Seq("a", "b", "c"),
+        Map("a" -> IntegerType, "c" -> LongType)),
+      // same-named metrics never merge across tables; odd names pass through
+      "two tables" -> (rows("t", Seq("a", "table", "dotted.name"), 4) ++ rows("uu", Seq("a", "table"), 6),
+        Seq("a", "table", "dotted.name"), untyped),
+      "60 metrics" -> (rows("t", sixty.filterNot(_ == "m7"), 8), sixty, Map("m3" -> IntegerType)))
+    cases.foreach { case (name, (fcRows, metrics, types)) =>
+      val fc = fcRows.toDS()
+      val wide = ForecastOutput.toWide(fc, metrics, types)
+      val reference = pivotWide(fc, metrics, types)
+      assert(wide.schema == reference.schema, name)
+      assert(wide.collect().map(_.toString).sorted sameElements
+        reference.collect().map(_.toString).sorted, name)
+      val exchanges = plans.collect(wide.queryExecution.executedPlan) {
+        case e: ShuffleExchangeExec => e
+      }
+      assert(exchanges.size == 1, s"$name: ${exchanges.size} exchanges")
+    }
   }
 
   test("checked face <-> fit coupling: a degenerate fitted sigma flips the band bits") {

@@ -186,6 +186,34 @@ class ForecastJobSpec extends SparkSpec {
     assert(!cat2.tableExists("bucket_backtest_broken"))
   }
 
+  test("a failed refresh keeps the previous output") {
+    val cat = new ParquetCatalog(spark,
+      java.nio.file.Files.createTempDirectory("graftrefresh").toString)
+    // an int metric climbing towards Int.MaxValue: its double forecast is
+    // written fine, its int-typed (parityTypes) forecast overflows the
+    // cast under ANSI while the output is being written
+    cat.writeTable("bucket_climb", spark.range(30).select(
+      date_add(lit("2024-01-01").cast("date"), col("id").cast("int")).as("date"),
+      (lit(1900000000) + col("id").cast("int") * 8000000).as("n")))
+    val first = new ForecastJob(cat, interval = 7).run()
+    assert(first.created == Seq("bucket_forecast_climb"))
+    def output() = cat.load("bucket_forecast_climb").collect().map(_.toString).sorted.toSeq
+    val before = output()
+    val tables = cat.listTables()
+    val ansi = "spark.sql.ansi.enabled"
+    val saved = spark.conf.get(ansi)
+    spark.conf.set(ansi, "true")
+    val failed =
+      try new ForecastJob(cat, interval = 7, parityTypes = true).run()
+      finally spark.conf.set(ansi, saved)
+    assert(failed.failedSeries == Seq("bucket_climb" -> "*"))
+    assert(failed.updated.isEmpty && failed.successful.isEmpty)
+    assert(output() == before, "the previous output must survive a failed refresh")
+    assert(cat.listTables() == tables)
+    assert(!new java.io.File(cat.root, "bucket_forecast_climb.staging").exists(),
+      "the failed write's staging directory is removed")
+  }
+
   test("only-future output has exactly interval rows per table") {
     val cat = seedCatalog()
     new ForecastJob(cat, 7, onlyFuture = true).run()

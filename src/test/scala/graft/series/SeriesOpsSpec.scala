@@ -42,10 +42,29 @@ class SeriesOpsSpec extends SparkSpec {
 
   test("melt escapes quotes and backticks in runtime-discovered column names") {
     import spark.implicits._
-    val df = Seq(("2024-01-01", 1.5)).toDF("date", "it's_count")
-    val m = SeriesOps.melt(SeriesOps.normalizeDate(df), Seq("it's_count"))
-    val row = m.head()
-    assert(row.getString(0) == "it's_count" && row.getDouble(2) == 1.5)
+    val names = Seq("it's_count", "back`tick", "dotted.name", "with space")
+    val df = Seq(("2024-01-01", 1.5, 2.5, 3.5, 4.5)).toDF("date" +: names: _*)
+    val m = SeriesOps.melt(SeriesOps.normalizeDate(df), names)
+    val rows = m.collect().map(r => r.getString(0) -> r.getDouble(2)).toSeq
+    assert(rows == names.zip(Seq(1.5, 2.5, 3.5, 4.5)))
+  }
+
+  test("isEmpty answers an unfiltered parquet projection from its footers, " +
+    "with no Spark job; a filtered frame still runs its job") {
+    import spark.implicits._
+    val cat = new graft.catalog.ParquetCatalog(spark,
+      java.nio.file.Files.createTempDirectory("isempty").toString)
+    val rows = Seq(("2024-01-01", 1.0), ("2024-01-02", 2.0)).toDF("date", "m")
+    cat.writeTable("full", rows)
+    cat.writeTable("empty", rows.limit(0))
+    val full = SeriesOps.normalizeDate(cat.load("full"))
+    val empty = SeriesOps.normalizeDate(cat.load("empty"))
+    assert(withJobCount(SeriesOps.isEmpty(full)) == (false, 0))
+    assert(withJobCount(SeriesOps.isEmpty(empty)) == (true, 0))
+    val (filtered, jobs) = withJobCount(SeriesOps.isEmpty(full.filter($"m" > 5.0)))
+    assert(filtered && jobs >= 1)
+    // not parquet: Spark answers
+    assert(!SeriesOps.isEmpty(rows) && SeriesOps.isEmpty(rows.limit(0)))
   }
 
   test("scanSorted prunes to date + metrics and orders by date (S1)") {
