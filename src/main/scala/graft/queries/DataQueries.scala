@@ -867,7 +867,7 @@ object DataQueries {
   /** One index root per JVM for [[dedupIncrementalIndexed]]
     * (overwrite-on-rerun, the storage-layout queries' discipline). */
   private lazy val incIndexRoot: String =
-    java.nio.file.Files.createTempDirectory("graft_incidx").toString
+    org.apache.spark.graft.TempDirs.forJvm("graft_incidx")
 
   /** [[dedupIncremental]] through a PERSISTED corpus index
     * ([[graft.operators.Dedup.buildIncrementalIndex]]): the corpus half

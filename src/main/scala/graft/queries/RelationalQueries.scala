@@ -828,16 +828,18 @@ object RelationalQueries {
     spark.createDataFrame(java.util.Arrays.asList(rows: _*), audit.schema)
   }
 
-  /** One catalog root per JVM for [[jdbcImport]] (overwrite-on-rerun). */
+  /** One catalog root per JVM for [[jdbcImport]] (overwrite-on-rerun),
+    * deleted when the JVM exits.
+    */
   private lazy val jdbcSweepRoot: String =
-    java.nio.file.Files.createTempDirectory("jdbc_sweep").toString
+    org.apache.spark.graft.TempDirs.forJvm("jdbc_sweep")
 
   /** One layout root per JVM for the storage-layout queries
     * ([[joinBucketed]], [[partitionPrune]]) — same overwrite-on-rerun
     * discipline as [[jdbcSweepRoot]].
     */
   private lazy val layoutRoot: String =
-    java.nio.file.Files.createTempDirectory("graft_layout").toString
+    org.apache.spark.graft.TempDirs.forJvm("graft_layout")
 
   /** Shuffle-free fact-fact join via bucketed layout
     * ([[graft.catalog.ParquetCatalog.writeBucketed]], the engine's ingest

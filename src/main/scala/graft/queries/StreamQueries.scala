@@ -1,10 +1,10 @@
 package graft.queries
 
-import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicInteger
 
 import scala.collection.concurrent.TrieMap
 
+import org.apache.spark.graft.TempDirs
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -57,6 +57,7 @@ object StreamQueries {
     * copied to a temp dir so `readStream` sees a plain parquet directory
     * with the decoded schema (the raw fixture may carry nanos/NTZ
     * variants that the batch reader normalizes — see [[Fixtures.table]]).
+    * The dir is deleted when the JVM exits.
     */
   private val stagedDirs = TrieMap[(String, String), String]()
   private val nameCtr = new AtomicInteger(0)
@@ -65,7 +66,7 @@ object StreamQueries {
       parts: Int)(build: => DataFrame): (String, StructType) = {
     val df = build
     val path = stagedDirs.getOrElseUpdate((dir, label), {
-      val tmp = Files.createTempDirectory(s"graft_stream_$label").toString
+      val tmp = TempDirs.forJvm(s"graft_stream_$label")
       df.repartition(parts).write.mode("overwrite").parquet(tmp)
       tmp
     })

@@ -32,7 +32,7 @@ class CatalogSpec extends SparkSpec {
   }
   test("bucketed tables co-locate the join: zero Exchange on either side") {
     import org.apache.spark.sql.functions._
-    val tmp = java.nio.file.Files.createTempDirectory("graftbucket").toString
+    val tmp = tempDir("graftbucket")
     val cat = new ParquetCatalog(spark, tmp)
     val facts = spark.range(2000).toDF("k")
       .withColumn("v", col("k") * 2)
@@ -66,7 +66,7 @@ class CatalogSpec extends SparkSpec {
 
   test("writeTable with partitionCol lays out hive-style directories") {
     import org.apache.spark.sql.functions._
-    val tmp = java.nio.file.Files.createTempDirectory("graftpart").toString
+    val tmp = tempDir("graftpart")
     val cat = new ParquetCatalog(spark, tmp)
     val df = spark.range(100).toDF("n").withColumn("bucket", pmod(col("n"), lit(4)))
     cat.writeTable("t", df, sortCol = "n", partitionCol = Some("bucket"))
@@ -80,7 +80,7 @@ class CatalogSpec extends SparkSpec {
 
   test("csv/json interchange: import converts to parquet, export round-trips") {
     import org.apache.spark.sql.types._
-    val tmp = java.nio.file.Files.createTempDirectory("graftio").toString
+    val tmp = tempDir("graftio")
     val cat = new ParquetCatalog(spark, tmp)
     // hand-written CSV with a header line
     val csvDir = java.nio.file.Files.createDirectories(
@@ -116,7 +116,7 @@ class CatalogSpec extends SparkSpec {
   }
 
   test("writeTable overwrite + drop round-trip") {
-    val tmp = java.nio.file.Files.createTempDirectory("graftcat").toString
+    val tmp = tempDir("graftcat")
     val cat = new ParquetCatalog(spark, tmp)
     val df = spark.range(10).toDF("n")
     cat.writeTable("t1", df, sortCol = "n")
@@ -129,7 +129,7 @@ class CatalogSpec extends SparkSpec {
 
   test("compactTable shrinks a fragmented table without changing its rows") {
     import org.apache.spark.sql.functions.col
-    val tmp = java.nio.file.Files.createTempDirectory("graftcompact").toString
+    val tmp = tempDir("graftcompact")
     val cat = new ParquetCatalog(spark, tmp)
     // fragment: 64 partitions of ~8 rows each
     cat.writeTable("frag", spark.range(500).toDF("n").repartition(64), sortCol = "n")
@@ -153,7 +153,7 @@ class CatalogSpec extends SparkSpec {
 
   test("compactTable preserves a hive-partitioned layout; refuses without partitionCol") {
     import org.apache.spark.sql.functions.{col, pmod}
-    val tmp = java.nio.file.Files.createTempDirectory("graftcompactp").toString
+    val tmp = tempDir("graftcompactp")
     val cat = new ParquetCatalog(spark, tmp)
     val df = spark.range(400).toDF("n")
       .withColumn("grp", pmod(col("n"), org.apache.spark.sql.functions.lit(4L)))

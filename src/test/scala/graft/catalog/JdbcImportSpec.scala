@@ -19,12 +19,6 @@ class JdbcImportSpec extends SparkSpec {
     finally c.close()
   }
 
-  private def freshRoot(): String = {
-    val d = java.nio.file.Files.createTempDirectory("jdbc_cat").toFile
-    d.deleteOnExit()
-    d.getAbsolutePath
-  }
-
   private def seed(table: String, rows: Int): Unit = withDb { c =>
     val st = c.createStatement()
     try st.execute(s"DROP TABLE $table")
@@ -43,7 +37,7 @@ class JdbcImportSpec extends SparkSpec {
 
   test("serial import lands all rows; VARCHAR column skipped by the reference type filter") {
     seed("items", 57)
-    val cat = new ParquetCatalog(spark, freshRoot())
+    val cat = new ParquetCatalog(spark, tempDir("jdbc_cat"))
     cat.importJdbc("items", url, "items")
     val got = cat.load("items")
     assert(got.count() == 57)
@@ -55,7 +49,7 @@ class JdbcImportSpec extends SparkSpec {
 
   test("skipTypes = empty imports every column unfiltered") {
     seed("items_all", 12)
-    val cat = new ParquetCatalog(spark, freshRoot())
+    val cat = new ParquetCatalog(spark, tempDir("jdbc_cat"))
     cat.importJdbc("items_all", url, "items_all", skipTypes = Set.empty)
     assert(cat.load("items_all").columns.map(_.toLowerCase).sorted.toSeq ==
       Seq("id", "tag", "val"))
@@ -76,7 +70,7 @@ class JdbcImportSpec extends SparkSpec {
       }
       ps.executeBatch(); st.close(); ps.close()
     }
-    val cat = new ParquetCatalog(spark, freshRoot())
+    val cat = new ParquetCatalog(spark, tempDir("jdbc_cat"))
     cat.importJdbc("mixed", url, "mixed")
     assert(cat.load("mixed").columns.map(_.toLowerCase).sorted.toSeq ==
       Seq("id", "score"), "CHAR/BLOB/VARCHAR must all be filtered")
@@ -95,7 +89,7 @@ class JdbcImportSpec extends SparkSpec {
       st.execute("INSERT INTO allchar VALUES ('x', 'y')")
       st.close()
     }
-    val cat = new ParquetCatalog(spark, freshRoot())
+    val cat = new ParquetCatalog(spark, tempDir("jdbc_cat"))
     val e = intercept[IllegalArgumentException] {
       cat.importJdbc("allchar", url, "allchar")
     }
@@ -107,7 +101,7 @@ class JdbcImportSpec extends SparkSpec {
 
   test("partitioned import: auto-discovered bounds, range slices union to the table") {
     seed("facts", 200)
-    val cat = new ParquetCatalog(spark, freshRoot())
+    val cat = new ParquetCatalog(spark, tempDir("jdbc_cat"))
     cat.importJdbc("facts", url, "facts",
       partitionColumn = Some("id"), numPartitions = 4)
     val got = cat.load("facts")
@@ -120,7 +114,7 @@ class JdbcImportSpec extends SparkSpec {
 
   test("partitioned import with explicit bounds matches serial content") {
     seed("facts2", 91)
-    val cat = new ParquetCatalog(spark, freshRoot())
+    val cat = new ParquetCatalog(spark, tempDir("jdbc_cat"))
     cat.importJdbc("serial", url, "facts2")
     cat.importJdbc("sliced", url, "facts2",
       partitionColumn = Some("id"), bounds = Some((1L, 91L)), numPartitions = 3)
@@ -131,7 +125,7 @@ class JdbcImportSpec extends SparkSpec {
 
   test("empty table with auto bounds fails fast with a clear message") {
     seed("nothing", 0)
-    val cat = new ParquetCatalog(spark, freshRoot())
+    val cat = new ParquetCatalog(spark, tempDir("jdbc_cat"))
     val e = intercept[IllegalArgumentException] {
       cat.importJdbc("nothing", url, "nothing", partitionColumn = Some("id"))
     }

@@ -1,7 +1,5 @@
 package graft.catalog
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.AnalysisException
 import org.apache.spark.sql.functions._
 
@@ -9,8 +7,6 @@ import graft.SparkSpec
 import graft.sources.Fixtures
 
 class ParquetFootersSpec extends SparkSpec {
-
-  private def tmp(prefix: String): String = Files.createTempDirectory(prefix).toString
 
   /** The footer read starts no job and gives the frame Spark's inference
     * gives: same schema, same rows.
@@ -48,12 +44,12 @@ class ParquetFootersSpec extends SparkSpec {
 
   test("Spark-written tables: part files, summary files and part files " +
     "that disagree keep Spark's schema") {
-    val many = s"${tmp("footers")}/many.parquet"
+    val many = s"${tempDir("footers")}/many.parquet"
     sparkTable(many, 3)
     assertParity(many)
 
     // `_common_metadata` and `_metadata` are read before any data file
-    val summarized = s"${tmp("footers")}/summarized.parquet"
+    val summarized = s"${tempDir("footers")}/summarized.parquet"
     spark.range(10).select(col("id"), col("id").cast("string").as("s"))
       .repartition(2).write.option("parquet.summary.metadata.level", "ALL").parquet(summarized)
     assert(new java.io.File(summarized, "_common_metadata").exists(), "precondition")
@@ -61,7 +57,7 @@ class ParquetFootersSpec extends SparkSpec {
 
     // conflicting part files: the first by sorted path decides, as in
     // Spark's inference (reading both would fail)
-    val broken = s"${tmp("footers")}/broken.parquet"
+    val broken = s"${tempDir("footers")}/broken.parquet"
     val x = spark.range(5).select(col("id").cast("double").as("x"))
     x.select(col("x").as("a"), col("x").cast("string").as("b")).coalesce(1).write.parquet(broken)
     x.select(col("x").cast("string").as("a"), col("x").as("b"))
@@ -70,13 +66,13 @@ class ParquetFootersSpec extends SparkSpec {
   }
 
   test("falls back to Spark's inference where one footer does not decide the schema") {
-    val partitioned = s"${tmp("footers")}/partitioned.parquet"
+    val partitioned = s"${tempDir("footers")}/partitioned.parquet"
     spark.range(6).select(col("id"), (col("id") % 2).as("k"))
       .write.partitionBy("k").parquet(partitioned)
     assert(ParquetFooters.schemaOf(spark, partitioned).isEmpty)
     assert(ParquetFooters.read(spark, partitioned).schema == spark.read.parquet(partitioned).schema)
 
-    val many = s"${tmp("footers")}/many.parquet"
+    val many = s"${tempDir("footers")}/many.parquet"
     sparkTable(many, 2)
     val key = "spark.sql.parquet.mergeSchema"
     spark.conf.set(key, "true")
@@ -85,10 +81,10 @@ class ParquetFootersSpec extends SparkSpec {
     assert(ParquetFooters.schemaOf(spark, many).nonEmpty)
 
     // no data file, or no path: Spark's own error, unchanged
-    val noData = s"${tmp("footers")}/nodata.parquet"
+    val noData = s"${tempDir("footers")}/nodata.parquet"
     new java.io.File(noData).mkdirs()
     new java.io.File(noData, "_SUCCESS").createNewFile()
-    for (p <- Seq(noData, s"${tmp("footers")}/missing.parquet")) {
+    for (p <- Seq(noData, s"${tempDir("footers")}/missing.parquet")) {
       assert(ParquetFooters.schemaOf(spark, p).isEmpty, p)
       val ours = intercept[AnalysisException](ParquetFooters.read(spark, p))
       val spark0 = intercept[AnalysisException](spark.read.parquet(p))

@@ -123,7 +123,7 @@ class StorageLayoutSpec extends SparkSpec {
     // the straggler escape hatch: a deterministic row-hash salt spreads
     // each partition value over at most filesPerPartition tasks/files
     val cat = new ParquetCatalog(spark,
-      java.nio.file.Files.createTempDirectory("layout_salt").toString)
+      tempDir("layout_salt"))
     val df = graft.queries.CoreQueries.table(spark, sf001, "events")
       .select(col("event_type"), col("value"), to_date(col("ts")).as("d"))
     // sf0.001-sized shuffles are small enough that AQE coalesces the

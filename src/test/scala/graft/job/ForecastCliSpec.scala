@@ -1,11 +1,16 @@
 package graft.job
 
-import org.scalatest.funsuite.AnyFunSuite
+import java.io.{ByteArrayOutputStream, PrintStream}
+
+import org.apache.spark.sql.SparkSession
+
+import graft.SparkSpec
 
 /** [[ForecastCli.parse]]: what the CLI accepts, and the command lines it
-  * refuses (usage text, exit 2) before any Spark work starts.
+  * refuses (usage text, exit 2) before any Spark work starts; and
+  * [[ForecastCli.warmUp]], which must leave no trace but warm classes.
   */
-class ForecastCliSpec extends AnyFunSuite {
+class ForecastCliSpec extends SparkSpec {
   import ForecastCli.{parse, Opts, Usage}
 
   private def refused(args: String*): String = parse(args) match {
@@ -59,5 +64,27 @@ class ForecastCliSpec extends AnyFunSuite {
     refused("/db", "0", "--backtest")
     assert(accepted("/db", "0").interval == 0)
     assert(accepted("/db", "1", "--backtest").backtest)
+  }
+
+  test("warmUp: one daemon thread that starts no Spark job, leaves the " +
+    "sessions as they were and writes nothing to stdout") {
+    val out = new ByteArrayOutputStream
+    val capture = new PrintStream(out, true)
+    val stdout = System.out
+    val ((thread, sessionsBefore), jobs) = withJobCount {
+      val sessions = (SparkSession.getActiveSession, SparkSession.getDefaultSession)
+      System.setOut(capture)
+      try Console.withOut(capture) {
+        val t = ForecastCli.warmUp()
+        t.join(120000)
+        (t, sessions)
+      } finally System.setOut(stdout)
+    }
+    assert(!thread.isAlive, "the warm-up did not finish within 2 minutes")
+    assert(thread.getName == "graft-warm")
+    assert(thread.isDaemon, "a non-daemon warm-up would hold the JVM open")
+    assert(jobs == 0, s"the warm-up started $jobs Spark jobs")
+    assert((SparkSession.getActiveSession, SparkSession.getDefaultSession) == sessionsBefore)
+    assert(out.size == 0, s"the warm-up wrote to stdout: $out")
   }
 }

@@ -1,5 +1,7 @@
 package graft.job
 
+import org.apache.logging.log4j.{Level, LogManager}
+import org.apache.logging.log4j.core.config.Configurator
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -14,8 +16,7 @@ import graft.sources.Fixtures
 class ForecastJobSpec extends SparkSpec {
 
   private def seedCatalog(): ParquetCatalog = {
-    val tmp = java.nio.file.Files.createTempDirectory("graftjob").toString
-    val cat = new ParquetCatalog(spark, tmp)
+    val cat = new ParquetCatalog(spark, tempDir("graftjob"))
     cat.writeTable("bucket_events", Bucketize.events(Fixtures.table(spark, sf0001, "events")))
     cat.writeTable("plain_sales", Bucketize.orders(Fixtures.table(spark, sf0001, "orders")))
     // a table the job must skip: no numeric metrics
@@ -36,6 +37,21 @@ class ForecastJobSpec extends SparkSpec {
       .coalesce(1).write.parquet(path)
     days.select(col("date"), col("x").cast("string").as("a"), col("x").as("b"))
       .coalesce(1).write.mode("append").parquet(path)
+  }
+
+  /** `f` with the loggers that print a failed task's stack trace switched
+    * off, then restored: the executor's ERROR and the task set's WARN, and
+    * for a failed write the writer's and `Utils`' ERRORs. The runs wrapped
+    * in this fail on purpose, and the job's own ERROR line still records
+    * each failure.
+    */
+  private def quietTaskFailures[A](f: => A): A = {
+    val loggers = Seq("org.apache.spark.executor.Executor", "org.apache.spark.scheduler.TaskSetManager",
+      "org.apache.spark.sql.execution.datasources.FileFormatWriter", "org.apache.spark.util.Utils")
+    val saved = loggers.map(n => n -> LogManager.getLogger(n).getLevel)
+    loggers.foreach(Configurator.setLevel(_, Level.OFF))
+    try f
+    finally saved.foreach { case (n, level) => Configurator.setLevel(n, level) }
   }
 
   test("full run: creates outputs, correct schema/rows, exact bookkeeping") {
@@ -127,8 +143,7 @@ class ForecastJobSpec extends SparkSpec {
   }
 
   test("bucket_x vs x output-name collision: first runs, second is skipped") {
-    val tmp = java.nio.file.Files.createTempDirectory("graftcoll").toString
-    val cat = new ParquetCatalog(spark, tmp)
+    val cat = new ParquetCatalog(spark, tempDir("graftcoll"))
     val b = Bucketize.events(Fixtures.table(spark, sf0001, "events"))
     cat.writeTable("bucket_sales", b)
     cat.writeTable("sales", b)
@@ -174,21 +189,20 @@ class ForecastJobSpec extends SparkSpec {
       cat
     }
     val cat = seedWithBrokenTable()
-    val s = new ForecastJob(cat, 7).run()
+    val s = quietTaskFailures(new ForecastJob(cat, 7).run())
     assert(s.created.toSet == Set("bucket_forecast_events", "bucket_forecast_plain_sales"))
     assert(s.failedSeries == Seq("broken" -> "*"))
     assert(!cat.tableExists("bucket_forecast_broken"))
 
     val cat2 = seedWithBrokenTable()
-    val b = new ForecastJob(cat2, 7).backtest(horizon = 7, period = 3, initial = 14)
+    val b = quietTaskFailures(new ForecastJob(cat2, 7).backtest(horizon = 7, period = 3, initial = 14))
     assert(b.created.toSet == Set("bucket_backtest_events", "bucket_backtest_plain_sales"))
     assert(b.failedSeries == Seq("broken" -> "*"))
     assert(!cat2.tableExists("bucket_backtest_broken"))
   }
 
   test("a failed refresh keeps the previous output") {
-    val cat = new ParquetCatalog(spark,
-      java.nio.file.Files.createTempDirectory("graftrefresh").toString)
+    val cat = new ParquetCatalog(spark, tempDir("graftrefresh"))
     // an int metric climbing towards Int.MaxValue: its double forecast is
     // written fine, its int-typed (parityTypes) forecast overflows the
     // cast under ANSI while the output is being written
@@ -204,7 +218,7 @@ class ForecastJobSpec extends SparkSpec {
     val saved = spark.conf.get(ansi)
     spark.conf.set(ansi, "true")
     val failed =
-      try new ForecastJob(cat, interval = 7, parityTypes = true).run()
+      try quietTaskFailures(new ForecastJob(cat, interval = 7, parityTypes = true).run())
       finally spark.conf.set(ansi, saved)
     assert(failed.failedSeries == Seq("bucket_climb" -> "*"))
     assert(failed.updated.isEmpty && failed.successful.isEmpty)
@@ -281,7 +295,7 @@ class ForecastJobSpec extends SparkSpec {
     ListenerBridge.waitUntilListenerBusEmpty(sc) // seeding's jobs are not counted
     sc.addSparkListener(listener)
     val s =
-      try new ForecastJob(cat, interval = 7).run()
+      try quietTaskFailures(new ForecastJob(cat, interval = 7).run())
       finally {
         ListenerBridge.waitUntilListenerBusEmpty(sc)
         sc.removeSparkListener(listener)

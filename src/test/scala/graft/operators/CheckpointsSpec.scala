@@ -11,13 +11,8 @@ class CheckpointsSpec extends SparkSpec {
   import spark.implicits._
 
   private def withCheckpointDir[T](body: => T): T = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
-    spark.sparkContext.setCheckpointDir(dir)
-    try body
-    finally {
-      // leave sc state clean for other suites sharing the session
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
-    }
+    spark.sparkContext.setCheckpointDir(tempDir("graft-ckpt"))
+    body
   }
 
   private val edges = Seq(

@@ -370,7 +370,7 @@ class DedupSpec extends SparkSpec {
   test("incrementalIndexed: same answer as incremental through the stored index") {
     val corpus = docs.filter(pmod($"doc_id", lit(2)) === 0)
     val delta = docs.filter(pmod($"doc_id", lit(2)) === 1)
-    val root = java.nio.file.Files.createTempDirectory("incidx_spec").toString
+    val root = tempDir("incidx_spec")
     val cat = new graft.catalog.ParquetCatalog(spark, root)
     try {
       Dedup.buildIncrementalIndex(corpus, cat, "spec_incidx")
@@ -385,8 +385,8 @@ class DedupSpec extends SparkSpec {
     val corpus = docs.filter(pmod($"doc_id", lit(3)) === 0)
     val night1 = docs.filter(pmod($"doc_id", lit(3)) === 1)
     val night2 = docs.filter(pmod($"doc_id", lit(3)) === 2)
-    val rootM = java.nio.file.Files.createTempDirectory("incidx_adm").toString
-    val rootR = java.nio.file.Files.createTempDirectory("incidx_reb").toString
+    val rootM = tempDir("incidx_adm")
+    val rootR = tempDir("incidx_reb")
     val catM = new graft.catalog.ParquetCatalog(spark, rootM)
     val catR = new graft.catalog.ParquetCatalog(spark, rootR)
     try {
@@ -422,7 +422,7 @@ class DedupSpec extends SparkSpec {
   test("incrementalIndexed: candidate probe shuffles ONLY the delta side") {
     val corpus = docs.filter(pmod($"doc_id", lit(2)) === 0)
     val delta = docs.filter(pmod($"doc_id", lit(2)) === 1)
-    val root = java.nio.file.Files.createTempDirectory("incidx_plan").toString
+    val root = tempDir("incidx_plan")
     val cat = new graft.catalog.ParquetCatalog(spark, root)
     val saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {

@@ -18,7 +18,7 @@ class AnalyticsInvariantsSpec extends SparkSpec {
     // (1-based -> error). Build an events table with views but no
     // purchases so the funnel genuinely converts nobody.
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("empty_funnel").toString
+    val dir = tempDir("empty_funnel")
     spark.read.parquet(s"$sf0001/events.parquet")
       .filter(col("event_type") === "view")
       .write.parquet(s"$dir/events.parquet")

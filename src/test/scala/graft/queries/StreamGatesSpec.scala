@@ -109,27 +109,17 @@ class StreamGatesSpec extends SparkSpec {
     assert(bits == 4, "the wide corpus must land in the 4-bit regime")
     val delta = emb.filter($"vec_id" < 500 && pmod($"vec_id", lit(2)) === 1)
       .select($"vec_id", $"embedding")
-    val tmpPath = java.nio.file.Files.createTempDirectory("graft_wide_admit")
-    try {
-      val tmp = tmpPath.toString
-      delta.repartition(3).write.mode("overwrite").parquet(tmp)
-      val stream = spark.readStream.schema(delta.schema)
-        .option("maxFilesPerTrigger", "1").parquet(tmp)
-      val agg = StreamQueries.embeddingAdmitMatches(corpus, stream, bits)
-      val sunk = StreamQueries.drain(agg, "complete", "wideadmit")
-      val got = DataQueries.admitStatuses(
-        delta.select($"vec_id".as("doc_id")), sunk)
-        .withColumnRenamed("media_id", "vec_id")
-      val want = DataQueries.dedupEmbeddingAdmitWide(spark, sf0001)
-      assert(canon(got) == canon(want))
-    } finally {
-      // drop the per-run parquet staging (ADVICE r15: this test leaked
-      // one temp dir per run)
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(tmpPath).iterator().asScala.toSeq
-        .sortBy(-_.getNameCount)
-        .foreach(p => java.nio.file.Files.deleteIfExists(p))
-    }
+    val tmp = tempDir("graft_wide_admit")
+    delta.repartition(3).write.mode("overwrite").parquet(tmp)
+    val stream = spark.readStream.schema(delta.schema)
+      .option("maxFilesPerTrigger", "1").parquet(tmp)
+    val agg = StreamQueries.embeddingAdmitMatches(corpus, stream, bits)
+    val sunk = StreamQueries.drain(agg, "complete", "wideadmit")
+    val got = DataQueries.admitStatuses(
+      delta.select($"vec_id".as("doc_id")), sunk)
+      .withColumnRenamed("media_id", "vec_id")
+    val want = DataQueries.dedupEmbeddingAdmitWide(spark, sf0001)
+    assert(canon(got) == canon(want))
   }
 
   test("stream_forecast_snaive: the last refit equals the batch snaive " +

@@ -53,7 +53,7 @@ class SeriesOpsSpec extends SparkSpec {
     "with no Spark job; a filtered frame still runs its job") {
     import spark.implicits._
     val cat = new graft.catalog.ParquetCatalog(spark,
-      java.nio.file.Files.createTempDirectory("isempty").toString)
+      tempDir("isempty"))
     val rows = Seq(("2024-01-01", 1.0), ("2024-01-02", 2.0)).toDF("date", "m")
     cat.writeTable("full", rows)
     cat.writeTable("empty", rows.limit(0))

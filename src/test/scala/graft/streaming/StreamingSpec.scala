@@ -12,7 +12,7 @@ class StreamingSpec extends SparkSpec {
   test("streaming dailyBuckets matches batch bucketize on count and sum") {
     // stage the fixture as a stream source (readStream needs a directory
     // it can list); decode nanos ts like Fixtures does
-    val src = java.nio.file.Files.createTempDirectory("graftstream").toString
+    val src = tempDir("graftstream")
     val batch = Fixtures.table(spark, sf0001, "events")
     batch.write.mode("overwrite").parquet(s"$src/events")
 
@@ -42,7 +42,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streaming session_window count matches the batch lag-window sessionize") {
-    val src = java.nio.file.Files.createTempDirectory("graftsess").toString
+    val src = tempDir("graftsess")
     val batch = Fixtures.table(spark, sf0001, "events")
     batch.write.mode("overwrite").parquet(s"$src/events")
     val stream = spark.readStream.schema(batch.schema).parquet(s"$src/events")
@@ -68,7 +68,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streaming dedup emits one row per distinct text, matching batch exact dedup") {
-    val src = java.nio.file.Files.createTempDirectory("graftdedup").toString
+    val src = tempDir("graftdedup")
     // duplicated corpus with event times: dup arrives 1 minute after its
     // original, well inside the watermark
     val docs = Seq(
@@ -95,7 +95,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("stream-stream interval join emits exactly the batch view-click pairs") {
-    val src = java.nio.file.Files.createTempDirectory("graftssj").toString
+    val src = tempDir("graftssj")
     val batch = Fixtures.table(spark, sf0001, "events")
     val views = batch.filter($"event_type" === "view")
     val clicks = batch.filter($"event_type" === "click")
@@ -123,7 +123,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("outer stream-stream join: matches = inner truth; null-side rows emit only past the watermark") {
-    val src = java.nio.file.Files.createTempDirectory("graftssjo").toString
+    val src = tempDir("graftssjo")
     val batch = Fixtures.table(spark, sf0001, "events")
     val views = batch.filter($"event_type" === "view")
     val clicks = batch.filter($"event_type" === "click")
@@ -159,7 +159,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("stream-static enrichment matches the batch join") {
-    val src = java.nio.file.Files.createTempDirectory("graftenrich").toString
+    val src = tempDir("graftenrich")
     val batch = Fixtures.table(spark, sf0001, "events")
     batch.write.mode("overwrite").parquet(s"$src/events")
     val dim = batch.select($"user_id").distinct()
@@ -211,7 +211,7 @@ class StreamingSpec extends SparkSpec {
   test("streaming upsert: micro-batches MERGE into the catalog table") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val tmp = java.nio.file.Files.createTempDirectory("graftupsert").toString
+    val tmp = tempDir("graftupsert")
     val cat = new graft.catalog.ParquetCatalog(spark, s"$tmp/cat")
     val mem = MemoryStream[(String, Long, String)]
     val updates = mem.toDF().toDF("k", "ver", "payload")
@@ -235,7 +235,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streaming rollup maintenance: the folded table equals the one-shot batch rollup") {
-    val src = java.nio.file.Files.createTempDirectory("graftroll").toString
+    val src = tempDir("graftroll")
     val batch = Fixtures.table(spark, sf0001, "events")
     // split the fixture into two file-drops so several micro-batches fold
     batch.filter($"event_id" % 2 === 0).write.parquet(s"$src/in")
@@ -264,7 +264,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streaming sliding reach tracks the exact batch trailing-window reach") {
-    val src = java.nio.file.Files.createTempDirectory("graftreach").toString
+    val src = tempDir("graftreach")
     val batch = Fixtures.table(spark, sf0001, "events")
     batch.write.mode("overwrite").parquet(s"$src/events")
     val stream = spark.readStream.schema(batch.schema).parquet(s"$src/events")
