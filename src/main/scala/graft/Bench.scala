@@ -1,16 +1,13 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.{bit_xor, col, xxhash64}
 /** Benchmark surface: runs every SparkEntry query on SPARK_GRAFT_SF_DIR
   * and prints ONE JSON line with per-query seconds + status.
   *
-  * Consumption: every output column flows through
+  * Consumption: [[Harness.consume]], every output column flows through
   * `select(xxhash64(cols)).agg(bit_xor(h))`. A bare count() lets Catalyst
   * elide unreferenced projections (timing a parquet row-count instead of
   * the query); `sum(xxhash64)` — round 2's attempt — overflows LongType
   * almost surely under Spark 4's default ANSI mode and aborts the job.
-  * bit_xor is overflow-free, order-insensitive, and still forces every
-  * column of every row.
   *
   * Failure accounting: a query that throws is reported per-name in the
   * JSON `status`/`errors` fields, logged to stderr, and flips the exit
@@ -23,7 +20,7 @@ import org.apache.spark.sql.functions.{bit_xor, col, xxhash64}
   * recorded 49 s for a query that re-measures at ~1 s). Both timings are
   * recorded in BENCH_DETAIL's `reruns` so nothing is hidden.
   *
-  * Hygiene: `spark.catalog.clearCache()` between queries, so one query's
+  * Hygiene: [[Harness.release]] between queries, so one query's
   * internal persist (minhash signatures, IVF codebooks, LSH buckets,
   * Jaccard inverted index) can neither flatter a later query nor
   * accumulate MEMORY_AND_DISK blocks across the run.
@@ -32,7 +29,7 @@ import org.apache.spark.sql.functions.{bit_xor, col, xxhash64}
   * bench start and end; its ratio to the recorded quiet floor lands in
   * the output (`calibration` in BENCH_DETAIL, `calib` on the driver
   * line), so a contention-inflated run identifies itself instead of
-  * costing a QuietTime round-trip (see the inline block and
+  * costing a `graft.tools.Profile` round-trip (see the inline block and
   * ARCHITECTURE.md's interpretation rule).
   *
   * Line budget: the harness reading this output captures only the final
@@ -50,25 +47,10 @@ import org.apache.spark.sql.functions.{bit_xor, col, xxhash64}
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // cap listener-event plan strings: deep cached/composed plans
-      // (pipeline_pretrain_full) render O(plan-size) text per execution
-      // event even with the UI off — 1 MB keeps events useful and bounded
-      .config("spark.sql.maxPlanStringLength", "1048576")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     // size-adaptive shuffle partitions (see Tuning): cores at sf0.1,
     // growing with input bytes on replicated corpora; env-overridable
-    val parts = Tuning.shufflePartitionsFor(sfDir, cpus.toInt)
-    spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
-    Tuning.applySessionTuning(spark)
-    Tuning.applyScanSpread(spark, sfDir, cpus.toInt)
+    val parts = Harness.tune(spark, sfDir)
     System.err.println(s"[bench] shuffle.partitions=$parts for $sfDir")
     // Warm the JVM once so the first measured queries don't absorb
     // executor startup, parquet footer reads, and whole-stage-codegen JIT
@@ -108,7 +90,7 @@ object Bench {
     // that machine-readable in the run itself (interpretation rule in
     // ARCHITECTURE.md: <=1.25 quiet — observed fresh-JVM jitter reaches
     // ~1.2x on an idle host, 1.25-1.5 mildly contended — scale totals by
-    // it, >1.5 contended — QuietTime before chasing any
+    // it, >1.5 contended — tools.Profile before chasing any
     // per-query "regression"). Median of 3 so one scheduler hiccup
     // can't fake contention. The floor is the measured quiet median on
     // the reference host (env-overridable for other hardware).
@@ -130,49 +112,21 @@ object Bench {
     // start measurement isn't colder than the end one
     val calibStart = calibrate()
     System.err.println(f"[bench] calibration start: $calibStart%.2fs (floor $calibFloor%.2fs)")
-    def esc(s: String): String = s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
-    def runOnce(name: String,
-        fn: (SparkSession, String) => org.apache.spark.sql.DataFrame):
-        (Double, Option[String]) = {
-      val t0 = System.nanoTime()
-      val err: Option[String] =
-        try {
-          val df = fn(spark, sfDir)
-          df.select(xxhash64(df.columns.toIndexedSeq.map(c => col(s"`$c`")): _*).as("h"))
-            .agg(bit_xor(col("h"))).collect()
-          None
-        } catch { case e: Throwable =>
+    def runOnce(fn: Harness.Query): (Double, Option[String]) = {
+      val (err, sec) = Harness.time {
+        try { Harness.consume(fn(spark, sfDir)); None }
+        catch { case e: Throwable =>
           Some(s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(300)}")
         }
-      val sec = (System.nanoTime() - t0) / 1e9
-      // CacheScope release contract + clearCache belt (see Verify)
-      graft.operators.CacheScope.release(spark)
-      spark.catalog.clearCache()
+      }
+      Harness.release(spark)
       (sec, err)
     }
-    // Dev-only subset filter (comma-separated names), mirroring Verify's;
-    // the driver sets nothing, so grading always times the full surface.
+    // Dev-only subset filter; the driver sets nothing, so grading always
+    // times the full surface. A subset run writes no BENCH_DETAIL.json.
     val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    only.foreach { names =>
-      val unknown = names -- SparkEntry.queries.keySet
-      require(unknown.isEmpty,
-        s"SPARK_GRAFT_ONLY names not registered: ${unknown.toSeq.sorted.mkString(", ")}")
-    }
-    val selected = only match {
-      case Some(names) => SparkEntry.queries.filter { case (n, _) => names(n) }
-      case None        => SparkEntry.queries
-    }
-    val firstPass = selected.toSeq.sortBy(_._1).map { case (name, fn) =>
-      val (sec, err) = runOnce(name, fn)
+    val firstPass = Harness.selected(only).toSeq.sortBy(_._1).map { case (name, fn) =>
+      val (sec, err) = runOnce(fn)
       System.err.println(
         f"[bench] $name%-28s ${if (err.isEmpty) "OK" else "FAIL"}%-4s $sec%8.2fs" +
           err.map(" " + _).getOrElse(""))
@@ -190,7 +144,7 @@ object Bench {
     val reruns = scala.collection.mutable.LinkedHashMap[String, (Double, Double)]()
     val results = firstPass.map {
       case (name, sec, None) if sec > threshold =>
-        val (sec2, err2) = runOnce(name, SparkEntry.queries(name))
+        val (sec2, err2) = runOnce(SparkEntry.queries(name))
         val best = if (err2.isEmpty) math.min(sec, sec2) else sec
         // a FAILED rerun's wall-clock is not a timing — record -1 so a
         // reader can't mistake it for one (the first-pass time is kept)
@@ -222,7 +176,7 @@ object Bench {
         "\"" + k + "\":\"" + (if (e.isEmpty) "ok" else "failed") + "\"" }
         .mkString("{", ",", "}")
       val errors = results.collect { case (k, _, Some(e)) =>
-        "\"" + k + "\":\"" + esc(e) + "\"" }.mkString("{", ",", "}")
+        "\"" + k + "\":" + Harness.jsonString(e) }.mkString("{", ",", "}")
       val rr = reruns.map { case (k, (a, b)) => "\"" + k + "\":[" + a + "," + b + "]" }
         .mkString("{", ",", "}")
       val vs = varianceSuspect.map("\"" + _ + "\"").mkString("[", ",", "]")
@@ -231,7 +185,7 @@ object Bench {
         s""""variance_suspect":$vs,"calibration":$calibJson,""" +
         s""""failed":$failed,"sf":"$sfDir"}"""
     }
-    try java.nio.file.Files.write(
+    if (only.isEmpty) try java.nio.file.Files.write(
       java.nio.file.Paths.get("BENCH_DETAIL.json"),
       (detail + "\n").getBytes("UTF-8"))
     catch { case e: Throwable => System.err.println(s"[bench] detail write failed: $e") }
@@ -249,7 +203,7 @@ object Bench {
       val errs =
         if (failed == 0) ""
         else "," + "\"errors\":" + results.collect { case (k, _, Some(e)) =>
-          "\"" + k + "\":\"" + esc(e.take(80)) + "\"" }.take(5).mkString("{", ",", "}")
+          "\"" + k + "\":" + Harness.jsonString(e.take(80)) }.take(5).mkString("{", ",", "}")
       // basename only: every char spent here is a char a query entry
       // can't use (full path is in BENCH_DETAIL.json)
       val sfShort = sfDir.split('/').last

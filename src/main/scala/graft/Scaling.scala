@@ -174,24 +174,6 @@ object Scaling {
     "forecast_orders_ridge", "forecast_events_holidays_ridge",
     "forecast_events_logistic_ridge")
 
-  private def session(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // cap listener-event plan strings: deep cached/composed plans
-      // (pipeline_pretrain_full) render O(plan-size) text per execution
-      // event even with the UI off — 1 MB keeps events useful and bounded
-      .config("spark.sql.maxPlanStringLength", "1048576")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Tuning.applySessionTuning(spark)
-    spark
-  }
-
   /** Per-copy deterministic sign-flip of the embedding coordinates — a
     * diagonal orthogonal transform. Within a copy EVERY pairwise inner
     * product and norm is preserved EXACTLY (same signs applied to both
@@ -260,24 +242,18 @@ object Scaling {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = session()
+    val spark = Harness.session()
     args.headOption match {
       case Some("gen") =>
         gen(spark, args(1), args(2), args(3).toInt)
       case Some("bench") =>
         val dirs = args.drop(1).toSeq
-        val fam = sys.env.get("SPARK_GRAFT_ONLY")
-          .map(_.split(",").toSeq.map(_.trim).filter(_.nonEmpty))
-          .getOrElse(family)
+        // SPARK_GRAFT_ONLY, when set, replaces the family (dev subsets)
+        val only = sys.env.get("SPARK_GRAFT_ONLY")
+        val fam = if (only.isEmpty) family else Harness.selected(only).keys.toSeq.sorted
         def runOnce(name: String, dir: String): Double = {
-          val t0 = System.nanoTime()
-          val df = SparkEntry.queries(name)(spark, dir)
-          df.select(xxhash64(df.columns.toIndexedSeq.map(c => col(s"`$c`")): _*).as("h"))
-            .agg(bit_xor(col("h"))).collect()
-          val sec = (System.nanoTime() - t0) / 1e9
-          graft.operators.CacheScope.release(spark)
-
-          spark.catalog.clearCache()
+          val (_, sec) = Harness.time(Harness.consume(SparkEntry.queries(name)(spark, dir)))
+          Harness.release(spark)
           sec
         }
         // INTERLEAVED sweep (round-14 verdict #4): the outer loop is the
@@ -287,10 +263,9 @@ object Scaling {
         // number last, after ~100 queries of heap/page-cache churn, and
         // overstated the worst ratios ~40% vs quiet re-measures
         // (SCALING.md round-14 reconciliation) — ratio noise, not data.
-        val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-        val parts = dirs.map(d => d -> Tuning.shufflePartitionsFor(d, cpus)).toMap
         dirs.foreach { dir =>
-          System.err.println(s"[scaling] shuffle.partitions=${parts(dir)} for $dir")
+          val parts = Tuning.shufflePartitionsFor(dir, Harness.cpus)
+          System.err.println(s"[scaling] shuffle.partitions=$parts for $dir")
           spark.read.parquet(s"$dir/documents.parquet").limit(100).count() // warm
         }
         val measured = fam.map { q =>
@@ -298,8 +273,7 @@ object Scaling {
             // size-adaptive shuffle partitions per corpus dir (see
             // Tuning): a replicated x30 corpus gets ~4x the partitions of
             // x10, the way a real cluster's partition count follows data
-            spark.conf.set("spark.sql.shuffle.partitions", parts(dir).toString)
-            Tuning.applyScanSpread(spark, dir, cpus)
+            Harness.tune(spark, dir)
             val s1 = runOnce(q, dir)
             // Bench's outlier policy: one re-measure for slow queries, keep min
             val s = if (s1 > 3.0) math.min(s1, runOnce(q, dir)) else s1

@@ -1,6 +1,6 @@
 package graft
 
-/** Size-adaptive session tuning shared by the Bench/Scaling harnesses.
+/** Size-adaptive session tuning applied through [[Harness]].
   *
   * A fixed `spark.sql.shuffle.partitions = cores` is right at sf0.1 on
   * local[32] but starves replicated x10/x30 corpora (SCALING_x30_parts128:
@@ -48,9 +48,9 @@ object Tuning {
       math.min(1024L, math.max(2L, byData)).toInt
     }
 
-  /** Session-level adaptive-execution tuning shared by every harness main
-    * (Bench/Verify/Scaling/QuietTime/...), applied AFTER session creation
-    * (all runtime SQLConf keys).
+  /** Session-level adaptive-execution tuning applied by [[Harness.session]]
+    * (and perfbench's copy of it) AFTER session creation (a runtime
+    * SQLConf key).
     *
     * `spark.sql.optimizer.canChangeCachedPlanOutputPartitioning=true`
     * lets AQE coalesce the output partitioning of CACHED plans. The
@@ -67,20 +67,9 @@ object Tuning {
     * overhead regime collapses. Spark defaults it to false only to keep
     * exchange-reuse matching stable, a concern for plan-identical reuse
     * across queries, which the per-query bench/driver never relies on.
-    *
-    * Env overrides (controlled experiments, same spirit as
-    * SPARK_GRAFT_PARTS): SPARK_GRAFT_CACHED_COALESCE=false restores the
-    * Spark default; SPARK_GRAFT_PARALLELISM_FIRST / SPARK_GRAFT_ADVISORY
-    * expose the coalescing knobs without a rebuild.
     */
-  def applySessionTuning(spark: org.apache.spark.sql.SparkSession): Unit = {
-    spark.conf.set("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-      sys.env.getOrElse("SPARK_GRAFT_CACHED_COALESCE", "true"))
-    sys.env.get("SPARK_GRAFT_PARALLELISM_FIRST").foreach(v =>
-      spark.conf.set("spark.sql.adaptive.coalescePartitions.parallelismFirst", v))
-    sys.env.get("SPARK_GRAFT_ADVISORY").foreach(v =>
-      spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", v))
-  }
+  def applySessionTuning(spark: org.apache.spark.sql.SparkSession): Unit =
+    spark.conf.set("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
 
   /** Conf key read by [[spreadCompute]]: when set > 1, compute-bound
     * projections repartition scan-rooted inputs to this count.

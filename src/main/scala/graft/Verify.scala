@@ -1,39 +1,19 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare. The session and
+  * its data-sized tuning are Bench's, so the graded results come from the
+  * plans the bench times.
+  */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // cap listener-event plan strings: deep cached/composed plans
-      // (pipeline_pretrain_full) render O(plan-size) text per execution
-      // event even with the UI off — 1 MB keeps events useful and bounded
-      .config("spark.sql.maxPlanStringLength", "1048576")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Tuning.applySessionTuning(spark)
-    Tuning.applyScanSpread(spark, sfDir, cpus.toInt)
+    val spark = Harness.session()
+    Harness.tune(spark, sfDir)
     new java.io.File(outDir).mkdirs()
-    // Dev-only subset filter (comma-separated names); driver sets nothing,
+    // Dev-only subset filter (SPARK_GRAFT_ONLY); the driver sets nothing,
     // so the full surface runs in grading.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    only.foreach { names =>
-      val unknown = names -- SparkEntry.queries.keySet
-      require(unknown.isEmpty,
-        s"SPARK_GRAFT_ONLY names not registered: ${unknown.toSeq.sorted.mkString(", ")}")
-    }
-    val selected = only match {
-      case Some(names) => SparkEntry.queries.filter { case (n, _) => names(n) }
-      case None        => SparkEntry.queries
-    }
+    val selected = Harness.selected()
     selected.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
@@ -42,26 +22,13 @@ object Verify {
       }
       // operators that persist internally (minhash sig, Jaccard inverted
       // index, IVF codebook, LSH buckets) must not leak blocks across
-      // queries — the CacheScope release contract, same hygiene as Bench
-      // (clearCache kept as a belt for anything outside the registry)
-      graft.operators.CacheScope.release(spark)
-      spark.catalog.clearCache()
+      // queries
+      Harness.release(spark)
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql
-      .filter { case (k, _) => only.forall(_(k)) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .filter { case (k, _) => selected.contains(k) }
+      .map { case (k, v) => s"${Harness.jsonString(k)}: ${Harness.jsonString(v)}" }
+      .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

@@ -217,19 +217,6 @@ final class ParquetCatalog(val spark: SparkSession, val root: String) {
       .format("parquet")
       .saveAsTable(name)
 
-  /** Append into a plain [[writeTable]] parquet table, ONE sorted file
-    * per batch: the coalesce is what delivers that — shapeForWrite
-    * without a partition column keeps the upstream partitioning, which
-    * after a shuffle would scatter each nightly append into
-    * shuffle-partition-many tiny files (the small-files tax
-    * [[compactTable]] exists to undo). Append batches are
-    * bounded-per-night by contract; a batch too big for one task should
-    * go through [[writeTable]]/[[replaceTable]] instead.
-    */
-  def appendTable(name: String, df: DataFrame, sortCol: String): Unit =
-    shapeForWrite(df.coalesce(1), sortCol, None, 1)
-      .write.mode("append").parquet(tablePath(name))
-
   /** Read back a bucketed table — must go through the session catalog so
     * the optimizer sees the bucket spec (a plain parquet read of the same
     * files would forget the hash-partitioning and re-shuffle).

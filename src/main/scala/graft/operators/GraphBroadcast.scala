@@ -45,8 +45,8 @@ object GraphBroadcast {
 
   /** Node cap derived from the bytes budget. Callers pass a
     * non-negative `broadcastMaxNodes` to pin the cap explicitly (0
-    * forces shuffle, Long.MaxValue forces broadcast — the GraphTune A/B
-    * convention); negative means derive it here.
+    * forces shuffle, Long.MaxValue forces broadcast, for A/B runs);
+    * negative means derive it here.
     */
   def maxNodes(spark: SparkSession, explicit: Long): Long =
     if (explicit >= 0L) explicit

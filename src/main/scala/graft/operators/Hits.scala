@@ -56,7 +56,7 @@ object Hits {
     * r15 flagged the old 4M row literal as a 100–200 MB-per-round
     * memory risk, and the r16 x100 A/B measured shuffle FASTER above
     * ~1M on this host). Non-negative pins it (0 = force shuffle,
-    * Long.MaxValue = force broadcast — the GraphTune A/B convention).
+    * Long.MaxValue = force broadcast, for A/B runs).
     */
   def run(edges: DataFrame, iters: Int, reliable: Boolean = false,
       broadcastMaxNodes: Long = -1L): DataFrame = {

@@ -49,7 +49,7 @@ object PageRank {
     * per cluster with `spark.graft.graph.broadcastBudgetBytes`; the
     * HLL ±5% sizing error then fuzzes the boundary well below any
     * memory cliff (ADVICE r15). Non-negative pins it (0 = force
-    * shuffle, Long.MaxValue = force broadcast — GraphTune's A/B).
+    * shuffle, Long.MaxValue = force broadcast, for A/B runs).
     * `reliable` selects the lineage-truncation mode (see [[Checkpoints]]):
     * default executor-local; true = FS-backed, surviving executor loss.
     *

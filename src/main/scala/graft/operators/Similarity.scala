@@ -202,7 +202,7 @@ object Similarity {
   // join turns every assignment/probe into a pure projection: no
   // broadcast exchange, no per-vector argmin aggregation or window
   // shuffle, and no join-back of the assignment onto the corpus (guide
-  // §2.4 — remove shuffles outright; StageProfile measured the PQ/IVF
+  // §2.4 — remove shuffles outright; a per-stage profile measured the PQ/IVF
   // queries as ~30 serial jobs of fixed overhead, most of them exactly
   // these exchanges). All arithmetic below reproduces the previous
   // join-form expressions OPERAND FOR OPERAND (same adds in the same

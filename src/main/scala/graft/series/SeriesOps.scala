@@ -31,12 +31,6 @@ object SeriesOps {
       case f if f.name != "date" && f.dataType.isInstanceOf[NumericType] => f.name
     }.toSeq
 
-  /** Sorted projection scan: `SELECT date, c1..cn FROM t ORDER BY date`
-    * (fs:157). Catalyst prunes the parquet read to exactly these columns.
-    */
-  def scanSorted(df: DataFrame, metrics: Seq[String]): DataFrame =
-    df.select(("date" +: metrics).map(col): _*).orderBy("date")
-
   /** `date` columns arrive as strings in the reference and are parsed with
     * pd.to_datetime(format='%Y-%m-%d') (fs:165). Accept string, date or
     * timestamp; normalize to DateType.

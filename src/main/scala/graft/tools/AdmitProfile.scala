@@ -1,8 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.Harness
 import graft.operators.Dedup
 import graft.sources.Fixtures
 
@@ -20,24 +20,9 @@ object AdmitProfile {
     require(args.nonEmpty, "usage: AdmitProfile <sfDir> [reps]")
     val dir = args(0)
     val reps = if (args.length > 1) args(1).toInt else 2
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // mirror QuietTime/Bench: data-sized shuffle partitions
-    spark.conf.set("spark.sql.shuffle.partitions",
-      graft.Tuning.shufflePartitionsFor(dir, cpus.toInt).toString)
-
-    def time[A](f: => A): Double = {
-      val t0 = System.nanoTime()
-      f
-      (System.nanoTime() - t0) / 1e9
-    }
+    val spark = Harness.session()
+    Harness.tune(spark, dir)
+    import Harness.time
 
     (1 to reps).foreach { rep =>
       val docs = Fixtures.table(spark, dir, "documents")
@@ -46,20 +31,20 @@ object AdmitProfile {
       val corpus = docs.filter(pmod(col("doc_id"), lit(3)) === 0)
       val night1 = docs.filter(pmod(col("doc_id"), lit(3)) === 1)
       val night2 = docs.filter(pmod(col("doc_id"), lit(3)) === 2)
-      val tBuild = time(Dedup.buildIncrementalIndex(corpus, cat, "prof_admidx"))
-      val tN1 = time(cat.writeTable("prof_admidx_n1_status",
+      val (_, tBuild) = time(Dedup.buildIncrementalIndex(corpus, cat, "prof_admidx"))
+      val (_, tN1) = time(cat.writeTable("prof_admidx_n1_status",
         Dedup.incrementalIndexed(cat, "prof_admidx", night1),
         sortCol = "doc_id"))
-      val tAdmit = time(Dedup.admitToIncrementalIndex(cat, "prof_admidx",
+      val (_, tAdmit) = time(Dedup.admitToIncrementalIndex(cat, "prof_admidx",
         night1, cat.load("prof_admidx_n1_status")))
-      val tN2 = time(Dedup.incrementalIndexed(cat, "prof_admidx", night2)
+      val (_, tN2) = time(Dedup.incrementalIndexed(cat, "prof_admidx", night2)
         .write.mode("overwrite").format("noop").save())
       println(f"[admit] rep$rep build=$tBuild%.2f n1=$tN1%.2f " +
         f"admit=$tAdmit%.2f n2=$tN2%.2f " +
         f"total=${tBuild + tN1 + tAdmit + tN2}%.2f")
       spark.sql("DROP TABLE IF EXISTS prof_admidx_norm")
       spark.sql("DROP TABLE IF EXISTS prof_admidx_postings")
-      graft.operators.CacheScope.release(spark)
+      Harness.release(spark)
     }
     spark.stop()
   }

@@ -1,7 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
+import graft.Harness
 import graft.queries.TextQueries
 
 /** Production-shaped batched-BPE evidence runner (round-14 ask): learn a
@@ -23,20 +22,9 @@ object BpeScale {
     require(args.length >= 3, "usage: BpeScale <sfDir> <k> <m> [seq]")
     val (dir, k, m) = (args(0), args(1).toInt, args(2).toInt)
     val runSeq = args.length > 3 && args(3) == "seq"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    def time[A](f: => A): (A, Double) = {
-      val t0 = System.nanoTime()
-      val r = f
-      (r, (System.nanoTime() - t0) / 1e9)
-    }
+    val spark = Harness.session()
+    Harness.tune(spark, dir)
+    import Harness.time
     val docs = graft.sources.Fixtures.table(spark, dir, "documents")
     val ((merges, dict, waves), batchedSec) = time {
       TextQueries.bpeRoundsBatched(TextQueries.bpeDictOf(docs), k = k, m = m,

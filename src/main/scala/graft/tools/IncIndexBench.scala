@@ -1,8 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.Harness
 import graft.operators.Dedup
 import graft.sources.Fixtures
 
@@ -30,26 +30,14 @@ object IncIndexBench {
     }
     require(args.nonEmpty,
       "usage: IncIndexBench [--delta <dir>] <sfDir> [<sfDir> ...]")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    def time[A](f: => A): Double = {
-      val t0 = System.nanoTime()
-      f
-      (System.nanoTime() - t0) / 1e9
-    }
+    val spark = Harness.session()
+    import Harness.time
 
     // warmup: a miniature build+query cycle, so one-time costs (catalog
     // init on the first saveAsTable, shingle-lambda codegen, shuffle
     // setup) don't inflate the first directory's numbers
     locally {
+      Harness.tune(spark, args.head)
       val tiny = Fixtures.table(spark, args.head, "documents").limit(200)
       val root = java.nio.file.Files.createTempDirectory("incidx_warm").toString
       val cat = new graft.catalog.ParquetCatalog(spark, root)
@@ -63,18 +51,19 @@ object IncIndexBench {
     }
 
     val parts = args.map { dir =>
+      Harness.tune(spark, dir)
       val docs = Fixtures.table(spark, dir, "documents")
       val corpus = docs.filter(pmod(col("doc_id"), lit(2)) === 0)
       val delta = deltaDir.fold(docs)(Fixtures.table(spark, _, "documents"))
         .filter(pmod(col("doc_id"), lit(2)) === 1)
       val root = java.nio.file.Files.createTempDirectory("incidx_bench").toString
       val cat = new graft.catalog.ParquetCatalog(spark, root)
-      val build = time(Dedup.buildIncrementalIndex(corpus, cat, "bench_incidx"))
+      val (_, build) = time(Dedup.buildIncrementalIndex(corpus, cat, "bench_incidx"))
       val queries = (1 to 3).map { _ =>
         time {
           Dedup.incrementalIndexed(cat, "bench_incidx", delta)
             .write.mode("overwrite").format("noop").save()
-        }
+        }._2
       }.sorted
       spark.sql("DROP TABLE IF EXISTS bench_incidx_norm")
       spark.sql("DROP TABLE IF EXISTS bench_incidx_postings")

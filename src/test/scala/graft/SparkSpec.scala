@@ -7,6 +7,8 @@ import java.util.concurrent.atomic.AtomicInteger
 import scala.jdk.CollectionConverters._
 
 import org.apache.commons.io.FileUtils
+import org.apache.logging.log4j.{Level, LogManager}
+import org.apache.logging.log4j.core.config.Configurator
 import org.apache.spark.graft.ListenerBridge
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
@@ -41,6 +43,17 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   override def afterAll(): Unit =
     try tempDirs.asScala.foreach(FileUtils.deleteQuietly)
     finally super.afterAll()
+
+  /** `f` with the named log4j loggers switched off, then restored. For
+    * runs that fail on purpose: their stack traces would otherwise bury a
+    * real failure in the test log.
+    */
+  def quietLoggers[A](loggers: String*)(f: => A): A = {
+    val saved = loggers.map(n => n -> LogManager.getLogger(n).getLevel)
+    loggers.foreach(Configurator.setLevel(_, Level.OFF))
+    try f
+    finally saved.foreach { case (n, level) => Configurator.setLevel(n, level) }
+  }
 
   /** `f`'s result and the number of Spark jobs it started. */
   def withJobCount[A](f: => A): (A, Int) = {

@@ -1,7 +1,5 @@
 package graft.job
 
-import org.apache.logging.log4j.{Level, LogManager}
-import org.apache.logging.log4j.core.config.Configurator
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -39,20 +37,14 @@ class ForecastJobSpec extends SparkSpec {
       .coalesce(1).write.mode("append").parquet(path)
   }
 
-  /** `f` with the loggers that print a failed task's stack trace switched
-    * off, then restored: the executor's ERROR and the task set's WARN, and
-    * for a failed write the writer's and `Utils`' ERRORs. The runs wrapped
-    * in this fail on purpose, and the job's own ERROR line still records
-    * each failure.
+  /** The loggers that print a failed task's stack trace: the executor's
+    * ERROR and the task set's WARN, and for a failed write the writer's
+    * and `Utils`' ERRORs. The runs quieted with these fail on purpose, and
+    * the job's own ERROR line still records each failure.
     */
-  private def quietTaskFailures[A](f: => A): A = {
-    val loggers = Seq("org.apache.spark.executor.Executor", "org.apache.spark.scheduler.TaskSetManager",
-      "org.apache.spark.sql.execution.datasources.FileFormatWriter", "org.apache.spark.util.Utils")
-    val saved = loggers.map(n => n -> LogManager.getLogger(n).getLevel)
-    loggers.foreach(Configurator.setLevel(_, Level.OFF))
-    try f
-    finally saved.foreach { case (n, level) => Configurator.setLevel(n, level) }
-  }
+  private val taskFailureLoggers = Seq("org.apache.spark.executor.Executor",
+    "org.apache.spark.scheduler.TaskSetManager",
+    "org.apache.spark.sql.execution.datasources.FileFormatWriter", "org.apache.spark.util.Utils")
 
   test("full run: creates outputs, correct schema/rows, exact bookkeeping") {
     val cat = seedCatalog()
@@ -189,13 +181,13 @@ class ForecastJobSpec extends SparkSpec {
       cat
     }
     val cat = seedWithBrokenTable()
-    val s = quietTaskFailures(new ForecastJob(cat, 7).run())
+    val s = quietLoggers(taskFailureLoggers: _*)(new ForecastJob(cat, 7).run())
     assert(s.created.toSet == Set("bucket_forecast_events", "bucket_forecast_plain_sales"))
     assert(s.failedSeries == Seq("broken" -> "*"))
     assert(!cat.tableExists("bucket_forecast_broken"))
 
     val cat2 = seedWithBrokenTable()
-    val b = quietTaskFailures(new ForecastJob(cat2, 7).backtest(horizon = 7, period = 3, initial = 14))
+    val b = quietLoggers(taskFailureLoggers: _*)(new ForecastJob(cat2, 7).backtest(horizon = 7, period = 3, initial = 14))
     assert(b.created.toSet == Set("bucket_backtest_events", "bucket_backtest_plain_sales"))
     assert(b.failedSeries == Seq("broken" -> "*"))
     assert(!cat2.tableExists("bucket_backtest_broken"))
@@ -218,7 +210,7 @@ class ForecastJobSpec extends SparkSpec {
     val saved = spark.conf.get(ansi)
     spark.conf.set(ansi, "true")
     val failed =
-      try quietTaskFailures(new ForecastJob(cat, interval = 7, parityTypes = true).run())
+      try quietLoggers(taskFailureLoggers: _*)(new ForecastJob(cat, interval = 7, parityTypes = true).run())
       finally spark.conf.set(ansi, saved)
     assert(failed.failedSeries == Seq("bucket_climb" -> "*"))
     assert(failed.updated.isEmpty && failed.successful.isEmpty)
@@ -295,7 +287,7 @@ class ForecastJobSpec extends SparkSpec {
     ListenerBridge.waitUntilListenerBusEmpty(sc) // seeding's jobs are not counted
     sc.addSparkListener(listener)
     val s =
-      try quietTaskFailures(new ForecastJob(cat, interval = 7).run())
+      try quietLoggers(taskFailureLoggers: _*)(new ForecastJob(cat, interval = 7).run())
       finally {
         ListenerBridge.waitUntilListenerBusEmpty(sc)
         sc.removeSparkListener(listener)

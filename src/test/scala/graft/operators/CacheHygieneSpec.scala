@@ -1,8 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.functions.{bit_xor, col, xxhash64}
-
-import graft.{SparkEntry, SparkSpec}
+import graft.{Harness, SparkEntry, SparkSpec}
 
 /** The shared-session cache contract, enforced for EVERY registered
   * query: after `run → materialize → CacheScope.release(spark)`, no
@@ -19,10 +17,7 @@ import graft.{SparkEntry, SparkSpec}
 class CacheHygieneSpec extends SparkSpec {
 
   private def leakedAfterRelease(name: String): Seq[String] = {
-    val df = SparkEntry.queries(name)(spark, sf0001)
-    // the Bench consume: forces every column of every row
-    df.select(xxhash64(df.columns.toIndexedSeq.map(c => col(s"`$c`")): _*)
-      .as("h")).agg(bit_xor(col("h"))).collect()
+    Harness.consume(SparkEntry.queries(name)(spark, sf0001))
     CacheScope.release(spark)
     val leaked = spark.sparkContext.getPersistentRDDs.values
       .filterNot(_.isCheckpointed)

@@ -67,15 +67,6 @@ class SeriesOpsSpec extends SparkSpec {
     assert(!SeriesOps.isEmpty(rows) && SeriesOps.isEmpty(rows.limit(0)))
   }
 
-  test("scanSorted prunes to date + metrics and orders by date (S1)") {
-    import spark.implicits._
-    val df = Seq(("2024-01-02", 2, "x"), ("2024-01-01", 1, "y"))
-      .toDF("date", "m", "junk")
-    val out = SeriesOps.scanSorted(SeriesOps.normalizeDate(df), Seq("m"))
-    assert(out.columns.toSeq == Seq("date", "m"))
-    assert(out.collect().map(_.getInt(1)).toSeq == Seq(1, 2))
-  }
-
   test("maxDate aggregate returns the last known date (R2)") {
     import spark.implicits._
     val df = SeriesOps.normalizeDate(
