@@ -77,9 +77,11 @@ object Bench {
     } catch { case _: Throwable => () }
     // --- contention self-adjudication ---------------------------------
     // A fixed, data-independent probe timed at bench START and END:
-    // xxhash64+bit_xor over a 4.096B-row spark.range on 32 pinned
-    // partitions (~0.85 s quiet on the reference host — long enough that
-    // scheduler granularity can't hide a contended core; one untimed run
+    // xxhash64+bit_xor over a spark.range of 128M rows per core, one
+    // partition per core — a single wave, the same per-task work at any
+    // `Harness.cpus`, so core count never leaks into the factor (~0.85 s
+    // quiet on the reference host — long enough that scheduler
+    // granularity can't hide a contended core; one untimed run
     // first so codegen JIT never biases the start-vs-end comparison) — one
     // codegen stage, no input IO, no exchange, so its runtime moves ONLY
     // with host CPU contention, never with the SF under test or the
@@ -97,7 +99,7 @@ object Bench {
     val calibFloor = sys.env.get("SPARK_GRAFT_CALIB_FLOOR")
       .map(_.toDouble).getOrElse(0.85)
     def calibProbe(): Unit = {
-      spark.range(0L, 4096000000L, 1L, 32)
+      spark.range(0L, 128000000L * Harness.cpus, 1L, Harness.cpus)
         .select(bit_xor(xxhash64(col("id")))).collect(); ()
     }
     def calibrate(): Double = {

@@ -2449,91 +2449,6 @@ object AnalyticsQueries {
       .orderBy("event_type")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "delta_sum" -> (deltaSum _),
-    "kendall_tau" -> (kendallTau _),
-    "categorical_iv" -> (categoricalIv _),
-    "rfm_segments" -> (rfmSegments _),
-    "rfm_segments_offsets" -> (rfmSegmentsOffsets _),
-    "sparkbar" -> (sparkbar _),
-    "series_anomaly_mad" -> (seriesAnomalyMad _),
-    "zorder_key" -> (zorderKey _),
-    "attribution_last_touch" -> (attributionLastTouch _),
-    "audience_overlap" -> (audienceOverlap _),
-    "gini_revenue" -> (giniRevenue _),
-    "gini_revenue_offsets" -> (giniRevenueOffsets _),
-    "ip_functions" -> (ipFunctions _),
-    "geo_distance" -> (geoDistance _),
-    "mutual_info" -> (mutualInfo _),
-    "url_functions" -> (urlFunctions _),
-    "event_transitions" -> (eventTransitions _),
-    "series_acf" -> (seriesAcf _),
-    "series_cusum" -> (seriesCusum _),
-    "series_decompose" -> (seriesDecompose _),
-    "mad_per_group" -> (madPerGroup _),
-    "multi_linreg" -> (multiLinreg _),
-    "sample_weighted" -> (sampleWeighted _),
-    "cramers_v" -> (cramersV _),
-    "ks_test" -> (ksTest _),
-    "ks_test_offsets" -> (ksTestOffsets _),
-    "linreg_simple" -> (linregSimple _),
-    "rank_corr" -> (rankCorr _),
-    "rank_corr_offsets" -> (rankCorrOffsets _),
-    "retention_conditions" -> (retentionConditions _),
-    "corr_matrix" -> (corrMatrix _),
-    "roc_auc" -> (rocAuc _),
-    "roc_auc_offsets" -> (rocAucOffsets _),
-    "series_outliers_tukey" -> (seriesOutliersTukey _),
-    "mad_per_group_offsets" -> (madPerGroupOffsets _),
-    "series_outliers_tukey_offsets" -> (seriesOutliersTukeyOffsets _),
-    "series_period_detect" -> (seriesPeriodDetect _),
-    "theils_u" -> (theilsU _),
-    "mann_whitney" -> (mannWhitney _),
-    "mann_whitney_offsets" -> (mannWhitneyOffsets _),
-    "welch_ttest" -> (welchTtest _),
-    "student_ttest" -> (studentTtest _),
-    "anova_oneway" -> (anovaOneway _),
-    "running_concurrency" -> (runningConcurrency _),
-    "user_type_mask" -> (userTypeMask _),
-    "quantile_weighted" -> (quantileWeighted _),
-    "mode_per_group" -> (modePerGroup _),
-    "interval_length_sum" -> (intervalLengthSum _),
-    "sequence_next_node" -> (sequenceNextNode _),
-    "bounding_ratio" -> (boundingRatio _),
-    "minmax_map" -> (minmaxMap _),
-    "series_interpolate" -> (seriesInterpolate _),
-    "string_functions_ext" -> (stringFunctionsExt _),
-    "pivot_multi_agg" -> (pivotMultiAgg _),
-    "sliding_reach" -> (slidingReach _),
-    "bitwise_agg" -> (bitwiseAgg _),
-    "source_entropy" -> (sourceEntropy _),
-    "higher_moments" -> (higherMoments _),
-    "text_top_bigrams" -> (textTopBigrams _),
-    "sum_map" -> (sumMap _),
-    "sequence_match" -> (sequenceMatch _),
-    "funnel_steps_windowed" -> (funnelStepsWindowed _),
-    "funnel_strict_order" -> (funnelStrictOrder _),
-    "funnel_strict_dedup" -> (funnelStrictDedup _),
-    "time_decay_agg" -> (timeDecayAgg _),
-    "lttb_downsample" -> (lttbDownsample _),
-    "retention_days" -> (retentionDays _),
-    "uniq_upto" -> (uniqUpto _),
-    "quantiles_exact" -> (quantilesExact _),
-    "quantiles_exact_offsets" -> (quantilesExactOffsets _),
-    "sequence_count" -> (sequenceCount _),
-    "funnel_conversion_time" -> (funnelConversionTime _),
-    "arg_minmax" -> (argMinMax _),
-    "conditional_agg" -> (conditionalAgg _),
-    "stats_moments" -> (statsMoments _),
-    "monthly_revenue" -> (monthlyRevenue _),
-    "running_diff" -> (runningDiff _),
-    "group_array" -> (groupArray _),
-    "histogram_values" -> (histogramValues _),
-    "uniq_counts" -> (uniqCounts _),
-    "embedding_centroid" -> (embeddingCentroid _),
-    "sample_split_md5" -> (sampleSplitMd5 _)
-  )
-
   private val rocAucOracle: String =
     ("WITH s AS (SELECT event_type, value FROM events " +
         "WHERE event_type IN ('view', 'purchase')), " +
@@ -2674,17 +2589,17 @@ object AnalyticsQueries {
         "sqrt(n1 * n2 * (n1 + n2 + 1) / 12), 5) AS z_score, " +
         "CAST(n1 AS BIGINT) AS n_a, CAST(n2 AS BIGINT) AS n_b FROM agg")
 
-  val oracleSql: Map[String, String] = Map(
-    "delta_sum" ->
-      ("WITH d AS (SELECT event_type, value, " +
+  val entries: Seq[Entry] = Seq(
+    Entry("delta_sum", deltaSum, Some(
+      "WITH d AS (SELECT event_type, value, " +
         "LAG(value) OVER (PARTITION BY event_type ORDER BY ts, event_id) AS prev " +
         "FROM events) " +
         "SELECT event_type, " +
         "ROUND(SUM(CASE WHEN value > prev THEN value - prev ELSE 0 END), 2) AS delta_sum, " +
         "CAST(SUM(CASE WHEN value < prev THEN 1 ELSE 0 END) AS BIGINT) AS n_resets " +
-        "FROM d GROUP BY 1 ORDER BY 1"),
-    "kendall_tau" ->
-      ("WITH e AS (SELECT event_id, event_type, value AS x, epoch(ts) AS y " +
+        "FROM d GROUP BY 1 ORDER BY 1")),
+    Entry("kendall_tau", kendallTau, Some(
+      "WITH e AS (SELECT event_id, event_type, value AS x, epoch(ts) AS y " +
         "FROM events), " +
         "g AS (SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n FROM e GROUP BY 1), " +
         "p AS (SELECT a.event_type, " +
@@ -2696,9 +2611,9 @@ object AnalyticsQueries {
         "AND a.event_id < b.event_id GROUP BY 1) " +
         "SELECT p.event_type, g.n, " +
         "ROUND((c - d) / SQRT((c + d + tx) * (c + d + ty)), 6) AS tau_b " +
-        "FROM p JOIN g ON p.event_type = g.event_type ORDER BY 1"),
-    "categorical_iv" ->
-      ("WITH b AS (SELECT o_orderpriority AS cat, " +
+        "FROM p JOIN g ON p.event_type = g.event_type ORDER BY 1")),
+    Entry("categorical_iv", categoricalIv, Some(
+      "WITH b AS (SELECT o_orderpriority AS cat, " +
         "SUM(CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END) AS ev, " +
         "SUM(CASE WHEN o_orderstatus = 'F' THEN 0 ELSE 1 END) AS nev " +
         "FROM orders GROUP BY 1), " +
@@ -2708,11 +2623,15 @@ object AnalyticsQueries {
         "ROUND(LN(((ev + 0.5) / (tev + 0.5)) / ((nev + 0.5) / (tnev + 0.5))), 6) AS woe, " +
         "ROUND(((ev + 0.5) / (tev + 0.5) - (nev + 0.5) / (tnev + 0.5)) * " +
         "LN(((ev + 0.5) / (tev + 0.5)) / ((nev + 0.5) / (tnev + 0.5))), 6) AS iv_term " +
-        "FROM b, t ORDER BY 1"),
-    "rfm_segments" -> rfmOracle,
-    "rfm_segments_offsets" -> rfmOracle,
-    "sparkbar" ->
-      ("WITH rng AS (SELECT event_type, MIN(epoch(ts)) AS mn, " +
+        "FROM b, t ORDER BY 1")),
+    Entry("rfm_segments", rfmSegments, Some(rfmOracle),
+      note = "exact: three global ntile(5) windows over the customer grain; " +
+        "100 TB path = rfm_segments_offsets"),
+    Entry("rfm_segments_offsets", rfmSegmentsOffsets, Some(rfmOracle),
+      note = "scale twin: three bucketed rank projections + exact NTILE " +
+        "arithmetic, value-identical, same oracle; 2.4x under 30x"),
+    Entry("sparkbar", sparkbar, Some(
+      "WITH rng AS (SELECT event_type, MIN(epoch(ts)) AS mn, " +
         "MAX(epoch(ts)) AS mx FROM events GROUP BY 1), " +
         "bk AS (SELECT e.event_type, LEAST(15, CAST(FLOOR(16 * (epoch(ts) - mn) " +
         "/ (mx - mn + 1)) AS INT)) AS bucket, COUNT(*) AS cnt " +
@@ -2727,9 +2646,9 @@ object AnalyticsQueries {
         "AND grid.bucket = bk.bucket " +
         "JOIN mxc ON mxc.event_type = grid.event_type) " +
         "SELECT event_type, string_agg(ch, '' ORDER BY bucket) AS bar " +
-        "FROM lv GROUP BY 1 ORDER BY 1"),
-    "series_anomaly_mad" ->
-      ("WITH hourly AS (SELECT event_type, date_trunc('hour', ts) AS h, " +
+        "FROM lv GROUP BY 1 ORDER BY 1")),
+    Entry("series_anomaly_mad", seriesAnomalyMad, Some(
+      "WITH hourly AS (SELECT event_type, date_trunc('hour', ts) AS h, " +
         "SUM(CAST(ROUND(value * 100) AS BIGINT)) AS vc FROM events GROUP BY 1, 2), " +
         "g AS (SELECT event_type, LIST_SORT(LIST(vc)) AS cs, " +
         "CAST(COUNT(*) AS BIGINT) AS n FROM hourly GROUP BY 1), " +
@@ -2746,10 +2665,10 @@ object AnalyticsQueries {
         "FLOOR((vc - med_c) / (1.4826 * mad_c) * 10000 + 0.5) / 10000 AS robust_z " +
         "FROM hourly JOIN m USING (event_type) JOIN md USING (event_type) " +
         "WHERE mad_c > 0 AND ABS((vc - med_c) / (1.4826 * mad_c)) > 3.5 " +
-        "ORDER BY 1, 2"),
-    "zorder_key" -> zorderOracle,
-    "attribution_last_touch" ->
-      ("WITH t AS (SELECT user_id, ts, event_id, event_type, value, " +
+        "ORDER BY 1, 2")),
+    Entry("zorder_key", zorderKey, Some(zorderOracle)),
+    Entry("attribution_last_touch", attributionLastTouch, Some(
+      "WITH t AS (SELECT user_id, ts, event_id, event_type, value, " +
         "LAST_VALUE(CASE WHEN event_type <> 'purchase' THEN event_type END " +
         "IGNORE NULLS) OVER (PARTITION BY user_id ORDER BY ts, event_id " +
         "ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS touch " +
@@ -2757,9 +2676,9 @@ object AnalyticsQueries {
         "SELECT COALESCE(touch, '(none)') AS credited_to, " +
         "CAST(COUNT(*) AS BIGINT) AS n_purchases, " +
         "ROUND(SUM(value), 2) AS revenue " +
-        "FROM t WHERE event_type = 'purchase' GROUP BY 1 ORDER BY 1"),
-    "audience_overlap" ->
-      ("WITH ut AS (SELECT DISTINCT event_type, user_id FROM events), " +
+        "FROM t WHERE event_type = 'purchase' GROUP BY 1 ORDER BY 1")),
+    Entry("audience_overlap", audienceOverlap, Some(
+      "WITH ut AS (SELECT DISTINCT event_type, user_id FROM events), " +
         "t AS (SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n FROM ut GROUP BY 1), " +
         "p AS (SELECT a.event_type AS type_a, b.event_type AS type_b, " +
         "CAST(COUNT(*) AS BIGINT) AS n_both FROM ut a JOIN ut b " +
@@ -2767,11 +2686,15 @@ object AnalyticsQueries {
         "SELECT type_a, type_b, n_both, ta.n AS n_a, tb.n AS n_b, " +
         "ROUND(CAST(n_both AS DOUBLE) / (ta.n + tb.n - n_both), 6) AS jaccard " +
         "FROM p JOIN t ta ON ta.event_type = type_a " +
-        "JOIN t tb ON tb.event_type = type_b ORDER BY 1, 2"),
-    "gini_revenue" -> giniOracle,
-    "gini_revenue_offsets" -> giniOracle,
-    "ip_functions" ->
-      ("WITH ips AS (SELECT 167772160 + (user_id * 2654435761) % 1048576 AS ip " +
+        "JOIN t tb ON tb.event_type = type_b ORDER BY 1, 2")),
+    Entry("gini_revenue", giniRevenue, Some(giniOracle),
+      note = "exact global row_number window over the CUSTOMER grain — fine " +
+        "at interactive grains; 100 TB path = gini_revenue_offsets"),
+    Entry("gini_revenue_offsets", giniRevenueOffsets, Some(giniOracle),
+      note = "scale twin on the two-level prefix sum: value-identical, same " +
+        "oracle, no single-task sort; 2.5x under 30x at x30"),
+    Entry("ip_functions", ipFunctions, Some(
+      "WITH ips AS (SELECT 167772160 + (user_id * 2654435761) % 1048576 AS ip " +
         "FROM events), " +
         "o AS (SELECT ip, (ip // 65536) % 256 AS o2, (ip // 256) % 256 AS o3, " +
         "ip % 256 AS o4 FROM ips), " +
@@ -2780,9 +2703,9 @@ object AnalyticsQueries {
         "SELECT CAST(o2 AS BIGINT) AS subnet16, CAST(COUNT(*) AS BIGINT) AS n_events, " +
         "CAST(COUNT(DISTINCT ip) AS BIGINT) AS n_ips, " +
         "MIN(dotted) AS first_ip, MAX(dotted) AS last_ip " +
-        "FROM d GROUP BY 1 ORDER BY 1"),
-    "geo_distance" ->
-      ("WITH c AS (SELECT event_type, " +
+        "FROM d GROUP BY 1 ORDER BY 1")),
+    Entry("geo_distance", geoDistance, Some(
+      "WITH c AS (SELECT event_type, " +
         "(CAST((user_id * 31) % 120 AS DOUBLE) - 60.0 + 0.5) * PI() / 180.0 AS lat, " +
         "(CAST((user_id * 17) % 360 AS DOUBLE) - 180.0 + 0.5) * PI() / 180.0 AS lon " +
         "FROM events), " +
@@ -2791,9 +2714,9 @@ object AnalyticsQueries {
         "COS(lat) * SIN(lon / 2) * SIN(lon / 2))) AS dkm FROM c) " +
         "SELECT event_type, ROUND(AVG(dkm), 2) AS avg_km, " +
         "ROUND(MIN(dkm), 2) AS min_km, ROUND(MAX(dkm), 2) AS max_km, " +
-        "CAST(COUNT(*) AS BIGINT) AS n FROM h GROUP BY 1 ORDER BY 1"),
-    "mutual_info" ->
-      ("WITH cells AS (SELECT event_type AS x, " +
+        "CAST(COUNT(*) AS BIGINT) AS n FROM h GROUP BY 1 ORDER BY 1")),
+    Entry("mutual_info", mutualInfo, Some(
+      "WITH cells AS (SELECT event_type AS x, " +
         "dayofweek(CAST(ts AS DATE)) + 1 AS y, CAST(COUNT(*) AS DOUBLE) AS c " +
         "FROM events GROUP BY 1, 2), " +
         "m AS (SELECT x, y, c, SUM(c) OVER () AS n, " +
@@ -2804,9 +2727,9 @@ object AnalyticsQueries {
         "ROUND(-SUM(c / n * LOG2(cy / n)), 6) AS h_y, " +
         "ROUND(SUM(c / n * LOG2(c * n / (cx * cy))) / " +
         "LEAST(-SUM(c / n * LOG2(cx / n)), -SUM(c / n * LOG2(cy / n))), 6) AS nmi, " +
-        "CAST(COUNT(*) AS BIGINT) AS n_cells FROM m"),
-    "url_functions" ->
-      ("WITH u AS (SELECT doc_id, " +
+        "CAST(COUNT(*) AS BIGINT) AS n_cells FROM m")),
+    Entry("url_functions", urlFunctions, Some(
+      "WITH u AS (SELECT doc_id, " +
         "(CASE WHEN doc_id % 2 = 0 THEN 'https' ELSE 'http' END) || '://' || " +
         "source || '.example' || " +
         "(CASE doc_id % 3 WHEN 0 THEN '.com' WHEN 1 THEN '.org' ELSE '.net' END) || " +
@@ -2823,18 +2746,18 @@ object AnalyticsQueries {
         "CAST(COUNT(DISTINCT domain) AS BIGINT) AS n_domains, " +
         "CAST(COUNT(DISTINCT path) AS BIGINT) AS n_paths, " +
         "CAST(SUM(page) AS BIGINT) AS sum_page " +
-        "FROM t GROUP BY 1, 2 ORDER BY 1, 2"),
-    "event_transitions" ->
-      ("WITH p AS (SELECT event_type AS next_type, " +
+        "FROM t GROUP BY 1, 2 ORDER BY 1, 2")),
+    Entry("event_transitions", eventTransitions, Some(
+      "WITH p AS (SELECT event_type AS next_type, " +
         "LAG(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) " +
         "AS prev_type FROM events), " +
         "c AS (SELECT prev_type, next_type, CAST(COUNT(*) AS BIGINT) AS n " +
         "FROM p WHERE prev_type IS NOT NULL GROUP BY 1, 2) " +
         "SELECT prev_type, next_type, n, " +
         "ROUND(CAST(n AS DOUBLE) / SUM(n) OVER (PARTITION BY prev_type), 6) AS prob " +
-        "FROM c ORDER BY 1, 2"),
-    "series_acf" ->
-      ("WITH daily AS (SELECT event_type, CAST(ts AS DATE) AS d, " +
+        "FROM c ORDER BY 1, 2")),
+    Entry("series_acf", seriesAcf, Some(
+      "WITH daily AS (SELECT event_type, CAST(ts AS DATE) AS d, " +
         "CAST(COUNT(*) AS DOUBLE) AS y FROM events GROUP BY 1, 2), " +
         "lags AS (SELECT UNNEST(range(1, 8)) AS lg) " +
         "SELECT a.event_type, l.lg, ROUND(CORR(a.y, b.y), 6) AS acf, " +
@@ -2842,9 +2765,9 @@ object AnalyticsQueries {
         "FROM daily a CROSS JOIN lags l " +
         "JOIN daily b ON b.event_type = a.event_type " +
         "AND b.d = a.d - CAST(l.lg AS INTEGER) " +
-        "GROUP BY 1, 2 ORDER BY 1, 2"),
-    "series_cusum" ->
-      ("WITH daily AS (SELECT event_type, CAST(ts AS DATE) AS d, " +
+        "GROUP BY 1, 2 ORDER BY 1, 2")),
+    Entry("series_cusum", seriesCusum, Some(
+      "WITH daily AS (SELECT event_type, CAST(ts AS DATE) AS d, " +
         "SUM(CAST(round(value * 100) AS BIGINT)) AS x " +
         "FROM events GROUP BY 1, 2), " +
         "c AS (SELECT event_type, d, " +
@@ -2858,9 +2781,9 @@ object AnalyticsQueries {
         "SELECT event_type, d AS change_date, " +
         "ROUND(CAST(ABS(s) AS DOUBLE) / (CAST(nd AS DOUBLE) * 100.0), 2) " +
         "AS cusum_stat, CAST(nd AS BIGINT) AS n_days " +
-        "FROM r WHERE rk = 1 ORDER BY 1"),
-    "series_decompose" ->
-      ("WITH daily AS (SELECT event_type, CAST(ts AS DATE) AS d, " +
+        "FROM r WHERE rk = 1 ORDER BY 1")),
+    Entry("series_decompose", seriesDecompose, Some(
+      "WITH daily AS (SELECT event_type, CAST(ts AS DATE) AS d, " +
         "CAST(COUNT(*) AS DOUBLE) AS y FROM events GROUP BY 1, 2), " +
         "t AS (SELECT *, AVG(y) OVER (PARTITION BY event_type ORDER BY d " +
         "ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING) AS trend, " +
@@ -2870,11 +2793,14 @@ object AnalyticsQueries {
         "ROUND(AVG(y - trend), 4) AS seasonal, " +
         "ROUND(STDDEV_SAMP(y - trend), 4) AS detrended_sd, " +
         "CAST(COUNT(*) AS BIGINT) AS n_days " +
-        "FROM t WHERE wn = 7 GROUP BY 1, 2 ORDER BY 1, 2"),
-    "mad_per_group" -> madOracle,
-    "mad_per_group_offsets" -> madOracle,
-    "multi_linreg" ->
-      ("WITH s AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n, " +
+        "FROM t WHERE wn = 7 GROUP BY 1, 2 ORDER BY 1, 2")),
+    Entry("mad_per_group", madPerGroup, Some(madOracle),
+      note = "exact: two per-key sorted arrays (median + deviation median); 100 TB path = " +
+        "mad_per_group_offsets"),
+    Entry("mad_per_group_offsets", madPerGroupOffsets, Some(madOracle),
+      note = "scale twin: two chained keyedQuantiles picks, bit-identical MAD, same oracle"),
+    Entry("multi_linreg", multiLinreg, Some(
+      "WITH s AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n, " +
         "SUM(l_quantity) AS s1, SUM(l_discount) AS s2, " +
         "SUM(l_extendedprice) AS sy, " +
         "SUM(l_quantity * l_quantity) AS s11, " +
@@ -2892,19 +2818,23 @@ object AnalyticsQueries {
         "SELECT ROUND((sy - b1 * s1 - b2 * s2) / n, 4) AS b0, " +
         "ROUND(b1, 4) AS b1, ROUND(b2, 4) AS b2, " +
         "ROUND((b1 * c1y + b2 * c2y) / cyy, 6) AS r2, " +
-        "CAST(n AS BIGINT) AS n FROM b"),
-    "sample_weighted" ->
-      ("WITH k AS (SELECT doc_id, n_chars, " +
+        "CAST(n AS BIGINT) AS n FROM b")),
+    Entry("sample_weighted", sampleWeighted, Some(
+      "WITH k AS (SELECT doc_id, n_chars, " +
         "LN((CAST(CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 6) " +
         "AS INTEGER) AS DOUBLE) + 0.5) / 16777216.0) / n_chars AS wkey " +
         "FROM documents), " +
         "top AS (SELECT * FROM k ORDER BY wkey DESC, doc_id LIMIT 100) " +
         "SELECT doc_id, n_chars, ROUND(wkey * 1e6, 4) AS wkey_ppm " +
-        "FROM top ORDER BY doc_id"),
-    "rank_corr" -> rankCorrOracle,
-    "rank_corr_offsets" -> rankCorrOracle,
-    "theils_u" ->
-      ("WITH cells AS (SELECT event_type AS x, dayofweek(CAST(ts AS DATE)) + 1 AS y, " +
+        "FROM top ORDER BY doc_id")),
+    Entry("rank_corr", rankCorr, Some(rankCorrOracle),
+      note = "exact: two global avg-rank windows over the per-user grain; 100 TB path = " +
+        "rank_corr_offsets"),
+    Entry("rank_corr_offsets", rankCorrOffsets, Some(rankCorrOracle),
+      note = "scale twin: per-value rank projections joined back, identical rank multisets, same " +
+        "oracle; 2.4x under 30x"),
+    Entry("theils_u", theilsU, Some(
+      "WITH cells AS (SELECT event_type AS x, dayofweek(CAST(ts AS DATE)) + 1 AS y, " +
         "CAST(COUNT(*) AS DOUBLE) AS c FROM events GROUP BY 1, 2), " +
         "tot AS (SELECT x, y, c, SUM(c) OVER () AS n, " +
         "SUM(c) OVER (PARTITION BY x) AS cx, " +
@@ -2913,16 +2843,16 @@ object AnalyticsQueries {
         "ROUND(-SUM(c / n * LN(c / cy)), 6) AS h_x_given_y, " +
         "ROUND((-SUM(c / n * LN(cx / n)) + SUM(c / n * LN(c / cy))) / " +
         "(-SUM(c / n * LN(cx / n))), 6) AS theils_u, " +
-        "COUNT(*) AS n_cells FROM tot"),
-    "linreg_simple" ->
-      ("SELECT event_type, " +
+        "COUNT(*) AS n_cells FROM tot")),
+    Entry("linreg_simple", linregSimple, Some(
+      "SELECT event_type, " +
         "ROUND(REGR_SLOPE(value, EPOCH(ts)) * 86400, 6) AS slope_per_day, " +
         "ROUND(AVG(value) + REGR_SLOPE(value, EPOCH(ts)) * " +
         "(1705276800 - AVG(EPOCH(ts))), 4) AS fit_at_ref, " +
         "COUNT(*) AS n " +
-        "FROM events GROUP BY 1 ORDER BY 1"),
-    "cramers_v" ->
-      ("WITH cells AS (SELECT event_type, dayofweek(CAST(ts AS DATE)) + 1 AS dow, " +
+        "FROM events GROUP BY 1 ORDER BY 1")),
+    Entry("cramers_v", cramersV, Some(
+      "WITH cells AS (SELECT event_type, dayofweek(CAST(ts AS DATE)) + 1 AS dow, " +
         "CAST(COUNT(*) AS DOUBLE) AS o FROM events GROUP BY 1, 2), " +
         "tot AS (SELECT event_type, dow, o, " +
         "SUM(o) OVER (PARTITION BY event_type) AS rt, " +
@@ -2939,9 +2869,9 @@ object AnalyticsQueries {
         "AS cramers_v_bc, " +
         "ROUND(sqrt(chi2 / (chi2 + n)), 6) AS contingency, " +
         "CAST((r - 1) * (c - 1) AS BIGINT) AS dof, CAST(n AS BIGINT) AS n " +
-        "FROM chi"),
-    "retention_conditions" ->
-      ("WITH per_user AS (SELECT user_id, " +
+        "FROM chi")),
+    Entry("retention_conditions", retentionConditions, Some(
+      "WITH per_user AS (SELECT user_id, " +
         "MIN(CASE WHEN event_type = 'signup' THEN ts END) AS t0, " +
         "MAX(CASE WHEN event_type = 'view' THEN ts END) AS tv, " +
         "MAX(CASE WHEN event_type = 'purchase' THEN ts END) AS tp " +
@@ -2950,9 +2880,9 @@ object AnalyticsQueries {
         "CAST(SUM(CASE WHEN t0 IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS r1_signup, " +
         "CAST(SUM(CASE WHEN t0 IS NOT NULL AND tv >= t0 THEN 1 ELSE 0 END) AS BIGINT) AS r2_viewed, " +
         "CAST(SUM(CASE WHEN t0 IS NOT NULL AND tp >= t0 THEN 1 ELSE 0 END) AS BIGINT) AS r3_purchased, " +
-        "COUNT(*) AS n_users FROM per_user"),
-    "corr_matrix" ->
-      ("WITH pairs AS (SELECT " +
+        "COUNT(*) AS n_users FROM per_user")),
+    Entry("corr_matrix", corrMatrix, Some(
+      "WITH pairs AS (SELECT " +
         "CORR(l_quantity, l_extendedprice) AS c12, COVAR_SAMP(l_quantity, l_extendedprice) AS v12, " +
         "CORR(l_quantity, l_discount) AS c13, COVAR_SAMP(l_quantity, l_discount) AS v13, " +
         "CORR(l_quantity, l_tax) AS c14, COVAR_SAMP(l_quantity, l_tax) AS v14, " +
@@ -2968,9 +2898,9 @@ object AnalyticsQueries {
         "('l_extendedprice', 'l_discount', c23, v23), " +
         "('l_extendedprice', 'l_tax', c24, v24), " +
         "('l_discount', 'l_tax', c34, v34)) AS u(col_x, col_y, c, v) " +
-        "ORDER BY 1, 2"),
-    "series_period_detect" ->
-      ("WITH daily AS (SELECT event_type AS series, " +
+        "ORDER BY 1, 2")),
+    Entry("series_period_detect", seriesPeriodDetect, Some(
+      "WITH daily AS (SELECT event_type AS series, " +
         "date_diff('day', DATE '2024-01-01', CAST(ts AS DATE)) AS t, " +
         "CAST(COUNT(*) AS DOUBLE) AS x FROM events GROUP BY 1, 2), " +
         "centered AS (SELECT series, t, " +
@@ -2984,17 +2914,31 @@ object AnalyticsQueries {
         "ROW_NUMBER() OVER (PARTITION BY series ORDER BY pw DESC, p) AS rn " +
         "FROM power) " +
         "SELECT series AS event_type, p AS best_period, ROUND(pw, 1) AS power " +
-        "FROM ranked WHERE rn = 1 ORDER BY 1"),
-    "roc_auc" -> rocAucOracle,
-    "roc_auc_offsets" -> rocAucOracle,
-    "series_outliers_tukey" -> tukeyOracle,
-    "series_outliers_tukey_offsets" -> tukeyOracle,
-    "ks_test" -> ksOracle,
-    "ks_test_offsets" -> ksOracle,
-    "mann_whitney" -> mwOracle,
-    "mann_whitney_offsets" -> mwOracle,
-    "welch_ttest" ->
-      ("WITH s AS (SELECT event_type, AVG(value) AS m, VAR_SAMP(value) AS v, " +
+        "FROM ranked WHERE rn = 1 ORDER BY 1")),
+    Entry("roc_auc", rocAuc, Some(rocAucOracle),
+      note = "exact: one global rank window (the normalized U); 100 TB path = roc_auc_offsets"),
+    Entry("roc_auc_offsets", rocAucOffsets, Some(rocAucOracle),
+      note = "scale twin: per-value bucketed prefix sum, bit-identical AUC, same oracle; 1.6x " +
+        "under 30x"),
+    Entry("series_outliers_tukey", seriesOutliersTukey, Some(tukeyOracle),
+      note = "exact: per-key sorted cent array for the quartiles; 100 TB path = " +
+        "series_outliers_tukey_offsets"),
+    Entry("series_outliers_tukey_offsets", seriesOutliersTukeyOffsets, Some(tukeyOracle),
+      note = "scale twin: no-array offsets quartiles + the shared fence tail, same oracle"),
+    Entry("ks_test", ksTest, Some(ksOracle),
+      note = "exact: RANGE-framed running ECDFs over one global order; 100 TB path = " +
+        "ks_test_offsets"),
+    Entry("ks_test_offsets", ksTestOffsets, Some(ksOracle),
+      note = "scale twin: two bucketed prefix passes, identical gap set and d_stat, same oracle; " +
+        "3.1x under 30x"),
+    Entry("mann_whitney", mannWhitney, Some(mwOracle),
+      note = "exact: one global rank window over the value grain; 100 TB " +
+        "path = mann_whitney_offsets"),
+    Entry("mann_whitney_offsets", mannWhitneyOffsets, Some(mwOracle),
+      note = "scale twin: per-value bucketed prefix sum, bit-identical " +
+        "statistic, same oracle; 2.2x under 30x"),
+    Entry("welch_ttest", welchTtest, Some(
+      "WITH s AS (SELECT event_type, AVG(value) AS m, VAR_SAMP(value) AS v, " +
         "CAST(COUNT(*) AS DOUBLE) AS n FROM events " +
         "WHERE event_type IN ('view', 'purchase') GROUP BY 1), " +
         "a AS (SELECT m, v, n FROM s WHERE event_type = 'view'), " +
@@ -3004,9 +2948,9 @@ object AnalyticsQueries {
         "ROUND(POW(a.v / a.n + b.v / b.n, 2) / " +
         "(POW(a.v / a.n, 2) / (a.n - 1) + POW(b.v / b.n, 2) / (b.n - 1)), 2) " +
         "AS df_welch, " +
-        "CAST(a.n AS BIGINT) AS n_a, CAST(b.n AS BIGINT) AS n_b FROM a, b"),
-    "student_ttest" ->
-      ("WITH s AS (SELECT event_type, AVG(value) AS m, VAR_SAMP(value) AS v, " +
+        "CAST(a.n AS BIGINT) AS n_a, CAST(b.n AS BIGINT) AS n_b FROM a, b")),
+    Entry("student_ttest", studentTtest, Some(
+      "WITH s AS (SELECT event_type, AVG(value) AS m, VAR_SAMP(value) AS v, " +
         "CAST(COUNT(*) AS DOUBLE) AS n FROM events " +
         "WHERE event_type IN ('view', 'purchase') GROUP BY 1), " +
         "a AS (SELECT m, v, n FROM s WHERE event_type = 'view'), " +
@@ -3018,9 +2962,9 @@ object AnalyticsQueries {
         "ROUND((am - bm) / sqrt(sp2 * (1.0 / an + 1.0 / bn)), 5) AS t_stat, " +
         "CAST(an + bn - 2 AS BIGINT) AS df, " +
         "ROUND(sqrt(sp2), 4) AS pooled_sd, " +
-        "CAST(an AS BIGINT) AS n_a, CAST(bn AS BIGINT) AS n_b FROM p"),
-    "anova_oneway" ->
-      ("WITH g AS (SELECT event_type, CAST(COUNT(*) AS DOUBLE) AS n, " +
+        "CAST(an AS BIGINT) AS n_a, CAST(bn AS BIGINT) AS n_b FROM p")),
+    Entry("anova_oneway", anovaOneway, Some(
+      "WITH g AS (SELECT event_type, CAST(COUNT(*) AS DOUBLE) AS n, " +
         "AVG(value) AS m, VAR_SAMP(value) AS v FROM events GROUP BY 1), " +
         "t AS (SELECT CAST(COUNT(*) AS DOUBLE) AS k, SUM(n) AS ntot, " +
         "SUM(n * m) / SUM(n) AS gm, SUM(n * m * m) AS snm2, " +
@@ -3029,9 +2973,9 @@ object AnalyticsQueries {
         "ROUND((snm2 - ntot * gm * gm) / (k - 1), 4) AS ms_between, " +
         "ROUND(ssw / (ntot - k), 4) AS ms_within, " +
         "ROUND(((snm2 - ntot * gm * gm) / (k - 1)) / (ssw / (ntot - k)), 5) " +
-        "AS f_stat FROM t"),
-    "running_concurrency" ->
-      ("WITH pts AS (" +
+        "AS f_stat FROM t")),
+    Entry("running_concurrency", runningConcurrency, Some(
+      "WITH pts AS (" +
         "SELECT user_id, CAST(floor(epoch(ts)) AS BIGINT) AS t, 1 AS d FROM events " +
         "UNION ALL " +
         "SELECT user_id, CAST(floor(epoch(ts)) AS BIGINT) + 14400 AS t, -1 AS d " +
@@ -3040,18 +2984,18 @@ object AnalyticsQueries {
         "SUM(d) OVER (PARTITION BY user_id ORDER BY t, d) AS conc FROM pts) " +
         "SELECT user_id, CAST(MAX(conc) AS BIGINT) AS peak_concurrency, " +
         "CAST(COUNT(*) FILTER (d = 1) AS BIGINT) AS n_intervals " +
-        "FROM c GROUP BY user_id ORDER BY user_id"),
-    "user_type_mask" ->
-      ("WITH m AS (SELECT user_id, bit_or(CASE event_type " +
+        "FROM c GROUP BY user_id ORDER BY user_id")),
+    Entry("user_type_mask", userTypeMask, Some(
+      "WITH m AS (SELECT user_id, bit_or(CASE event_type " +
         "WHEN 'view' THEN 1 WHEN 'click' THEN 2 WHEN 'purchase' THEN 4 " +
         "WHEN 'signup' THEN 8 WHEN 'error' THEN 16 ELSE 0 END) AS mask " +
         "FROM events WHERE CAST(ts AS DATE) <= DATE '2024-01-02' " +
         "GROUP BY user_id) " +
         "SELECT CAST(mask AS BIGINT) AS type_mask, " +
         "CAST(COUNT(*) AS BIGINT) AS n_users " +
-        "FROM m GROUP BY mask ORDER BY mask"),
-    "quantile_weighted" ->
-      ("WITH c AS (SELECT l_returnflag AS flag, l_extendedprice AS v, " +
+        "FROM m GROUP BY mask ORDER BY mask")),
+    Entry("quantile_weighted", quantileWeighted, Some(
+      "WITH c AS (SELECT l_returnflag AS flag, l_extendedprice AS v, " +
         "SUM(l_quantity) OVER (PARTITION BY l_returnflag ORDER BY l_extendedprice) AS cw, " +
         "SUM(l_quantity) OVER (PARTITION BY l_returnflag) AS tot FROM lineitem) " +
         "SELECT flag, " +
@@ -3059,17 +3003,17 @@ object AnalyticsQueries {
         "ROUND(MIN(CASE WHEN cw >= 0.5 * tot THEN v END), 2) AS p50_w, " +
         "ROUND(MIN(CASE WHEN cw >= 0.75 * tot THEN v END), 2) AS p75_w, " +
         "CAST(COUNT(*) AS BIGINT) AS n " +
-        "FROM c GROUP BY flag ORDER BY flag"),
-    "mode_per_group" ->
-      ("WITH c AS (SELECT user_id, event_type, COUNT(*) AS n " +
+        "FROM c GROUP BY flag ORDER BY flag")),
+    Entry("mode_per_group", modePerGroup, Some(
+      "WITH c AS (SELECT user_id, event_type, COUNT(*) AS n " +
         "FROM events GROUP BY 1, 2), " +
         "r AS (SELECT user_id, event_type, n, " +
         "ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY n DESC, event_type) AS rk " +
         "FROM c) " +
         "SELECT user_id, event_type AS modal_type, CAST(n AS BIGINT) AS n_modal " +
-        "FROM r WHERE rk = 1 ORDER BY user_id"),
-    "interval_length_sum" ->
-      ("WITH iv AS (SELECT user_id, CAST(floor(epoch(ts)) AS BIGINT) AS s, " +
+        "FROM r WHERE rk = 1 ORDER BY user_id")),
+    Entry("interval_length_sum", intervalLengthSum, Some(
+      "WITH iv AS (SELECT user_id, CAST(floor(epoch(ts)) AS BIGINT) AS s, " +
         "CAST(floor(epoch(ts)) AS BIGINT) + 1800 AS e FROM events), " +
         "m AS (SELECT user_id, s, e, MAX(e) OVER (PARTITION BY user_id " +
         "ORDER BY s, e ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) " +
@@ -3081,9 +3025,9 @@ object AnalyticsQueries {
         "FROM isl GROUP BY 1, 2) " +
         "SELECT user_id, CAST(SUM(len) AS BIGINT) AS active_sec, " +
         "CAST(COUNT(*) AS BIGINT) AS n_islands " +
-        "FROM g GROUP BY user_id ORDER BY user_id"),
-    "sequence_next_node" ->
-      ("WITH ev AS (SELECT user_id, event_type, " +
+        "FROM g GROUP BY user_id ORDER BY user_id")),
+    Entry("sequence_next_node", sequenceNextNode, Some(
+      "WITH ev AS (SELECT user_id, event_type, " +
         "LEAD(event_type) OVER w AS nxt, " +
         "ROW_NUMBER() OVER (PARTITION BY user_id, event_type " +
         "ORDER BY ts, event_id) AS rn_type " +
@@ -3091,28 +3035,28 @@ object AnalyticsQueries {
         "SELECT COALESCE(nxt, '(end)') AS next_type, " +
         "CAST(COUNT(*) AS BIGINT) AS n_users " +
         "FROM ev WHERE event_type = 'view' AND rn_type = 1 " +
-        "GROUP BY 1 ORDER BY 1"),
-    "bounding_ratio" ->
-      ("SELECT event_type, " +
+        "GROUP BY 1 ORDER BY 1")),
+    Entry("bounding_ratio", boundingRatio, Some(
+      "SELECT event_type, " +
         "ROUND(arg_min(value, event_id), 2) AS first_value, " +
         "ROUND(arg_max(value, event_id), 2) AS last_value, " +
         "ROUND((arg_max(value, event_id) - arg_min(value, event_id)) / " +
         "(MAX(event_id) - MIN(event_id)), 8) AS bounding_ratio, " +
         "CAST(COUNT(*) AS BIGINT) AS n " +
-        "FROM events GROUP BY event_type ORDER BY event_type"),
-    "minmax_map" ->
-      ("WITH g AS (SELECT user_id, event_type, " +
+        "FROM events GROUP BY event_type ORDER BY event_type")),
+    Entry("minmax_map", minmaxMap, Some(
+      "WITH g AS (SELECT user_id, event_type, " +
         "CAST(round(MIN(value) * 100) AS BIGINT) AS mn, " +
         "CAST(round(MAX(value) * 100) AS BIGINT) AS mx " +
         "FROM events WHERE user_id < 20 GROUP BY 1, 2) " +
         "SELECT user_id, array_to_string(list_sort(list(" +
         "event_type || ':' || CAST(mn AS VARCHAR) || ':' || CAST(mx AS VARCHAR)" +
         ")), ',') AS type_minmax, CAST(COUNT(*) AS BIGINT) AS n_types " +
-        "FROM g GROUP BY user_id ORDER BY user_id"),
+        "FROM g GROUP BY user_id ORDER BY user_id")),
     // mirrors the all-integer-cents interpolation (see seriesInterpolate):
     // no float rounding anywhere, /100.0 only on the final cent value
-    "series_interpolate" ->
-      ("WITH daily AS (SELECT user_id, CAST(ts AS DATE) AS d, " +
+    Entry("series_interpolate", seriesInterpolate, Some(
+      "WITH daily AS (SELECT user_id, CAST(ts AS DATE) AS d, " +
         "SUM(CAST(round(value * 100) AS BIGINT)) AS vc FROM events " +
         "WHERE event_type = 'purchase' AND user_id < 10 GROUP BY 1, 2), " +
         "bounds AS (SELECT user_id, MIN(d) AS lo, MAX(d) AS hi " +
@@ -3138,16 +3082,16 @@ object AnalyticsQueries {
         "CAST(nd - pd AS BIGINT)) / (CAST(nd - pd AS BIGINT) * 2.0)) AS BIGINT) " +
         "END) / 100.0 AS v_filled, " +
         "CAST(CASE WHEN vc IS NULL THEN 1 ELSE 0 END AS INT) AS interpolated " +
-        "FROM w ORDER BY user_id, day"),
-    "string_functions_ext" ->
-      ("SELECT p_partkey, regexp_extract(p_type, '^([A-Z]+)', 1) AS type_head, " +
+        "FROM w ORDER BY user_id, day")),
+    Entry("string_functions_ext", stringFunctionsExt, Some(
+      "SELECT p_partkey, regexp_extract(p_type, '^([A-Z]+)', 1) AS type_head, " +
         "levenshtein(p_brand, 'Brand#10') AS brand_dist, " +
         "reverse(p_name) AS name_rev, " +
         "repeat(left(p_brand, 2), 2) AS brand_echo, " +
         "CAST(strpos(p_name, 'a') AS INT) AS first_a " +
-        "FROM part ORDER BY p_partkey"),
-    "pivot_multi_agg" ->
-      ("SELECT CAST(date_trunc('month', CAST(o_orderdate AS DATE)) AS DATE) AS month, " +
+        "FROM part ORDER BY p_partkey")),
+    Entry("pivot_multi_agg", pivotMultiAgg, Some(
+      "SELECT CAST(date_trunc('month', CAST(o_orderdate AS DATE)) AS DATE) AS month, " +
         Seq("F", "O", "P").map { st =>
           s"""CAST(COUNT(*) FILTER (o_orderstatus = '$st') AS BIGINT) AS "${st}_n", """ +
             s"FLOOR(CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) " +
@@ -3155,26 +3099,26 @@ object AnalyticsQueries {
             s"/ COUNT(*) FILTER (o_orderstatus = '$st') / 100 * 100 + 0.5) " +
             s"""/ 100 AS "${st}_avg""""
         }.mkString(", ") +
-        " FROM orders GROUP BY 1 ORDER BY 1"),
-    "sliding_reach" ->
-      ("WITH ud AS (SELECT DISTINCT user_id, CAST(ts AS DATE) AS d FROM events), " +
+        " FROM orders GROUP BY 1 ORDER BY 1")),
+    Entry("sliding_reach", slidingReach, Some(
+      "WITH ud AS (SELECT DISTINCT user_id, CAST(ts AS DATE) AS d FROM events), " +
         "days AS (SELECT user_id, d + CAST(x AS INTEGER) AS day " +
         "FROM ud, unnest(generate_series(0, 6)) t(x)) " +
         "SELECT day, CAST(COUNT(DISTINCT user_id) AS BIGINT) AS reach_7d " +
-        "FROM days GROUP BY day ORDER BY day"),
-    "bitwise_agg" ->
-      ("SELECT event_type, bit_and(event_id) AS id_bit_and, " +
+        "FROM days GROUP BY day ORDER BY day")),
+    Entry("bitwise_agg", bitwiseAgg, Some(
+      "SELECT event_type, bit_and(event_id) AS id_bit_and, " +
         "bit_or(event_id) AS id_bit_or, bit_xor(event_id) AS id_bit_xor " +
-        "FROM events GROUP BY event_type ORDER BY event_type"),
-    "source_entropy" ->
-      ("WITH c AS (SELECT source, lang, CAST(COUNT(*) AS DOUBLE) AS n " +
+        "FROM events GROUP BY event_type ORDER BY event_type")),
+    Entry("source_entropy", sourceEntropy, Some(
+      "WITH c AS (SELECT source, lang, CAST(COUNT(*) AS DOUBLE) AS n " +
         "FROM documents GROUP BY 1, 2), " +
         "t AS (SELECT source, SUM(n) AS tot FROM c GROUP BY 1) " +
         "SELECT c.source, ROUND(-SUM((n / tot) * log2(n / tot)), 6) AS lang_entropy, " +
         "CAST(SUM(n) AS BIGINT) AS n_docs " +
-        "FROM c JOIN t ON c.source = t.source GROUP BY c.source ORDER BY c.source"),
-    "higher_moments" ->
-      ("WITH m AS (SELECT l_returnflag, AVG(l_quantity) AS m1, " +
+        "FROM c JOIN t ON c.source = t.source GROUP BY c.source ORDER BY c.source")),
+    Entry("higher_moments", higherMoments, Some(
+      "WITH m AS (SELECT l_returnflag, AVG(l_quantity) AS m1, " +
         "AVG(l_quantity * l_quantity) AS m2r, " +
         "AVG(l_quantity * l_quantity * l_quantity) AS m3r, " +
         "AVG(l_quantity * l_quantity * l_quantity * l_quantity) AS m4r, " +
@@ -3184,18 +3128,18 @@ object AnalyticsQueries {
         "POW(m2r - m1 * m1, 1.5), 5) AS skew_pop, " +
         "ROUND((m4r - 4 * m1 * m3r + 6 * m1 * m1 * m2r - 3 * m1 * m1 * m1 * m1) / " +
         "POW(m2r - m1 * m1, 2) - 3, 5) AS kurt_excess_pop " +
-        "FROM m ORDER BY l_returnflag"),
-    "sequence_match" ->
-      ("WITH paths AS (SELECT user_id, " +
+        "FROM m ORDER BY l_returnflag")),
+    Entry("sequence_match", sequenceMatch, Some(
+      "WITH paths AS (SELECT user_id, " +
         "string_agg(event_type, '>' ORDER BY ts, event_id) AS path " +
         "FROM events GROUP BY user_id) " +
         "SELECT CAST(regexp_matches(path, 'view(>[^>]+)*>click(>[^>]+)*>purchase') AS INT) AS matched, " +
         "CAST(COUNT(*) AS BIGINT) AS n_users, " +
         "FLOOR(CAST(SUM(length(path)) AS DOUBLE) / COUNT(*) * 100 + 0.5) / 100 " +
         "AS avg_path_len " +
-        "FROM paths GROUP BY 1 ORDER BY 1"),
-    "funnel_steps_windowed" ->
-      ("WITH s1 AS (SELECT user_id, min(ts) AS t1 FROM events " +
+        "FROM paths GROUP BY 1 ORDER BY 1")),
+    Entry("funnel_steps_windowed", funnelStepsWindowed, Some(
+      "WITH s1 AS (SELECT user_id, min(ts) AS t1 FROM events " +
         "WHERE event_type = 'view' GROUP BY user_id), " +
         "s2 AS (SELECT e.user_id, min(e.ts) AS t2, max(s1.t1) AS t1 FROM events e " +
         "JOIN s1 ON e.user_id = s1.user_id WHERE e.event_type = 'click' " +
@@ -3207,9 +3151,9 @@ object AnalyticsQueries {
         "CAST((SELECT COUNT(*) FROM s1) AS BIGINT) AS n_users " +
         "UNION ALL SELECT 2, 'click', CAST((SELECT COUNT(*) FROM s2) AS BIGINT) " +
         "UNION ALL SELECT 3, 'purchase', CAST((SELECT COUNT(*) FROM s3) AS BIGINT) " +
-        "ORDER BY step"),
-    "retention_days" ->
-      ("WITH ud AS (SELECT DISTINCT user_id, CAST(ts AS DATE) AS d FROM events), " +
+        "ORDER BY step")),
+    Entry("retention_days", retentionDays, Some(
+      "WITH ud AS (SELECT DISTINCT user_id, CAST(ts AS DATE) AS d FROM events), " +
         "d0 AS (SELECT user_id, MIN(d) AS d0 FROM ud GROUP BY 1), " +
         "f AS (SELECT ud.user_id, " +
         "MAX(CASE WHEN d = d0 + 1 THEN 1 ELSE 0 END) AS r1, " +
@@ -3221,28 +3165,32 @@ object AnalyticsQueries {
         "CAST(SUM(r7) AS BIGINT) AS day7, " +
         "FLOOR(CAST(SUM(r1) AS DOUBLE) / COUNT(*) * 10000 + 0.5) / 10000 AS day1_rate, " +
         "FLOOR(CAST(SUM(r3) AS DOUBLE) / COUNT(*) * 10000 + 0.5) / 10000 AS day3_rate, " +
-        "FLOOR(CAST(SUM(r7) AS DOUBLE) / COUNT(*) * 10000 + 0.5) / 10000 AS day7_rate FROM f"),
-    "uniq_upto" ->
-      ("SELECT event_type, " +
+        "FLOOR(CAST(SUM(r7) AS DOUBLE) / COUNT(*) * 10000 + 0.5) / 10000 AS day7_rate FROM f")),
+    Entry("uniq_upto", uniqUpto, Some(
+      "SELECT event_type, " +
         "CAST(LEAST(COUNT(DISTINCT user_id), 11) AS BIGINT) AS users_upto_10, " +
         "CAST(LEAST(COUNT(DISTINCT CAST(ts AS DATE)), 6) AS BIGINT) AS days_upto_5 " +
-        "FROM events GROUP BY event_type ORDER BY event_type"),
+        "FROM events GROUP BY event_type ORDER BY event_type")),
     // explicit type-7 interpolation over exact cents, mirroring
     // quantilesExact's stated arithmetic (NOT quantile_cont, whose
     // internal association order differs from Spark's percentile by a
     // ulp and flips 2-dp rounds on .005-adjacent values)
-    "quantiles_exact" -> quantilesExactOracle,
-    "quantiles_exact_offsets" -> quantilesExactOracle,
-    "sequence_count" ->
-      ("WITH paths AS (SELECT user_id, " +
+    Entry("quantiles_exact", quantilesExact, Some(quantilesExactOracle),
+      note = "exact: one sorted array per group (ClickHouse parity); 100 TB path = " +
+        "quantiles_exact_offsets"),
+    Entry("quantiles_exact_offsets", quantilesExactOffsets, Some(quantilesExactOracle),
+      note = "scale twin: keyed bucketed prefix ranks, identical type-7 interpolation, same " +
+        "oracle"),
+    Entry("sequence_count", sequenceCount, Some(
+      "WITH paths AS (SELECT user_id, " +
         "string_agg(event_type, '>' ORDER BY ts, event_id) AS path " +
         "FROM events GROUP BY user_id) " +
         "SELECT CAST(len(regexp_extract_all(path, " +
         "'view(>[^>]+)*?>click(>[^>]+)*?>purchase')) AS INT) AS n_chains, " +
         "CAST(COUNT(*) AS BIGINT) AS n_users FROM paths " +
-        "GROUP BY 1 ORDER BY 1"),
-    "funnel_conversion_time" ->
-      ("WITH s1 AS (SELECT user_id, min(ts) AS t1 FROM events " +
+        "GROUP BY 1 ORDER BY 1")),
+    Entry("funnel_conversion_time", funnelConversionTime, Some(
+      "WITH s1 AS (SELECT user_id, min(ts) AS t1 FROM events " +
         "WHERE event_type = 'view' GROUP BY user_id), " +
         "s2 AS (SELECT e.user_id, min(e.ts) AS t2, max(s1.t1) AS t1 FROM events e " +
         "JOIN s1 ON e.user_id = s1.user_id WHERE e.event_type = 'click' " +
@@ -3263,9 +3211,9 @@ object AnalyticsQueries {
         "FROM (SELECT CAST(COUNT(*) AS BIGINT) AS n_converted, " +
         "LIST_SORT(LIST(sec)) AS ss, SUM(sec) AS sec_sum FROM (" +
         "SELECT CAST(floor(epoch(t3)) AS BIGINT) - " +
-        "CAST(floor(epoch(t1)) AS BIGINT) AS sec FROM s3))"),
-    "funnel_strict_order" ->
-      ("WITH ev AS (SELECT user_id, ts, event_id, event_type, " +
+        "CAST(floor(epoch(t1)) AS BIGINT) AS sec FROM s3))")),
+    Entry("funnel_strict_order", funnelStrictOrder, Some(
+      "WITH ev AS (SELECT user_id, ts, event_id, event_type, " +
         "LEAD(event_type, 1) OVER w AS nt1, LEAD(ts, 1) OVER w AS ts1, " +
         "LEAD(event_type, 2) OVER w AS nt2, LEAD(ts, 2) OVER w AS ts2 " +
         "FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)), " +
@@ -3280,9 +3228,9 @@ object AnalyticsQueries {
         "CAST(SUM(l1) AS BIGINT) AS n_users FROM lv " +
         "UNION ALL SELECT 2, 'click', CAST(SUM(l2) AS BIGINT) FROM lv " +
         "UNION ALL SELECT 3, 'purchase', CAST(SUM(l3) AS BIGINT) FROM lv " +
-        "ORDER BY step"),
-    "funnel_strict_dedup" ->
-      ("WITH s1 AS (SELECT user_id, MIN(ts) AS t1 FROM events " +
+        "ORDER BY step")),
+    Entry("funnel_strict_dedup", funnelStrictDedup, Some(
+      "WITH s1 AS (SELECT user_id, MIN(ts) AS t1 FROM events " +
         "WHERE event_type = 'view' GROUP BY 1), " +
         "c2 AS (SELECT e.user_id, MIN(e.ts) AS t2, MAX(s1.t1) AS t1 FROM events e " +
         "JOIN s1 USING (user_id) WHERE e.event_type = 'click' " +
@@ -3300,9 +3248,9 @@ object AnalyticsQueries {
         "CAST((SELECT COUNT(*) FROM s1) AS BIGINT) AS n_users " +
         "UNION ALL SELECT 2, 'click', CAST((SELECT COUNT(*) FROM s2) AS BIGINT) " +
         "UNION ALL SELECT 3, 'purchase', CAST((SELECT COUNT(*) FROM s3) AS BIGINT) " +
-        "ORDER BY step"),
-    "time_decay_agg" ->
-      ("WITH ev AS (SELECT user_id, ts, event_id, value, " +
+        "ORDER BY step")),
+    Entry("time_decay_agg", timeDecayAgg, Some(
+      "WITH ev AS (SELECT user_id, ts, event_id, value, " +
         "CAST(floor(epoch(ts)) AS DOUBLE) AS tsec, " +
         "CAST(round(value * 100) AS BIGINT) AS cents FROM events), " +
         "e2 AS (SELECT *, (tsec - MIN(tsec) OVER (PARTITION BY user_id)) / 86400.0 " +
@@ -3318,9 +3266,9 @@ object AnalyticsQueries {
         "ROUND(MAX(CASE WHEN rn = 1 THEN wsum * POW(2.0, -xx) END), 4) AS ema_last, " +
         "ROUND(SUM(CASE WHEN d > 0 THEN d ELSE 0 END) / 100.0, 2) AS delta_sum, " +
         "CAST(COUNT(*) AS BIGINT) AS n_events " +
-        "FROM e3 GROUP BY user_id ORDER BY user_id"),
-    "lttb_downsample" ->
-      ("WITH pts AS (SELECT event_type, ts, event_id, " +
+        "FROM e3 GROUP BY user_id ORDER BY user_id")),
+    Entry("lttb_downsample", lttbDownsample, Some(
+      "WITH pts AS (SELECT event_type, ts, event_id, " +
         "CAST(floor(epoch(ts)) AS BIGINT) AS xs, " +
         "CAST(round(value * 100) AS BIGINT) AS yc, " +
         "ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY ts, event_id) AS r, " +
@@ -3345,82 +3293,82 @@ object AnalyticsQueries {
         "ROUND(y / 100, 2) AS value FROM sel WHERE rn = 1 " +
         "UNION ALL SELECT event_type, CAST(bucket AS INT), CAST(x AS BIGINT), " +
         "ROUND(y / 100, 2) FROM p WHERE bucket IN (0, 19) " +
-        "ORDER BY event_type, bucket"),
-    "text_top_bigrams" ->
-      ("WITH toks AS (SELECT doc_id, unnest(string_split(text, ' ')) AS w, " +
+        "ORDER BY event_type, bucket")),
+    Entry("text_top_bigrams", textTopBigrams, Some(
+      "WITH toks AS (SELECT doc_id, unnest(string_split(text, ' ')) AS w, " +
         "generate_subscripts(string_split(text, ' '), 1) AS i FROM documents), " +
         "bg AS (SELECT w || ' ' || lead(w) OVER (PARTITION BY doc_id ORDER BY i) AS bigram " +
         "FROM toks) " +
         "SELECT bigram, CAST(COUNT(*) AS BIGINT) AS n FROM bg WHERE bigram IS NOT NULL " +
-        "GROUP BY bigram ORDER BY n DESC, bigram LIMIT 10"),
-    "sum_map" ->
-      ("SELECT user_id, string_agg(kv, ',' ORDER BY kv) AS type_sums, " +
+        "GROUP BY bigram ORDER BY n DESC, bigram LIMIT 10")),
+    Entry("sum_map", sumMap, Some(
+      "SELECT user_id, string_agg(kv, ',' ORDER BY kv) AS type_sums, " +
         "CAST(COUNT(*) AS BIGINT) AS n_types FROM (" +
         "SELECT user_id, event_type || ':' || " +
         "CAST(CAST(ROUND(SUM(value) * 100) AS BIGINT) AS VARCHAR) AS kv " +
         "FROM events WHERE user_id < 20 GROUP BY user_id, event_type) " +
-        "GROUP BY user_id ORDER BY user_id"),
-    "arg_minmax" ->
-      ("SELECT user_id, arg_min(event_type, event_id) AS first_type, " +
+        "GROUP BY user_id ORDER BY user_id")),
+    Entry("arg_minmax", argMinMax, Some(
+      "SELECT user_id, arg_min(event_type, event_id) AS first_type, " +
         "arg_max(event_type, event_id) AS last_type, " +
         "max(event_id) AS last_event_id, CAST(COUNT(*) AS BIGINT) AS n_events " +
-        "FROM events GROUP BY user_id ORDER BY user_id"),
-    "conditional_agg" ->
-      ("SELECT event_type, CAST(COUNT(*) FILTER (value > 100) AS BIGINT) AS n_big, " +
+        "FROM events GROUP BY user_id ORDER BY user_id")),
+    Entry("conditional_agg", conditionalAgg, Some(
+      "SELECT event_type, CAST(COUNT(*) FILTER (value > 100) AS BIGINT) AS n_big, " +
         "ROUND(SUM(value) FILTER (value > 100), 2) AS sum_big, " +
         "FLOOR(CAST(SUM(CAST(ROUND(value * 100) AS BIGINT)) FILTER (NOT value > 100) AS DOUBLE) " +
         "/ COUNT(*) FILTER (NOT value > 100) / 100 * 10000 + 0.5) / 10000 AS avg_small, " +
         "FLOOR(CAST(COUNT(*) FILTER (value > 100) AS DOUBLE) / COUNT(*) * 10000 + 0.5) " +
         "/ 10000 AS big_ratio " +
-        "FROM events GROUP BY event_type ORDER BY event_type"),
-    "stats_moments" ->
-      ("SELECT l_returnflag, ROUND(corr(l_quantity, l_extendedprice), 5) AS corr_qty_price, " +
+        "FROM events GROUP BY event_type ORDER BY event_type")),
+    Entry("stats_moments", statsMoments, Some(
+      "SELECT l_returnflag, ROUND(corr(l_quantity, l_extendedprice), 5) AS corr_qty_price, " +
         "ROUND(covar_samp(l_quantity, l_extendedprice), 3) AS covar_qty_price, " +
         "ROUND(stddev_samp(l_quantity), 5) AS stddev_qty, " +
         "ROUND(var_samp(l_quantity), 4) AS var_qty, " +
         "CAST(COUNT(*) AS BIGINT) AS n " +
-        "FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag"),
-    "monthly_revenue" ->
-      ("SELECT CAST(date_trunc('month', CAST(o_orderdate AS DATE)) AS DATE) AS month, " +
+        "FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag")),
+    Entry("monthly_revenue", monthlyRevenue, Some(
+      "SELECT CAST(date_trunc('month', CAST(o_orderdate AS DATE)) AS DATE) AS month, " +
         "CAST(COUNT(*) AS BIGINT) AS n_orders, " +
         "CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS DOUBLE) / 100 AS revenue, " +
         "FLOOR(CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS DOUBLE) " +
         "/ COUNT(*) / 100 * 1000 + 0.5) / 1000 AS avg_price " +
-        "FROM orders GROUP BY 1 ORDER BY 1"),
-    "running_diff" ->
-      ("SELECT user_id, event_id, ROUND(value, 2) AS value, " +
+        "FROM orders GROUP BY 1 ORDER BY 1")),
+    Entry("running_diff", runningDiff, Some(
+      "SELECT user_id, event_id, ROUND(value, 2) AS value, " +
         "ROUND(value - lag(value) OVER (PARTITION BY user_id ORDER BY ts, event_id), 3) AS diff " +
-        "FROM events WHERE user_id < 50 ORDER BY user_id, event_id"),
-    "group_array" ->
-      ("SELECT o_custkey, string_agg(o_orderstatus, ',' ORDER BY o_orderstatus) AS statuses, " +
+        "FROM events WHERE user_id < 50 ORDER BY user_id, event_id")),
+    Entry("group_array", groupArray, Some(
+      "SELECT o_custkey, string_agg(o_orderstatus, ',' ORDER BY o_orderstatus) AS statuses, " +
         "CAST(COUNT(*) AS BIGINT) AS n_orders " +
-        "FROM orders WHERE o_custkey < 100 GROUP BY o_custkey ORDER BY o_custkey"),
-    "histogram_values" ->
-      ("SELECT CAST(FLOOR(value / 50) AS BIGINT) AS bucket, CAST(COUNT(*) AS BIGINT) AS n, " +
+        "FROM orders WHERE o_custkey < 100 GROUP BY o_custkey ORDER BY o_custkey")),
+    Entry("histogram_values", histogramValues, Some(
+      "SELECT CAST(FLOOR(value / 50) AS BIGINT) AS bucket, CAST(COUNT(*) AS BIGINT) AS n, " +
         "FLOOR(CAST(SUM(CAST(ROUND(value * 100) AS BIGINT)) AS DOUBLE) " +
         "/ COUNT(*) / 100 * 10000 + 0.5) / 10000 AS avg_value, " +
         "ROUND(MIN(value), 2) AS min_value, ROUND(MAX(value), 2) AS max_value " +
-        "FROM events GROUP BY 1 ORDER BY 1"),
-    "uniq_counts" ->
-      ("SELECT event_type, CAST(COUNT(DISTINCT user_id) AS BIGINT) AS uniq_users, " +
+        "FROM events GROUP BY 1 ORDER BY 1")),
+    Entry("uniq_counts", uniqCounts, Some(
+      "SELECT event_type, CAST(COUNT(DISTINCT user_id) AS BIGINT) AS uniq_users, " +
         "CAST(COUNT(DISTINCT CAST(ts AS DATE)) AS BIGINT) AS active_days, " +
         "FLOOR(CAST(COUNT(*) AS DOUBLE) / COUNT(DISTINCT user_id) * 10000 + 0.5) " +
         "/ 10000 AS events_per_user " +
-        "FROM events GROUP BY event_type ORDER BY event_type"),
-    "embedding_centroid" ->
-      ("SELECT label, ROUND(sqrt(SUM(m * m)), 4) AS centroid_norm, " +
+        "FROM events GROUP BY event_type ORDER BY event_type")),
+    Entry("embedding_centroid", embeddingCentroid, Some(
+      "SELECT label, ROUND(sqrt(SUM(m * m)), 4) AS centroid_norm, " +
         "CAST(COUNT(*) AS BIGINT) AS dims FROM (" +
         "SELECT label, i, AVG(CAST(x AS DOUBLE)) AS m FROM (" +
         "SELECT label, unnest(embedding) AS x, " +
         "generate_subscripts(embedding, 1) - 1 AS i FROM embeddings) " +
-        "GROUP BY label, i) GROUP BY label ORDER BY label"),
-    "sample_split_md5" ->
-      ("WITH u AS (SELECT n_chars, " +
+        "GROUP BY label, i) GROUP BY label ORDER BY label")),
+    Entry("sample_split_md5", sampleSplitMd5, Some(
+      "WITH u AS (SELECT n_chars, " +
         "CAST(CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 6) AS INTEGER) AS DOUBLE) " +
         "/ 16777216.0 AS u FROM documents) " +
         "SELECT CASE WHEN u < 0.8 THEN 'train' WHEN u < 0.9 THEN 'val' ELSE 'test' END AS split, " +
         "CAST(COUNT(*) AS BIGINT) AS n, " +
         "FLOOR(CAST(SUM(n_chars) AS DOUBLE) / COUNT(*) * 100 + 0.5) / 100 AS avg_chars " +
-        "FROM u GROUP BY 1 ORDER BY 1")
+        "FROM u GROUP BY 1 ORDER BY 1"))
   )
 }

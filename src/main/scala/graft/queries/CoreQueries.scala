@@ -1320,53 +1320,6 @@ object CoreQueries {
       .orderBy("metric")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "forecast_events_hourly" -> (forecastEventsHourlyChecked _),
-    "forecast_events_hourly_gate" -> (forecastEventsHourlyGate _),
-    "forecast_events_snaive" -> (forecastEventsSnaive _),
-    "forecast_events_smean" -> (forecastEventsSmean _),
-    "forecast_events_lintrend" -> (forecastEventsLintrend _),
-    "forecast_events_holt" -> (forecastEventsHolt _),
-    "forecast_events_holt_damped" -> (forecastEventsHoltDamped _),
-    "forecast_events_holt_winters" -> (forecastEventsHoltWinters _),
-    "forecast_events_holt_winters_damped" -> (forecastEventsHoltWintersDamped _),
-    "forecast_events_holt_winters_mul" -> (forecastEventsHoltWintersMul _),
-    "forecast_events_holt_winters_mul_damped" ->
-      (forecastEventsHoltWintersMulDamped _),
-    "forecast_events_ridge_trend" -> (forecastEventsRidgeTrend _),
-    "forecast_events_holidays_ridge" -> (forecastEventsHolidaysRidge _),
-    "forecast_events_logistic_ridge" -> (forecastEventsLogisticRidge _),
-    "forecast_backtest_ridge" -> (forecastBacktestRidge _),
-    "forecast_anomalies_ridge" -> (forecastAnomaliesRidge _),
-    "forecast_orders_ridge" -> (forecastOrdersRidge _),
-    "forecast_backtest" -> (forecastBacktest _),
-    "forecast_backtest_gate" -> (forecastBacktestGate _),
-    "forecast_backtest_naive" -> (forecastBacktestNaive _),
-    "forecast_events" -> (forecastEvents _),
-    "forecast_events_gate" -> (forecastEventsGate _),
-    "forecast_events_holidays" -> (forecastEventsHolidaysChecked _),
-    "forecast_events_holidays_gate" -> (forecastEventsHolidaysGate _),
-    "forecast_events_logistic" -> (forecastEventsLogisticChecked _),
-    "forecast_events_logistic_gate" -> (forecastEventsLogisticGate _),
-    "forecast_events_multiplicative" -> (forecastEventsMultiplicativeChecked _),
-    "forecast_events_multiplicative_gate" -> (forecastEventsMultiplicativeGate _),
-    "forecast_events_future" -> (forecastEventsFutureChecked _),
-    "forecast_events_future_gate" -> (forecastEventsFutureGate _),
-    "forecast_events_simband" -> (forecastEventsSimbandChecked _),
-    "forecast_events_simband_gate" -> (forecastEventsSimbandGate _),
-    "forecast_anomalies" -> (forecastAnomalies _),
-    "forecast_anomalies_gate" -> (forecastAnomaliesGate _),
-    "forecast_orders" -> (forecastOrdersChecked _),
-    "forecast_orders_gate" -> (forecastOrdersGate _),
-    "bucketize_events" -> (bucketizeEvents _),
-    "max_date" -> (maxDate _),
-    "series_melt" -> (seriesMelt _),
-    "series_gapfill" -> (seriesGapfill _),
-    "future_dates" -> (futureDates _),
-    "pivot_wide" -> (pivotWide _),
-    "q1_agg" -> (q1Agg _)
-  )
-
   private val bucketizeSql =
     """SELECT CAST(ts AS DATE) AS date, COUNT(*) AS event_count,
       | ROUND(SUM(value), 2) AS value_sum,
@@ -2006,30 +1959,84 @@ object CoreQueries {
       "FROM p ORDER BY metric, ds"
   }
 
-  val oracleSql: Map[String, String] = Map(
+  val entries: Seq[Entry] = Seq(
     // the ridge-trend replay: the production ProphetLike.fit reduced to
     // its closed form — Gram sums, Cramer solve, residual σ, analytic
     // band — with the n = 8 config's λs/changepoints as literals
-    "forecast_events_ridge_trend" -> ridgeTrendOracle(),
+    Entry("forecast_events_ridge_trend", forecastEventsRidgeTrend, Some(ridgeTrendOracle()),
+      note = "FIRST value-hash row through the ACTUAL " +
+        "ProphetLike.fit/predict production path: each metric's last 8 " +
+        "days fit the real ridge model, whose n=8/span=7 config rules " +
+        "pin a closed-form shape (seasonality all off, changepoints " +
+        "exactly {3/7, 5/7}, p=4, lambda=[1e-6,1e-6,1+0.05*8,1+0.05*8]) " +
+        "— the oracle solves the same normal equations by explicit " +
+        "Cramer cofactor arithmetic (det4Sql) over per-metric Gram sums " +
+        "and replays predict's analytic band; LU-vs-Cramer rounding " +
+        "(~1e-12) absorbed by the shared 1e-4 floor grain; config " +
+        "spec-pinned in ProphetLikeSpec"),
     // the holidays branch of the production fit: p = 5 Gram/Cramer with
     // the month-edge indicator as plan-time calendar arithmetic
-    "forecast_events_holidays_ridge" -> ridgeHolidaysOracle,
+    Entry("forecast_events_holidays_ridge", forecastEventsHolidaysRidge, Some(ridgeHolidaysOracle),
+      note = "the HOLIDAYS branch of the production fit under the hash: " +
+        "fit(points, holidayDays) with the month-edge calendar (1st + " +
+        "25th) makes p=5 — design [1, t, hinge1, hinge2, hol], lambda " +
+        "appends the Normal(0,10)-like 1.0, sigma divides n-p=3 — and " +
+        "the oracle solves the 5x5 normal equations by generated " +
+        "Cramer cofactors (detSql) with the indicator as plan-time " +
+        "calendar arithmetic DAY(ds) IN (1,25); the calendar fires " +
+        "in-window AND in-horizon, so the fitted coefficient and its " +
+        "projection are both nonzero under the hash"),
     // the logistic-growth branch: the same p = 4 replay on the
     // logit-transformed series, projection through the sigmoid
-    "forecast_events_logistic_ridge" -> ridgeLogisticOracle,
+    Entry("forecast_events_logistic_ridge", forecastEventsLogisticRidge, Some(ridgeLogisticOracle),
+      note = "the LOGISTIC-growth branch of the production fit under the " +
+        "hash — the last fit config that had neither a value-hash " +
+        "face nor a documented impossibility: the logit-link fit is " +
+        "the linear ridge on z = LN(r/(1-r)), r = clamp(y/cap), so " +
+        "the oracle reuses the whole p=4 Gram/Cramer replay on z and " +
+        "maps the projection (yhat and BOTH band endpoints — " +
+        "monotone => transformed quantiles) through " +
+        "cap/(1+EXP(-std*yscale)); cap is the production 1.5x-global-" +
+        "max rule derived from the cents series; LN/EXP libm-vs-Java " +
+        "1-ulp noise is the LU-vs-Cramer class, absorbed by the 1e-4 " +
+        "grain"),
     // the anomaly family's value-hash face: in-sample ridge band,
     // anomaly bit derived from the grained (already hash-equal) columns
-    "forecast_anomalies_ridge" -> ridgeAnomaliesOracle,
+    Entry("forecast_anomalies_ridge", forecastAnomaliesRidge, Some(ridgeAnomaliesOracle),
+      note = "the anomaly family's VALUE-hash face through the real " +
+        "ProphetLike fit/predict path: in-sample evaluation of the " +
+        "8-day ridge fit, noise-only +/-z80*sigma band " +
+        "(SQRT(sigma*sigma) rendered exactly as predict computes dt=0), " +
+        "is_anomaly compared on the GRAINED (already hash-equal) " +
+        "columns so the bit adds no new float-boundary class; " +
+        "forecast_anomalies itself stays rows-only (Prophet-config " +
+        "band, documented)"),
     // the ridge face on the long-history orders table, exact-cents at
     // the source grain (shared replay body)
-    "forecast_orders_ridge" -> ordersRidgeOracle,
+    Entry("forecast_orders_ridge", forecastOrdersRidge, Some(ordersRidgeOracle),
+      note = "the ridge value-hash face on the LONG-HISTORY orders table: " +
+        "exact-cents daily series built at the SOURCE grain (revenue " +
+        "summed as per-order integer cents — order-independent where " +
+        "the bucketized double-sum-then-round could straddle a " +
+        "boundary), shared ridgeTrendForecast construction and shared " +
+        "oracle replay body; the calendar window predicate is " +
+        "symmetric, so the sparse sf0.001 stream's gapped window " +
+        "yields zero rows in BOTH engines (spec-pinned contract)"),
     // the first backtest with model-dependent skill columns (mae/rmse)
     // under the hash: the ridge closed form per (metric, cutoff)
-    "forecast_backtest_ridge" -> ridgeBacktestOracle,
+    Entry("forecast_backtest_ridge", forecastBacktestRidge, Some(ridgeBacktestOracle),
+      note = "first backtest with MODEL-DEPENDENT skill columns (mae, rmse) " +
+        "under the driver hash: the backtest-gate cutoff spine per " +
+        "metric, each cutoff fitting the REAL ProphetLike ridge model " +
+        "on its last 8 training days (the forecast_events_ridge_trend " +
+        "closed form, shared ridgeSolveCtes Cramer machinery keyed by " +
+        "(metric, cutoff)) and scoring the 7-step horizon against " +
+        "held-out actuals; grain-absorbed cross-engine noise as the " +
+        "trend face"),
     // DuckDB recomputes the hourly bucket count per metric; the horizon
     // (24) and the band-sanity bit are expected constants.
-    "forecast_events_hourly_gate" ->
-      ("WITH hrs AS (SELECT DISTINCT date_trunc('hour', ts) AS t FROM events), " +
+    Entry("forecast_events_hourly_gate", forecastEventsHourlyGate, Some(
+      "WITH hrs AS (SELECT DISTINCT date_trunc('hour', ts) AS t FROM events), " +
         "h AS (SELECT COUNT(*) AS n, MAX(t) AS last_t FROM hrs), " +
         "cal AS (SELECT t FROM hrs UNION ALL SELECT last_t + i * " +
         "INTERVAL '1 hour' FROM h CROSS JOIN generate_series(1, 24) gs(i)), " +
@@ -2037,12 +2044,12 @@ object CoreQueries {
           "SELECT CAST(epoch(t) AS BIGINT) // 3600 AS ed FROM cal") +
         " SELECT m.metric, n AS n_hist, CAST(24 AS BIGINT) AS n_future, " +
         "1 AS bands_ok, cal_xor FROM h CROSS JOIN cx CROSS JOIN (VALUES " +
-        "('event_count'), ('value_sum')) m(metric) ORDER BY metric"),
+        "('event_count'), ('value_sum')) m(metric) ORDER BY metric")),
     // Replays the Prophet-style cutoff calendar (last-7 stepping back 3
     // while >= 14 training days) and per-cutoff test counts in pure SQL;
     // the model-skill bit is the expected constant 1 per row.
-    "forecast_backtest_gate" ->
-      ("WITH days AS (SELECT DISTINCT CAST(ts AS DATE) AS d FROM events), " +
+    Entry("forecast_backtest_gate", forecastBacktestGate, Some(
+      "WITH days AS (SELECT DISTINCT CAST(ts AS DATE) AS d FROM events), " +
         "span AS (SELECT MIN(d) AS first_d, MAX(d) AS last_d FROM days), " +
         "cuts AS (SELECT last_d - 7 - 3 * CAST(i AS INTEGER) AS cutoff FROM span " +
         "CROSS JOIN generate_series(0, 1000) AS gs(i) " +
@@ -2051,7 +2058,7 @@ object CoreQueries {
         "ON d > cutoff AND d <= cutoff + 7 GROUP BY 1) " +
         "SELECT m.metric, cutoff, n, 1 AS pass FROM cnt CROSS JOIN (VALUES " +
         "('active_users'), ('event_count'), ('value_sum')) m(metric) " +
-        "ORDER BY metric, cutoff"),
+        "ORDER BY metric, cutoff")),
     // Replays the cutoff calendar, per-cutoff test counts, AND the
     // seasonal-naive MAE (melt y per metric, |y(d) - y(d-7)| averaged per
     // cutoff, round6 like naiveSeries). The lag join is a LEFT join with
@@ -2059,8 +2066,8 @@ object CoreQueries {
     // byDay.getOrElse(lag, lastTrainY): on a gappy calendar (a day with
     // zero events 7 days before a test day) an inner join would silently
     // drop the row and diverge n/mae_naive from the engine.
-    "forecast_backtest_naive" ->
-      (s"WITH b AS ($bucketizeSql), " +
+    Entry("forecast_backtest_naive", forecastBacktestNaive, Some(
+      s"WITH b AS ($bucketizeSql), " +
         "m AS (SELECT 'event_count' AS metric, date AS ds, " +
         "CAST(event_count AS DOUBLE) AS y FROM b " +
         "UNION ALL SELECT 'value_sum', date, value_sum FROM b " +
@@ -2084,16 +2091,19 @@ object CoreQueries {
         "JOIN ltv v ON v.metric = t.metric AND v.cutoff = t.cutoff) " +
         "SELECT metric, cutoff, COUNT(*) AS n, " +
         "ROUND(SUM(ABS(y - ylag)) / COUNT(*), 6) AS mae_naive " +
-        "FROM lagd GROUP BY 1, 2 ORDER BY metric, cutoff"),
+        "FROM lagd GROUP BY 1, 2 ORDER BY metric, cutoff")),
     // the full seasonal-naive-with-drift replay: exact-cents series,
     // integer residual sums, then the SAME IEEE expression tree and the
     // shared 1e-4 floor grain — yhat itself under the hash
-    "forecast_events_snaive" -> snaiveOracle(includeActiveUsers = true),
+    Entry("forecast_events_snaive", forecastEventsSnaive, Some(
+      snaiveOracle(includeActiveUsers = true)),
+      note = "first of FIVE forecasts whose yhat/band VALUES are hash-checked " +
+        "(exact-cents + mirrored IEEE tree); the backtest's skill baseline"),
     // the seasonal-mean replay: exact-cents per-(metric, dow) sums, the
     // SAME IEEE expression tree and 1e-4 floor grain — the second
     // forecast with yhat AND both band edges under the hash
-    "forecast_events_smean" ->
-      (s"WITH b AS ($bucketizeSql), " +
+    Entry("forecast_events_smean", forecastEventsSmean, Some(
+      s"WITH b AS ($bucketizeSql), " +
         "m AS (SELECT 'event_count' AS metric, date AS ds, " +
         "CAST(event_count AS DOUBLE) AS y FROM b " +
         "UNION ALL SELECT 'value_sum', date, value_sum FROM b " +
@@ -2121,42 +2131,86 @@ object CoreQueries {
         "(CAST(sw AS DOUBLE) / ndw) * (CAST(sw AS DOUBLE) / ndw))) / 100.0)) " +
         "* 10000 + 0.5) / 10000 AS yhat_upper " +
         "FROM j ORDER BY metric, ds"),
+      note = "second fully value-hash-checked forecast: day-of-week " +
+        "climatology mean +/- 1.28 sd, same exact-cents + mirrored-IEEE " +
+        "+ 1e-4-floor recipe as snaive"),
     // the Holt replay: the identical IEEE-double recurrence stepped row
     // i -> i+1 by a recursive CTE (the b_t expression repeats l_t's
     // subtree — deterministic double arithmetic makes the repeat exact),
     // one-step errors accumulated in the same pre-update order, then the
     // shared 1e-4 floor grain — the fourth fully value-checked forecast
     // and the first sequential-recurrence one
-    "forecast_events_holt" -> holtOracle(
-      "(l + CAST(gs.h AS DOUBLE) * t) / 100.0"),
+    Entry("forecast_events_holt", forecastEventsHolt, Some(holtOracle(
+      "(l + CAST(gs.h AS DOUBLE) * t) / 100.0")),
+      note = "fourth fully value-hash-checked forecast and the first " +
+        "SEQUENTIAL-recurrence one: Holt double exponential smoothing " +
+        "(alpha = beta = 1/2), determinism from a fixed fold order — " +
+        "per-metric date-sorted flatMapGroups fold, replayed step by " +
+        "step as a recursive CTE with the identical IEEE op sequence"),
     // the seasonal face: its own recursive CTE carrying the 7 seasonal
     // slots as state columns (see holtWintersOracle)
-    "forecast_events_holt_winters" -> holtWintersOracle(),
+    Entry("forecast_events_holt_winters", forecastEventsHoltWinters, Some(holtWintersOracle()),
+      note = "SIXTH fully value-hash-checked forecast and the first with " +
+        "EVOLVING SEASONAL STATE: Holt-Winters additive (Winters 1960; " +
+        "FPP3 §8.3, alpha=beta=gamma=1/2, m=7 observations, simple init " +
+        "l7=mean(y1..7), s_j=y_j−l7) — the recursive-CTE step-replay " +
+        "discipline extended to an array: the oracle carries the 7 " +
+        "seasonal slots as state columns s0..s6 and updates exactly one " +
+        "per step via a slot CASE; spec replays the full fold " +
+        "scalar-side per metric; n>=14 input contract in both engines"),
     // the damped seasonal face: phi = 1/2 folded into the recurrence's
     // trend consumption and the geometric damp sum in the projection
-    "forecast_events_holt_winters_damped" -> holtWintersOracle(damped = true),
+    Entry("forecast_events_holt_winters_damped", forecastEventsHoltWintersDamped, Some(
+      holtWintersOracle(damped = true)),
+      note = "SEVENTH fully value-hash-checked forecast: damped-trend " +
+        "Holt-Winters (Gardner-McKenzie damping composed with Winters " +
+        "seasonality, phi = 1/2) — shares the seasonal fold with the " +
+        "linear face through one hwFit construction (phi applied as pb " +
+        "= phi*b everywhere the previous trend is consumed; phi = 1.0 " +
+        "is bit-exact identity so the sharing cannot move the linear " +
+        "face), projection uses the exactly-dyadic geometric damp sum 1 " +
+        "- 0.5^h"),
     // the multiplicative seasonal face: ratio state (divide where the
     // additive recurrence subtracts), error vs (l + b)·s_k, factor
     // projection (l + h·b)·s — the same recursive-CTE step replay with
     // the min(y) > 0 series guard stated in both engines
-    "forecast_events_holt_winters_mul" -> holtWintersOracle(mul = true),
+    Entry("forecast_events_holt_winters_mul", forecastEventsHoltWintersMul, Some(
+      holtWintersOracle(mul = true)),
+      note = "EIGHTH fully value-hash-checked forecast: MULTIPLICATIVE " +
+        "Holt-Winters (Winters 1960; FPP3 §8.3 ratio form) — the same " +
+        "hwFit fold with mul=true: seasonal RATIO state s_j = y_j/l7, " +
+        "division where the additive recurrence subtracts, error vs " +
+        "(l+b)*s_k, projection (l+h*b)*s; min(y)>0 series guard stated " +
+        "in both engines (every fixture metric passes); completes the " +
+        "additive/multiplicative halves of the classical seasonal " +
+        "taxonomy under the driver hash"),
     // the damped multiplicative face: φ = 1/2 in the ratio recurrence's
     // trend consumption + the dyadic damp sum in the factor projection —
     // completes the {linear, damped} × {additive, multiplicative} table
-    "forecast_events_holt_winters_mul_damped" ->
-      holtWintersOracle(damped = true, mul = true),
+    Entry("forecast_events_holt_winters_mul_damped", forecastEventsHoltWintersMulDamped, Some(
+      holtWintersOracle(damped = true, mul = true)),
+      note = "NINTH fully value-hash-checked forecast, completing the " +
+        "classical {linear, damped} x {additive, multiplicative} " +
+        "Holt-Winters taxonomy: the hwFit ratio recurrence with phi = " +
+        "1/2 trend consumption and the exactly-dyadic geometric damp " +
+        "sum 1 - 0.5^h inside the factor projection (l + damp*b)*s"),
     // the damped face: identical recursive fit, only the projection
     // changes — damp factor 1 - 0.5^h (exactly dyadic, POWER is
     // exponent arithmetic in both engines)
-    "forecast_events_holt_damped" -> holtOracle(
-      "(l + (1.0 - POWER(0.5, CAST(gs.h AS DOUBLE))) * t) / 100.0"),
+    Entry("forecast_events_holt_damped", forecastEventsHoltDamped, Some(holtOracle(
+      "(l + (1.0 - POWER(0.5, CAST(gs.h AS DOUBLE))) * t) / 100.0")),
+      note = "fifth fully value-hash-checked forecast: damped-trend Holt " +
+        "(Gardner-McKenzie, phi = 1/2) — shares forecast_events_holt's " +
+        "fold exactly (one holtFit construction) and differs only in " +
+        "the projection, whose damp factor 1 - 0.5^h is exactly dyadic " +
+        "so POWER replays bit-for-bit"),
     // the OLS linear-trend replay: exact-cents sufficient statistics as
     // BIGINTs (n, Sx, Sxx, Sy, Sxy, Syy + the slope's integer
     // numerator/denominator), then the SAME IEEE expression tree and
     // 1e-4 floor grain — the third forecast with yhat AND both band
     // edges under the hash
-    "forecast_events_lintrend" ->
-      (s"WITH b AS ($bucketizeSql), " +
+    Entry("forecast_events_lintrend", forecastEventsLintrend, Some(
+      s"WITH b AS ($bucketizeSql), " +
         "m AS (SELECT 'event_count' AS metric, date AS ds, " +
         "CAST(event_count AS DOUBLE) AS y FROM b " +
         "UNION ALL SELECT 'value_sum', date, value_sum FROM b " +
@@ -2190,9 +2244,13 @@ object CoreQueries {
         "AS yhat_lower, " +
         "FLOOR(((aa + bb * xf) / 100.0 + 1.28 * sd) * 10000 + 0.5) / 10000 " +
         "AS yhat_upper FROM f ORDER BY metric, ds"),
-    "forecast_events_gate" -> eventsDailyGateSql,
-    "forecast_events_future_gate" ->
-      ("WITH h AS (SELECT MAX(CAST(ts AS DATE)) AS last_d FROM events), " +
+      note = "third fully value-hash-checked forecast: closed-form OLS " +
+        "linear trend +/- 1.28 residual sd — exact-cents BIGINT " +
+        "sufficient statistics, mirrored IEEE tree, shared 1e-4 " +
+        "floor grain"),
+    Entry("forecast_events_gate", forecastEventsGate, Some(eventsDailyGateSql)),
+    Entry("forecast_events_future_gate", forecastEventsFutureGate, Some(
+      "WITH h AS (SELECT MAX(CAST(ts AS DATE)) AS last_d FROM events), " +
         "cal AS (SELECT CAST(last_d + i * INTERVAL '1 day' AS DATE) AS d " +
         "FROM h CROSS JOIN generate_series(1, 7) gs(i)), " +
         "cx AS " + calXorSql(
@@ -2200,22 +2258,30 @@ object CoreQueries {
         " SELECT m.metric, CAST(0 AS BIGINT) AS n_hist, " +
         "CAST(7 AS BIGINT) AS n_future, 1 AS bands_ok, cal_xor FROM cx " +
         "CROSS JOIN (VALUES ('active_users'), ('event_count'), " +
-        "('value_sum')) m(metric) ORDER BY metric"),
-    "forecast_events_holidays_gate" -> eventsDailyGateSql,
-    "forecast_events_multiplicative_gate" -> eventsDailyGateSql,
-    "forecast_events_simband_gate" -> eventsDailyGateSql,
-    "forecast_events_logistic_gate" -> dailyGateSql(7, ", 1 AS bounded_ok"),
+        "('value_sum')) m(metric) ORDER BY metric")),
+    Entry("forecast_events_holidays_gate", forecastEventsHolidaysGate, Some(eventsDailyGateSql)),
+    Entry("forecast_events_multiplicative_gate", forecastEventsMultiplicativeGate, Some(
+      eventsDailyGateSql)),
+    Entry("forecast_events_simband_gate", forecastEventsSimbandGate, Some(eventsDailyGateSql)),
+    Entry("forecast_events_logistic_gate", forecastEventsLogisticGate, Some(
+      dailyGateSql(7, ", 1 AS bounded_ok"))),
     // ---- per-row checked faces (round 12): every column replayable ----
-    "forecast_events_holidays" -> checkedRowsSql(7,
+    Entry("forecast_events_holidays", forecastEventsHolidaysChecked, Some(checkedRowsSql(7,
       ", CASE WHEN EXTRACT(day FROM cal.d) = 1 AND EXTRACT(year FROM " +
-        "cal.d) BETWEEN 2024 AND 2025 THEN 1 ELSE 0 END AS is_month_start"),
-    "forecast_events_multiplicative" -> checkedRowsSql(7),
-    "forecast_events_simband" -> checkedRowsSql(7),
+        "cal.d) BETWEEN 2024 AND 2025 THEN 1 ELSE 0 END AS is_month_start")),
+      note = "registered as the per-row CHECKED face (calendar, split, band " +
+        "+ month-start bits all hash-checked); full-value frame = " +
+        "forecastEventsHolidays (library)"),
+    Entry("forecast_events_multiplicative", forecastEventsMultiplicativeChecked, Some(
+      checkedRowsSql(7)),
+      note = "per-row checked face; full-value frame = forecastEventsMultiplicative (library)"),
+    Entry("forecast_events_simband", forecastEventsSimbandChecked, Some(checkedRowsSql(7)),
+      note = "per-row checked face; full-value frame = forecastEventsSimband (library)"),
     // the logistic face also replays the data-derived capacity: maxy is
     // the max over the three exact daily series, cap_c its 1.5x in the
     // shared half-up floor cents grain (same IEEE operation order)
-    "forecast_events_logistic" ->
-      (s"WITH b AS ($bucketizeSql), " +
+    Entry("forecast_events_logistic", forecastEventsLogisticChecked, Some(
+      s"WITH b AS ($bucketizeSql), " +
         "mm AS (SELECT CAST(event_count AS DOUBLE) AS y FROM b " +
         "UNION ALL SELECT value_sum FROM b " +
         "UNION ALL SELECT CAST(active_users AS DOUBLE) FROM b), " +
@@ -2232,16 +2298,21 @@ object CoreQueries {
         "FROM cal CROSS JOIN h CROSS JOIN my CROSS JOIN (VALUES " +
         "('active_users'), ('event_count'), ('value_sum')) m(metric) " +
         "ORDER BY metric, date"),
-    "forecast_events_future" ->
-      ("WITH h AS (SELECT MAX(CAST(ts AS DATE)) AS last_d FROM events), " +
+      note = "per-row checked face incl. the saturation bit and the exact-" +
+        "cents data-derived cap; full-value frame = " +
+        "forecastEventsLogistic (library)"),
+    Entry("forecast_events_future", forecastEventsFutureChecked, Some(
+      "WITH h AS (SELECT MAX(CAST(ts AS DATE)) AS last_d FROM events), " +
         "cal AS (SELECT CAST(last_d + i * INTERVAL '1 day' AS DATE) AS d, " +
         "CAST(i AS INTEGER) AS hh FROM h CROSS JOIN " +
         "generate_series(1, 7) gs(i)) " +
         "SELECT m.metric, cal.d AS date, hh AS h, 1 AS band_ok " +
         "FROM cal CROSS JOIN (VALUES ('active_users'), ('event_count'), " +
         "('value_sum')) m(metric) ORDER BY metric, date"),
-    "forecast_orders" ->
-      ("WITH days AS (SELECT DISTINCT CAST(o_orderdate AS DATE) AS d " +
+      note = "per-row checked face incl. the horizon step; full-value frame = " +
+        "forecastEventsFuture (library)"),
+    Entry("forecast_orders", forecastOrdersChecked, Some(
+      "WITH days AS (SELECT DISTINCT CAST(o_orderdate AS DATE) AS d " +
         "FROM orders), " +
         "h AS (SELECT MAX(d) AS last_d FROM days), " +
         "cal AS (SELECT d FROM days UNION ALL SELECT " +
@@ -2251,8 +2322,10 @@ object CoreQueries {
         "CASE WHEN cal.d > h.last_d THEN 1 ELSE 0 END AS is_future, " +
         "1 AS band_ok FROM cal CROSS JOIN h CROSS JOIN (VALUES " +
         "('order_count'), ('revenue')) m(metric) ORDER BY metric, date"),
-    "forecast_events_hourly" ->
-      ("WITH hrs AS (SELECT DISTINCT date_trunc('hour', ts) AS t FROM events), " +
+      note = "per-row checked face over the order-day spine + 30-day horizon; full-value frame = " +
+        "forecastOrders (library)"),
+    Entry("forecast_events_hourly", forecastEventsHourlyChecked, Some(
+      "WITH hrs AS (SELECT DISTINCT date_trunc('hour', ts) AS t FROM events), " +
         "h AS (SELECT MAX(t) AS last_t FROM hrs), " +
         "cal AS (SELECT t FROM hrs UNION ALL SELECT last_t + i * " +
         "INTERVAL '1 hour' FROM h CROSS JOIN generate_series(1, 24) gs(i)) " +
@@ -2261,8 +2334,10 @@ object CoreQueries {
         "1 AS band_ok FROM cal CROSS JOIN h CROSS JOIN (VALUES " +
         "('event_count'), ('value_sum')) m(metric) " +
         "ORDER BY metric, epoch_hour"),
-    "forecast_orders_gate" ->
-      ("WITH days AS (SELECT DISTINCT CAST(o_orderdate AS DATE) AS d " +
+      note = "per-row checked face over epoch-hour buckets; full-value frame = " +
+        "forecastEventsHourly (library)"),
+    Entry("forecast_orders_gate", forecastOrdersGate, Some(
+      "WITH days AS (SELECT DISTINCT CAST(o_orderdate AS DATE) AS d " +
         "FROM orders), " +
         "h AS (SELECT COUNT(*) AS n, MAX(d) AS last_d FROM days), " +
         "cal AS (SELECT d FROM days UNION ALL SELECT " +
@@ -2272,25 +2347,25 @@ object CoreQueries {
           "SELECT CAST(d - DATE '1970-01-01' AS BIGINT) AS ed FROM cal") +
         " SELECT m.metric, n AS n_hist, CAST(30 AS BIGINT) AS n_future, " +
         "1 AS bands_ok, cal_xor FROM h CROSS JOIN cx CROSS JOIN (VALUES " +
-        "('order_count'), ('revenue')) m(metric) ORDER BY metric"),
-    "forecast_anomalies_gate" ->
-      ("WITH days AS (SELECT DISTINCT CAST(ts AS DATE) AS d FROM events), " +
+        "('order_count'), ('revenue')) m(metric) ORDER BY metric")),
+    Entry("forecast_anomalies_gate", forecastAnomaliesGate, Some(
+      "WITH days AS (SELECT DISTINCT CAST(ts AS DATE) AS d FROM events), " +
         "h AS (SELECT COUNT(*) AS n FROM days), " +
         "cx AS " + calXorSql(
           "SELECT CAST(d - DATE '1970-01-01' AS BIGINT) AS ed FROM days") +
         " SELECT m.metric, n AS n_checked, 1 AS anom_rate_ok, cal_xor " +
         "FROM h CROSS JOIN cx CROSS JOIN (VALUES ('active_users'), " +
-        "('event_count'), ('value_sum')) m(metric) ORDER BY metric"),
-    "bucketize_events" -> s"$bucketizeSql ORDER BY 1",
-    "max_date" -> "SELECT MAX(CAST(ts AS DATE)) AS last_known_date FROM events",
-    "series_melt" ->
-      (s"WITH b AS ($bucketizeSql) " +
+        "('event_count'), ('value_sum')) m(metric) ORDER BY metric")),
+    Entry("bucketize_events", bucketizeEvents, Some(s"$bucketizeSql ORDER BY 1")),
+    Entry("max_date", maxDate, Some("SELECT MAX(CAST(ts AS DATE)) AS last_known_date FROM events")),
+    Entry("series_melt", seriesMelt, Some(
+      s"WITH b AS ($bucketizeSql) " +
         "SELECT 'event_count' AS metric, date AS ds, CAST(event_count AS DOUBLE) AS y FROM b " +
         "UNION ALL SELECT 'value_sum', date, value_sum FROM b " +
         "UNION ALL SELECT 'active_users', date, CAST(active_users AS DOUBLE) FROM b " +
-        "ORDER BY metric, ds"),
-    "series_gapfill" ->
-      ("WITH daily AS (SELECT o_orderpriority AS priority, " +
+        "ORDER BY metric, ds")),
+    Entry("series_gapfill", seriesGapfill, Some(
+      "WITH daily AS (SELECT o_orderpriority AS priority, " +
         "CAST(o_orderdate AS DATE) AS d, COUNT(*) AS n FROM orders GROUP BY 1, 2), " +
         "spine AS (SELECT priority, " +
         "unnest(generate_series(mn, mx, INTERVAL '1 day'))::DATE AS d " +
@@ -2298,21 +2373,21 @@ object CoreQueries {
         "SELECT s.priority, s.d, dy.n, " +
         "LAST_VALUE(dy.n IGNORE NULLS) OVER (PARTITION BY s.priority ORDER BY s.d " +
         "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS n_ffill " +
-        "FROM spine s LEFT JOIN daily dy USING (priority, d) ORDER BY priority, d"),
-    "future_dates" ->
-      ("SELECT CAST(last + i * INTERVAL '1 day' AS DATE) AS ds " +
+        "FROM spine s LEFT JOIN daily dy USING (priority, d) ORDER BY priority, d")),
+    Entry("future_dates", futureDates, Some(
+      "SELECT CAST(last + i * INTERVAL '1 day' AS DATE) AS ds " +
         "FROM (SELECT MAX(CAST(ts AS DATE)) AS last FROM events) " +
-        "CROSS JOIN generate_series(1, 7) AS gs(i) ORDER BY 1"),
-    "pivot_wide" ->
-      (s"WITH b AS ($bucketizeSql) " +
+        "CROSS JOIN generate_series(1, 7) AS gs(i) ORDER BY 1")),
+    Entry("pivot_wide", pivotWide, Some(
+      s"WITH b AS ($bucketizeSql) " +
         "SELECT date AS ds, CAST(active_users AS DOUBLE) AS active_users, " +
         "CAST(event_count AS DOUBLE) AS event_count, value_sum " +
-        "FROM b ORDER BY ds"),
+        "FROM b ORDER BY ds")),
     // exact integer-grain replay of q1Agg: HUGEINT sums of per-row
     // cents/disc/tax products, FLOOR(x*10^k + 0.5)/10^k rounding stated
     // in the same operation order as the Spark side
-    "q1_agg" ->
-      ("WITH g AS (SELECT l_returnflag, l_linestatus, " +
+    Entry("q1_agg", q1Agg, Some(
+      "WITH g AS (SELECT l_returnflag, l_linestatus, " +
         "SUM(l_quantity) AS qty, " +
         "SUM(CAST(ROUND(l_extendedprice * 100) AS BIGINT)) AS cents, " +
         "SUM(CAST(ROUND(l_extendedprice * 100) AS BIGINT) * " +
@@ -2333,6 +2408,13 @@ object CoreQueries {
         "FLOOR(CAST(cents AS DOUBLE) / n / 100 * 10000 + 0.5) / 10000 AS avg_price, " +
         "FLOOR(CAST(dsum AS DOUBLE) / n / 100 * 10000 + 0.5) / 10000 AS avg_disc, " +
         "n AS count_order " +
-        "FROM g ORDER BY l_returnflag, l_linestatus")
+        "FROM g ORDER BY l_returnflag, l_linestatus")),
+    Entry("forecast_backtest", forecastBacktest, None),
+    Entry("forecast_events", forecastEvents, None,
+      note = "flagship full-value forecast frame, rows-only by design (the " +
+        "fit is not SQL-expressible); calendar + band pinned by " +
+        "forecast_events_gate, values by ForecastPropertySpec + the " +
+        "snaive skill baseline"),
+    Entry("forecast_anomalies", forecastAnomalies, None)
   )
 }

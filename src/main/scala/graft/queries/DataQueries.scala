@@ -1390,73 +1390,6 @@ object DataQueries {
     finally pool.shutdown()
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "dedup_recall" -> (dedupRecall _),
-    "ann_mmr" -> (annMmr _),
-    "dedup_containment" -> (dedupContainment _),
-    "semdedup" -> (semdedup _),
-    "dedup_cluster_sizes" -> (dedupClusterSizes _),
-    "decontaminate_embedding" -> (decontaminateEmbedding _),
-    "decontaminate_embedding_lsh" -> (decontaminateEmbeddingLsh _),
-    "sample_stratified" -> (sampleStratified _),
-    "dedup_exact_normalized" -> (dedupExactNormalized _),
-    "dedup_keep_best" -> (dedupKeepBest _),
-    "cluster_kmeans" -> (clusterKmeans _),
-    "cluster_kmeans_det" -> (clusterKmeansDet _),
-    "tfidf_mllib" -> (tfidfMllib _),
-    "dedup_substring" -> (dedupSubstring _),
-    "dedup_span_coverage" -> (dedupSpanCoverage _),
-    "dedup_span_coverage_hashed" -> (dedupSpanCoverageHashed _),
-    "dedup_substring_hashed" -> (dedupSubstringHashed _),
-    "pack_batches" -> (packBatches _),
-    "salted_agg" -> (saltedAgg _),
-    "salted_join" -> (saltedJoin _),
-    "sample_split" -> (sampleSplit _),
-    "dedup_canonicalize" -> (dedupCanonicalize _),
-    "dedup_canonicalize_exact" -> (dedupCanonicalizeExact _),
-    "dedup_canonicalize_df" -> (dedupCanonicalizeDf _),
-    "mm_features" -> (mmFeatures _),
-    "mm_frames" -> (mmFrames _),
-    "mm_resize" -> (mmResize _),
-    "mm_audio" -> (mmAudio _),
-    "mm_audio_features" -> (mmAudioFeatures _),
-    "dedup_exact" -> (dedupExact _),
-    "dedup_exact_hashkeyed" -> (dedupExactHashKeyed _),
-    "dedup_ngram_jaccard" -> (dedupNgramJaccard _),
-    "dedup_ngram_jaccard_banded" -> (dedupNgramJaccardBanded _),
-    "decontaminate" -> (decontaminate _),
-    "dedup_incremental" -> (dedupIncremental _),
-    "dedup_incremental_indexed" -> (dedupIncrementalIndexed _),
-    "dedup_incremental_admit" -> (dedupIncrementalAdmit _),
-    "decontaminate_bloom" -> (decontaminateBloom _),
-    "decontaminate_bloom_gate" -> (decontaminateBloomGate _),
-    "dedup_minhash" -> (dedupMinhash _),
-    "dedup_minhash_mllib" -> (dedupMinhashMllib _),
-    "dedup_simhash" -> (dedupSimhash _),
-    "dedup_image_phash" -> (dedupImagePhash _),
-    "dedup_image_clusters" -> (dedupImageClusters _),
-    "dedup_image_admit" -> (dedupImageAdmit _),
-    "dedup_audio_admit" -> (dedupAudioAdmit _),
-    "dedup_video_admit" -> (dedupVideoAdmit _),
-    "dedup_embedding_admit" -> (dedupEmbeddingAdmit _),
-    "dedup_embedding_admit_wide" -> (dedupEmbeddingAdmitWide _),
-    "dedup_audio_fingerprint" -> (dedupAudioFingerprint _),
-    "dedup_audio_clusters" -> (dedupAudioClusters _),
-    "dedup_video_frames" -> (dedupVideoFrames _),
-    "dedup_video_clusters" -> (dedupVideoClusters _),
-    "dedup_embedding" -> (dedupEmbedding _),
-    "dedup_embedding_lsh" -> (dedupEmbeddingLsh _),
-    "ann_topk" -> (annTopk _),
-    "ann_topk_int8" -> (annTopkInt8 _),
-    "ann_topk_lsh" -> (annTopkLsh _),
-    "ann_topk_rp" -> (annTopkRp _),
-    "ann_topk_ivf" -> (annTopkIvf _),
-    "ann_topk_ivf_refined" -> (annTopkIvfRefined _),
-    "ann_topk_pq" -> (annTopkPq _),
-    "ann_topk_ivf_pq" -> (annTopkIvfPq _),
-    "ann_recall" -> (annRecall _)
-  )
-
   // mirrors Dedup.ngramJaccardPairs including the maxShingleDf=1000 cap:
   // `sizes` (full per-doc set sizes) comes from the UNCAPPED index, the
   // pair-common counts from the capped one — same as the Spark side
@@ -1929,6 +1862,40 @@ object DataQueries {
       "LEFT JOIN vag ON d.media_id = vag.media_id " +
       "ORDER BY d.media_id"
 
+  /** The dedup_embedding_admit replay — also the oracle of the streaming
+    * vector admission gate (stream_embedding_admit): raw float-array
+    * equality for the exact tier, plane-literal buckets + cross-split
+    * candidate join + exact-cosine verify for the near tier, the
+    * admission status CASE.
+    */
+  private[queries] lazy val embeddingAdmitOracle: String =
+    "WITH planes(tbl, bit, p) AS (VALUES " +
+      Similarity.lshPlanesSqlValues(64, 16, 3, 7L) + "), " +
+      "e AS (SELECT vec_id, embedding AS raw, " +
+      "CAST(embedding AS DOUBLE[]) AS v FROM embeddings), " +
+      "nrm AS (SELECT vec_id, v, sqrt(list_inner_product(v, v)) AS nv " +
+      "FROM e), " +
+      "ex AS (SELECT d.vec_id, MIN(c.vec_id) AS em FROM e d JOIN e c " +
+      "ON d.raw = c.raw AND d.vec_id % 2 = 1 AND c.vec_id % 2 = 0 " +
+      "GROUP BY 1), " +
+      "bk AS (SELECT e.vec_id, pl.tbl, " +
+      "SUM(CASE WHEN list_inner_product(e.v, pl.p) >= 0 THEN (1 << bit) " +
+      "ELSE 0 END) AS bucket FROM e CROSS JOIN planes pl GROUP BY 1, 2), " +
+      "cand AS (SELECT DISTINCT d.vec_id, c.vec_id AS c_id " +
+      "FROM bk d JOIN bk c ON d.tbl = c.tbl AND d.bucket = c.bucket " +
+      "WHERE d.vec_id % 2 = 1 AND c.vec_id % 2 = 0), " +
+      "nr AS (SELECT cand.vec_id, MIN(cand.c_id) AS nm FROM cand " +
+      "JOIN nrm a ON a.vec_id = cand.vec_id " +
+      "JOIN nrm b ON b.vec_id = cand.c_id " +
+      "WHERE list_inner_product(a.v, b.v) / (a.nv * b.nv) >= 0.45 " +
+      "GROUP BY 1) " +
+      "SELECT d.vec_id, CASE WHEN ex.em IS NOT NULL THEN 'dup_exact' " +
+      "WHEN nr.nm IS NOT NULL THEN 'dup_near' ELSE 'new' END AS status, " +
+      "COALESCE(ex.em, nr.nm) AS match_id " +
+      "FROM (SELECT vec_id FROM e WHERE vec_id % 2 = 1) d " +
+      "LEFT JOIN ex ON d.vec_id = ex.vec_id " +
+      "LEFT JOIN nr ON d.vec_id = nr.vec_id ORDER BY d.vec_id"
+
   /** The dedup_video_frames replay — also the oracle of the streaming
     * gate (`stream_video_dedup`), whose drained ingest ledger feeds the
     * SAME pair join, so batch ≡ stream by construction: sampleFrames'
@@ -2205,36 +2172,36 @@ object DataQueries {
       "FROM cov c JOIN documents d ON c.doc_id = d.doc_id " +
       "GROUP BY c.doc_id ORDER BY c.doc_id"
 
-  val oracleSql: Map[String, String] = Map(
+  val entries: Seq[Entry] = Seq(
     // same capped inverted index as dedup_ngram_jaccard; containment
     // denominators come from the UNCAPPED per-doc sizes, matching the
     // n_sh carried through Dedup.containmentPairs
-    "dedup_containment" ->
-      ("WITH " + shingleCte +
+    Entry("dedup_containment", dedupContainment, Some(
+      "WITH " + shingleCte +
         ", dirs AS (SELECT com.doc_a AS doc_sub, com.doc_b AS doc_sup, " +
         "CAST(c AS DOUBLE) / sa.n_sh AS cont " +
         "FROM com JOIN sizes sa ON sa.doc_id = com.doc_a " +
         "UNION ALL SELECT com.doc_b, com.doc_a, CAST(c AS DOUBLE) / sb.n_sh " +
         "FROM com JOIN sizes sb ON sb.doc_id = com.doc_b) " +
         "SELECT doc_sub, doc_sup, ROUND(cont, 6) AS containment " +
-        "FROM dirs WHERE cont >= 0.8 ORDER BY doc_sub, doc_sup"),
-    "sample_stratified" ->
-      ("WITH r AS (SELECT doc_id, lang, source, " +
+        "FROM dirs WHERE cont >= 0.8 ORDER BY doc_sub, doc_sup")),
+    Entry("sample_stratified", sampleStratified, Some(
+      "WITH r AS (SELECT doc_id, lang, source, " +
         "ROW_NUMBER() OVER (PARTITION BY lang " +
         "ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS rn FROM documents) " +
         "SELECT lang, CAST(rn AS BIGINT) AS rn, doc_id, source " +
-        "FROM r WHERE rn <= 20 ORDER BY lang, rn"),
-    "decontaminate_embedding" ->
-      ("WITH p AS (SELECT tr.vec_id, " +
+        "FROM r WHERE rn <= 20 ORDER BY lang, rn")),
+    Entry("decontaminate_embedding", decontaminateEmbedding, Some(
+      "WITH p AS (SELECT tr.vec_id, " +
         "list_cosine_similarity(CAST(tr.embedding AS DOUBLE[]), " +
         "CAST(te.embedding AS DOUBLE[])) AS cs " +
         "FROM (SELECT * FROM embeddings WHERE vec_id % 5 <> 0) tr " +
         "JOIN (SELECT * FROM embeddings WHERE vec_id % 5 = 0) te ON true) " +
         "SELECT vec_id, CAST(COUNT(*) AS BIGINT) AS n_test_hits, " +
         "ROUND(MAX(cs), 6) AS max_cos " +
-        "FROM p WHERE cs >= 0.45 GROUP BY vec_id ORDER BY vec_id"),
-    "dedup_keep_best" ->
-      ("WITH n AS (SELECT doc_id, n_chars, " +
+        "FROM p WHERE cs >= 0.45 GROUP BY vec_id ORDER BY vec_id")),
+    Entry("dedup_keep_best", dedupKeepBest, Some(
+      "WITH n AS (SELECT doc_id, n_chars, " +
         "trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')) AS norm " +
         "FROM documents), " +
         "r AS (SELECT doc_id, n_chars, norm, " +
@@ -2242,35 +2209,35 @@ object DataQueries {
         "COUNT(*) OVER (PARTITION BY norm) AS n_copies FROM n) " +
         "SELECT doc_id AS keep_id, CAST(n_chars AS BIGINT) AS n_chars, " +
         "CAST(n_copies AS BIGINT) AS n_copies " +
-        "FROM r WHERE rk = 1 ORDER BY keep_id"),
-    "dedup_cluster_sizes" ->
-      ("WITH n AS (SELECT doc_id, " +
+        "FROM r WHERE rk = 1 ORDER BY keep_id")),
+    Entry("dedup_cluster_sizes", dedupClusterSizes, Some(
+      "WITH n AS (SELECT doc_id, " +
         "trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')) AS norm " +
         "FROM documents), " +
         "c AS (SELECT COUNT(*) AS cluster_size FROM n GROUP BY norm) " +
         "SELECT CAST(cluster_size AS BIGINT) AS cluster_size, " +
-        "CAST(COUNT(*) AS BIGINT) AS n_clusters FROM c GROUP BY 1 ORDER BY 1"),
-    "dedup_exact_normalized" ->
-      ("WITH n AS (SELECT doc_id, " +
+        "CAST(COUNT(*) AS BIGINT) AS n_clusters FROM c GROUP BY 1 ORDER BY 1")),
+    Entry("dedup_exact_normalized", dedupExactNormalized, Some(
+      "WITH n AS (SELECT doc_id, " +
         "trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')) AS norm " +
         "FROM documents) " +
         "SELECT MIN(doc_id) AS keep_id, CAST(COUNT(*) AS BIGINT) AS n_copies " +
-        "FROM n GROUP BY norm ORDER BY keep_id"),
+        "FROM n GROUP BY norm ORDER BY keep_id")),
     // full replay of Dedup.incremental over the parity split: same
     // normalization as dedup_exact_normalized, same shingle/df-cap/
     // Jaccard conventions as decontaminate (cap on the CORPUS index,
     // sizes from the uncapped sets)
-    "dedup_incremental" -> incrementalOracle,
+    Entry("dedup_incremental", dedupIncremental, Some(incrementalOracle)),
     // the indexed form is the same classification through a stored
     // bucketed index — identical output, so the SAME oracle checks it
-    "dedup_incremental_indexed" -> incrementalOracle,
-    "dedup_incremental_admit" -> incrementalAdmitOracle,
+    Entry("dedup_incremental_indexed", dedupIncrementalIndexed, Some(incrementalOracle)),
+    Entry("dedup_incremental_admit", dedupIncrementalAdmit, Some(incrementalAdmitOracle)),
     // replays packGreedy's next-fit recurrence exactly: same group label
     // (doc_id % 8), same id order, same BPE-ish token weights (the
     // text_bpe_tokens expression), advancing one doc per group per
     // recursion step
-    "pack_batches" ->
-      ("WITH RECURSIVE d AS (SELECT CAST(doc_id % 8 AS INT) AS part_id, " +
+    Entry("pack_batches", packBatches, Some(
+      "WITH RECURSIVE d AS (SELECT CAST(doc_id % 8 AS INT) AS part_id, " +
         "CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]+')) " +
         "AS BIGINT) AS w, " +
         "CAST(ROW_NUMBER() OVER (PARTITION BY doc_id % 8 ORDER BY doc_id) AS INT) AS r " +
@@ -2282,47 +2249,47 @@ object DataQueries {
         "FROM st s JOIN d ON d.part_id = s.part_id AND d.r = s.r + 1) " +
         "SELECT part_id, CAST(batch AS INT) AS batch_idx, " +
         "CAST(COUNT(*) AS BIGINT) AS n_docs, CAST(SUM(w) AS BIGINT) AS token_sum " +
-        "FROM st GROUP BY 1, 2 ORDER BY 1, 2"),
+        "FROM st GROUP BY 1, 2 ORDER BY 1, 2")),
     // the hashed twin outputs no hashes, so the SAME oracle checks it
     // (collision risk ~n_windows^2/2^65 — see substringDupCoverageHashed)
-    "dedup_span_coverage_hashed" -> spanCoverageOracle,
-    "dedup_span_coverage" -> spanCoverageOracle,
-    "dedup_substring" ->
-      ("SELECT span, CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS n_docs FROM (" +
+    Entry("dedup_span_coverage_hashed", dedupSpanCoverageHashed, Some(spanCoverageOracle)),
+    Entry("dedup_span_coverage", dedupSpanCoverage, Some(spanCoverageOracle)),
+    Entry("dedup_substring", dedupSubstring, Some(
+      "SELECT span, CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS n_docs FROM (" +
         "SELECT doc_id, substr(text, CAST(i AS INT), 24) AS span FROM (" +
         "SELECT doc_id, text, unnest(generate_series(1, length(text) - 23)) AS i " +
         "FROM documents WHERE length(text) >= 24)) " +
-        "GROUP BY span HAVING COUNT(DISTINCT doc_id) >= 2 ORDER BY span"),
-    "salted_agg" ->
-      ("SELECT event_type, ROUND(SUM(value), 2) AS value_sum, COUNT(value) AS n " +
-        "FROM events GROUP BY event_type ORDER BY event_type"),
-    "salted_join" ->
-      ("SELECT s_nationkey, COUNT(*) AS n_items, " +
+        "GROUP BY span HAVING COUNT(DISTINCT doc_id) >= 2 ORDER BY span")),
+    Entry("salted_agg", saltedAgg, Some(
+      "SELECT event_type, ROUND(SUM(value), 2) AS value_sum, COUNT(value) AS n " +
+        "FROM events GROUP BY event_type ORDER BY event_type")),
+    Entry("salted_join", saltedJoin, Some(
+      "SELECT s_nationkey, COUNT(*) AS n_items, " +
         "ROUND(SUM(l_extendedprice), 2) AS revenue " +
         "FROM lineitem JOIN supplier ON l_suppkey = s_suppkey " +
-        "GROUP BY s_nationkey ORDER BY s_nationkey"),
-    "dedup_exact" ->
-      ("SELECT MIN(doc_id) AS doc_id, COUNT(*) AS n_copies FROM documents " +
-        "GROUP BY text ORDER BY doc_id"),
-    "dedup_exact_hashkeyed" ->
-      ("SELECT MIN(doc_id) AS doc_id, COUNT(*) AS n_copies FROM documents " +
-        "GROUP BY text ORDER BY doc_id"),
-    "dedup_ngram_jaccard" ->
-      ("WITH " + shingleCte +
+        "GROUP BY s_nationkey ORDER BY s_nationkey")),
+    Entry("dedup_exact", dedupExact, Some(
+      "SELECT MIN(doc_id) AS doc_id, COUNT(*) AS n_copies FROM documents " +
+        "GROUP BY text ORDER BY doc_id")),
+    Entry("dedup_exact_hashkeyed", dedupExactHashKeyed, Some(
+      "SELECT MIN(doc_id) AS doc_id, COUNT(*) AS n_copies FROM documents " +
+        "GROUP BY text ORDER BY doc_id")),
+    Entry("dedup_ngram_jaccard", dedupNgramJaccard, Some(
+      "WITH " + shingleCte +
         "SELECT doc_a, doc_b, ROUND(jc, 6) AS jaccard FROM (" +
         "SELECT doc_a, doc_b, " +
         "CAST(c AS DOUBLE) / (sa.n_sh + sb.n_sh - c) AS jc " +
         "FROM com JOIN sizes sa ON doc_a = sa.doc_id " +
         "JOIN sizes sb ON doc_b = sb.doc_id) WHERE jc >= 0.5 " +
-        "ORDER BY doc_a, doc_b"),
+        "ORDER BY doc_a, doc_b")),
     // UNCAPPED exact Jaccard (the banded path's verify computes true
     // |A∩B| from the full shingle sets — no df cap): pairs sharing >= 1
     // shingle with true jaccard >= 0.5. Banding recall at the threshold
     // is 1 - (1 - j^2)^32 >= 0.9999 per pair and DETERMINISTIC
     // (xxhash64), so the fixture result is stable; DedupSpec pins exact
     // agreement with the uncapped operator on the same data.
-    "dedup_ngram_jaccard_banded" ->
-      ("WITH toks AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents), " +
+    Entry("dedup_ngram_jaccard_banded", dedupNgramJaccardBanded, Some(
+      "WITH toks AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents), " +
         "sh AS (SELECT doc_id, unnest(CASE WHEN len(w) < 3 THEN []::VARCHAR[] " +
         "ELSE list_distinct(list_transform(generate_series(1, len(w) - 2), " +
         "i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) END) AS shingle FROM toks), " +
@@ -2335,30 +2302,31 @@ object DataQueries {
         "CAST(c AS DOUBLE) / (sa.n_sh + sb.n_sh - c) AS jc " +
         "FROM com JOIN sizes sa ON doc_a = sa.doc_id " +
         "JOIN sizes sb ON doc_b = sb.doc_id) WHERE jc >= 0.5 " +
-        "ORDER BY doc_a, doc_b"),
+        "ORDER BY doc_a, doc_b")),
     // connected components as a recursive transitive closure (edge lists
     // are tiny relative to the corpus: only near-dup pairs), then the same
     // exact-dup collapse + min-id-canonical filter as the Spark side.
     // The same SQL oracles BOTH CC implementations (GraphX + DataFrame).
-    "dedup_canonicalize_exact" -> canonicalizeOracle,
-    "dedup_canonicalize_df" -> canonicalizeOracle,
-    "decontaminate" ->
-      ("WITH " + shingleCte +
+    Entry("dedup_canonicalize_exact", dedupCanonicalizeExact, Some(canonicalizeOracle)),
+    Entry("dedup_canonicalize_df", dedupCanonicalizeDf, Some(canonicalizeOracle)),
+    Entry("decontaminate", decontaminate, Some(
+      "WITH " + shingleCte +
         ", tr AS (SELECT doc_id AS train_id, shingle FROM shf WHERE doc_id % 5 <> 4), " +
         "te AS (SELECT doc_id AS test_id, shingle FROM shf WHERE doc_id % 5 = 4), " +
         "ov AS (SELECT test_id, train_id, COUNT(*) AS c FROM te JOIN tr USING (shingle) " +
         "GROUP BY 1, 2 HAVING COUNT(*) >= 5) " +
         "SELECT test_id AS doc_id, COUNT(DISTINCT train_id) AS n_train_matches, " +
-        "MAX(c) AS max_common FROM ov GROUP BY 1 ORDER BY 1"),
-    "dedup_embedding" ->
-      ("SELECT vec_a, vec_b, ROUND(cs, 6) AS cos FROM (" +
+        "MAX(c) AS max_common FROM ov GROUP BY 1 ORDER BY 1")),
+    Entry("dedup_embedding", dedupEmbedding, Some(
+      "SELECT vec_a, vec_b, ROUND(cs, 6) AS cos FROM (" +
         "SELECT a.vec_id AS vec_a, b.vec_id AS vec_b, " +
         "list_cosine_similarity(CAST(a.embedding AS DOUBLE[]), " +
         "CAST(b.embedding AS DOUBLE[])) AS cs " +
         "FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id) " +
         "WHERE cs >= 0.45 ORDER BY vec_a, vec_b"),
-    "ann_topk" ->
-      ("SELECT query_id, rn AS rank, vec_id, ROUND(cs, 6) AS cos FROM (" +
+      note = "quarantined brute-force oracle anchor; scale path = dedup_embedding_lsh / semdedup"),
+    Entry("ann_topk", annTopk, Some(
+      "SELECT query_id, rn AS rank, vec_id, ROUND(cs, 6) AS cos FROM (" +
         "SELECT q.vec_id AS query_id, c.vec_id AS vec_id, " +
         "list_cosine_similarity(CAST(q.embedding AS DOUBLE[]), " +
         "CAST(c.embedding AS DOUBLE[])) AS cs, " +
@@ -2367,91 +2335,134 @@ object DataQueries {
         "CAST(c.embedding AS DOUBLE[])) DESC, c.vec_id) AS rn " +
         "FROM embeddings q JOIN embeddings c ON c.vec_id <> q.vec_id " +
         "WHERE q.vec_id < 10) WHERE rn <= 5 ORDER BY query_id, rank"),
+      note = "quarantined brute-force oracle anchor; scale paths = ann_topk_{lsh,ivf,pq,...}"),
     // Full fingerprint replay of Dedup.simhashDeterministic: same two
     // polynomial token hashes, same 64 multiply-shift projections, same
     // 16-bit-limb mulmod (DuckDB BIGINT doesn't wrap, so every
     // intermediate must stay < 2^63 in BOTH engines). The fingerprint is
     // carried as two 32-bit halves because DuckDB errors on 1<<63.
-    "dedup_simhash" ->
-      ("WITH " + simhashFpCte +
+    Entry("dedup_simhash", dedupSimhash, Some(
+      "WITH " + simhashFpCte +
         " SELECT doc_a, doc_b, CAST(hamming AS INTEGER) AS hamming FROM (" +
         "SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, " +
         "bit_count(xor(a.lo, b.lo)) + bit_count(xor(a.hi, b.hi)) AS hamming " +
         "FROM fp a JOIN fp b ON a.doc_id < b.doc_id) " +
-        "WHERE hamming <= 3 ORDER BY doc_a, doc_b"),
+        "WHERE hamming <= 3 ORDER BY doc_a, doc_b")),
     // dedup_image_phash replay: the banded Spark pair set equals the
     // full filtered join by the pigeonhole guarantee (<= 3 mismatches
     // across 4 chunks) — shared fingerprint CTEs in imagePhashCtes
-    "dedup_image_phash" ->
-      ("WITH " + imagePhashCtes +
+    Entry("dedup_image_phash", dedupImagePhash, Some(
+      "WITH " + imagePhashCtes +
         " SELECT doc_a, doc_b, CAST(hamming AS INTEGER) AS hamming " +
         s"FROM ($imagePhashPairsSql) " +
         "WHERE hamming <= 3 ORDER BY doc_a, doc_b"),
+      note = "image near-dup: REAL netpbm decode + 9x8 luma resample -> " +
+        "64-bit dHash -> the SimHash pigeonhole banding (never " +
+        "all-pairs); fixtures add brightness/jitter perceptual-dup " +
+        "variants so the gate has real positives and negatives"),
     // dedup_image_clusters replay: the same fingerprints + pair set fed
     // through the shared recursive-CTE min-label closure (the
     // canonicalize precedent), then per-cluster member/original counts
-    "dedup_image_clusters" ->
-      ("WITH RECURSIVE " + imagePhashCtes +
+    Entry("dedup_image_clusters", dedupImageClusters, Some(
+      "WITH RECURSIVE " + imagePhashCtes +
         s", pairs AS (SELECT doc_a, doc_b FROM ($imagePhashPairsSql) " +
         "WHERE hamming <= 3)" + mediaClustersTail(1000000L)),
+      note = "phash fingerprints through the exact-first collapse + banding " +
+        "over DISTINCT fingerprints + frontier CC " +
+        "(DedupClusters.fingerprintComponents); per-cluster " +
+        "member/original counts, recursive-CTE oracle; 2.2x under " +
+        "30x at x30 (was 8.1x before the collapse)"),
     // dedup_image_admit replay: the same fingerprint CTEs split into
     // corpus (even originals) and delta, the banded delta-vs-corpus join
     // restated as the full filtered join (pigeonhole guarantee), then
     // the incremental status CASE with min-corpus-id match selection
-    "dedup_image_admit" -> imageAdmitOracle,
+    Entry("dedup_image_admit", dedupImageAdmit, Some(imageAdmitOracle),
+      note = "incremental admission on the MEDIA grain (text had it since " +
+        "round 11): delta images vs the stored corpus fingerprints " +
+        "via the pigeonhole delta-vs-corpus band join " +
+        "(Dedup.hammingJoin — never all-pairs, corpus never " +
+        "re-fingerprinted); dup_exact / dup_near / new statuses, the " +
+        "Dedup.incremental convention"),
     // dedup_audio_admit replay: the image-admit composition over the
     // audio fingerprint CTEs (corpus boundary 3e6 — below the gain /
     // noise variant offsets)
-    "dedup_audio_admit" -> audioAdmitOracle,
+    Entry("dedup_audio_admit", dedupAudioAdmit, Some(audioAdmitOracle),
+      note = "incremental admission on the audio grain — dedup_image_admit's " +
+        "composition over the volume-invariant energy-gradient " +
+        "fingerprints (gain variants of corpus clips classify exact); " +
+        "with the image and video admits, nightly admission covers " +
+        "every media grain"),
     // dedup_video_admit replay: the frame-key CTEs split at the corpus
     // boundary (5e6 — below the re-encode offset), the (frame_idx,
     // fh)-keyed join, agreement counts, and the tiered status CASE
-    "dedup_video_admit" -> videoAdmitOracle,
+    Entry("dedup_video_admit", dedupVideoAdmit, Some(videoAdmitOracle),
+      note = "incremental admission on the video grain: tiers follow the " +
+        "frame-AGREEMENT count against the stored (frame_idx, hash) " +
+        "index (4/4 exact, 2-3 near, else new) — video identity is a " +
+        "pair predicate, so a Hamming radius doesn't apply; 4 join " +
+        "keys per delta video, corpus never re-fingerprinted"),
     // dedup_audio_fingerprint replay: samples restated from the text
     // bytes ((byte - 79) * amp + jitter), 65 exact integer frame
     // energies, gradient bits, lo/hi halves — the image-phash pattern
     // on the time axis; full filtered join == banded set (pigeonhole)
-    "dedup_audio_fingerprint" ->
-      ("WITH " + audioFpCtes +
+    Entry("dedup_audio_fingerprint", dedupAudioFingerprint, Some(
+      "WITH " + audioFpCtes +
         " SELECT doc_a, doc_b, CAST(hamming AS INTEGER) AS hamming " +
         s"FROM ($audioFpPairsSql) " +
         "WHERE hamming <= 3 ORDER BY doc_a, doc_b"),
+      note = "audio near-dup: REAL WAV/PCM decode -> 65 exact integer " +
+        "frame energies -> 64 gradient bits (volume-invariant) -> " +
+        "the same pigeonhole banding; gain variants pair at Hamming " +
+        "0, jitter variants at small positive Hamming"),
     // dedup_audio_clusters replay: the same fingerprints + pair set fed
     // through the shared recursive min-label closure + cluster counts
     // (exactly the image-clusters composition on the audio grain;
     // originals are media_id < 3e6 — below the gain/noise offsets)
-    "dedup_audio_clusters" ->
-      ("WITH RECURSIVE " + audioFpCtes +
+    Entry("dedup_audio_clusters", dedupAudioClusters, Some(
+      "WITH RECURSIVE " + audioFpCtes +
         s", pairs AS (SELECT doc_a, doc_b FROM ($audioFpPairsSql) " +
         "WHERE hamming <= 3)" + mediaClustersTail(3000000L)),
+      note = "the audio job-shape summary: fingerprints through the " +
+        "exact-first collapse + banded frontier CC " +
+        "(fingerprintComponents — gain variants share fingerprints, " +
+        "exercising the collapse for real); per-cluster " +
+        "member/original counts, recursive-CTE oracle"),
     // dedup_video_frames replay: sampleFrames' evenly-spaced offsets
     // (floor((len-64)*i/3), 0 when the payload fits one window), the
     // frame slice, the mod-2^64 polynomial fold (HUGEINT space, wrapped
     // back to signed — the dedup_substring_hashed rendering), and the
     // >= 2-common-frames match count
-    "dedup_video_frames" -> videoFramesOracle,
+    Entry("dedup_video_frames", dedupVideoFrames, Some(videoFramesOracle),
+      note = "video near-dup: sampleFrames' evenly spaced windows -> " +
+        "mod-2^64 frame fold -> (frame_idx, hash)-keyed join, match " +
+        "at >= 2 of 4 shared frames; re-encode variants share " +
+        "exactly the unbroken frames"),
     // dedup_video_clusters replay: the >= 2-common-frames pair set fed
     // through the same shared closure + cluster counts (originals are
     // media_id < 5e6 — below the re-encode offset)
-    "dedup_video_clusters" ->
-      ("WITH RECURSIVE " + videoFrameCtes +
+    Entry("dedup_video_clusters", dedupVideoClusters, Some(
+      "WITH RECURSIVE " + videoFrameCtes +
         s", pairs AS (SELECT doc_a, doc_b FROM ($videoPairsSql) " +
         "WHERE n_common >= 2)" + mediaClustersTail(5000000L)),
+      note = "the video job-shape summary: the >= 2-of-4 frame pair set " +
+        "through frontier CC + cluster counts (no fingerprint " +
+        "collapse — video identity is a pair predicate, not one " +
+        "64-bit value); recursive-CTE oracle"),
     // Same SimHash fingerprints feeding the canonicalize pipeline: pairs
     // at Hamming <= 3, transitive closure via recursive CTE, exact-dup
     // collapse — the DuckDB replay of GraphX Pregel CC over
     // simhashPairsDeterministic.
-    "dedup_canonicalize" ->
-      ("WITH RECURSIVE " + simhashFpCte +
+    Entry("dedup_canonicalize", dedupCanonicalize, Some(
+      "WITH RECURSIVE " + simhashFpCte +
         ", pairs AS (SELECT doc_a, doc_b FROM (" +
         "SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, " +
         "bit_count(xor(a.lo, b.lo)) + bit_count(xor(a.hi, b.hi)) AS hamming " +
         "FROM fp a JOIN fp b ON a.doc_id < b.doc_id) WHERE hamming <= 3)" +
-        canonicalizeTail),
+        canonicalizeTail)),
     // RollingWindowHashExpr replay: same mod-2^64 polynomial as
     // text_rolling_hash, computed per 24-char window in HUGEINT space.
-    "dedup_substring_hashed" ->
-      ("WITH pos AS (SELECT doc_id, text, " +
+    Entry("dedup_substring_hashed", dedupSubstringHashed, Some(
+      "WITH pos AS (SELECT doc_id, text, " +
         "unnest(generate_series(1, length(text) - 23)) AS i " +
         "FROM documents WHERE length(text) >= 24), " +
         "h AS (SELECT doc_id, list_reduce(list_prepend(0::HUGEINT, " +
@@ -2461,13 +2472,13 @@ object DataQueries {
         "hs AS (SELECT doc_id, CAST(CASE WHEN v >= 9223372036854775808::HUGEINT " +
         "THEN v - 18446744073709551616::HUGEINT ELSE v END AS BIGINT) AS span_hash FROM h) " +
         "SELECT span_hash, COUNT(DISTINCT doc_id) AS n_docs FROM hs GROUP BY 1 " +
-        "HAVING COUNT(DISTINCT doc_id) >= 2 ORDER BY span_hash"),
+        "HAVING COUNT(DISTINCT doc_id) >= 2 ORDER BY span_hash")),
     // lshBuckets replay: the seeded hyperplanes are plan-time literals,
     // re-rendered into the SQL by Similarity.lshPlanesSqlValues, so
     // DuckDB recomputes every bucket bit, the candidate join, and the
     // exact-cosine rank. lshTopK defaults: 16 tables x 4 bits, seed 7.
-    "ann_topk_lsh" ->
-      ("WITH planes(tbl, bit, p) AS (VALUES " +
+    Entry("ann_topk_lsh", annTopkLsh, Some(
+      "WITH planes(tbl, bit, p) AS (VALUES " +
         Similarity.lshPlanesSqlValues(64, 16, 4, 7L) + "), " +
         "e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings), " +
         "bk AS (SELECT e.vec_id, pl.tbl, " +
@@ -2482,7 +2493,7 @@ object DataQueries {
         "SELECT query_id, rn AS rank, vec_id, ROUND(cs, 6) AS cos FROM (" +
         "SELECT query_id, vec_id, cs, ROW_NUMBER() OVER (PARTITION BY query_id " +
         "ORDER BY cs DESC, vec_id) AS rn FROM scored) " +
-        "WHERE rn <= 5 ORDER BY query_id, rank"),
+        "WHERE rn <= 5 ORDER BY query_id, rank")),
     // embeddingCosinePairsLsh replay — the salted form: plane-literal
     // buckets (bits auto-sizes to 3 at both graded scales; a fixture
     // regeneration that changes it fails the hash loudly), per-bucket
@@ -2491,7 +2502,7 @@ object DataQueries {
     // XXH64.hashInt(tbl, 42) — constant per table, precomputed here and
     // joined as a VALUES lookup — into the HUGEINT hashLong expansion
     // with a per-row seed.
-    "dedup_embedding_lsh" -> {
+    Entry("dedup_embedding_lsh", dedupEmbeddingLsh, Some({
       import org.apache.spark.sql.catalyst.expressions.XXH64
       val seedRows = (0 until 16).map { t =>
         val h = BigInt(XXH64.hashInt(t, 42L)).mod(BigInt(2).pow(64))
@@ -2523,44 +2534,25 @@ object DataQueries {
         "JOIN nrm y ON y.vec_id = p.vec_b) " +
         "SELECT DISTINCT vec_a, vec_b, ROUND(cs, 6) AS cos FROM scored " +
         "WHERE cs >= 0.45 ORDER BY vec_a, vec_b"
-    },
-    // dedup_embedding_admit replay: raw float-array equality for the
-    // exact tier, plane-literal buckets + cross-split candidate join +
-    // exact-cosine verify for the near tier, the admission status CASE
-    "dedup_embedding_admit" ->
-      ("WITH planes(tbl, bit, p) AS (VALUES " +
-        Similarity.lshPlanesSqlValues(64, 16, 3, 7L) + "), " +
-        "e AS (SELECT vec_id, embedding AS raw, " +
-        "CAST(embedding AS DOUBLE[]) AS v FROM embeddings), " +
-        "nrm AS (SELECT vec_id, v, sqrt(list_inner_product(v, v)) AS nv " +
-        "FROM e), " +
-        "ex AS (SELECT d.vec_id, MIN(c.vec_id) AS em FROM e d JOIN e c " +
-        "ON d.raw = c.raw AND d.vec_id % 2 = 1 AND c.vec_id % 2 = 0 " +
-        "GROUP BY 1), " +
-        "bk AS (SELECT e.vec_id, pl.tbl, " +
-        "SUM(CASE WHEN list_inner_product(e.v, pl.p) >= 0 THEN (1 << bit) " +
-        "ELSE 0 END) AS bucket FROM e CROSS JOIN planes pl GROUP BY 1, 2), " +
-        "cand AS (SELECT DISTINCT d.vec_id, c.vec_id AS c_id " +
-        "FROM bk d JOIN bk c ON d.tbl = c.tbl AND d.bucket = c.bucket " +
-        "WHERE d.vec_id % 2 = 1 AND c.vec_id % 2 = 0), " +
-        "nr AS (SELECT cand.vec_id, MIN(cand.c_id) AS nm FROM cand " +
-        "JOIN nrm a ON a.vec_id = cand.vec_id " +
-        "JOIN nrm b ON b.vec_id = cand.c_id " +
-        "WHERE list_inner_product(a.v, b.v) / (a.nv * b.nv) >= 0.45 " +
-        "GROUP BY 1) " +
-        "SELECT d.vec_id, CASE WHEN ex.em IS NOT NULL THEN 'dup_exact' " +
-        "WHEN nr.nm IS NOT NULL THEN 'dup_near' ELSE 'new' END AS status, " +
-        "COALESCE(ex.em, nr.nm) AS match_id " +
-        "FROM (SELECT vec_id FROM e WHERE vec_id % 2 = 1) d " +
-        "LEFT JOIN ex ON d.vec_id = ex.vec_id " +
-        "LEFT JOIN nr ON d.vec_id = nr.vec_id ORDER BY d.vec_id"),
+    })),
+    Entry("dedup_embedding_admit", dedupEmbeddingAdmit, Some(embeddingAdmitOracle),
+      note = "incremental admission on the VECTOR grain, closing the family " +
+        "across every ingested representation: dup_exact = " +
+        "bit-identical corpus embedding (raw array equality — complete, " +
+        "not LSH-bounded), dup_near = shared plane-literal LSH bucket + " +
+        "exact cosine >= 0.45; spec pins exact completeness, near " +
+        "soundness, and a recall floor vs brute-force truth; bucket " +
+        "bits come from the SHARED Similarity.autoBits (graded corpora " +
+        "land in the spec-pinned 3-bit regime matching the oracle's " +
+        "plane literals; a hard bits=3 pin was tried and reverted — it " +
+        "re-created the quadratic-bucket cost at x30, 11.1s -> 26.1s)"),
     // dedup_embedding_admit_wide replay: the >3-bit auto-sizing regime.
     // The corpus is the 16x id-shifted replication of even vec_ids < 500
     // (EXACTLY 4000 vectors at every SF), so Similarity.autoBits picks 4
     // bits on the Spark side and these plane literals are the SAME 4-bit
     // hyperplanes — the auto-sized plan replays as plan-time constants.
-    "dedup_embedding_admit_wide" ->
-      ("WITH planes(tbl, bit, p) AS (VALUES " +
+    Entry("dedup_embedding_admit_wide", dedupEmbeddingAdmitWide, Some(
+      "WITH planes(tbl, bit, p) AS (VALUES " +
         Similarity.lshPlanesSqlValues(64, 16, 4, 7L) + "), " +
         "e AS (SELECT vec_id, embedding AS raw, " +
         "CAST(embedding AS DOUBLE[]) AS v FROM embeddings WHERE vec_id < 500), " +
@@ -2590,10 +2582,18 @@ object DataQueries {
         "FROM (SELECT vec_id FROM d) dq " +
         "LEFT JOIN ex ON dq.vec_id = ex.vec_id " +
         "LEFT JOIN nr ON dq.vec_id = nr.vec_id ORDER BY dq.vec_id"),
+      note = "the AUTO-BITS >3-bit regime under oracle: corpus = 16x " +
+        "id-shifted replication of even vec_ids < 500 (exactly 4000 " +
+        "vectors at every SF by construction), so Similarity.autoBits " +
+        "picks 4 bits and the oracle replays the 4-bit hyperplanes as " +
+        "plan-time literals — closing round 14's \"formula proven only " +
+        "in the 3-bit regime\" gap; DedupSpec pins auto == explicit-4 " +
+        "and the shrinking candidate volume, StreamGatesSpec runs the " +
+        "same regime through the streaming core"),
     // decontaminateEmbeddingLsh replay: plane-literal buckets (16 tables
     // x 3 bits, seed 7), cross-split candidate join, exact-cosine verify.
-    "decontaminate_embedding_lsh" ->
-      ("WITH planes(tbl, bit, p) AS (VALUES " +
+    Entry("decontaminate_embedding_lsh", decontaminateEmbeddingLsh, Some(
+      "WITH planes(tbl, bit, p) AS (VALUES " +
         Similarity.lshPlanesSqlValues(64, 16, 3, 7L) + "), " +
         "e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings), " +
         "bk AS (SELECT e.vec_id, pl.tbl, " +
@@ -2607,12 +2607,12 @@ object DataQueries {
         "JOIN e b ON b.vec_id = cand.t_id) " +
         "SELECT vec_id, CAST(COUNT(*) AS BIGINT) AS n_test_hits, " +
         "ROUND(MAX(cs), 6) AS max_cos " +
-        "FROM scored WHERE cs >= 0.45 GROUP BY vec_id ORDER BY vec_id"),
+        "FROM scored WHERE cs >= 0.45 GROUP BY vec_id ORDER BY vec_id")),
     // semDedup replay: unit-normalize, xxhash64-seeded spherical cells
     // (auto-sized GREATEST(16, LEAST(2^16, n/250)) like the Scala side),
     // nprobe=3 assignment, within-cell cosine pairs, keep-min collapse.
-    "semdedup" ->
-      ("WITH hashes AS (SELECT vec_id, xxh FROM (" +
+    Entry("semdedup", semdedup, Some(
+      "WITH hashes AS (SELECT vec_id, xxh FROM (" +
         xxhash64LongSql("SELECT vec_id FROM embeddings", "vec_id") + ")), " +
         "e0 AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings), " +
         "nrm AS (SELECT vec_id, v, GREATEST(sqrt(list_inner_product(v, v)), " +
@@ -2636,13 +2636,13 @@ object DataQueries {
         "FROM cells a JOIN cells b ON a.cell = b.cell AND a.vec_id > b.vec_id " +
         "WHERE list_inner_product(a.v, b.v) / (a.nv * b.nv) >= 0.45) " +
         "SELECT removed_id, MIN(kept_cand) AS kept_id, ROUND(MAX(cos), 6) AS max_cos " +
-        "FROM pairs GROUP BY removed_id ORDER BY removed_id"),
+        "FROM pairs GROUP BY removed_id ORDER BY removed_id")),
     // ivfTopK replay (refineIters = 0, the registered form): centroid
     // pick = 16 smallest (xxhash64(vec_id), vec_id) via the HUGEINT
     // xxhash64 expansion, then L2 assignment, nprobe=4 probing, and the
     // exact-cosine rank — every stage deterministic SQL.
-    "ann_topk_ivf" ->
-      ("WITH hashes AS (SELECT vec_id, xxh FROM (" +
+    Entry("ann_topk_ivf", annTopkIvf, Some(
+      "WITH hashes AS (SELECT vec_id, xxh FROM (" +
         xxhash64LongSql("SELECT vec_id FROM embeddings", "vec_id") + ")), " +
         "e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings), " +
         "cents AS (SELECT e.vec_id AS centroid_id, e.v AS ce FROM e " +
@@ -2667,22 +2667,22 @@ object DataQueries {
         "SELECT query_id, rn AS rank, vec_id, ROUND(cs, 6) AS cos FROM (" +
         "SELECT query_id, vec_id, cs, ROW_NUMBER() OVER (PARTITION BY query_id " +
         "ORDER BY cs DESC, vec_id) AS rn FROM scored) " +
-        "WHERE rn <= 5 ORDER BY query_id, rank"),
+        "WHERE rn <= 5 ORDER BY query_id, rank")),
     // pqTopK replay: detMean-deterministic Lloyd training (see
     // pqReplayCtes), full-corpus encode, all-pairs ADC scan folded in
     // subspace order, top-80 candidates, exact-cosine top-5. The
     // twoPhaseRank salting on the Spark side is lossless, so a single
     // global ADC rank replays it exactly.
-    "ann_topk_pq" ->
-      ("WITH " + pqReplayCtes + ", " +
+    Entry("ann_topk_pq", annTopkPq, Some(
+      "WITH " + pqReplayCtes + ", " +
         "adc AS MATERIALIZED (SELECT q.query_id, c.vec_id, " +
         "list_reduce(list(q.d ORDER BY q.sp), (x, y) -> x + y) AS adc " +
         "FROM codes c JOIN qd q ON q.sp = c.sp AND q.cid = c.code " +
-        "AND c.vec_id <> q.query_id GROUP BY 1, 2), " + pqRankTail),
+        "AND c.vec_id <> q.query_id GROUP BY 1, 2), " + pqRankTail)),
     // ivfPqTopK replay: hash-picked IVF cells bound the candidate pairs
     // (assign rk=1, probes rk<=4), then the same ADC fold and re-rank.
-    "ann_topk_ivf_pq" ->
-      ("WITH " + pqReplayCtes + ", " +
+    Entry("ann_topk_ivf_pq", annTopkIvfPq, Some(
+      "WITH " + pqReplayCtes + ", " +
         "cents AS MATERIALIZED (SELECT e.vec_id AS centroid_id, e.v AS ce FROM e " +
         "JOIN hashes USING (vec_id) ORDER BY xxh, vec_id LIMIT 16), " +
         "assign AS MATERIALIZED (SELECT vec_id, centroid_id FROM (" +
@@ -2703,11 +2703,11 @@ object DataQueries {
         "list_reduce(list(q.d ORDER BY q.sp), (x, y) -> x + y) AS adc " +
         "FROM pairs pr JOIN codes c ON c.vec_id = pr.vec_id " +
         "JOIN qd q ON q.query_id = pr.query_id AND q.sp = c.sp " +
-        "AND q.cid = c.code GROUP BY 1, 2), " + pqRankTail),
+        "AND q.cid = c.code GROUP BY 1, 2), " + pqRankTail)),
     // ivfTopK(refineIters=2) replay — see ivfRefinedSql.
-    "ann_topk_ivf_refined" -> ivfRefinedSql,
+    Entry("ann_topk_ivf_refined", annTopkIvfRefined, Some(ivfRefinedSql)),
     // kmeansDet replay — see kmeansDetSql (full per-vector assignment).
-    "cluster_kmeans_det" -> kmeansDetSql,
+    Entry("cluster_kmeans_det", clusterKmeansDet, Some(kmeansDetSql)),
     // Bloom-gate replay: the exact (uncapped) semi-join count is
     // recomputed; superset_ok / fp_bound_ok are the bloom's one-sided-
     // error guarantees stated as constants (see decontaminateBloomGate).
@@ -2716,7 +2716,7 @@ object DataQueries {
     // chained-xxhash64 seeds VALUES (the dedup_embedding_lsh precedent),
     // pmod 2^20, all-k membership against the test position set, per-doc
     // count >= 5 — false positives and all
-    "decontaminate_bloom" -> {
+    Entry("decontaminate_bloom", decontaminateBloom, Some({
       import org.apache.spark.sql.catalyst.expressions.XXH64
       val m64 = "18446744073709551616::HUGEINT"
       val seedRows = (0 until 5).map { i =>
@@ -2745,19 +2745,19 @@ object DataQueries {
         "SELECT doc_id AS train_id, CAST(COUNT(*) AS BIGINT) " +
         "AS n_test_shingles FROM hit GROUP BY 1 HAVING COUNT(*) >= 5 " +
         "ORDER BY train_id"
-    },
-    "decontaminate_bloom_gate" ->
-      ("WITH " + shingleCte +
+    })),
+    Entry("decontaminate_bloom_gate", decontaminateBloomGate, Some(
+      "WITH " + shingleCte +
         ", teu AS (SELECT DISTINCT shingle FROM sh WHERE doc_id % 5 = 4), " +
         "trx AS (SELECT doc_id FROM sh JOIN teu USING (shingle) " +
         "WHERE doc_id % 5 <> 4 GROUP BY 1 HAVING COUNT(*) >= 5) " +
         "SELECT CAST(COUNT(*) AS BIGINT) AS n_exact_flagged, " +
-        "1 AS superset_ok, 1 AS fp_bound_ok FROM trx"),
+        "1 AS superset_ok, 1 AS fp_bound_ok FROM trx")),
     // randomProject replay: same plan-time-literal trick for the JL
     // matrix (seed 11, rDim 32), coarse top-40 in projected space, exact
     // re-rank on the originals — rpTopK's exact shape.
-    "ann_topk_rp" ->
-      ("WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings), " +
+    Entry("ann_topk_rp", annTopkRp, Some(
+      "WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings), " +
         "proj AS (SELECT vec_id, CAST([" + Similarity.rpProjectionSql(64, 32, 11L) +
         "] AS DOUBLE[]) AS p FROM e), " +
         "coarse AS (SELECT query_id, vec_id FROM (" +
@@ -2772,21 +2772,21 @@ object DataQueries {
         "SELECT query_id, rn AS rank, vec_id, ROUND(cs, 6) AS cos FROM (" +
         "SELECT query_id, vec_id, cs, ROW_NUMBER() OVER (PARTITION BY query_id " +
         "ORDER BY cs DESC, vec_id) AS rn FROM scored) " +
-        "WHERE rn <= 5 ORDER BY query_id, rank"),
+        "WHERE rn <= 5 ORDER BY query_id, rank")),
     // splitLabelMd5 replay: u = first 6 md5 hex digits of the DECIMAL id
     // string / 2^24; nested cumulative-bound labels, last label fallback.
-    "sample_split" ->
-      ("SELECT split, lang, COUNT(*) AS n_docs FROM (SELECT lang, CASE " +
+    Entry("sample_split", sampleSplit, Some(
+      "SELECT split, lang, COUNT(*) AS n_docs FROM (SELECT lang, CASE " +
         "WHEN u < 0.8 THEN 'train' WHEN u < 0.9 THEN 'val' ELSE 'test' END AS split " +
         "FROM (SELECT lang, CAST(CONCAT('0x', substring(md5(CAST(doc_id AS VARCHAR)), " +
         "1, 6)) AS BIGINT) / 16777216.0 AS u FROM documents)) " +
-        "GROUP BY 1, 2 ORDER BY 1, 2"),
+        "GROUP BY 1, 2 ORDER BY 1, 2")),
     // quantizeInt8/dequantizeInt8 replay: scale = max|x|/127 in double,
     // codes = round(x/scale) (both engines round half away from zero),
     // reconstruction narrowed through FLOAT exactly like the Spark side,
     // then the ann_topk cosine ranking over the dequantized vectors.
-    "ann_topk_int8" ->
-      ("WITH s AS (SELECT vec_id, embedding, " +
+    Entry("ann_topk_int8", annTopkInt8, Some(
+      "WITH s AS (SELECT vec_id, embedding, " +
         "greatest(list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE)))), " +
         "1e-30) / 127.0 AS scale_d FROM embeddings), " +
         "deq AS (SELECT vec_id, list_transform(embedding, " +
@@ -2798,12 +2798,12 @@ object DataQueries {
         "ROW_NUMBER() OVER (PARTITION BY q.vec_id ORDER BY " +
         "list_cosine_similarity(CAST(q.emb AS DOUBLE[]), CAST(c.emb AS DOUBLE[])) DESC, " +
         "c.vec_id) AS rn FROM deq q JOIN deq c ON c.vec_id <> q.vec_id " +
-        "WHERE q.vec_id < 10) WHERE rn <= 5 ORDER BY query_id, rank"),
+        "WHERE q.vec_id < 10) WHERE rn <= 5 ORDER BY query_id, rank")),
     // Unrolled 5-step replay of the MMR greedy selection (fixed k) over
     // the same top-50 candidate stage — see annMmr's scaladoc for the
     // 4-decimal score grain rationale.
-    "ann_mmr" ->
-      ("WITH cand AS ( SELECT query_id, vec_id, rel, emb FROM ( SELECT " +
+    Entry("ann_mmr", annMmr, Some(
+      "WITH cand AS ( SELECT query_id, vec_id, rel, emb FROM ( SELECT " +
         "q.vec_id AS query_id, c.vec_id AS vec_id, " +
         "list_cosine_similarity(CAST(q.embedding AS DOUBLE[]), " +
         "CAST(c.embedding AS DOUBLE[])) AS rel, c.embedding AS emb, " +
@@ -2853,24 +2853,24 @@ object DataQueries {
         "vec_id, score FROM s3 UNION ALL SELECT query_id, 4, vec_id, score " +
         "FROM s4 UNION ALL SELECT query_id, 5, vec_id, score FROM s5) SELECT " +
         "query_id, rank, vec_id, ROUND(ROUND(score, 6), 4) AS mmr_score FROM " +
-        "allp ORDER BY query_id, rank"),
-    "dedup_minhash" -> minhashOracle,
-    "dedup_minhash_mllib" -> mllibMinhashOracle,
+        "allp ORDER BY query_id, rank")),
+    Entry("dedup_minhash", dedupMinhash, Some(minhashOracle)),
+    Entry("dedup_minhash_mllib", dedupMinhashMllib, Some(mllibMinhashOracle)),
     // dedupRecall replay: n_truth from the capped-Jaccard pair CTE; the
     // per-variant pass bits are the measured-floor constants.
-    "dedup_recall" ->
-      ("WITH " + jaccardPairsCte +
+    Entry("dedup_recall", dedupRecall, Some(
+      "WITH " + jaccardPairsCte +
         ", t AS (SELECT COUNT(*) AS n FROM pairs) " +
         "SELECT v.variant, t.n AS n_truth, 1 AS pass FROM t CROSS JOIN " +
         "(VALUES ('banded'), ('minhash_det'), ('minhash_mllib'), " +
         "('minhash_xxh'), ('simhash_det'), ('simhash_xxh')) v(variant) " +
-        "ORDER BY variant"),
+        "ORDER BY variant")),
     // tfidfFeatures replay: rolling-hash term indices mod 4096, per-doc
     // TF, IDF's ln((m+1)/(df+1)) over document frequencies, then the
     // norm as an ascending-index left fold of squares (matching the
     // Spark side's dense-array foldLeft). Docs with no terms norm to 0.
-    "tfidf_mllib" ->
-      ("WITH toks AS (SELECT doc_id, list_filter(string_split(lower(text), ' '), " +
+    Entry("tfidf_mllib", tfidfMllib, Some(
+      "WITH toks AS (SELECT doc_id, list_filter(string_split(lower(text), ' '), " +
         "t -> t <> '') AS w FROM documents), " +
         "nd AS (SELECT COUNT(*) AS m FROM documents), " +
         "tk AS (SELECT doc_id, unnest(w) AS tok FROM toks), " +
@@ -2887,16 +2887,16 @@ object DataQueries {
         "(a, b) -> a + b)) AS norm FROM tf JOIN wgt USING (idx) GROUP BY 1) " +
         "SELECT t.doc_id, len(t.w) AS n_terms, " +
         "ROUND(COALESCE(n.norm, 0.0), 6) AS tfidf_norm " +
-        "FROM toks t LEFT JOIN nrm n USING (doc_id) ORDER BY doc_id"),
-    "mm_features" ->
-      (mmStubCte +
+        "FROM toks t LEFT JOIN nrm n USING (doc_id) ORDER BY doc_id")),
+    Entry("mm_features", mmFeatures, Some(
+      mmStubCte +
         "SELECT media_id, kind, CAST(n AS INT) AS n_bytes, " +
         "CAST(w AS INT) AS width, CAST(h AS INT) AS height, " +
         "ROUND(CAST(CAST(len(list_filter(string_split(text, ''), " +
         "c -> ord(c) % 8 = 0)) AS REAL) / CAST(GREATEST(n, 1) AS REAL) " +
-        "AS DOUBLE), 6) AS feat0 FROM s ORDER BY media_id"),
-    "mm_resize" ->
-      (mmStubCte +
+        "AS DOUBLE), 6) AS feat0 FROM s ORDER BY media_id")),
+    Entry("mm_resize", mmResize, Some(
+      mmStubCte +
         "SELECT media_id, kind, CAST(w AS INT) AS width, CAST(h AS INT) AS height, " +
         "CAST(CASE WHEN w <= 48 AND h <= 48 THEN w " +
         "WHEN GREATEST(1, (h * 48) // w) <= 48 THEN 48 " +
@@ -2904,9 +2904,9 @@ object DataQueries {
         "CAST(CASE WHEN w <= 48 AND h <= 48 THEN h " +
         "WHEN GREATEST(1, (h * 48) // w) <= 48 THEN GREATEST(1, (h * 48) // w) " +
         "ELSE 48 END AS INT) AS out_height " +
-        "FROM s ORDER BY media_id"),
-    "mm_frames" ->
-      (mmStubCte +
+        "FROM s ORDER BY media_id")),
+    Entry("mm_frames", mmFrames, Some(
+      mmStubCte +
         ", f AS (SELECT media_id, CASE WHEN kind = 'video' THEN 4 ELSE 1 END " +
         "AS nf, n FROM s), " +
         "g AS (SELECT media_id, unnest(generate_series(0, nf - 1)) AS i, nf, n FROM f), " +
@@ -2914,14 +2914,14 @@ object DataQueries {
         "ELSE ((n - 64) * i) // (nf - 1) END AS off, n FROM g) " +
         "SELECT media_id, CAST(i AS INT) AS frame_idx, CAST(off AS INT) AS offset, " +
         "CAST(LEAST(off + 64, n) - LEAST(off, n) AS INT) AS n_bytes " +
-        "FROM o ORDER BY media_id, frame_idx"),
-    "mm_audio" ->
-      (mmStubCte +
+        "FROM o ORDER BY media_id, frame_idx")),
+    Entry("mm_audio", mmAudio, Some(
+      mmStubCte +
         "SELECT media_id, CAST(8000 + w * 100 AS INT) AS sample_rate, " +
         "CAST(1 + h % 2 AS INT) AS n_channels, 16 AS bits_per_sample, " +
-        "FALSE AS parsed FROM s WHERE kind = 'audio' ORDER BY media_id"),
-    "mm_audio_features" ->
-      (mmStubCte +
+        "FALSE AS parsed FROM s WHERE kind = 'audio' ORDER BY media_id")),
+    Entry("mm_audio_features", mmAudioFeatures, Some(
+      mmStubCte +
         "SELECT media_id, FALSE AS parsed, CAST(n AS BIGINT) AS n_samples, " +
         "CAST((n * 1000) // 8000 AS BIGINT) AS duration_ms, " +
         "ROUND(CASE WHEN n > 0 THEN sqrt(list_reduce(list_prepend(0.0, " +
@@ -2931,14 +2931,15 @@ object DataQueries {
         "ROUND(CASE WHEN n > 1 THEN CAST(len(list_filter(generate_series(2, n), " +
         "k -> (ord(text[k]) >= 128) <> (ord(text[k-1]) >= 128))) AS DOUBLE) " +
         "/ (n - 1) ELSE 0.0 END, 6) AS zcr " +
-        "FROM s WHERE kind = 'audio' ORDER BY media_id"),
+        "FROM s WHERE kind = 'audio' ORDER BY media_id")),
     // The Spark side reduces each approximate variant to a thresholded
     // recall bit, so the oracle is the expected constant gate table: all
     // variants passing. Any sketch-quality regression flips a bit and
     // hash-mismatches.
-    "ann_recall" ->
-      ("SELECT variant, 5 AS k, 1 AS pass FROM (VALUES ('int8'), ('ivf'), " +
+    Entry("ann_recall", annRecall, Some(
+      "SELECT variant, 5 AS k, 1 AS pass FROM (VALUES ('int8'), ('ivf'), " +
         "('ivf_pq'), ('ivf_refined'), ('lsh'), ('pq'), ('rp')) v(variant) " +
-        "ORDER BY variant")
+        "ORDER BY variant")),
+    Entry("cluster_kmeans", clusterKmeans, None)
   )
 }

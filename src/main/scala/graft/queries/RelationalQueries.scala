@@ -1329,59 +1329,6 @@ object RelationalQueries {
       .limit(30)
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "assoc_rules" -> (assocRules _),
-    "graph_communities" -> (graphCommunities _),
-    "graph_adamic_adar" -> (adamicAdar _),
-    "graph_hits" -> (graphHits _),
-    "graph_triangles" -> (graphTriangles _),
-    "graph_pagerank" -> (graphPagerank _),
-    "graph_pagerank_dangling" -> (graphPagerankDangling _),
-    "drift_psi" -> (driftPsi _),
-    "sql_front_door" -> (sqlFrontDoor _),
-    "json_quarantine" -> (jsonQuarantine _),
-    "moving_sum_range" -> (movingSumRange _),
-    "json_extract" -> (jsonExtract _),
-    "table_stats" -> (tableStats _),
-    "jdbc_import" -> (jdbcImport _),
-    "join_bucketed" -> (joinBucketed _),
-    "partition_prune" -> (partitionPrune _),
-    "funnel_steps" -> (funnelSteps _),
-    "cohort_retention" -> (cohortRetention _),
-    "merge_upsert" -> (mergeUpsert _),
-    "merge_cdc" -> (mergeCdc _),
-    "rollup_incremental" -> (rollupIncremental _),
-    "window_functions" -> (windowFunctions _),
-    "set_union" -> (setUnion _),
-    "join_full_outer" -> (joinFullOuter _),
-    "agg_grouping_sets" -> (aggGroupingSets _),
-    "orders_price_bands" -> (ordersPriceBands _),
-    "moving_avg" -> (movingAvg _),
-    "hll_reach" -> (hllReach _),
-    "above_avg_qty" -> (aboveAvgQty _),
-    "max_per_group" -> (maxPerGroup _),
-    "approx_stats" -> (approxStats _),
-    "agg_cube" -> (aggCube _),
-    "percentiles" -> (percentiles _),
-    "percentiles_offsets" -> (percentilesOffsets _),
-    "asof_join" -> (asofJoin _),
-    "q3_join_topk" -> (q3JoinTopk _),
-    "q5_region_revenue" -> (q5RegionRevenue _),
-    "q7_nation_volume" -> (q7NationVolume _),
-    "q8_market_share" -> (q8MarketShare _),
-    "window_topk" -> (windowTopk _),
-    "agg_rollup" -> (aggRollup _),
-    "set_except" -> (setExcept _),
-    "set_intersect" -> (setIntersect _),
-    "set_intersect_all" -> (setIntersectAll _),
-    "set_except_all" -> (setExceptAll _),
-    "join_semi" -> (joinSemi _),
-    "join_anti" -> (joinAnti _),
-    "scalar_functions" -> (scalarFunctions _),
-    "date_functions" -> (dateFunctions _),
-    "sessionize" -> (sessionize _)
-  )
-
   private val percentilesOracle: String =
     ("WITH g AS (SELECT o_orderstatus, " +
         "LIST_SORT(LIST(CAST(ROUND(o_totalprice * 100) AS BIGINT))) AS cs, " +
@@ -1394,9 +1341,9 @@ object RelationalQueries {
           }.mkString(", ") +
         " FROM g ORDER BY o_orderstatus")
 
-  val oracleSql: Map[String, String] = Map(
-    "assoc_rules" ->
-      ("WITH n AS (SELECT COUNT(DISTINCT l_orderkey) AS n_orders FROM lineitem), " +
+  val entries: Seq[Entry] = Seq(
+    Entry("assoc_rules", assocRules, Some(
+      "WITH n AS (SELECT COUNT(DISTINCT l_orderkey) AS n_orders FROM lineitem), " +
         "items AS (SELECT l_partkey AS item, COUNT(DISTINCT l_orderkey) AS n_item " +
         "FROM lineitem GROUP BY 1), " +
         "pairs AS (SELECT a.l_partkey AS x, b.l_partkey AS y, " +
@@ -1409,10 +1356,10 @@ object RelationalQueries {
         "ROUND(n_xy / ix.n_item, 6) AS confidence, " +
         "ROUND(n_xy * n_orders / (ix.n_item * iy.n_item), 6) AS lift " +
         "FROM pairs, n JOIN items ix ON ix.item = x JOIN items iy ON iy.item = y " +
-        "ORDER BY lift DESC, antecedent, consequent LIMIT 30"),
-    "graph_communities" -> lpaOracle,
-    "graph_adamic_adar" ->
-      ("WITH pairs AS (SELECT a.l_partkey AS p1, b.l_partkey AS p2, " +
+        "ORDER BY lift DESC, antecedent, consequent LIMIT 30")),
+    Entry("graph_communities", graphCommunities, Some(lpaOracle)),
+    Entry("graph_adamic_adar", adamicAdar, Some(
+      "WITH pairs AS (SELECT a.l_partkey AS p1, b.l_partkey AS p2, " +
         "COUNT(DISTINCT a.l_orderkey) AS supp FROM lineitem a " +
         "JOIN lineitem b ON a.l_orderkey = b.l_orderkey " +
         "AND a.l_partkey < b.l_partkey GROUP BY 1, 2), " +
@@ -1427,14 +1374,14 @@ object RelationalQueries {
         "CAST(COUNT(*) AS BIGINT) AS common_neighbors " +
         "FROM nonedge JOIN deg ON b = u GROUP BY 1, 2) " +
         "SELECT x AS part_a, y AS part_b, adamic_adar, common_neighbors " +
-        "FROM scored ORDER BY adamic_adar DESC, part_a, part_b LIMIT 20"),
-    "graph_hits" -> graft.operators.Hits.oracleSql(
+        "FROM scored ORDER BY adamic_adar DESC, part_a, part_b LIMIT 20")),
+    Entry("graph_hits", graphHits, Some(graft.operators.Hits.oracleSql(
       "edges AS (SELECT o_custkey AS c, l_suppkey AS s, " +
         "CAST(COUNT(*) AS DOUBLE) AS w FROM lineitem " +
         "JOIN orders ON l_orderkey = o_orderkey GROUP BY 1, 2)",
-      iters = 3),
-    "graph_triangles" ->
-      ("WITH pairs AS (SELECT a.l_partkey AS p1, b.l_partkey AS p2, " +
+      iters = 3))),
+    Entry("graph_triangles", graphTriangles, Some(
+      "WITH pairs AS (SELECT a.l_partkey AS p1, b.l_partkey AS p2, " +
         "COUNT(DISTINCT a.l_orderkey) AS supp FROM lineitem a " +
         "JOIN lineitem b ON a.l_orderkey = b.l_orderkey " +
         "AND a.l_partkey < b.l_partkey GROUP BY 1, 2), " +
@@ -1450,20 +1397,21 @@ object RelationalQueries {
         "CAST((SELECT COUNT(*) FROM wedge) AS BIGINT) AS n_wedges, " +
         "CAST((SELECT COUNT(*) FROM wedge w JOIN edges e " +
         "ON w.b = e.p1 AND w.c = e.p2) AS BIGINT) AS n_triangles, " +
-        "(SELECT MAX(d) FROM deg) AS max_degree"),
-    "graph_pagerank" -> graft.operators.PageRank.oracleSql(
+        "(SELECT MAX(d) FROM deg) AS max_degree")),
+    Entry("graph_pagerank", graphPagerank, Some(graft.operators.PageRank.oracleSql(
       "e0 AS (SELECT o_custkey AS c, l_suppkey AS s, COUNT(*) AS w FROM lineitem " +
         "JOIN orders ON l_orderkey = o_orderkey GROUP BY 1, 2), " +
         "edges AS (SELECT 2*c AS src, 2*s+1 AS dst, CAST(w AS DOUBLE) AS w FROM e0 " +
         "UNION ALL SELECT 2*s+1, 2*c, CAST(w AS DOUBLE) FROM e0)",
-      iters = 5),
-    "graph_pagerank_dangling" -> graft.operators.PageRank.oracleSql(
+      iters = 5))),
+    Entry("graph_pagerank_dangling", graphPagerankDangling, Some(
+      graft.operators.PageRank.oracleSql(
       "e0 AS (SELECT o_custkey AS c, l_suppkey AS s, COUNT(*) AS w FROM lineitem " +
         "JOIN orders ON l_orderkey = o_orderkey GROUP BY 1, 2), " +
         "edges AS (SELECT 2*c AS src, 2*s+1 AS dst, CAST(w AS DOUBLE) AS w FROM e0)",
-      iters = 5, redistributeDangling = true),
-    "drift_psi" ->
-      ("WITH p AS (SELECT LEAST(9, GREATEST(0, CAST(FLOOR(o_totalprice / 50000.0) " +
+      iters = 5, redistributeDangling = true))),
+    Entry("drift_psi", driftPsi, Some(
+      "WITH p AS (SELECT LEAST(9, GREATEST(0, CAST(FLOOR(o_totalprice / 50000.0) " +
         "AS BIGINT))) AS bin, COUNT(*) AS n FROM orders " +
         "WHERE o_orderdate < TIMESTAMP '1998-01-01' GROUP BY 1), " +
         "q AS (SELECT LEAST(9, GREATEST(0, CAST(FLOOR(o_totalprice / 50000.0) " +
@@ -1481,16 +1429,16 @@ object RelationalQueries {
         "ROUND(0.5 * pp * LN(pp / ((pp + qq) / 2)) + " +
         "0.5 * qq * LN(qq / ((pp + qq) / 2)), 6) AS js_term, " +
         "ROUND(SUM((qq - pp) * LN(qq / pp)) OVER (), 6) AS psi_total " +
-        "FROM sm ORDER BY bin"),
+        "FROM sm ORDER BY bin")),
     // the sketch estimate is engine-specific; the CHECKED surface is the
     // exact reach + the sketch-accuracy flag, which must come out TRUE
-    "hll_reach" ->
-      ("SELECT event_type, CAST(COUNT(DISTINCT user_id) AS BIGINT) AS reach_exact, " +
+    Entry("hll_reach", hllReach, Some(
+      "SELECT event_type, CAST(COUNT(DISTINCT user_id) AS BIGINT) AS reach_exact, " +
         "CAST(COUNT(DISTINCT CAST(ts AS DATE)) AS BIGINT) AS n_days, " +
         "TRUE AS within_5pct " +
-        "FROM events GROUP BY event_type ORDER BY event_type"),
-    "approx_stats" ->
-      ("WITH g AS (SELECT event_type, " +
+        "FROM events GROUP BY event_type ORDER BY event_type")),
+    Entry("approx_stats", approxStats, Some(
+      "WITH g AS (SELECT event_type, " +
         "CAST(COUNT(DISTINCT user_id) AS BIGINT) AS users_exact, " +
         "LIST_SORT(LIST(CAST(ROUND(value * 100) AS BIGINT))) AS cs, " +
         "CAST(COUNT(*) AS BIGINT) AS cn FROM events GROUP BY event_type) " +
@@ -1498,20 +1446,20 @@ object RelationalQueries {
         "FLOOR(" + graft.functions.ExactQuantile.interpSql("cs", "cn", "0.5") +
         " + 0.5) / 100 AS p50_exact, " +
         "TRUE AS users_within_15pct, TRUE AS p50_within_5pct " +
-        "FROM g ORDER BY event_type"),
-    "sql_front_door" ->
-      ("SELECT l_returnflag, l_linestatus, COUNT(*) AS n, " +
+        "FROM g ORDER BY event_type")),
+    Entry("sql_front_door", sqlFrontDoor, Some(
+      "SELECT l_returnflag, l_linestatus, COUNT(*) AS n, " +
         "FLOOR(CAST(SUM(CAST(ROUND(l_extendedprice * 100) AS BIGINT) * " +
         "(100 - CAST(ROUND(l_discount * 100) AS BIGINT))) AS DOUBLE) " +
         "/ 100 + 0.5) / 100 AS revenue " +
         "FROM lineitem WHERE CAST(l_shipdate AS DATE) < DATE '1998-09-01' " +
-        "GROUP BY l_returnflag, l_linestatus ORDER BY l_returnflag, l_linestatus"),
+        "GROUP BY l_returnflag, l_linestatus ORDER BY l_returnflag, l_linestatus")),
     // json_extract must only ever see rows a WHERE json_valid filter has
     // already passed: guarding it inside a CASE/OR is NOT short-circuit
     // safe under DuckDB's vectorized evaluation (it errored on the
     // malformed rows at sf0.1 while passing at sf0.01)
-    "json_quarantine" ->
-      ("WITH salted AS (SELECT event_id, event_type, " +
+    Entry("json_quarantine", jsonQuarantine, Some(
+      "WITH salted AS (SELECT event_id, event_type, " +
         "CASE WHEN event_id % 7 = 0 THEN 'broken{' || props ELSE props END AS props " +
         "FROM events), " +
         "flags AS (SELECT event_type, props, json_valid(props) AS ok FROM salted), " +
@@ -1526,22 +1474,22 @@ object RelationalQueries {
         "CAST(SUM(k) AS BIGINT) AS k_sum FROM good GROUP BY 1) " +
         "SELECT base.event_type, n, " +
         "base.n_invalid + COALESCE(g.n_null_k, 0) AS n_quarantined, g.k_sum " +
-        "FROM base LEFT JOIN g USING (event_type) ORDER BY event_type"),
-    "moving_sum_range" ->
-      ("WITH daily AS (SELECT event_type, CAST(ts AS DATE) AS d, " +
+        "FROM base LEFT JOIN g USING (event_type) ORDER BY event_type")),
+    Entry("moving_sum_range", movingSumRange, Some(
+      "WITH daily AS (SELECT event_type, CAST(ts AS DATE) AS d, " +
         "ROUND(SUM(value), 2) AS daily_value FROM events GROUP BY 1, 2), " +
         "thin AS (SELECT *, CAST(d - DATE '1970-01-01' AS BIGINT) AS epoch_day " +
         "FROM daily WHERE daily_value > 300) " +
         "SELECT event_type, d, daily_value, " +
         "ROUND(SUM(daily_value) OVER (PARTITION BY event_type ORDER BY epoch_day " +
         "RANGE BETWEEN 6 PRECEDING AND CURRENT ROW), 2) AS sum7d " +
-        "FROM thin ORDER BY event_type, d"),
-    "json_extract" ->
-      ("SELECT event_type, COUNT(*) AS n, " +
+        "FROM thin ORDER BY event_type, d")),
+    Entry("json_extract", jsonExtract, Some(
+      "SELECT event_type, COUNT(*) AS n, " +
         "CAST(SUM(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT) AS k_sum, " +
         "FLOOR(CAST(SUM(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS DOUBLE) " +
         "/ COUNT(*) * 10000 + 0.5) / 10000 AS k_avg " +
-        "FROM events GROUP BY event_type ORDER BY event_type"),
+        "FROM events GROUP BY event_type ORDER BY event_type")),
     // jdbcImport's audit row is all constants by construction: 100 seeded
     // rows, ids 1..100 (sum 5050), val = i/4 (binary-exact, sum 1262.5),
     // dates Jan 1 + (i % 30); Char/Varchar/Blob columns dropped by the
@@ -1550,36 +1498,36 @@ object RelationalQueries {
     // the source table, so the oracle states the same join/filter over the
     // RAW parquet — any value drift introduced by the layout round-trip
     // (write, catalog read-back, partition-column type) flips the hash.
-    "join_bucketed" ->
-      ("SELECT o_orderstatus, " +
+    Entry("join_bucketed", joinBucketed, Some(
+      "SELECT o_orderstatus, " +
         "FLOOR(CAST(SUM(CAST(ROUND(l_extendedprice * 100) AS BIGINT) * " +
         "(100 - CAST(ROUND(l_discount * 100) AS BIGINT))) AS DOUBLE) " +
         "/ 100 + 0.5) / 100 AS revenue, " +
         "COUNT(*) AS n_items FROM lineitem " +
         "JOIN orders ON l_orderkey = o_orderkey " +
-        "GROUP BY 1 ORDER BY 1"),
-    "partition_prune" ->
-      ("SELECT event_type, COUNT(*) AS n_events, " +
+        "GROUP BY 1 ORDER BY 1")),
+    Entry("partition_prune", partitionPrune, Some(
+      "SELECT event_type, COUNT(*) AS n_events, " +
         "CAST(SUM(CAST(ROUND(value * 100) AS BIGINT)) AS DOUBLE) / 100 " +
         "AS value_sum FROM events " +
         "WHERE CAST(ts AS DATE) BETWEEN DATE '2024-01-10' AND DATE '2024-01-19' " +
-        "GROUP BY 1 ORDER BY 1"),
-    "jdbc_import" ->
-      ("SELECT 'metrics' AS table_name, 'd,id,val' AS kept_columns, " +
+        "GROUP BY 1 ORDER BY 1")),
+    Entry("jdbc_import", jdbcImport, Some(
+      "SELECT 'metrics' AS table_name, 'd,id,val' AS kept_columns, " +
         "CAST(100 AS BIGINT) AS n_rows, CAST(5050 AS BIGINT) AS sum_id, " +
         "CAST(1262.5 AS DOUBLE) AS sum_val, DATE '2024-01-01' AS d_min, " +
-        "DATE '2024-01-30' AS d_max"),
-    "table_stats" ->
-      ("SELECT COUNT(*) AS n_rows, " +
+        "DATE '2024-01-30' AS d_max")),
+    Entry("table_stats", tableStats, Some(
+      "SELECT COUNT(*) AS n_rows, " +
         "CAST(COUNT(DISTINCT o_custkey) AS BIGINT) AS n_custs, " +
         "ROUND(MIN(o_totalprice), 2) AS min_price, " +
         "ROUND(MAX(o_totalprice), 2) AS max_price, " +
         "FLOOR(CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS DOUBLE) " +
         "/ COUNT(*) / 100 * 10000 + 0.5) / 10000 AS avg_price, " +
         "CAST(SUM(CASE WHEN o_orderstatus IS NULL THEN 1 ELSE 0 END) AS BIGINT) " +
-        "AS n_null_status FROM orders"),
-    "funnel_steps" ->
-      ("WITH s1 AS (SELECT user_id, MIN(ts) AS t1 FROM events " +
+        "AS n_null_status FROM orders")),
+    Entry("funnel_steps", funnelSteps, Some(
+      "WITH s1 AS (SELECT user_id, MIN(ts) AS t1 FROM events " +
         "WHERE event_type = 'view' GROUP BY user_id), " +
         "s2 AS (SELECT e.user_id, MIN(e.ts) AS t2 FROM events e " +
         "JOIN s1 ON e.user_id = s1.user_id " +
@@ -1590,18 +1538,18 @@ object RelationalQueries {
         "SELECT * FROM (" +
         "SELECT CAST(1 AS BIGINT) AS step, 'view' AS event_type, COUNT(*) AS n_users FROM s1 " +
         "UNION ALL SELECT 2, 'click', COUNT(*) FROM s2 " +
-        "UNION ALL SELECT 3, 'purchase', COUNT(*) FROM s3) ORDER BY step"),
-    "cohort_retention" ->
-      ("WITH weeks AS (SELECT DISTINCT user_id, " +
+        "UNION ALL SELECT 3, 'purchase', COUNT(*) FROM s3) ORDER BY step")),
+    Entry("cohort_retention", cohortRetention, Some(
+      "WITH weeks AS (SELECT DISTINCT user_id, " +
         "CAST(FLOOR((CAST(ts AS DATE) - DATE '2024-01-01') / 7) AS BIGINT) AS week " +
         "FROM events), " +
         "cohort AS (SELECT user_id, MIN(week) AS cohort_week FROM weeks GROUP BY user_id) " +
         "SELECT cohort_week, week - cohort_week AS week_offset, " +
         "CAST(COUNT(DISTINCT w.user_id) AS BIGINT) AS n_users " +
         "FROM weeks w JOIN cohort c ON w.user_id = c.user_id " +
-        "GROUP BY cohort_week, week_offset ORDER BY cohort_week, week_offset"),
-    "rollup_incremental" ->
-      ("WITH r AS (SELECT CAST(ts AS DATE) AS d, event_type, " +
+        "GROUP BY cohort_week, week_offset ORDER BY cohort_week, week_offset")),
+    Entry("rollup_incremental", rollupIncremental, Some(
+      "WITH r AS (SELECT CAST(ts AS DATE) AS d, event_type, " +
         "CAST(COUNT(*) AS BIGINT) AS n, " +
         "SUM(CAST(round(value * 100) AS BIGINT)) AS cents, " +
         "MIN(CAST(round(value * 100) AS BIGINT)) AS mn, " +
@@ -1614,9 +1562,9 @@ object RelationalQueries {
         "ROUND(mn / 100.0, 2) AS value_min, " +
         "ROUND(mx / 100.0, 2) AS value_max, " +
         "users_exact, TRUE AS within_5pct " +
-        "FROM r ORDER BY d, event_type"),
-    "merge_cdc" ->
-      ("WITH ev AS (SELECT user_id, event_type, ts, event_id, " +
+        "FROM r ORDER BY d, event_type")),
+    Entry("merge_cdc", mergeCdc, Some(
+      "WITH ev AS (SELECT user_id, event_type, ts, event_id, " +
         "ROUND(value, 2) AS value FROM events), " +
         "m AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY user_id, event_type " +
         "ORDER BY src DESC, ts DESC, event_id DESC) AS rn FROM (" +
@@ -1627,9 +1575,9 @@ object RelationalQueries {
         "CASE WHEN value < 50 THEN 'd' ELSE 'u' END AS op FROM ev " +
         "WHERE CAST(ts AS DATE) >= DATE '2024-01-10')) " +
         "SELECT user_id, event_type, CAST(ts AS DATE) AS d, event_id, value " +
-        "FROM m WHERE rn = 1 AND op <> 'd' ORDER BY user_id, event_type"),
-    "merge_upsert" ->
-      ("WITH ev AS (SELECT user_id, event_type, ts, event_id, " +
+        "FROM m WHERE rn = 1 AND op <> 'd' ORDER BY user_id, event_type")),
+    Entry("merge_upsert", mergeUpsert, Some(
+      "WITH ev AS (SELECT user_id, event_type, ts, event_id, " +
         "ROUND(value, 2) AS value FROM events), " +
         "m AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY user_id, event_type " +
         "ORDER BY src DESC, ts DESC, event_id DESC) AS rn FROM (" +
@@ -1639,9 +1587,9 @@ object RelationalQueries {
         "SELECT user_id, event_type, ts, event_id, value, 1 AS src FROM ev " +
         "WHERE CAST(ts AS DATE) >= DATE '2024-01-10')) " +
         "SELECT user_id, event_type, CAST(ts AS DATE) AS d, event_id, value " +
-        "FROM m WHERE rn = 1 ORDER BY user_id, event_type"),
-    "window_functions" ->
-      ("SELECT o_custkey, o_orderkey, o_totalprice, " +
+        "FROM m WHERE rn = 1 ORDER BY user_id, event_type")),
+    Entry("window_functions", windowFunctions, Some(
+      "SELECT o_custkey, o_orderkey, o_totalprice, " +
         "lag(o_totalprice) OVER w AS prev_price, " +
         "lead(o_totalprice) OVER w AS next_price, " +
         "ntile(4) OVER w AS quartile, " +
@@ -1649,70 +1597,73 @@ object RelationalQueries {
         "ROUND(cume_dist() OVER w, 6) AS cume " +
         "FROM orders WHERE o_custkey < 200 " +
         "WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey) " +
-        "ORDER BY o_custkey, o_orderkey"),
-    "set_union" ->
-      ("SELECT o_custkey FROM orders WHERE year(CAST(o_orderdate AS DATE)) = 1995 " +
+        "ORDER BY o_custkey, o_orderkey")),
+    Entry("set_union", setUnion, Some(
+      "SELECT o_custkey FROM orders WHERE year(CAST(o_orderdate AS DATE)) = 1995 " +
         "UNION " +
         "SELECT o_custkey FROM orders WHERE year(CAST(o_orderdate AS DATE)) = 1996 " +
-        "ORDER BY o_custkey"),
-    "join_full_outer" ->
-      ("SELECT COALESCE(c_custkey, o_custkey) AS custkey, c_name, n_big_orders " +
+        "ORDER BY o_custkey")),
+    Entry("join_full_outer", joinFullOuter, Some(
+      "SELECT COALESCE(c_custkey, o_custkey) AS custkey, c_name, n_big_orders " +
         "FROM (SELECT c_custkey, c_name FROM customer WHERE c_acctbal > 9000) c " +
         "FULL OUTER JOIN (SELECT o_custkey, COUNT(*) AS n_big_orders FROM orders " +
         "WHERE o_totalprice > 350000 GROUP BY o_custkey) o " +
-        "ON c_custkey = o_custkey ORDER BY custkey"),
-    "agg_grouping_sets" ->
-      ("SELECT o_orderstatus, o_orderpriority, COUNT(*) AS n_orders, " +
+        "ON c_custkey = o_custkey ORDER BY custkey")),
+    Entry("agg_grouping_sets", aggGroupingSets, Some(
+      "SELECT o_orderstatus, o_orderpriority, COUNT(*) AS n_orders, " +
         "ROUND(SUM(o_totalprice), 2) AS total_price " +
         "FROM orders GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ()) " +
-        "ORDER BY o_orderstatus NULLS FIRST, o_orderpriority NULLS FIRST"),
-    "orders_price_bands" -> {
+        "ORDER BY o_orderstatus NULLS FIRST, o_orderpriority NULLS FIRST")),
+    Entry("orders_price_bands", ordersPriceBands, Some({
       val values = priceBands
         .map { case (b, lo, hi) => s"($b, $lo, $hi)" }.mkString(", ")
       s"SELECT band_id, COUNT(*) AS n_orders FROM orders " +
         s"JOIN (VALUES $values) AS b(band_id, lo, hi) " +
         "ON o_totalprice >= lo AND o_totalprice < hi " +
         "GROUP BY band_id ORDER BY band_id"
-    },
-    "moving_avg" ->
-      ("WITH daily AS (SELECT event_type, CAST(ts AS DATE) AS d, " +
+    })),
+    Entry("moving_avg", movingAvg, Some(
+      "WITH daily AS (SELECT event_type, CAST(ts AS DATE) AS d, " +
         "SUM(CAST(ROUND(value * 100) AS BIGINT)) AS cents FROM events GROUP BY 1, 2) " +
         "SELECT event_type, d, CAST(cents AS DOUBLE) / 100 AS daily_value, " +
         "FLOOR(CAST(SUM(cents) OVER w AS DOUBLE) / COUNT(cents) OVER w " +
         "/ 100 * 10000 + 0.5) / 10000 AS ma7 " +
         "FROM daily WINDOW w AS (PARTITION BY event_type ORDER BY d " +
-        "ROWS BETWEEN 6 PRECEDING AND CURRENT ROW) ORDER BY event_type, d"),
-    "above_avg_qty" ->
-      ("SELECT l_partkey, COUNT(*) AS n_above, " +
+        "ROWS BETWEEN 6 PRECEDING AND CURRENT ROW) ORDER BY event_type, d")),
+    Entry("above_avg_qty", aboveAvgQty, Some(
+      "SELECT l_partkey, COUNT(*) AS n_above, " +
         "ROUND(SUM(l_extendedprice), 2) AS revenue FROM lineitem " +
         "JOIN (SELECT l_partkey, AVG(l_quantity) AS avg_qty FROM lineitem " +
         "GROUP BY l_partkey) USING (l_partkey) " +
         "WHERE l_quantity > avg_qty * 1.2 " +
-        "GROUP BY l_partkey ORDER BY l_partkey"),
-    "max_per_group" ->
-      ("SELECT p_brand, p_partkey, p_retailprice FROM part p " +
+        "GROUP BY l_partkey ORDER BY l_partkey")),
+    Entry("max_per_group", maxPerGroup, Some(
+      "SELECT p_brand, p_partkey, p_retailprice FROM part p " +
         "WHERE p_retailprice = (SELECT MAX(p2.p_retailprice) FROM part p2 " +
-        "WHERE p2.p_brand = p.p_brand) ORDER BY p_brand, p_partkey"),
-    "agg_cube" ->
-      ("SELECT o_orderstatus, o_orderpriority, COUNT(*) AS n_orders, " +
+        "WHERE p2.p_brand = p.p_brand) ORDER BY p_brand, p_partkey")),
+    Entry("agg_cube", aggCube, Some(
+      "SELECT o_orderstatus, o_orderpriority, COUNT(*) AS n_orders, " +
         "ROUND(SUM(o_totalprice), 2) AS total_price " +
         "FROM orders GROUP BY CUBE (o_orderstatus, o_orderpriority) " +
-        "ORDER BY o_orderstatus NULLS FIRST, o_orderpriority NULLS FIRST"),
-    "percentiles" -> percentilesOracle,
-    "percentiles_offsets" -> percentilesOracle,
-    "asof_join" ->
-      ("SELECT e.event_id, e.event_type, d.prev_day_avg " +
+        "ORDER BY o_orderstatus NULLS FIRST, o_orderpriority NULLS FIRST")),
+    Entry("percentiles", percentiles, Some(percentilesOracle),
+      note = "exact: collect_list buffers each group's values; 100 TB path = percentiles_offsets"),
+    Entry("percentiles_offsets", percentilesOffsets, Some(percentilesOracle),
+      note = "scale twin: keyed bucketed prefix ranks + conditional-max order statistics, no " +
+        "value array, same oracle"),
+    Entry("asof_join", asofJoin, Some(
+      "SELECT e.event_id, e.event_type, d.prev_day_avg " +
         "FROM (SELECT event_id, event_type, CAST(ts AS DATE) AS edate FROM events) e " +
         "ASOF LEFT JOIN (SELECT event_type, CAST(ts AS DATE) AS ddate, " +
         "FLOOR(CAST(SUM(CAST(ROUND(value * 100) AS BIGINT)) AS DOUBLE) " +
         "/ COUNT(*) / 100 * 10000 + 0.5) / 10000 AS prev_day_avg " +
         "FROM events GROUP BY 1, 2) d " +
         "ON e.event_type = d.event_type AND e.edate > d.ddate " +
-        "ORDER BY e.event_id"),
+        "ORDER BY e.event_id")),
     // exact cents·(100−disc) HUGEINT sums + FLOOR rounding, mirroring the
     // Spark side (see q1_agg) — the revenue ORDER BY is deterministic
-    "q3_join_topk" ->
-      ("SELECT l_orderkey, CAST(o_orderdate AS DATE) AS o_orderdate, " +
+    Entry("q3_join_topk", q3JoinTopk, Some(
+      "SELECT l_orderkey, CAST(o_orderdate AS DATE) AS o_orderdate, " +
         "FLOOR(CAST(SUM(CAST(ROUND(l_extendedprice * 100) AS BIGINT) * " +
         "(100 - CAST(ROUND(l_discount * 100) AS BIGINT))) AS DOUBLE) " +
         "/ 100 + 0.5) / 100 AS revenue " +
@@ -1720,9 +1671,9 @@ object RelationalQueries {
         "JOIN customer ON o_custkey = c_custkey " +
         "WHERE c_mktsegment = 'BUILDING' AND CAST(o_orderdate AS DATE) < DATE '1998-01-01' " +
         "AND CAST(l_shipdate AS DATE) > DATE '1998-01-01' " +
-        "GROUP BY 1, 2 ORDER BY revenue DESC, l_orderkey LIMIT 10"),
-    "q8_market_share" ->
-      ("WITH vol AS (SELECT year(CAST(o.o_orderdate AS DATE)) AS o_year, " +
+        "GROUP BY 1, 2 ORDER BY revenue DESC, l_orderkey LIMIT 10")),
+    Entry("q8_market_share", q8MarketShare, Some(
+      "WITH vol AS (SELECT year(CAST(o.o_orderdate AS DATE)) AS o_year, " +
         "CAST(ROUND(l.l_extendedprice * 100) AS BIGINT) * " +
         "(100 - CAST(ROUND(l.l_discount * 100) AS BIGINT)) AS volume, " +
         "sn.n_name AS supp_nation " +
@@ -1738,9 +1689,9 @@ object RelationalQueries {
         "FLOOR(CAST(SUM(CASE WHEN supp_nation = 'NATION_11' THEN volume ELSE 0 END) AS DOUBLE) / " +
         "CAST(SUM(volume) AS DOUBLE) * 1000000 + 0.5) / 1000000 AS mkt_share, " +
         "FLOOR(CAST(SUM(volume) AS DOUBLE) / 100 + 0.5) / 100 AS total_volume " +
-        "FROM vol GROUP BY o_year ORDER BY o_year"),
-    "q7_nation_volume" ->
-      ("SELECT supp_nation, cust_nation, l_year, " +
+        "FROM vol GROUP BY o_year ORDER BY o_year")),
+    Entry("q7_nation_volume", q7NationVolume, Some(
+      "SELECT supp_nation, cust_nation, l_year, " +
         "FLOOR(CAST(SUM(volume) AS DOUBLE) / 100 + 0.5) / 100 AS revenue " +
         "FROM (SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation, " +
         "CAST(year(CAST(l_shipdate AS DATE)) AS INT) AS l_year, " +
@@ -1754,9 +1705,9 @@ object RelationalQueries {
         "WHERE n1.n_name IN ('NATION_11', 'NATION_18', 'NATION_19', 'NATION_20') " +
         "AND n2.n_name IN ('NATION_11', 'NATION_18', 'NATION_19', 'NATION_20') " +
         "AND n1.n_name <> n2.n_name) " +
-        "GROUP BY 1, 2, 3 ORDER BY 1, 2, 3"),
-    "q5_region_revenue" ->
-      ("SELECT n_name, " +
+        "GROUP BY 1, 2, 3 ORDER BY 1, 2, 3")),
+    Entry("q5_region_revenue", q5RegionRevenue, Some(
+      "SELECT n_name, " +
         "FLOOR(CAST(SUM(CAST(ROUND(l_extendedprice * 100) AS BIGINT) * " +
         "(100 - CAST(ROUND(l_discount * 100) AS BIGINT))) AS DOUBLE) " +
         "/ 100 + 0.5) / 100 AS revenue " +
@@ -1767,68 +1718,68 @@ object RelationalQueries {
         "JOIN region ON n_regionkey = r_regionkey " +
         "WHERE r_name = 'EUROPE' AND CAST(o_orderdate AS DATE) >= DATE '1996-01-01' " +
         "AND CAST(o_orderdate AS DATE) < DATE '1998-01-01' " +
-        "GROUP BY n_name ORDER BY revenue DESC, n_name"),
-    "window_topk" ->
-      ("SELECT o_orderpriority, o_orderkey, o_totalprice, rn FROM (" +
+        "GROUP BY n_name ORDER BY revenue DESC, n_name")),
+    Entry("window_topk", windowTopk, Some(
+      "SELECT o_orderpriority, o_orderkey, o_totalprice, rn FROM (" +
         "SELECT o_orderpriority, o_orderkey, o_totalprice, " +
         "ROW_NUMBER() OVER (PARTITION BY o_orderpriority " +
         "ORDER BY o_totalprice DESC, o_orderkey) AS rn FROM orders) " +
-        "WHERE rn <= 3 ORDER BY o_orderpriority, rn"),
-    "agg_rollup" ->
-      ("SELECT o_orderstatus, o_orderpriority, COUNT(*) AS n_orders, " +
+        "WHERE rn <= 3 ORDER BY o_orderpriority, rn")),
+    Entry("agg_rollup", aggRollup, Some(
+      "SELECT o_orderstatus, o_orderpriority, COUNT(*) AS n_orders, " +
         "ROUND(SUM(o_totalprice), 2) AS total_price " +
         "FROM orders GROUP BY ROLLUP (o_orderstatus, o_orderpriority) " +
-        "ORDER BY o_orderstatus NULLS FIRST, o_orderpriority NULLS FIRST"),
-    "set_except" ->
-      ("SELECT c_custkey FROM customer EXCEPT " +
+        "ORDER BY o_orderstatus NULLS FIRST, o_orderpriority NULLS FIRST")),
+    Entry("set_except", setExcept, Some(
+      "SELECT c_custkey FROM customer EXCEPT " +
         "SELECT o_custkey AS c_custkey FROM orders WHERE o_totalprice > 300000 " +
-        "ORDER BY c_custkey"),
-    "set_intersect" ->
-      ("SELECT o_custkey FROM orders WHERE year(CAST(o_orderdate AS DATE)) = 1995 " +
+        "ORDER BY c_custkey")),
+    Entry("set_intersect", setIntersect, Some(
+      "SELECT o_custkey FROM orders WHERE year(CAST(o_orderdate AS DATE)) = 1995 " +
         "INTERSECT " +
         "SELECT o_custkey FROM orders WHERE year(CAST(o_orderdate AS DATE)) = 1996 " +
-        "ORDER BY o_custkey"),
-    "set_intersect_all" ->
-      ("SELECT o_custkey, CAST(COUNT(*) AS BIGINT) AS n FROM (" +
+        "ORDER BY o_custkey")),
+    Entry("set_intersect_all", setIntersectAll, Some(
+      "SELECT o_custkey, CAST(COUNT(*) AS BIGINT) AS n FROM (" +
         "SELECT o_custkey FROM orders WHERE year(CAST(o_orderdate AS DATE)) = 1995 " +
         "INTERSECT ALL " +
         "SELECT o_custkey FROM orders WHERE year(CAST(o_orderdate AS DATE)) = 1996) " +
-        "GROUP BY o_custkey ORDER BY o_custkey"),
-    "set_except_all" ->
-      ("SELECT o_custkey, CAST(COUNT(*) AS BIGINT) AS n FROM (" +
+        "GROUP BY o_custkey ORDER BY o_custkey")),
+    Entry("set_except_all", setExceptAll, Some(
+      "SELECT o_custkey, CAST(COUNT(*) AS BIGINT) AS n FROM (" +
         "SELECT o_custkey FROM orders WHERE year(CAST(o_orderdate AS DATE)) = 1995 " +
         "EXCEPT ALL " +
         "SELECT o_custkey FROM orders WHERE year(CAST(o_orderdate AS DATE)) = 1996) " +
-        "GROUP BY o_custkey ORDER BY o_custkey"),
-    "join_semi" ->
-      ("SELECT c_custkey, c_name FROM customer WHERE EXISTS (" +
+        "GROUP BY o_custkey ORDER BY o_custkey")),
+    Entry("join_semi", joinSemi, Some(
+      "SELECT c_custkey, c_name FROM customer WHERE EXISTS (" +
         "SELECT 1 FROM orders WHERE o_custkey = c_custkey AND o_totalprice > 300000) " +
-        "ORDER BY c_custkey"),
-    "join_anti" ->
-      ("SELECT p_partkey, p_name FROM part WHERE NOT EXISTS (" +
+        "ORDER BY c_custkey")),
+    Entry("join_anti", joinAnti, Some(
+      "SELECT p_partkey, p_name FROM part WHERE NOT EXISTS (" +
         "SELECT 1 FROM lineitem WHERE l_partkey = p_partkey " +
-        "AND CAST(l_shipdate AS DATE) >= DATE '2001-06-01') ORDER BY p_partkey"),
-    "scalar_functions" ->
-      ("SELECT p_partkey, UPPER(p_name) AS name_upper, " +
+        "AND CAST(l_shipdate AS DATE) >= DATE '2001-06-01') ORDER BY p_partkey")),
+    Entry("scalar_functions", scalarFunctions, Some(
+      "SELECT p_partkey, UPPER(p_name) AS name_upper, " +
         "SUBSTRING(p_brand, 1, 5) AS brand_prefix, LENGTH(p_type) AS type_len, " +
         "CONCAT_WS('|', p_brand, p_type) AS brand_type, " +
         "p_partkey % 7 AS key_mod7, " +
         "ROUND(ABS(p_retailprice - 1000.0), 2) AS price_dist, " +
         "ROUND(SQRT(CAST(p_size AS DOUBLE)), 4) AS size_sqrt " +
-        "FROM part ORDER BY p_partkey"),
-    "date_functions" ->
-      ("SELECT o_orderkey, EXTRACT(YEAR FROM o_orderdate) AS y, " +
+        "FROM part ORDER BY p_partkey")),
+    Entry("date_functions", dateFunctions, Some(
+      "SELECT o_orderkey, EXTRACT(YEAR FROM o_orderdate) AS y, " +
         "EXTRACT(MONTH FROM o_orderdate) AS m, EXTRACT(DAY FROM o_orderdate) AS d, " +
         "EXTRACT(QUARTER FROM o_orderdate) AS q, " +
         "CAST(o_orderdate AS DATE) + 30 AS due_date " +
-        "FROM orders ORDER BY o_orderkey"),
-    "sessionize" ->
-      ("SELECT user_id, CAST(SUM(new_session) AS BIGINT) AS n_sessions, " +
+        "FROM orders ORDER BY o_orderkey")),
+    Entry("sessionize", sessionize, Some(
+      "SELECT user_id, CAST(SUM(new_session) AS BIGINT) AS n_sessions, " +
         "COUNT(*) AS n_events FROM (" +
         "SELECT user_id, CASE WHEN prev_ts IS NULL OR " +
         "EPOCH(ts) - EPOCH(prev_ts) >= 1800 THEN 1 ELSE 0 END AS new_session FROM (" +
         "SELECT user_id, ts, LAG(ts) OVER (PARTITION BY user_id " +
         "ORDER BY ts, event_id) AS prev_ts FROM events)) " +
-        "GROUP BY user_id ORDER BY user_id")
+        "GROUP BY user_id ORDER BY user_id"))
   )
 }

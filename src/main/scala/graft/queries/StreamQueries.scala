@@ -660,60 +660,85 @@ object StreamQueries {
       .withColumnRenamed("media_id", "vec_id")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "stream_image_admit" -> (streamImageAdmit _),
-    "stream_audio_admit" -> (streamAudioAdmit _),
-    "stream_video_admit" -> (streamVideoAdmit _),
-    "stream_embedding_admit" -> (streamEmbeddingAdmit _),
-    "stream_video_dedup" -> (streamVideoDedup _),
-    "stream_phash_dedup" -> (streamPhashDedup _),
-    "stream_audio_dedup" -> (streamAudioDedup _),
-    "stream_mix_gate" -> (streamMixGate _),
-    "stream_bucketize" -> (streamBucketize _),
-    "stream_forecast_snaive" -> (streamForecastSnaive _),
-    "stream_forecast_ridge" -> (streamForecastRidge _),
-    "stream_sliding_counts" -> (streamSlidingCounts _),
-    "stream_user_type_counts" -> (streamUserTypeCounts _),
-    "stream_dedup" -> (streamDedup _),
-    "stream_interval_join" -> (streamIntervalJoin _),
-    "stream_drift_psi" -> (streamDriftPsi _)
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    // batch replay of the streaming perceptual dedup: the shared image
-    // fingerprint CTEs (DataQueries.imagePhashCtes), grouped by the
-    // lo/hi fingerprint halves
+  val entries: Seq[Entry] = Seq(
     // batch replay of the streaming admission gate: dedup_image_admit's
     // oracle VERBATIM — the complete-mode MIN aggregation converges to
     // the batch classification, so the two faces must hash-match
-    "stream_image_admit" -> DataQueries.imageAdmitOracle,
+    Entry("stream_image_admit", streamImageAdmit, Some(DataQueries.imageAdmitOracle),
+      note = "ingest-time ADMISSION: the SHARED full-media staging streams " +
+        "in 3 micro-batches (one staging write serves the dedup and " +
+        "admission gates), a stateless in-stream !imageIsCorpus filter " +
+        "takes the delta split, each batch fingerprints statelessly and " +
+        "band-joins the STATIC cached corpus index in-stream " +
+        "(hammingJoinCandidates — no distinct, so the chain stays " +
+        "stateless), and a duplicate-insensitive complete-mode MIN " +
+        "aggregation accumulates each image's best match; " +
+        "classification equals dedup_image_admit by construction, " +
+        "oracle verbatim"),
     // batch replays of the audio/video streaming admission gates:
     // the batch admits' oracles VERBATIM
-    "stream_audio_admit" -> DataQueries.audioAdmitOracle,
-    "stream_video_admit" -> DataQueries.videoAdmitOracle,
-    "stream_embedding_admit" -> DataQueries.oracleSql("dedup_embedding_admit"),
+    Entry("stream_audio_admit", streamAudioAdmit, Some(DataQueries.audioAdmitOracle),
+      note = "stream_image_admit's composition on the audio grain: stateless " +
+        "per-batch RIFF/PCM fingerprints, stateless banded join against " +
+        "the static index, complete-mode MIN accumulation; equals " +
+        "dedup_audio_admit, oracle verbatim"),
+    Entry("stream_video_admit", streamVideoAdmit, Some(DataQueries.videoAdmitOracle),
+      note = "streaming admission on the video grain: stateless per-batch " +
+        "frame keys equi-join the static (frame_idx, hash) index; ONE " +
+        "complete-mode aggregation accumulates (delta, corpus) " +
+        "agreement counts (streaming allows a single agg level) and " +
+        "the tier selection runs on the drained counts; equals " +
+        "dedup_video_admit, oracle verbatim"),
+    Entry("stream_embedding_admit", streamEmbeddingAdmit, Some(DataQueries.embeddingAdmitOracle),
+      note = "streaming admission on the VECTOR grain — the two match tiers " +
+        "(raw-array equality; bucket join + in-row cosine) UNION into " +
+        "one stateless tagged stream so a single complete-mode MIN " +
+        "aggregation accumulates both (streaming's one-agg-level " +
+        "constraint); equals dedup_embedding_admit, oracle verbatim — " +
+        "streaming admission now covers all four grains; bits = shared " +
+        "Similarity.autoBits like the batch face, classification core " +
+        "shared (embeddingAdmitMatches) and exercised in the 4-bit " +
+        "regime by StreamGatesSpec"),
     // batch replay of the streaming video gate: the dedup_video_frames
     // oracle VERBATIM — the streamed ingest ledger feeds the same
     // >= 2-of-4 pair join, so the two faces must hash-match exactly
-    "stream_video_dedup" -> DataQueries.videoFramesOracle,
-    "stream_phash_dedup" ->
-      ("WITH " + DataQueries.imagePhashCtes +
+    Entry("stream_video_dedup", streamVideoDedup, Some(DataQueries.videoFramesOracle),
+      note = "streaming video near-dup: per-micro-batch STATELESS frame " +
+        "sampling + mod-2^64 frame fold into an append-mode ingest " +
+        "ledger, then the >= 2-of-4 keyed pair join over the drained " +
+        "ledger (the nightly-index composition — video identity is a " +
+        "pair predicate, so the complete-mode groupBy shape of the " +
+        "image/audio gates cannot express it); pairs span " +
+        "micro-batches, oracle = dedup_video_frames verbatim"),
+    // batch replay of the streaming perceptual dedup: the shared image
+    // fingerprint CTEs (DataQueries.imagePhashCtes), grouped by the
+    // lo/hi fingerprint halves
+    Entry("stream_phash_dedup", streamPhashDedup, Some(
+      "WITH " + DataQueries.imagePhashCtes +
         " SELECT MIN(media_id) AS canonical_id, " +
         "CAST(COUNT(*) AS BIGINT) AS n_images FROM fp " +
         "GROUP BY lo, hi ORDER BY canonical_id"),
+      note = "streaming perceptual image dedup: per-micro-batch stateless " +
+        "dHash through the real decode path + complete-mode " +
+        "groupBy(fingerprint) -> (canonical, n_images); ingest-time " +
+        "monitor shape, batch-replayable"),
     // batch replay of the streaming audio dedup: the shared audio
     // fingerprint CTEs (DataQueries.audioFpCtes), grouped by the lo/hi
     // fingerprint halves
-    "stream_audio_dedup" ->
-      ("WITH " + DataQueries.audioFpCtes +
+    Entry("stream_audio_dedup", streamAudioDedup, Some(
+      "WITH " + DataQueries.audioFpCtes +
         " SELECT MIN(media_id) AS canonical_id, " +
         "CAST(COUNT(*) AS BIGINT) AS n_clips FROM afp " +
         "GROUP BY lo, hi ORDER BY canonical_id"),
+      note = "streaming perceptual audio dedup: per-micro-batch stateless " +
+        "RIFF/PCM decode + energy-gradient fingerprint + " +
+        "complete-mode groupBy(fingerprint) -> (canonical, n_clips); " +
+        "the stream_phash_dedup composition on the audio grain"),
     // the batch replay of the quality gate + tempered Bernoulli mix —
     // the same fragments as corpus_curate's gate and mix_execute's plan,
     // over the gated corpus's language histogram
-    "stream_mix_gate" ->
-      (s"WITH kept AS (SELECT doc_id, lang, ${TextQueries.tokCount} AS n " +
+    Entry("stream_mix_gate", streamMixGate, Some(
+      s"WITH kept AS (SELECT doc_id, lang, ${TextQueries.tokCount} AS n " +
         s"FROM documents WHERE ${TextQueries.qualityExpr} >= 0.3), " +
         "c AS (SELECT lang, COUNT(*) AS cnt FROM kept GROUP BY 1), " +
         "t AS (SELECT SUM(cnt) AS total FROM c), " +
@@ -728,34 +753,49 @@ object StreamQueries {
         "FROM (SELECT *, CAST(CAST('0x' || substr(md5(CAST(doc_id AS " +
         "VARCHAR)), 1, 6) AS INTEGER) AS DOUBLE) / 16777216.0 AS u " +
         "FROM kept) k JOIN f USING (lang) WHERE k.u < f.f " +
-        "GROUP BY 1 ORDER BY 1"),
-    "stream_bucketize" ->
-      ("SELECT CAST(ts AS DATE) AS date, COUNT(*) AS event_count, " +
-        "ROUND(SUM(value), 2) AS value_sum FROM events GROUP BY 1"),
+        "GROUP BY 1 ORDER BY 1")),
+    Entry("stream_bucketize", streamBucketize, Some(
+      "SELECT CAST(ts AS DATE) AS date, COUNT(*) AS event_count, " +
+        "ROUND(SUM(value), 2) AS value_sum FROM events GROUP BY 1")),
     // the snaive replay VERBATIM minus the exact-distinct metric — the
     // last trigger's refit equals the batch fit on the full history
-    "stream_forecast_snaive" ->
-      CoreQueries.snaiveOracle(includeActiveUsers = false),
+    Entry("stream_forecast_snaive", streamForecastSnaive, Some(
+      CoreQueries.snaiveOracle(includeActiveUsers = false)),
+      note = "the forecast family's own streaming face (refit-on-arrival): " +
+        "events fold into the complete-mode daily bucketize and EVERY " +
+        "micro-batch refits CoreQueries.snaiveForecast (the batch " +
+        "face's exact construction) via foreachBatch — a real fit per " +
+        "trigger, the nightly refit-on-ingest shape; the last trigger's " +
+        "fit is the result, hash-checked against the snaive oracle on " +
+        "the two monoid metrics (active_users is exact COUNT(DISTINCT), " +
+        "not an incremental streaming aggregate)"),
     // the ridge replay VERBATIM minus the exact-distinct metric — the
     // last trigger's refit of the PRODUCTION model equals the batch fit
-    "stream_forecast_ridge" ->
-      CoreQueries.ridgeTrendOracle(includeActiveUsers = false),
-    "stream_sliding_counts" ->
-      ("SELECT CAST(ts AS DATE) + CAST(x AS INTEGER) AS day, " +
+    Entry("stream_forecast_ridge", streamForecastRidge, Some(
+      CoreQueries.ridgeTrendOracle(includeActiveUsers = false)),
+      note = "stream_forecast_snaive's refit-on-arrival composition with the " +
+        "PRODUCTION model: every micro-batch refits the real " +
+        "ProphetLike ridge fit on the accumulated daily series via the " +
+        "shared CoreQueries.ridgeTrendForecast construction; last " +
+        "trigger's fit hash-checked against the ridge oracle on the two " +
+        "monoid metrics — the nightly refit-on-ingest shape now runs " +
+        "the actual model under streaming, not just the naive baseline"),
+    Entry("stream_sliding_counts", streamSlidingCounts, Some(
+      "SELECT CAST(ts AS DATE) + CAST(x AS INTEGER) AS day, " +
         "COUNT(*) AS n_events, ROUND(SUM(value), 2) AS value_sum " +
-        "FROM events, unnest(generate_series(0, 6)) t(x) GROUP BY 1"),
-    "stream_user_type_counts" ->
-      "SELECT user_id, event_type, COUNT(*) AS n FROM events GROUP BY 1, 2",
-    "stream_dedup" ->
-      "SELECT DISTINCT text AS text FROM documents",
-    "stream_interval_join" ->
-      ("SELECT v.user_id AS user_id, v.event_id AS view_id, " +
+        "FROM events, unnest(generate_series(0, 6)) t(x) GROUP BY 1")),
+    Entry("stream_user_type_counts", streamUserTypeCounts, Some(
+      "SELECT user_id, event_type, COUNT(*) AS n FROM events GROUP BY 1, 2")),
+    Entry("stream_dedup", streamDedup, Some(
+      "SELECT DISTINCT text AS text FROM documents")),
+    Entry("stream_interval_join", streamIntervalJoin, Some(
+      "SELECT v.user_id AS user_id, v.event_id AS view_id, " +
         "c.event_id AS click_id, v.ts AS view_ts, c.ts AS click_ts " +
         "FROM events v JOIN events c ON c.user_id = v.user_id " +
         "AND c.ts > v.ts AND c.ts <= v.ts + INTERVAL 1 HOUR " +
-        "WHERE v.event_type = 'view' AND c.event_type = 'click'"),
-    "stream_drift_psi" ->
-      ("WITH b AS (SELECT CAST(CAST(ts AS DATE) AS TIMESTAMP) AS window_start, " +
+        "WHERE v.event_type = 'view' AND c.event_type = 'click'")),
+    Entry("stream_drift_psi", streamDriftPsi, Some(
+      "WITH b AS (SELECT CAST(CAST(ts AS DATE) AS TIMESTAMP) AS window_start, " +
         "LEAST(9, GREATEST(0, CAST(FLOOR(value / 50.0) AS INTEGER))) AS bin FROM events), " +
         "t AS (SELECT window_start, COUNT(*) AS n FROM b GROUP BY 1), " +
         "c AS (SELECT window_start, bin, COUNT(*) AS cnt FROM b GROUP BY 1, 2), " +
@@ -764,6 +804,6 @@ object StreamQueries {
         "LEFT JOIN c ON c.window_start = t.window_start AND c.bin = gs.bin) " +
         "SELECT window_start, n, " +
         "ROUND(SUM(((cnt + 1.0) / (n + 10.0) - 0.1) * LN(((cnt + 1.0) / (n + 10.0)) / 0.1)), 6) AS psi " +
-        "FROM g GROUP BY 1, 2")
+        "FROM g GROUP BY 1, 2"))
   )
 }

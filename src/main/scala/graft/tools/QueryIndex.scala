@@ -3,406 +3,29 @@ package graft.tools
 import graft.SparkEntry
 
 /** Dev tool: regenerate QUERIES.md — the driver-contract query index
-  * (every `SparkEntry.queries` entry, its module, and its correctness
-  * mode) so the surface is auditable at a glance without reading five
-  * query files. Run after adding queries:
+  * (every registered `graft.queries.Entry`: its module, its correctness
+  * mode and its scale note) so the surface is auditable at a glance
+  * without reading six query files. Run after adding an entry:
   * `runMain graft.tools.QueryIndex`.
   */
 object QueryIndex {
   def main(args: Array[String]): Unit = {
-    val modules = Seq(
-      "CoreQueries" -> graft.queries.CoreQueries.queries.keySet,
-      "RelationalQueries" -> graft.queries.RelationalQueries.queries.keySet,
-      "DataQueries" -> graft.queries.DataQueries.queries.keySet,
-      "TextQueries" -> graft.queries.TextQueries.queries.keySet,
-      "AnalyticsQueries" -> graft.queries.AnalyticsQueries.queries.keySet,
-      "StreamQueries" -> graft.queries.StreamQueries.queries.keySet)
-    val moduleOf = modules.flatMap { case (m, ks) => ks.map(_ -> m) }.toMap
-    val oracles = SparkEntry.oracleSql.keySet
-    val names = SparkEntry.queries.keys.toSeq.sorted
-    // per-query scale-status notes (kept here so the generated index
-    // carries them; the same note lives in the operator's scaladoc)
-    val notes = Map(
-      "forecast_orders_ridge" ->
-        ("the ridge value-hash face on the LONG-HISTORY orders table: " +
-          "exact-cents daily series built at the SOURCE grain (revenue " +
-          "summed as per-order integer cents — order-independent where " +
-          "the bucketized double-sum-then-round could straddle a " +
-          "boundary), shared ridgeTrendForecast construction and shared " +
-          "oracle replay body; the calendar window predicate is " +
-          "symmetric, so the sparse sf0.001 stream's gapped window " +
-          "yields zero rows in BOTH engines (spec-pinned contract)"),
-      "dedup_embedding_admit" ->
-        ("incremental admission on the VECTOR grain, closing the family " +
-          "across every ingested representation: dup_exact = " +
-          "bit-identical corpus embedding (raw array equality — complete, " +
-          "not LSH-bounded), dup_near = shared plane-literal LSH bucket + " +
-          "exact cosine >= 0.45; spec pins exact completeness, near " +
-          "soundness, and a recall floor vs brute-force truth; bucket " +
-          "bits come from the SHARED Similarity.autoBits (graded corpora " +
-          "land in the spec-pinned 3-bit regime matching the oracle's " +
-          "plane literals; a hard bits=3 pin was tried and reverted — it " +
-          "re-created the quadratic-bucket cost at x30, 11.1s -> 26.1s)"),
-      "dedup_embedding_admit_wide" ->
-        ("the AUTO-BITS >3-bit regime under oracle: corpus = 16x " +
-          "id-shifted replication of even vec_ids < 500 (exactly 4000 " +
-          "vectors at every SF by construction), so Similarity.autoBits " +
-          "picks 4 bits and the oracle replays the 4-bit hyperplanes as " +
-          "plan-time literals — closing round 14's \"formula proven only " +
-          "in the 3-bit regime\" gap; DedupSpec pins auto == explicit-4 " +
-          "and the shrinking candidate volume, StreamGatesSpec runs the " +
-          "same regime through the streaming core"),
-      "er_sorted_neighborhood" ->
-        ("DEMONSTRATION-ONLY at scale: the textbook single-pass SNM; " +
-          "per-block rank window serializes as common-prefix blocks grow " +
-          "with the corpus (measured 8.0x under 3x at x30). Production " +
-          "twin: er_snm_multikey (multi-pass finer keys, measured " +
-          "linear). RETIRED from the scaling family in round 15 (the " +
-          "permanent resolution of the 3-rounds-carried weak flag): its " +
-          "oracle row and spec remain the correctness evidence; only the " +
-          "production twin is scale-measured."),
-      "forecast_anomalies_ridge" ->
-        ("the anomaly family's VALUE-hash face through the real " +
-          "ProphetLike fit/predict path: in-sample evaluation of the " +
-          "8-day ridge fit, noise-only +/-z80*sigma band " +
-          "(SQRT(sigma*sigma) rendered exactly as predict computes dt=0), " +
-          "is_anomaly compared on the GRAINED (already hash-equal) " +
-          "columns so the bit adds no new float-boundary class; " +
-          "forecast_anomalies itself stays rows-only (Prophet-config " +
-          "band, documented)"),
-      "forecast_backtest_ridge" ->
-        ("first backtest with MODEL-DEPENDENT skill columns (mae, rmse) " +
-          "under the driver hash: the backtest-gate cutoff spine per " +
-          "metric, each cutoff fitting the REAL ProphetLike ridge model " +
-          "on its last 8 training days (the forecast_events_ridge_trend " +
-          "closed form, shared ridgeSolveCtes Cramer machinery keyed by " +
-          "(metric, cutoff)) and scoring the 7-step horizon against " +
-          "held-out actuals; grain-absorbed cross-engine noise as the " +
-          "trend face"),
-      "forecast_events_holt_winters" ->
-        ("SIXTH fully value-hash-checked forecast and the first with " +
-          "EVOLVING SEASONAL STATE: Holt-Winters additive (Winters 1960; " +
-          "FPP3 §8.3, alpha=beta=gamma=1/2, m=7 observations, simple init " +
-          "l7=mean(y1..7), s_j=y_j−l7) — the recursive-CTE step-replay " +
-          "discipline extended to an array: the oracle carries the 7 " +
-          "seasonal slots as state columns s0..s6 and updates exactly one " +
-          "per step via a slot CASE; spec replays the full fold " +
-          "scalar-side per metric; n>=14 input contract in both engines"),
-      "forecast_events_holt_winters_damped" ->
-        ("SEVENTH fully value-hash-checked forecast: damped-trend " +
-          "Holt-Winters (Gardner-McKenzie damping composed with Winters " +
-          "seasonality, phi = 1/2) — shares the seasonal fold with the " +
-          "linear face through one hwFit construction (phi applied as pb " +
-          "= phi*b everywhere the previous trend is consumed; phi = 1.0 " +
-          "is bit-exact identity so the sharing cannot move the linear " +
-          "face), projection uses the exactly-dyadic geometric damp sum 1 " +
-          "- 0.5^h"),
-      "forecast_events_holt_winters_mul" ->
-        ("EIGHTH fully value-hash-checked forecast: MULTIPLICATIVE " +
-          "Holt-Winters (Winters 1960; FPP3 §8.3 ratio form) — the same " +
-          "hwFit fold with mul=true: seasonal RATIO state s_j = y_j/l7, " +
-          "division where the additive recurrence subtracts, error vs " +
-          "(l+b)*s_k, projection (l+h*b)*s; min(y)>0 series guard stated " +
-          "in both engines (every fixture metric passes); completes the " +
-          "additive/multiplicative halves of the classical seasonal " +
-          "taxonomy under the driver hash"),
-      "forecast_events_holt_winters_mul_damped" ->
-        ("NINTH fully value-hash-checked forecast, completing the " +
-          "classical {linear, damped} x {additive, multiplicative} " +
-          "Holt-Winters taxonomy: the hwFit ratio recurrence with phi = " +
-          "1/2 trend consumption and the exactly-dyadic geometric damp " +
-          "sum 1 - 0.5^h inside the factor projection (l + damp*b)*s"),
-      "forecast_events_ridge_trend" ->
-        ("FIRST value-hash row through the ACTUAL " +
-          "ProphetLike.fit/predict production path: each metric's last 8 " +
-          "days fit the real ridge model, whose n=8/span=7 config rules " +
-          "pin a closed-form shape (seasonality all off, changepoints " +
-          "exactly {3/7, 5/7}, p=4, lambda=[1e-6,1e-6,1+0.05*8,1+0.05*8]) " +
-          "— the oracle solves the same normal equations by explicit " +
-          "Cramer cofactor arithmetic (det4Sql) over per-metric Gram sums " +
-          "and replays predict's analytic band; LU-vs-Cramer rounding " +
-          "(~1e-12) absorbed by the shared 1e-4 floor grain; config " +
-          "spec-pinned in ProphetLikeSpec"),
-      "forecast_events_holidays_ridge" ->
-        ("the HOLIDAYS branch of the production fit under the hash: " +
-          "fit(points, holidayDays) with the month-edge calendar (1st + " +
-          "25th) makes p=5 — design [1, t, hinge1, hinge2, hol], lambda " +
-          "appends the Normal(0,10)-like 1.0, sigma divides n-p=3 — and " +
-          "the oracle solves the 5x5 normal equations by generated " +
-          "Cramer cofactors (detSql) with the indicator as plan-time " +
-          "calendar arithmetic DAY(ds) IN (1,25); the calendar fires " +
-          "in-window AND in-horizon, so the fitted coefficient and its " +
-          "projection are both nonzero under the hash"),
-      "forecast_events_logistic_ridge" ->
-        ("the LOGISTIC-growth branch of the production fit under the " +
-          "hash — the last fit config that had neither a value-hash " +
-          "face nor a documented impossibility: the logit-link fit is " +
-          "the linear ridge on z = LN(r/(1-r)), r = clamp(y/cap), so " +
-          "the oracle reuses the whole p=4 Gram/Cramer replay on z and " +
-          "maps the projection (yhat and BOTH band endpoints — " +
-          "monotone => transformed quantiles) through " +
-          "cap/(1+EXP(-std*yscale)); cap is the production 1.5x-global-" +
-          "max rule derived from the cents series; LN/EXP libm-vs-Java " +
-          "1-ulp noise is the LU-vs-Cramer class, absorbed by the 1e-4 " +
-          "grain"),
-      "stream_embedding_admit" ->
-        ("streaming admission on the VECTOR grain — the two match tiers " +
-          "(raw-array equality; bucket join + in-row cosine) UNION into " +
-          "one stateless tagged stream so a single complete-mode MIN " +
-          "aggregation accumulates both (streaming's one-agg-level " +
-          "constraint); equals dedup_embedding_admit, oracle verbatim — " +
-          "streaming admission now covers all four grains; bits = shared " +
-          "Similarity.autoBits like the batch face, classification core " +
-          "shared (embeddingAdmitMatches) and exercised in the 4-bit " +
-          "regime by StreamGatesSpec"),
-      "stream_forecast_ridge" ->
-        ("stream_forecast_snaive's refit-on-arrival composition with the " +
-          "PRODUCTION model: every micro-batch refits the real " +
-          "ProphetLike ridge fit on the accumulated daily series via the " +
-          "shared CoreQueries.ridgeTrendForecast construction; last " +
-          "trigger's fit hash-checked against the ridge oracle on the two " +
-          "monoid metrics — the nightly refit-on-ingest shape now runs " +
-          "the actual model under streaming, not just the naive baseline"),
-      "stream_forecast_snaive" ->
-        ("the forecast family's own streaming face (refit-on-arrival): " +
-          "events fold into the complete-mode daily bucketize and EVERY " +
-          "micro-batch refits CoreQueries.snaiveForecast (the batch " +
-          "face's exact construction) via foreachBatch — a real fit per " +
-          "trigger, the nightly refit-on-ingest shape; the last trigger's " +
-          "fit is the result, hash-checked against the snaive oracle on " +
-          "the two monoid metrics (active_users is exact COUNT(DISTINCT), " +
-          "not an incremental streaming aggregate)"),
-      "stream_image_admit" ->
-        ("ingest-time ADMISSION: the SHARED full-media staging streams " +
-          "in 3 micro-batches (one staging write serves the dedup and " +
-          "admission gates), a stateless in-stream !imageIsCorpus filter " +
-          "takes the delta split, each batch fingerprints statelessly and " +
-          "band-joins the STATIC cached corpus index in-stream " +
-          "(hammingJoinCandidates — no distinct, so the chain stays " +
-          "stateless), and a duplicate-insensitive complete-mode MIN " +
-          "aggregation accumulates each image's best match; " +
-          "classification equals dedup_image_admit by construction, " +
-          "oracle verbatim"),
-      "dedup_embedding" ->
-        "quarantined brute-force oracle anchor; scale path = dedup_embedding_lsh / semdedup",
-      "pipeline_pretrain_full" ->
-        ("the FULL production path (dedup -> decontam -> mix -> BPE-encode " +
-          "-> shuffle -> pack -> shard) as ONE hash-checked query; eager " +
-          "localCheckpoint stage boundaries (the parquet handoff) — " +
-          "measured 1.9x under 3x data at x30"),
-      "mix_token_budget" ->
-        ("exact per-language token budgets via the KEYED two-level prefix " +
-          "sum (withKeyedOffsets) — a dominant language never serializes " +
-          "through one task; 1.7x under 3x at x30"),
-      "dedup_image_phash" ->
-        ("image near-dup: REAL netpbm decode + 9x8 luma resample -> " +
-          "64-bit dHash -> the SimHash pigeonhole banding (never " +
-          "all-pairs); fixtures add brightness/jitter perceptual-dup " +
-          "variants so the gate has real positives and negatives"),
-      "dedup_image_clusters" ->
-        ("phash fingerprints through the exact-first collapse + banding " +
-          "over DISTINCT fingerprints + frontier CC " +
-          "(DedupClusters.fingerprintComponents); per-cluster " +
-          "member/original counts, recursive-CTE oracle; 2.2x under " +
-          "30x at x30 (was 8.1x before the collapse)"),
-      "dedup_audio_fingerprint" ->
-        ("audio near-dup: REAL WAV/PCM decode -> 65 exact integer " +
-          "frame energies -> 64 gradient bits (volume-invariant) -> " +
-          "the same pigeonhole banding; gain variants pair at Hamming " +
-          "0, jitter variants at small positive Hamming"),
-      "stream_phash_dedup" ->
-        ("streaming perceptual image dedup: per-micro-batch stateless " +
-          "dHash through the real decode path + complete-mode " +
-          "groupBy(fingerprint) -> (canonical, n_images); ingest-time " +
-          "monitor shape, batch-replayable"),
-      "dedup_video_frames" ->
-        ("video near-dup: sampleFrames' evenly spaced windows -> " +
-          "mod-2^64 frame fold -> (frame_idx, hash)-keyed join, match " +
-          "at >= 2 of 4 shared frames; re-encode variants share " +
-          "exactly the unbroken frames"),
-      "dedup_audio_clusters" ->
-        ("the audio job-shape summary: fingerprints through the " +
-          "exact-first collapse + banded frontier CC " +
-          "(fingerprintComponents — gain variants share fingerprints, " +
-          "exercising the collapse for real); per-cluster " +
-          "member/original counts, recursive-CTE oracle"),
-      "dedup_video_clusters" ->
-        ("the video job-shape summary: the >= 2-of-4 frame pair set " +
-          "through frontier CC + cluster counts (no fingerprint " +
-          "collapse — video identity is a pair predicate, not one " +
-          "64-bit value); recursive-CTE oracle"),
-      "stream_audio_dedup" ->
-        ("streaming perceptual audio dedup: per-micro-batch stateless " +
-          "RIFF/PCM decode + energy-gradient fingerprint + " +
-          "complete-mode groupBy(fingerprint) -> (canonical, n_clips); " +
-          "the stream_phash_dedup composition on the audio grain"),
-      "forecast_events_lintrend" ->
-        ("third fully value-hash-checked forecast: closed-form OLS " +
-          "linear trend +/- 1.28 residual sd — exact-cents BIGINT " +
-          "sufficient statistics, mirrored IEEE tree, shared 1e-4 " +
-          "floor grain"),
-      "bpe_learn" ->
-        ("sequential Sennrich loop: k merges = k job waves — fine at " +
-          "k = 8, the documented ceiling for a 32k production vocab; " +
-          "scale path = bpe_learn_batched"),
-      "bpe_learn_batched" ->
-        ("parallel-BPE relaxation: top-m symbol-disjoint merges fused " +
-          "per wave (k/m job waves — here 8 merges in 2); within a wave " +
-          "disjointness makes each merge exact, and the oracle replays " +
-          "the batched selection itself. Starvation contract: a wave " +
-          "short of m disjoint pairs TAKES THE SHORT WAVE and continues " +
-          "(never aborts; the oracle's fixed-m replay assumes unstarved " +
-          "waves, true on this corpus at k=8, m=4 — a starved wave " +
-          "would flip the hash and surface). Production-shape evidence: " +
-          "k=384 (the corpus's 394-merge ceiling) at m=64 and m=384 on " +
-          "the x10 replica — 35 starved waves, 3.6x faster than " +
-          "sequential, see SCALING.md"),
-      "forecast_events_snaive" ->
-        ("first of FIVE forecasts whose yhat/band VALUES are hash-checked " +
-          "(exact-cents + mirrored IEEE tree); the backtest's skill baseline"),
-      "forecast_events_holt_damped" ->
-        ("fifth fully value-hash-checked forecast: damped-trend Holt " +
-          "(Gardner-McKenzie, phi = 1/2) — shares forecast_events_holt's " +
-          "fold exactly (one holtFit construction) and differs only in " +
-          "the projection, whose damp factor 1 - 0.5^h is exactly dyadic " +
-          "so POWER replays bit-for-bit"),
-      "forecast_events_holt" ->
-        ("fourth fully value-hash-checked forecast and the first " +
-          "SEQUENTIAL-recurrence one: Holt double exponential smoothing " +
-          "(alpha = beta = 1/2), determinism from a fixed fold order — " +
-          "per-metric date-sorted flatMapGroups fold, replayed step by " +
-          "step as a recursive CTE with the identical IEEE op sequence"),
-      "dedup_image_admit" ->
-        ("incremental admission on the MEDIA grain (text had it since " +
-          "round 11): delta images vs the stored corpus fingerprints " +
-          "via the pigeonhole delta-vs-corpus band join " +
-          "(Dedup.hammingJoin — never all-pairs, corpus never " +
-          "re-fingerprinted); dup_exact / dup_near / new statuses, the " +
-          "Dedup.incremental convention"),
-      "dedup_audio_admit" ->
-        ("incremental admission on the audio grain — dedup_image_admit's " +
-          "composition over the volume-invariant energy-gradient " +
-          "fingerprints (gain variants of corpus clips classify exact); " +
-          "with the image and video admits, nightly admission covers " +
-          "every media grain"),
-      "dedup_video_admit" ->
-        ("incremental admission on the video grain: tiers follow the " +
-          "frame-AGREEMENT count against the stored (frame_idx, hash) " +
-          "index (4/4 exact, 2-3 near, else new) — video identity is a " +
-          "pair predicate, so a Hamming radius doesn't apply; 4 join " +
-          "keys per delta video, corpus never re-fingerprinted"),
-      "stream_audio_admit" ->
-        ("stream_image_admit's composition on the audio grain: stateless " +
-          "per-batch RIFF/PCM fingerprints, stateless banded join against " +
-          "the static index, complete-mode MIN accumulation; equals " +
-          "dedup_audio_admit, oracle verbatim"),
-      "stream_video_admit" ->
-        ("streaming admission on the video grain: stateless per-batch " +
-          "frame keys equi-join the static (frame_idx, hash) index; ONE " +
-          "complete-mode aggregation accumulates (delta, corpus) " +
-          "agreement counts (streaming allows a single agg level) and " +
-          "the tier selection runs on the drained counts; equals " +
-          "dedup_video_admit, oracle verbatim"),
-      "stream_video_dedup" ->
-        ("streaming video near-dup: per-micro-batch STATELESS frame " +
-          "sampling + mod-2^64 frame fold into an append-mode ingest " +
-          "ledger, then the >= 2-of-4 keyed pair join over the drained " +
-          "ledger (the nightly-index composition — video identity is a " +
-          "pair predicate, so the complete-mode groupBy shape of the " +
-          "image/audio gates cannot express it); pairs span " +
-          "micro-batches, oracle = dedup_video_frames verbatim"),
-      "forecast_events_smean" ->
-        ("second fully value-hash-checked forecast: day-of-week " +
-          "climatology mean +/- 1.28 sd, same exact-cents + mirrored-IEEE " +
-          "+ 1e-4-floor recipe as snaive"),
-      "ann_topk" ->
-        "quarantined brute-force oracle anchor; scale paths = ann_topk_{lsh,ivf,pq,...}",
-      "pipeline_pretrain_budget" ->
-        ("the BUDGETED composition: token-budget mix + repeat-factor " +
-          "epochs (floor(B/T) full passes + a greedy fractional prefix) " +
-          "fused into the curated pipeline; copies pack as distinct " +
-          "sequence rows; 2.2x under 30x at x30"),
-      "gini_revenue" ->
-        ("exact global row_number window over the CUSTOMER grain — fine " +
-          "at interactive grains; 100 TB path = gini_revenue_offsets"),
-      "gini_revenue_offsets" ->
-        ("scale twin on the two-level prefix sum: value-identical, same " +
-          "oracle, no single-task sort; 2.5x under 30x at x30"),
-      "rfm_segments" ->
-        ("exact: three global ntile(5) windows over the customer grain; " +
-          "100 TB path = rfm_segments_offsets"),
-      "rfm_segments_offsets" ->
-        ("scale twin: three bucketed rank projections + exact NTILE " +
-          "arithmetic, value-identical, same oracle; 2.4x under 30x"),
-      "mann_whitney" ->
-        ("exact: one global rank window over the value grain; 100 TB " +
-          "path = mann_whitney_offsets"),
-      "mann_whitney_offsets" ->
-        ("scale twin: per-value bucketed prefix sum, bit-identical " +
-          "statistic, same oracle; 2.2x under 30x"),
-      "roc_auc" ->
-        "exact: one global rank window (the normalized U); 100 TB path = roc_auc_offsets",
-      "roc_auc_offsets" ->
-        "scale twin: per-value bucketed prefix sum, bit-identical AUC, same oracle; 1.6x under 30x",
-      "ks_test" ->
-        "exact: RANGE-framed running ECDFs over one global order; 100 TB path = ks_test_offsets",
-      "ks_test_offsets" ->
-        "scale twin: two bucketed prefix passes, identical gap set and d_stat, same oracle; 3.1x under 30x",
-      "rank_corr" ->
-        "exact: two global avg-rank windows over the per-user grain; 100 TB path = rank_corr_offsets",
-      "rank_corr_offsets" ->
-        "scale twin: per-value rank projections joined back, identical rank multisets, same oracle; 2.4x under 30x",
-      "percentiles" ->
-        "exact: collect_list buffers each group's values; 100 TB path = percentiles_offsets",
-      "percentiles_offsets" ->
-        "scale twin: keyed bucketed prefix ranks + conditional-max order statistics, no value array, same oracle",
-      "quantiles_exact" ->
-        "exact: one sorted array per group (ClickHouse parity); 100 TB path = quantiles_exact_offsets",
-      "quantiles_exact_offsets" ->
-        "scale twin: keyed bucketed prefix ranks, identical type-7 interpolation, same oracle",
-      "series_outliers_tukey" ->
-        "exact: per-key sorted cent array for the quartiles; 100 TB path = series_outliers_tukey_offsets",
-      "series_outliers_tukey_offsets" ->
-        "scale twin: no-array offsets quartiles + the shared fence tail, same oracle",
-      "mad_per_group" ->
-        "exact: two per-key sorted arrays (median + deviation median); 100 TB path = mad_per_group_offsets",
-      "mad_per_group_offsets" ->
-        "scale twin: two chained keyedQuantiles picks, bit-identical MAD, same oracle",
-      "forecast_events" ->
-        ("flagship full-value forecast frame, rows-only by design (the " +
-          "fit is not SQL-expressible); calendar + band pinned by " +
-          "forecast_events_gate, values by ForecastPropertySpec + the " +
-          "snaive skill baseline"),
-      "forecast_events_holidays" ->
-        ("registered as the per-row CHECKED face (calendar, split, band " +
-          "+ month-start bits all hash-checked); full-value frame = " +
-          "forecastEventsHolidays (library)"),
-      "forecast_events_multiplicative" ->
-        "per-row checked face; full-value frame = forecastEventsMultiplicative (library)",
-      "forecast_events_simband" ->
-        "per-row checked face; full-value frame = forecastEventsSimband (library)",
-      "forecast_events_logistic" ->
-        ("per-row checked face incl. the saturation bit and the exact-" +
-          "cents data-derived cap; full-value frame = " +
-          "forecastEventsLogistic (library)"),
-      "forecast_events_future" ->
-        "per-row checked face incl. the horizon step; full-value frame = forecastEventsFuture (library)",
-      "forecast_events_hourly" ->
-        "per-row checked face over epoch-hour buckets; full-value frame = forecastEventsHourly (library)",
-      "forecast_orders" ->
-        "per-row checked face over the order-day spine + 30-day horizon; full-value frame = forecastOrders (library)")
-    val rows = names.map { n =>
-      val mode = if (oracles(n)) "DuckDB hash" else "rows-only (ScalaTest-bounded)"
-      s"| $n | ${moduleOf.getOrElse(n, "?")} | $mode | ${notes.getOrElse(n, "")} |"
-    }
+    val rows = SparkEntry.modules
+      .flatMap { case (module, es) => es.map(module -> _) }
+      .sortBy(_._2.name)
+      .map { case (module, e) =>
+        val mode = if (e.oracle.isDefined) "DuckDB hash" else "rows-only (ScalaTest-bounded)"
+        s"| ${e.name} | $module | $mode | ${e.note} |"
+      }
+    val graded = SparkEntry.oracleSql.size
     // NOTE: no stripMargin — the markdown table rows begin with '|',
     // which stripMargin would eat
     val header = Seq(
       "# Query index",
       "",
       "Generated by `runMain graft.tools.QueryIndex` — do not edit by",
-      s"hand. ${names.size} registered driver-contract queries;",
-      s"${names.count(oracles)} hash-checked against a DuckDB oracle on",
+      s"hand. ${rows.size} registered driver-contract queries;",
+      s"$graded hash-checked against a DuckDB oracle on",
       "identical parquet, the rest rows-only by documented design",
       "(seeded sketches, MLlib pipelines, non-SQL model fits, binary",
       "decode) with ScalaTest invariants/recall bounds — see",
@@ -438,7 +61,6 @@ object QueryIndex {
       "|---|---|---|---|")
     val doc = (header ++ rows).mkString("", "\n", "\n")
     java.nio.file.Files.writeString(java.nio.file.Paths.get("QUERIES.md"), doc)
-    println(s"[query-index] wrote QUERIES.md: ${names.size} queries, " +
-      s"${names.count(oracles)} oracle-checked")
+    println(s"[query-index] wrote QUERIES.md: ${rows.size} queries, $graded oracle-checked")
   }
 }

@@ -447,7 +447,7 @@ class ForecastEngineSpec extends SparkSpec {
 
   test("forecast_anomalies_ridge: 8 in-sample rows per metric, bands " +
     "bracket yhat, and the bit equals the grained band comparison") {
-    val rows = graft.queries.CoreQueries.queries(
+    val rows = graft.SparkEntry.queries(
       "forecast_anomalies_ridge")(spark, sf0001)
       .collect()
       .map(r => (r.getString(0), r.getDate(1).toString, r.getDouble(2),
@@ -469,7 +469,7 @@ class ForecastEngineSpec extends SparkSpec {
     // sf0.001 has only 6 of the last 8 calendar days (measured); the
     // count = 8 predicate must drop BOTH metrics in both engines — the
     // oracle's symmetric empty result is what the driver hash compares
-    val sparse = graft.queries.CoreQueries.queries(
+    val sparse = graft.SparkEntry.queries(
       "forecast_orders_ridge")(spark, sf0001)
     assert(sparse.count() == 0,
       "a gapped last-8-day window must emit nothing")
@@ -491,7 +491,7 @@ class ForecastEngineSpec extends SparkSpec {
 
   test("forecast_backtest_ridge: gate calendar, n = horizon, and " +
     "rmse >= mae on every row; skill varies across cutoffs") {
-    val rows = graft.queries.CoreQueries.queries(
+    val rows = graft.SparkEntry.queries(
       "forecast_backtest_ridge")(spark, sf0001)
       .collect()
       .map(r => (r.getString(0), r.getDate(1).toString, r.getLong(2),
@@ -511,7 +511,7 @@ class ForecastEngineSpec extends SparkSpec {
 
   test("forecast_events_ridge_trend equals a driver-side " +
     "fit-and-predict over each metric's last 8 days") {
-    val got = graft.queries.CoreQueries.queries(
+    val got = graft.SparkEntry.queries(
       "forecast_events_ridge_trend")(spark, sf0001)
       .collect()
       .map(r => (r.getString(0), r.getDate(1).toString) ->
@@ -545,7 +545,7 @@ class ForecastEngineSpec extends SparkSpec {
     val monthEdge = (for {
       y <- 2024 to 2025; m <- 1 to 12; d <- Seq(1, 25)
     } yield java.time.LocalDate.of(y, m, d).toEpochDay).toArray
-    val got = graft.queries.CoreQueries.queries(
+    val got = graft.SparkEntry.queries(
       "forecast_events_holidays_ridge")(spark, sf0001)
       .collect()
       .map(r => (r.getString(0), r.getDate(1).toString) ->
@@ -584,7 +584,7 @@ class ForecastEngineSpec extends SparkSpec {
 
   test("forecast_events_logistic_ridge: every output strictly inside " +
     "(0, cap), bands bracket, and the face equals the direct logistic fit") {
-    val rows = graft.queries.CoreQueries.queries(
+    val rows = graft.SparkEntry.queries(
       "forecast_events_logistic_ridge")(spark, sf0001)
       .collect()
       .map(r => (r.getString(0), r.getDate(1).toString, r.getDouble(2),

@@ -175,7 +175,7 @@ class MediaAdmitAndHoltSpec extends SparkSpec {
 
   test("forecast_events_holt: 3 metrics x 7 strictly-future days, ordered bands, " +
     "deterministic across runs") {
-    val df = CoreQueries.queries("forecast_events_holt")(spark, sf0001)
+    val df = SparkEntry.queries("forecast_events_holt")(spark, sf0001)
     val rows = df.collect()
     assert(rows.length == 21)
     assert(rows.map(_.getString(0)).distinct.sorted.toSeq ==
@@ -186,14 +186,14 @@ class MediaAdmitAndHoltSpec extends SparkSpec {
       val (lo, y, hi) = (r.getDouble(3), r.getDouble(2), r.getDouble(4))
       assert(lo <= y && y <= hi, s"band disorder: $lo $y $hi")
     }
-    val again = CoreQueries.queries("forecast_events_holt")(spark, sf0001).collect()
+    val again = SparkEntry.queries("forecast_events_holt")(spark, sf0001).collect()
     assert(rows.map(_.toString).toSeq == again.map(_.toString).toSeq)
   }
 
   test("forecast_events_holt_damped: shares the linear face's fit; divergence " +
     "from the undamped projection grows with horizon") {
     def byKey(name: String) =
-      CoreQueries.queries(name)(spark, sf0001).collect()
+      SparkEntry.queries(name)(spark, sf0001).collect()
         .map(r => (r.getString(0), r.getDate(1).toString) -> r.getDouble(2)).toMap
     val lin = byKey("forecast_events_holt")
     val dmp = byKey("forecast_events_holt_damped")
@@ -207,7 +207,7 @@ class MediaAdmitAndHoltSpec extends SparkSpec {
         case _ =>
       }
     }
-    val out = CoreQueries.queries("forecast_events_holt_damped")(spark, sf0001)
+    val out = SparkEntry.queries("forecast_events_holt_damped")(spark, sf0001)
       .collect()
     out.foreach { r =>
       assert(r.getDouble(3) <= r.getDouble(2) && r.getDouble(2) <= r.getDouble(4))
@@ -216,7 +216,7 @@ class MediaAdmitAndHoltSpec extends SparkSpec {
 
   test("forecast_events_holt_winters: seasonal state replays against a " +
     "driver-side scalar fold; slots rotate with the horizon") {
-    val rows = CoreQueries.queries("forecast_events_holt_winters")(spark, sf0001)
+    val rows = SparkEntry.queries("forecast_events_holt_winters")(spark, sf0001)
       .collect()
       .map(r => (r.getString(0), r.getDate(1).toString,
         r.getDouble(2), r.getDouble(3), r.getDouble(4)))
@@ -258,7 +258,7 @@ class MediaAdmitAndHoltSpec extends SparkSpec {
   test("forecast_events_holt_winters_damped: shares the seasonal fold shape; " +
     "ordered bands and the same calendar as the linear face") {
     def byKey(name: String) =
-      CoreQueries.queries(name)(spark, sf0001).collect()
+      SparkEntry.queries(name)(spark, sf0001).collect()
         .map(r => (r.getString(0), r.getDate(1).toString) ->
           (r.getDouble(2), r.getDouble(3), r.getDouble(4))).toMap
     val lin = byKey("forecast_events_holt_winters")
@@ -273,7 +273,7 @@ class MediaAdmitAndHoltSpec extends SparkSpec {
 
   test("forecast_events_holt_winters_mul: ratio seasonal state replays " +
     "against a driver-side scalar fold; projection multiplies the slot") {
-    val rows = CoreQueries.queries("forecast_events_holt_winters_mul")(spark, sf0001)
+    val rows = SparkEntry.queries("forecast_events_holt_winters_mul")(spark, sf0001)
       .collect()
       .map(r => (r.getString(0), r.getDate(1).toString,
         r.getDouble(2), r.getDouble(3), r.getDouble(4)))
@@ -315,7 +315,7 @@ class MediaAdmitAndHoltSpec extends SparkSpec {
     }
     // the ratio state is a genuinely different model from the additive
     // face, not a reparameterization
-    val add = CoreQueries.queries("forecast_events_holt_winters")(spark, sf0001)
+    val add = SparkEntry.queries("forecast_events_holt_winters")(spark, sf0001)
       .collect().map(r => (r.getString(0), r.getDate(1).toString) -> r.getDouble(2))
       .toMap
     val mulMap = rows.map(t => (t._1, t._2) -> t._3).toMap
@@ -326,7 +326,7 @@ class MediaAdmitAndHoltSpec extends SparkSpec {
   test("forecast_events_holt_winters_mul_damped: completes the 2x2 " +
     "seasonal taxonomy; damping flattens the multiplicative extrapolation") {
     def byKey(name: String) =
-      CoreQueries.queries(name)(spark, sf0001).collect()
+      SparkEntry.queries(name)(spark, sf0001).collect()
         .map(r => (r.getString(0), r.getDate(1).toString) ->
           (r.getDouble(2), r.getDouble(3), r.getDouble(4))).toMap
     val lin = byKey("forecast_events_holt_winters_mul")

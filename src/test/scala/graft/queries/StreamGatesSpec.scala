@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{SparkEntry, SparkSpec}
 import graft.sources.Fixtures
 
 /** The streaming gates' contract is streaming ≡ batch on the same input;
@@ -78,7 +78,7 @@ class StreamGatesSpec extends SparkSpec {
 
   test("stream_video_dedup equals the batch >= 2-of-4 frame pair set") {
     val got = StreamQueries.streamVideoDedup(spark, sf0001)
-    val want = DataQueries.queries("dedup_video_frames")(spark, sf0001)
+    val want = SparkEntry.queries("dedup_video_frames")(spark, sf0001)
     assert(canon(got) == canon(want))
   }
 
@@ -125,7 +125,7 @@ class StreamGatesSpec extends SparkSpec {
   test("stream_forecast_snaive: the last refit equals the batch snaive " +
       "face on the two monoid metrics") {
     val got = StreamQueries.streamForecastSnaive(spark, sf0001)
-    val want = CoreQueries.queries("forecast_events_snaive")(spark, sf0001)
+    val want = SparkEntry.queries("forecast_events_snaive")(spark, sf0001)
       .filter($"metric" =!= "active_users")
     assert(got.count() == 14)
     assert(canon(got) == canon(want))
@@ -134,7 +134,7 @@ class StreamGatesSpec extends SparkSpec {
   test("stream_forecast_ridge: the last refit equals the batch ridge " +
     "face on the two monoid metrics") {
     val got = StreamQueries.streamForecastRidge(spark, sf0001)
-    val want = CoreQueries.queries("forecast_events_ridge_trend")(spark, sf0001)
+    val want = SparkEntry.queries("forecast_events_ridge_trend")(spark, sf0001)
       .filter($"metric" =!= "active_users")
     assert(got.count() == 14)
     assert(canon(got) == canon(want))
