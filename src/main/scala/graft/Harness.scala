@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{bit_xor, col, xxhash64}
+import org.apache.spark.sql.functions.{bit_xor, col, count, lit, xxhash64}
 
 /** What the measurement mains (Bench, Verify, Scaling, `graft.tools.*`)
   * share: one session set-up, the data-sized tuning per input directory,
@@ -55,16 +55,15 @@ object Harness {
     (a, (System.nanoTime() - t0) / 1e9)
   }
 
-  /** Force every column of every row of `df`: `xxhash64` of all columns
-    * folded with `bit_xor`. A bare `count()` lets Catalyst elide
-    * unreferenced projections, and `sum(xxhash64)` overflows under ANSI
-    * mode; `bit_xor` is overflow-free and order-insensitive.
+  /** Force every column of every row of `df` and return its row count:
+    * `xxhash64` of all columns folded with `bit_xor`, counted in the same
+    * aggregate. A bare `count()` lets Catalyst elide unreferenced
+    * projections, and `sum(xxhash64)` overflows under ANSI mode;
+    * `bit_xor` is overflow-free and order-insensitive.
     */
-  def consume(df: DataFrame): Unit = {
+  def consume(df: DataFrame): Long =
     df.select(xxhash64(df.columns.toIndexedSeq.map(c => col(s"`$c`")): _*).as("h"))
-      .agg(bit_xor(col("h"))).collect()
-    ()
-  }
+      .agg(bit_xor(col("h")), count(lit(1))).head().getLong(1)
 
   /** Drop what one query cached: the [[operators.CacheScope]] release
     * contract, with `clearCache` as a belt for anything outside it.

@@ -66,7 +66,7 @@ class ForecastJobSpec extends SparkSpec {
     assert(out.count() == nHist + 7)
     // per-row band invariant on a real metric
     assert(out.filter(col("value_sum_min") > col("value_sum")).count() == 0)
-    // cache hygiene (run() scaladoc): every job-path cache() is paired
+    // cache hygiene (eachTable scaladoc): every job-path cache() is paired
     // with a try/finally unpersist, so no cached frame survives the run —
     // the job registers nothing with CacheScope and adds no persistent
     // RDD blocks beyond whatever the shared test session already held
@@ -103,6 +103,27 @@ class ForecastJobSpec extends SparkSpec {
       Set("bucket_backtest_events", "bucket_backtest_plain_sales"))
     assert(!s2.successful.exists(t =>
       t.startsWith("bucket_backtest_") || t.startsWith("bucket_forecast_")))
+  }
+
+  test("backtest: a history shorter than initial + horizon is skipped with its reason, and the earlier output stays") {
+    val cat = new ParquetCatalog(spark, tempDir("graftshort"))
+    def days(n: Int) = spark.range(n).select(
+      date_add(lit("2024-01-01").cast("date"), col("id").cast("int")).as("date"),
+      (col("id") * 2.5 + 1.0).as("x"))
+    cat.writeTable("bucket_short", days(30))
+    val first = new ForecastJob(cat, interval = 7).backtest(horizon = 7, period = 3, initial = 14)
+    assert(first.created == Seq("bucket_backtest_short"))
+    def output() = cat.load("bucket_backtest_short").collect().map(_.toString).sorted.toSeq
+    val before = output()
+    assert(before.nonEmpty)
+
+    // 15 days leave no cutoff with 14 days of history before it and 7 after
+    cat.writeTable("bucket_short", days(15))
+    val s = new ForecastJob(cat, interval = 7).backtest(horizon = 7, period = 3, initial = 14)
+    assert(s.skipped == Seq("bucket_short" -> "history shorter than initial=14 + horizon=7"))
+    assert(s.failedSeries.isEmpty)
+    assert(s.created.isEmpty && s.updated.isEmpty && s.successful.isEmpty)
+    assert(output() == before, "a skipped table keeps its earlier output")
   }
 
   test("rerun overwrites: outputs land in updated, row counts stable") {
@@ -170,14 +191,7 @@ class ForecastJobSpec extends SparkSpec {
     // fails only when a plan reads that metric from the other file
     def seedWithBrokenTable(): ParquetCatalog = {
       val cat = seedCatalog()
-      val path = cat.tablePath("broken")
-      val days = spark.range(30).select(
-        date_add(lit("2024-01-01").cast("date"), col("id").cast("int")).as("date"),
-        col("id").cast("double").as("x"))
-      days.select(col("date"), col("x").as("a"), col("x").cast("string").as("b"))
-        .coalesce(1).write.parquet(path)
-      days.select(col("date"), col("x").cast("string").as("a"), col("x").as("b"))
-        .coalesce(1).write.mode("append").parquet(path)
+      addBrokenTable(cat)
       cat
     }
     val cat = seedWithBrokenTable()

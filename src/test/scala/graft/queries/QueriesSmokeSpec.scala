@@ -2,8 +2,10 @@ package graft.queries
 
 import graft.{SparkEntry, SparkSpec}
 
-/** Every registered query runs at sf0.001 and returns rows; shapes match
-  * the driver contract (column names align with the oracle SQL aliases).
+/** Every registered query runs at sf0.001 and returns rows, counted over
+  * every column on the one run it shares with CacheHygieneSpec
+  * ([[QueryRuns]]); shapes match the driver contract (column names align
+  * with the oracle SQL aliases).
   */
 class QueriesSmokeSpec extends SparkSpec {
 
@@ -22,12 +24,11 @@ class QueriesSmokeSpec extends SparkSpec {
   SparkEntry.queries.keys.toSeq.sorted.foreach { name =>
     if (emptyAtSf0001(name))
       test(s"query $name runs at sf0.001 (empty by documented contract)") {
-        assert(SparkEntry.queries(name)(spark, sf0001).count() == 0)
+        assert(QueryRuns.run(spark, sf0001, name).rows == 0)
       }
     else
       test(s"query $name runs at sf0.001 with rows > 0") {
-        val df = SparkEntry.queries(name)(spark, sf0001)
-        assert(df.count() > 0)
+        assert(QueryRuns.run(spark, sf0001, name).rows > 0)
       }
   }
 
